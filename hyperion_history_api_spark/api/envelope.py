@@ -11,23 +11,26 @@
       "last_indexed_block": B, "last_indexed_block_time": T
     }
 
-Spark-first shape: the page query and the two metadata scalars (total
-matching count, head of the log) are separate small plans; the
-envelope is assembled at the serving boundary. ``total`` is exact
-(ES's track_total_hits cap is a serving choice, functions.ts:917-934);
-``cached`` is always false here — the Redis response cache is a
-serving-layer add-on the engine does not fake.
+Like the reference's single ES search (from/size plus
+``track_total_hits``), one Spark job answers the page and its exact
+``total``: the count is an ``observe`` metric on the filtered rows
+under the page's TakeOrderedAndProject. The log head
+(``last_indexed_block`` / ``_time``) changes only when the lake does,
+so a server passes it in from its memo
+(:meth:`.http_server.HyperionAPI.log_head`); direct callers get a
+top-1 over the log. ``cached`` is false on every body built here —
+:mod:`.serving_cache` flips it on hits.
 
 The oracle-backed query ``get_actions_response_envelope`` returns the
-envelope's scalar fields as one row, so the metadata computation (not
-just the page) is hash-checked against DuckDB.
+envelope's scalar fields as one row (:func:`envelope_scalars`), so the
+metadata computation is hash-checked against DuckDB.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.predicates import QueryParams, apply_query, compile_predicate
@@ -64,6 +67,19 @@ def envelope_scalars(
     )
 
 
+def scan_head(log: DataFrame, seq_field: str, ts_field: str = "ts") -> tuple:
+    """(last_indexed_block, last_indexed_block_time) of ``log``: the
+    newest row by ``seq_field`` (health.ts + get_actions.ts:121-126);
+    ``(None, None)`` for an empty log. One top-1 job."""
+    row = (
+        log.orderBy(F.col(seq_field).desc())
+        .limit(1)
+        .select(seq_field, ts_field)
+        .first()
+    )
+    return (row[0], row[1]) if row is not None else (None, None)
+
+
 def get_actions_with_envelope(
     spark: SparkSession,
     log: DataFrame,
@@ -72,11 +88,16 @@ def get_actions_with_envelope(
     seq_field: str,
     simple: bool = False,
     lib: int | None = None,
+    head: tuple | None = None,
     **query_kw,
 ) -> dict:
-    """Full serving-boundary response: run the page query + metadata
-    and assemble the reference's envelope dict. ``simple`` selects the
-    ``simple_actions`` projection name (get_actions.ts:104-120).
+    """Full serving-boundary response: run the page query with its
+    observed total and assemble the reference's envelope dict.
+    ``simple`` selects the ``simple_actions`` projection name
+    (get_actions.ts:104-120).
+
+    ``head`` is the (block, time) pair to report as the log head; when
+    omitted it is read from ``log`` with one more job.
 
     ``lib`` is the last-irreversible watermark to stamp into the
     envelope — the reference defaults ``lib: 0`` and only resolves the
@@ -85,12 +106,27 @@ def get_actions_with_envelope(
     per-action ``irreversible`` flag (``block_num < lib``,
     get_actions.ts:118)."""
     t0 = time.perf_counter()
-    # seq_field must reach the page query's predicate compiler too —
-    # without it a numeric after/before bound (v2 get_actions
-    # ?after=<seq>) is rejected as a non-ISO bound (caught by the
-    # round-9 manifest e2e suite, pagination contract)
-    page = apply_query(log, params, seq_field=seq_field, **query_kw)
+    # seq_field must reach the predicate compiler: a numeric
+    # after/before bound (v2 get_actions ?after=<seq>) is a sequence
+    # bound, not an ISO date
+    total = Observation() if params.limit else None
+    page = apply_query(log, params, seq_field=seq_field, total=total, **query_kw)
     actions = [r.asDict(recursive=True) for r in page.collect()]
+    if total is not None:
+        n = total.get["total"]
+    else:
+        # a limit-0 page never scans, so count the matches directly
+        pred = compile_predicate(
+            log,
+            params,
+            seq_field=seq_field,
+            **{
+                k: v
+                for k, v in query_kw.items()
+                if k in ("numeric_fields", "array_fields", "ts_field")
+            },
+        )
+        n = (log.where(pred) if pred is not None else log).count()
     # get_actions.ts:118 is a ternary: ``irreversible: response.lib
     # !== 0 ? block_num < lib : undefined`` — at lib==0 the value is
     # ``undefined`` and JSON.stringify DROPS the key entirely, so the
@@ -100,24 +136,17 @@ def get_actions_with_envelope(
         for a in actions:
             if seq_field in a:
                 a["irreversible"] = a[seq_field] < lib
-    meta = envelope_scalars(
-        log,
-        params,
-        seq_field=seq_field,
-        **{
-            k: v
-            for k, v in query_kw.items()
-            if k in ("numeric_fields", "array_fields", "ts_field")
-        },
-    ).first()
+    if head is None:
+        head = scan_head(log, seq_field, query_kw.get("ts_field", "ts"))
+    block, block_time = head
     return {
         "query_time_ms": round((time.perf_counter() - t0) * 1000, 1),
-        "cached": bool(meta.cached),
+        "cached": False,
         "lib": int(lib or 0),
-        "total": {"value": meta.total, "relation": meta.relation},
+        "total": {"value": n, "relation": "eq"},  # exact count
         ("simple_actions" if simple else "actions"): actions,
-        "last_indexed_block": meta.last_indexed_block,
-        "last_indexed_block_time": str(meta.last_indexed_block_time),
+        "last_indexed_block": block,
+        "last_indexed_block_time": None if block_time is None else str(block_time),
     }
 
 

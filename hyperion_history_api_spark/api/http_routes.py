@@ -22,7 +22,7 @@ the stats-planned chooser; every ``.collect()`` is behind a clamped
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..operators.latest_state import latest_row_per_key
@@ -271,7 +271,13 @@ def hyp_get_actions(api, params: dict) -> dict:
         if params.get("sort") == "asc"
         else F.col("global_sequence").desc()
     )
-    page = matched.orderBy(order)
+    # the exact total rides the page's top-K scan (see apply_query);
+    # a limit-0 page never scans, so it counts directly
+    total = Observation() if limit else None
+    page = matched if total is None else matched.observe(
+        total, F.count(F.lit(1)).alias("total")
+    )
+    page = page.orderBy(order)
     if skip:
         page = page.offset(skip)
     page = page.limit(limit).select(
@@ -285,7 +291,10 @@ def hyp_get_actions(api, params: dict) -> dict:
     actions = [r.asDict(recursive=True) for r in page.collect()]
     return {
         "actions": actions,
-        "total": {"value": matched.count(), "relation": "eq"},
+        "total": {
+            "value": matched.count() if total is None else total.get["total"],
+            "relation": "eq",
+        },
         "model": "hyperion",
     }
 

@@ -41,6 +41,7 @@ import json
 import logging
 import threading
 import uuid
+from functools import partial
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qsl, urlsplit
 
@@ -50,7 +51,8 @@ from pyspark.sql import functions as F
 from ..plans.predicates import QueryGuardError, QueryParams
 from ..registry import _t
 from ..streaming.filters import StreamRequest, StreamSchema, compile_request
-from .envelope import get_actions_with_envelope
+from .envelope import get_actions_with_envelope, scan_head
+from .http_routes import EXTRA_ROUTES
 from .serving_cache import DEFAULT_TTLS, ResponseCache, timed_query
 
 _EVENT_NUMERIC = frozenset({"event_id", "user_id", "value"})
@@ -114,9 +116,26 @@ class HyperionAPI:
         # rate-limiter store)
         self.usage: dict[str, int] = {}
         self._usage_lock = threading.Lock()
-        # head_block() memo: (events-lake fingerprint -> head). A hit
-        # is stat-only — no Spark job per stream request/relay ack
+        # log_head() memo: (events-lake fingerprint, (block, time)). A
+        # hit is stat-only — no Spark job per page, stream request or
+        # relay tick
         self._head_cache: tuple | None = None
+        # The full REST surface: the handlers here plus the
+        # :mod:`.http_routes` extension families (v2-history tail,
+        # v2-state, v2-stats, v2 misc, v1 shims) — the reference
+        # autoloads every route dir the same way (routes.ts:18-25)
+        self.routes: dict = {
+            "/v2/health": self.health,
+            "/v2/history/get_actions": self.get_actions,
+            "/v2/history/get_deltas": self.get_deltas,
+            "/v2/history/get_transaction": self.get_transaction,
+            "/v2/history/get_created_accounts": self.get_created_accounts,
+            "/v2/history/get_creator": self.get_creator,
+            "/v2/state/get_tokens": self.get_tokens,
+            "/v2/state/get_key_accounts": self.get_key_accounts,
+            "/v2/state/get_top_holders": self.get_top_holders,
+            "/v2/state/get_table_rows": self.get_table_rows,
+        } | {path: partial(fn, self) for path, fn in EXTRA_ROUTES.items()}
 
     def count_request(self, route: str) -> None:
         with self._usage_lock:
@@ -124,13 +143,7 @@ class HyperionAPI:
 
     # -- v2 (routes/v2/health) -----------------------------------------
     def health(self, params: dict) -> dict:
-        ev = _t(self.spark, self.sf_dir)["events"]
-        head = (
-            ev.orderBy(F.col("event_id").desc())
-            .limit(1)
-            .select("event_id", "ts")
-            .first()
-        )
+        block, block_time = self.log_head()
         # an EMPTY lake is a degraded-but-alive service, not a crash:
         # a load-balancer probe must get a response precisely when the
         # service is newly up (health.ts reports per-service status
@@ -140,11 +153,11 @@ class HyperionAPI:
                 "service": "Lake",
                 "status": "OK",
                 "service_data": {
-                    "last_indexed_block": head["event_id"],
-                    "last_indexed_block_time": str(head["ts"]),
+                    "last_indexed_block": block,
+                    "last_indexed_block_time": str(block_time),
                 },
             }
-            if head is not None
+            if block is not None
             else {"service": "Lake", "status": "Error", "service_data": {}}
         )
         return {
@@ -179,6 +192,7 @@ class HyperionAPI:
             lib=self.lib_block()
             if str(params.get("checkLib", "")).lower() in ("true", "1")
             else None,
+            head=self.log_head(),
             default_sort_field="event_id",
             tiebreaker="event_id",
             numeric_fields=_EVENT_NUMERIC,
@@ -186,11 +200,13 @@ class HyperionAPI:
 
     def get_transaction(self, params: dict) -> dict:
         """routes/v2-history/get_transaction: point lookup of one trx
-        + its traces in canonical ordinal order (the bug-#148 regroup
-        discipline). The key predicate reaches both scans via
-        constraint propagation — same plan family as the registered
-        ``get_transaction_shape``. ``model=hyperion`` serves the
-        nested lake documents with block_hint partition routing."""
+        and its traces in canonical ordinal order (the bug-#148 regroup
+        discipline). Two jobs: the orders key lookup, then the trx's
+        lineitem rows, each a scan with the key in PushedFilters. The
+        traces are ordered by ``l_linenumber`` on the driver, which
+        already holds every collected row, so no Spark sort (sample,
+        shuffle, result) runs. ``model=hyperion`` serves the nested
+        lake documents with block_hint partition routing."""
         if params.get("model") == "hyperion":
             from .http_routes import hyp_get_transaction
 
@@ -213,8 +229,8 @@ class HyperionAPI:
         traces = (
             t["lineitem"]
             .where(F.col("l_orderkey") == trx)
-            .orderBy("l_linenumber")
             .select("l_linenumber", "l_partkey", "l_quantity", "l_extendedprice")
+            .collect()
         )
         return {
             "executed": True,
@@ -222,7 +238,9 @@ class HyperionAPI:
             "lib": lib,
             "status": head["o_orderstatus"],
             "block_time": str(head["o_orderdate"]),
-            "actions": [r.asDict() for r in traces.collect()],
+            "actions": [
+                r.asDict() for r in sorted(traces, key=lambda r: r["l_linenumber"])
+            ],
         }
 
     def get_deltas(self, params: dict) -> dict:
@@ -251,6 +269,7 @@ class HyperionAPI:
             ev,
             qp,
             seq_field="event_id",
+            head=self.log_head(),
             default_sort_field="event_id",
             tiebreaker="event_id",
             numeric_fields=frozenset({"event_id", "user_id", "payer"}),
@@ -379,33 +398,6 @@ class HyperionAPI:
                  for k, v in r.asDict().items()}
                 for r in rows
             ],
-        }
-
-    # -- routing table ----------------------------------------------------
-    @property
-    def routes(self) -> dict:
-        """The full REST surface: the handlers here plus the
-        :mod:`.http_routes` extension families (v2-history tail,
-        v2-state, v2-stats, v2 misc, v1 shims) — the reference
-        autoloads every route dir the same way (routes.ts:18-25)."""
-        from functools import partial
-
-        from .http_routes import EXTRA_ROUTES
-
-        base = {
-            "/v2/health": self.health,
-            "/v2/history/get_actions": self.get_actions,
-            "/v2/history/get_deltas": self.get_deltas,
-            "/v2/history/get_transaction": self.get_transaction,
-            "/v2/history/get_created_accounts": self.get_created_accounts,
-            "/v2/history/get_creator": self.get_creator,
-            "/v2/state/get_tokens": self.get_tokens,
-            "/v2/state/get_key_accounts": self.get_key_accounts,
-            "/v2/state/get_top_holders": self.get_top_holders,
-            "/v2/state/get_table_rows": self.get_table_rows,
-        }
-        return base | {
-            path: partial(fn, self) for path, fn in EXTRA_ROUTES.items()
         }
 
     # -- SSE stream (socketManager.ts replay path) -------------------------
@@ -697,18 +689,16 @@ class HyperionAPI:
         return _replace(req, **changes) if changes else req
 
     # -- live-phase helpers (socketManager.ts relay analogs) ----------------
-    def head_block(self) -> int:
-        """Current head of the event log — the reference's
-        ``currentBlockNum`` (socketManager.ts:565-570 puts the real
-        head in every stream-request ack; clients use it for
-        gap-healing math).
+    def log_head(self) -> tuple:
+        """(event_id, ts) of the newest event: the envelope's
+        ``last_indexed_block`` / ``_time`` (get_actions.ts:121-126),
+        the health probe's lake head and, through :meth:`head_block`,
+        the stream and relay head; ``(None, None)`` on an empty lake.
 
         Memoized on the lake fingerprint (tables._path_fingerprint,
-        stat-only): the unmemoized version ran a max(event_id) Spark
-        job PER stream request — footer-cheap at this lake, but at
-        100× files it's per-request scan work for a value that only
-        changes when the spool gains a file. A fingerprint hit is
-        pure os.stat; a miss (new/rewritten file) re-scans."""
+        stat-only): the value changes only when the spool gains or
+        rewrites a file, so a hit is pure os.stat and a miss runs one
+        top-1 job."""
         from ..tables import _load_one, _path_fingerprint
 
         path = f"{self.sf_dir}/events.parquet"
@@ -717,11 +707,16 @@ class HyperionAPI:
         if hit is not None and hit[0] == fp:
             return hit[1]
         self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ev = _load_one(self.spark, path)
-        row = ev.agg(F.max("event_id").alias("h")).first()
-        head = int(row["h"] or 0)
+        head = scan_head(_load_one(self.spark, path), "event_id")
         self._head_cache = (fp, head)
         return head
+
+    def head_block(self) -> int:
+        """Current head of the event log — the reference's
+        ``currentBlockNum`` (socketManager.ts:565-570 puts the real
+        head in every stream-request ack; clients use it for
+        gap-healing math). 0 on an empty lake."""
+        return int(self.log_head()[0] or 0)
 
     def live_tagged_rows(
         self,
@@ -792,11 +787,11 @@ class HyperionAPI:
         # (rows since the last poll; the relay drops slow consumers at
         # 50k queued rows), so the driver sorts the collected batch
         # instead — an arrival tick is exactly ONE Spark job (plus the
-        # head-max job on the tick where the new spool file first
-        # appears, amortized across kinds/ticks via the fingerprint
-        # memo). Non-matching rows don't come back from the routed
-        # scan, but the memoized head already bounds the cursor past
-        # them — no tail-max job, ever.
+        # head top-1 job on the tick where the new spool file first
+        # appears, shared with every page and stream via the
+        # fingerprint memo). Non-matching rows don't come back from
+        # the routed scan, but the memoized head already bounds the
+        # cursor past them — no tail-max job, ever.
         tagged = route_to_subscribers(
             ev.where(
                 (F.col("event_id") > after) & (F.col("event_id") <= target)

@@ -9,9 +9,9 @@ Every REST response in the reference flows through ``timedQuery``:
   seconds, expensive stats cache minutes;
 - on hit: the stored response is returned with ``cached: true`` and a
   fresh ``query_time_ms``;
-- on miss: the handler runs, ``last_indexed_block`` /
-  ``last_indexed_block_time`` metadata is attached (get_actions.ts:
-  121-126), and the full response body is stored.
+- on miss: the handler runs and the full response body, including
+  its ``last_indexed_block`` / ``last_indexed_block_time`` metadata
+  (get_actions.ts:121-126), is stored.
 
 This is a SERVING component, not an engine operator: it fronts the
 DataFrame plans with an in-process dict (the reference uses Redis —
@@ -88,17 +88,14 @@ def timed_query(
     route: str,
     params: dict,
     run: Callable[[], dict],
-    *,
-    head_fn: Callable[[], tuple[int, str]] | None = None,
 ) -> dict:
     """The timedQuery wrapper: consult the cache, else run the handler,
-    attach metadata, store, reply.
+    store, reply.
 
     ``run()`` returns the response body (e.g.
-    :func:`envelope.get_actions_with_envelope` output). ``head_fn``
-    supplies (last_indexed_block, last_indexed_block_time) on a miss —
-    cached hits serve the STORED head, exactly as the reference's
-    cached responses do (the head may trail by up to TTL).
+    :func:`envelope.get_actions_with_envelope` output, which carries
+    the log head). Cached hits serve the STORED head, exactly as the
+    reference's cached responses do (the head may trail by up to TTL).
     """
     t0 = time.perf_counter()
     hit = cache.get(route, params)
@@ -109,10 +106,6 @@ def timed_query(
             "query_time_ms": round((time.perf_counter() - t0) * 1000, 3),
         }
     body = run()
-    if head_fn is not None:
-        block, block_time = head_fn()
-        body["last_indexed_block"] = block
-        body["last_indexed_block_time"] = block_time
     body["cached"] = False
     body["query_time_ms"] = round((time.perf_counter() - t0) * 1000, 3)
     cache.put(route, params, body)

@@ -26,7 +26,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 # functions.ts:246-250 — hard deep-paging guard
@@ -251,6 +251,7 @@ def apply_query(
     max_limit: int = DEFAULT_MAX_LIMIT,
     part_col: str | None = None,
     seq_per_part: int | None = None,
+    total: Observation | None = None,
     **compile_kw,
 ) -> DataFrame:
     """Filter + sort + skip/limit, with Hyperion's cost guards.
@@ -259,6 +260,12 @@ def apply_query(
     (top-K per partition, then merge) — the analogue of ES's
     sorted-index + from/size early termination (SURVEY §4). ``offset``
     is pushed with the limit so only skip+limit rows reach the driver.
+
+    ``total``, when given, observes the exact count of filtered rows as
+    metric ``total`` — ES's ``track_total_hits`` riding the page search.
+    The top-K reads every filtered row, so the count is exact and costs
+    no extra job. A ``limit=0`` plan is pruned to an empty relation and
+    never scans, so the observation only fires for ``limit > 0``.
     """
     if params.skip > MAX_SKIP:
         raise QueryGuardError(f"skip {params.skip} > {MAX_SKIP}")  # functions.ts:246-250
@@ -272,6 +279,8 @@ def apply_query(
         )
         if pp is not None:
             out = out.where(pp)
+    if total is not None:
+        out = out.observe(total, F.count(F.lit(1)).alias("total"))
     sort_field, direction = default_sort_field, params.sort
     if params.sorted_by:
         sort_field, _, d = params.sorted_by.partition(":")

@@ -544,3 +544,45 @@ def test_live_relay_tick_job_counts(spark, tmp_path):
     )
     assert plan.count("Scan parquet") == 1
     assert "Exchange" not in plan
+
+
+def test_history_route_cache_miss_job_counts(spark):
+    """A cache miss on a history route runs the fewest Spark jobs that
+    still give an exact answer, with the head memo warm: get_actions
+    and get_deltas answer page + exact total in ONE job (the total is
+    an observe metric under the page's top-K; the log head comes from
+    the stat-fingerprint memo), as does ``model=hyperion``
+    get_actions; get_transaction runs the orders key lookup plus one
+    lineitem scan, with the traces ordered on the driver."""
+    from hyperion_history_api_spark.api.http_server import HyperionAPI
+    from hyperion_history_api_spark.api.serving_cache import ResponseCache
+    from hyperion_history_api_spark.tables import load_tables
+
+    api = HyperionAPI(spark, SF_DIR, cache=ResponseCache(default_ttl=0))
+    trx = load_tables(spark, SF_DIR)["orders"].first()["o_orderkey"]
+    cases = {
+        "get_actions": ("/v2/history/get_actions", {"account": "7", "limit": "20"}, 1),
+        "get_deltas": ("/v2/history/get_deltas", {"scope": "7", "limit": "20"}, 1),
+        "get_actions-hyperion": (
+            "/v2/history/get_actions",
+            {"model": "hyperion", "account": "user7", "limit": "20"},
+            1,
+        ),
+        "get_transaction": ("/v2/history/get_transaction", {"id": str(trx)}, 2),
+    }
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    api.log_head()
+    for path, params, _ in cases.values():
+        api.routes[path](params)  # warm the table reads and the lake
+    got = {}
+    for kind, (path, params, _) in cases.items():
+        group = f"route-jobs-{kind}"
+        sc.setJobGroup(group, group)
+        try:
+            body = api.routes[path](params)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert body.get("actions"), kind
+        got[kind] = len(st.getJobIdsForGroup(group))
+    assert got == {kind: want for kind, (_, _, want) in cases.items()}
