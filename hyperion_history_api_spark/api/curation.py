@@ -503,7 +503,7 @@ def stream_curation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_index_bm25_sql() -> str:
-    from ..sources.inverted_index import _BM25_B, _BM25_K1
+    from ..operators.scoring import B, K1
 
     return f"""
     WITH t AS (
@@ -523,8 +523,8 @@ def _stream_index_bm25_sql() -> str:
         SELECT tf.doc_id,
                round(sum(
                    ln(1 + (n - df + 0.5) / (df + 0.5)) *
-                   tf * ({_BM25_K1} + 1) /
-                   (tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl / avgdl))
+                   tf * ({K1} + 1) /
+                   (tf + {K1} * (1 - {B} + {B} * dl / avgdl))
                ), 4) AS score
         FROM tf JOIN df USING (word) CROSS JOIN stats
         GROUP BY tf.doc_id

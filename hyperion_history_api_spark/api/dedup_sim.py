@@ -19,6 +19,8 @@ from ..operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
+from ..operators import scoring
+from ..operators.scoring import B, K1
 from ..operators.similarity import (
     brute_force_topk,
     ivf_nprobe_topk,
@@ -990,112 +992,9 @@ def embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup(e, threshold=0.3).orderBy("vec_id")
 
 
-def _scored_search_tf_rows(
-    docs: DataFrame, terms: list[str], *, with_dl: bool
-) -> tuple[DataFrame, dict]:
-    """ONE corpus tokenize pass for the scored-search family (round-15,
-    r14 VERDICT item 1): per-doc term frequencies are computed with
-    array kernels over the split token array — ``size(filter(ws, = t))``
-    stays inside whole-stage codegen; no explode (no row per token), no
-    (doc, word)-keyed exchange of the token stream. The corpus-global
-    constants every scorer needs ride the SAME pass as ``observe``
-    metrics — N = doc count and sum(dl) on the pre-explode frame,
-    per-term df on the tf aggregate itself (each tf row is one
-    distinct (doc, term) match, so df(t) = row count at widx == i,
-    measured over match-sized rows instead of per-doc array probes
-    over the corpus) — all exact integer aggregates, so they are
-    order-independent and bit-equal to the old dedicated aggregation
-    legs. Only docs matching >= 1 term survive into the eager
-    localCheckpoint (the pass's one job), so the materialized frame is
-    match-sized, not corpus-sized, and every downstream reference reads
-    blocks instead of re-tokenizing (the deterministic fix for the r14
-    AQE-stage-reuse gamble, which never fired and measured slower).
-
-    The token work keeps the OLD form's whole-stage-codegen kernels
-    (split -> Generate/explode -> isin filter -> partial+final hash
-    agg; higher-order array functions are CodegenFallback-interpreted
-    and measured SLOWER at sf1) — the pass count is what changes: the
-    N/sum(dl) observe sits on the per-doc frame BELOW the explode and
-    the df observe on the tf aggregate, so ALL the corpus-global
-    metrics ride the same scan and the same checkpoint job. The scorer
-    then needs no df join, no window, no broadcast: the per-term
-    constants enter as exact-integer literals over the checkpointed
-    rows.
-
-    (Rejected alternatives, both measured at sf3: a window
-    partitionBy(word) df funnels every match row into <= n_terms tasks
-    — guide §2.5 few-distinct-keys skew — 0.84x; a broadcast df join
-    re-read from the checkpoint pays one extra serialized job round.)
-
-    Returns ``(rows, metrics)`` where ``rows`` is one row per matching
-    (doc, term) — (doc_id[, dl], word, tf>0), the exact row set and
-    aggregation the old explode+groupBy produced — and ``metrics`` has
-    ``n``, ``df0..dfK``[, ``sumdl``]."""
-    from pyspark.sql import Observation
-
-    per = docs.select("doc_id", F.split("text", " ").alias("ws"))
-    obs = Observation()
-    metrics = [F.count(F.lit(1)).alias("n")]
-    if with_dl:
-        metrics.append(F.sum(F.size("ws")).cast("long").alias("sumdl"))
-    per = per.observe(obs, *metrics)
-    keys = ["doc_id"]
-    wcols = [F.col("doc_id")]
-    if with_dl:
-        keys.append("dl")
-        wcols.append(F.size("ws").alias("dl"))
-    w = per.select(*wcols, F.explode("ws").alias("word")).where(
-        F.col("word").isin(terms)
-    )
-    # shuffle/materialize a 1-byte term INDEX, not the token string
-    # (§2.3 narrower types): the scorer keys its per-term constants on
-    # the index
-    widx = F.when(F.col("word") == terms[0], F.lit(0))
-    for i, t in enumerate(terms[1:], start=1):
-        widx = widx.when(F.col("word") == t, F.lit(i))
-    w = w.select(*keys, widx.cast("tinyint").alias("widx"))
-    # per-term df rides a SECOND observe on the tf aggregate itself:
-    # each tf row is one distinct (doc, term) match, so df(t) is simply
-    # the row count at widx == i — measured over MATCH-SIZED rows, not
-    # the corpus (the round-start form summed 3 `array_contains` over
-    # every doc's token array on the corpus scan; post-artifact A/B at
-    # sf3: tfidf 1.04x, bm25 1.02x, results bit-identical). Both
-    # observes populate under the same checkpoint job — zero extra job
-    # rounds.
-    obs_df = Observation()
-    tf = (
-        w.groupBy(*keys, "widx")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .observe(
-            obs_df,
-            *[
-                F.sum((F.col("widx") == i).cast("long")).alias(f"df{i}")
-                for i in range(len(terms))
-            ],
-        )
-        # the one corpus job: scan -> observe -> explode -> term filter
-        # -> partial agg -> (match-sized) exchange -> final agg ->
-        # df observe, all materialized here; the scorer reads blocks
-        .localCheckpoint(eager=True)
-    )
-    st = dict(obs.get)
-    st.update(obs_df.get)
-    return tf, st
-
-
-def _per_word_literal(terms: list[str], values: list):
-    """CASE widx WHEN i THEN v_i ... — attaches a per-term exact
-    constant (df) to the tf rows without any join, keyed on the 1-byte
-    term index the tf pass carries instead of the token string."""
-    col = F.when(F.col("widx") == 0, F.lit(values[0]))
-    for i in range(1, len(terms)):
-        col = col.when(F.col("widx") == i, F.lit(values[i]))
-    return col
-
-
-@register(
-    "doc_search_tfidf",
-    """
+# From-scratch oracles of the scored-search rows; the *_indexed twins
+# score the same corpus, so they share the text.
+_TFIDF_ORACLE = """
     WITH w AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
     ), n AS (
@@ -1114,56 +1013,9 @@ def _per_word_literal(terms: list[str], values: list):
     )
     SELECT doc_id, score FROM scored
     ORDER BY score DESC, doc_id ASC LIMIT 20
-    """,
-    "search: TF-IDF relevance-ranked multi-term search, top-20 — the "
-    "scored-query semantics the reference's ES backend offers beyond "
-    "boolean filters",
-    headline=True,
-)
-def doc_search_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relevance-scored search over the corpus: score(doc) = sum over
-    query terms of tf(term, doc) * ln(N / df(term)).
-
-    round-15 (r14 VERDICT item 1 — the r14 df-from-tf rewrite relied on
-    AQE stage reuse that never fired and measured SLOWER in both the
-    driver and builder datasets): the whole query now runs off ONE
-    deterministic corpus tokenize pass — see ``_scored_search_tf_rows``.
-    N and each term's df ride that pass as ``observe`` metrics (exact
-    integers, entering the score as literals keyed on the 1-byte term
-    index the tf rows carry), so there is no second scan, no df join
-    and no reliance on runtime exchange reuse. Scoring plan:
-    checkpointed tf -> one hash exchange (doc_id agg) -> TakeOrdered.
     """
-    terms = ["merge", "window", "customer"]
-    docs = _t(spark, sf_dir)["documents"]
-    tf, st = _scored_search_tf_rows(docs, terms, with_dl=False)
-    df_col = _per_word_literal(
-        terms, [int(st[f"df{i}"]) for i in range(len(terms))]
-    )
-    # same per-row arithmetic as before: tf * ln(N/df) with N and df
-    # exact integers, summed per doc by the agg
-    contrib = F.col("tf") * F.log(
-        F.lit(int(st["n"])).cast("double") / df_col
-    )
-    rows = tf
-    return (
-        rows.groupBy("doc_id")
-        .agg(F.round(F.sum(contrib), 4).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(20)
-    )
 
-
-# BM25 constants — ES/Lucene defaults (the reference's memo `match`
-# is scored by ES's default BM25 similarity,
-# src/api/routes/v2-history/get_actions/functions.ts:154-169).
-_BM25_K1 = 1.2
-_BM25_B = 0.75
-
-
-@register(
-    "doc_search_bm25",
-    f"""
+_BM25_ORACLE = f"""
     WITH t AS (
         SELECT doc_id, string_split(text, ' ') AS ws FROM documents
     ), stats AS (
@@ -1181,66 +1033,57 @@ _BM25_B = 0.75
         SELECT tf.doc_id,
                round(sum(
                    ln(1 + (n - df + 0.5) / (df + 0.5)) *
-                   tf * ({_BM25_K1} + 1) /
-                   (tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl / avgdl))
+                   tf * ({K1} + 1) /
+                   (tf + {K1} * (1 - {B} + {B} * dl / avgdl))
                ), 4) AS score
         FROM tf JOIN df USING (word) CROSS JOIN stats
         GROUP BY tf.doc_id
     )
     SELECT doc_id, score FROM scored
     ORDER BY score DESC, doc_id ASC LIMIT 20
-    """,
+    """
+
+_SEARCH_TERMS = ["merge", "window", "customer"]
+
+
+def _top20(scored: DataFrame) -> DataFrame:
+    return scored.orderBy(
+        F.col("score").desc(), F.col("doc_id").asc()
+    ).limit(20)
+
+
+@register(
+    "doc_search_tfidf",
+    _TFIDF_ORACLE,
+    "search: TF-IDF relevance-ranked multi-term search, top-20 — the "
+    "scored-query semantics the reference's ES backend offers beyond "
+    "boolean filters",
+    headline=True,
+)
+def doc_search_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TF-IDF top-20 over the corpus: score(doc) = sum over query terms
+    of tf * ln(N / df). One corpus tokenize pass builds the match-sized
+    tf rows with N and df as exact literals (:func:`scoring.tf_rows`);
+    the scoring plan is checkpointed rows -> one hash aggregate ->
+    TakeOrdered, with no join and no second scan."""
+    docs = _t(spark, sf_dir)["documents"]
+    return _top20(scoring.tfidf(scoring.tf_rows(docs, _SEARCH_TERMS)))
+
+
+@register(
+    "doc_search_bm25",
+    _BM25_ORACLE,
     "search: BM25-scored multi-term search, top-20 — ES's default "
     "similarity for the reference's memo `match` "
-    "(functions.ts:154-169), Lucene constants k1=1.2 b=0.75; closes "
-    "the last ES scoring-semantics gap (round-3 verdict item 4)",
+    "(functions.ts:154-169), Lucene constants k1=1.2 b=0.75",
     headline=True,
 )
 def doc_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 (Robertson/Sparck Jones; the Lucene BM25Similarity form):
-
-        score(d) = sum over query terms t of
-            ln(1 + (N - df + 0.5)/(df + 0.5))          # idf
-            * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
-
-    with dl = doc token count and avgdl its corpus mean — the
-    length-normalized, tf-saturating upgrade of ``doc_search_tfidf``.
-
-    round-15 (r14 VERDICT item 1): ONE corpus tokenize pass for the
-    whole query (previously two — the (N, avgdl) stats leg re-split
-    every text — plus an AQE-reuse gamble on the df leg that measured
-    slower in both r14 datasets). N and sum(dl) ride the single pass
-    as ``observe`` metrics; they are exact integer aggregates, so
-    avgdl = sumdl/n reproduces the old ``avg(size(ws))`` double
-    bit-for-bit; per-term df rides the same pass (an observe on the
-    match-sized tf aggregate) and enters as literals keyed on the
-    1-byte term index. Scoring: checkpointed tf -> one hash exchange
-    (doc_id agg) -> TakeOrdered. No corpus-sized shuffle anywhere, no
-    second text scan at any scale.
-    """
-    terms = ["merge", "window", "customer"]
+    """BM25 top-20 over the corpus (formula: :func:`scoring.bm25`). Same
+    single tokenize pass and plan shape as ``doc_search_tfidf``; sum(dl)
+    rides the pass too, so avgdl needs no stats leg."""
     docs = _t(spark, sf_dir)["documents"]
-    tf, st = _scored_search_tf_rows(docs, terms, with_dl=True)
-    rows = tf
-    df_col = _per_word_literal(
-        terms, [int(st[f"df{i}"]) for i in range(len(terms))]
-    )
-    n = F.lit(int(st["n"]))
-    avgdl = F.lit(st["sumdl"] / st["n"])  # exact long/long -> IEEE double
-    idf = F.log(
-        F.lit(1.0) + (n - df_col + F.lit(0.5)) / (df_col + F.lit(0.5))
-    )
-    norm = F.col("tf") * F.lit(_BM25_K1 + 1) / (
-        F.col("tf")
-        + F.lit(_BM25_K1)
-        * (F.lit(1.0 - _BM25_B) + F.lit(_BM25_B) * F.col("dl") / avgdl)
-    )
-    return (
-        rows.groupBy("doc_id")
-        .agg(F.round(F.sum(idf * norm), 4).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(20)
-    )
+    return _top20(scoring.bm25(scoring.tf_rows(docs, _SEARCH_TERMS)))
 
 
 # ------------------------------------------------- trained coarse cells
@@ -2437,82 +2280,30 @@ def embedding_ivf_k256_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------- stored inverted index
-# Round-6: the reference's core storage primitive, maintained in-engine
-# (sources/inverted_index.py). The serving row below ALWAYS builds the
-# store in two increments (seed = even doc_ids, delta = odd), so its
-# oracle hash proves incremental index maintenance == from-scratch SQL
-# scoring — the dedup_incremental pattern applied to search.
+# The reference serves search from the index its indexer maintains
+# (sources/inverted_index.py). These rows always build the store in two
+# increments (seed = even doc_ids, delta = odd), so each oracle hash
+# proves incremental index maintenance == from-scratch SQL scoring.
 
 _BM25_IDX_KEY = "bm25idx:v2"  # v2: positional postings
-_BM25_IDX_BUILT: set[tuple[str, str]] = set()
-
-
-def _bm25_build_key(sf_dir: str) -> str:
-    """Freshness key = code version + a fingerprint of the SOURCE
-    parquet (size + mtime, the ensure_parquet discipline). Without the
-    data half, regenerated fixture data — or two sf_dirs sharing a
-    basename — would silently serve a stale index, surfacing only as a
-    bare oracle hash mismatch (ADVICE r06)."""
-    import json as _json
-
-    from ..sources.lake import _source_fingerprint
-
-    fp = _source_fingerprint(sf_dir, "documents.parquet")
-    return _BM25_IDX_KEY + "|" + _json.dumps(fp, sort_keys=True)
 
 
 def _bm25_index_store(spark: SparkSession, sf_dir: str):
-    from ..sources.inverted_index import InvertedIndexStore
-    from ..sources.lake import lake_root
+    from ..sources.inverted_index import ensure_index_store
 
-    sf_name = _os.path.basename(_os.path.normpath(sf_dir))
-    path = str(lake_root() / sf_name / "bm25_index")
-    store = InvertedIndexStore(spark, path)
-    build_key = _bm25_build_key(sf_dir)
-    key_file = _os.path.join(path, "BUILD_KEY")
-    try:
-        fresh = open(key_file).read() == build_key
-    except OSError:
-        fresh = False
-    if (path, build_key) not in _BM25_IDX_BUILT and not fresh:
+    def build(store):
         docs = _t(spark, sf_dir)["documents"]
         store.commit(docs.where(F.col("doc_id") % 2 == 0))
         store.commit_delta(docs.where(F.col("doc_id") % 2 == 1))
-        with open(key_file, "w") as fh:
-            fh.write(build_key)
-    _BM25_IDX_BUILT.add((path, build_key))
-    return store
+
+    return ensure_index_store(
+        spark, sf_dir, "bm25_index", "documents.parquet", _BM25_IDX_KEY, build
+    )
 
 
 @register(
     "doc_search_bm25_indexed",
-    f"""
-    WITH t AS (
-        SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-    ), stats AS (
-        SELECT count(*) AS n, avg(len(ws)) AS avgdl FROM t
-    ), w AS (
-        SELECT doc_id, len(ws) AS dl, unnest(ws) AS word FROM t
-    ), tf AS (
-        SELECT doc_id, word, dl, count(*) AS tf FROM w
-        WHERE word IN ('merge', 'window', 'customer')
-        GROUP BY doc_id, word, dl
-    ), df AS (
-        SELECT word, count(DISTINCT doc_id) AS df FROM w
-        WHERE word IN ('merge', 'window', 'customer') GROUP BY word
-    ), scored AS (
-        SELECT tf.doc_id,
-               round(sum(
-                   ln(1 + (n - df + 0.5) / (df + 0.5)) *
-                   tf * ({_BM25_K1} + 1) /
-                   (tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl / avgdl))
-               ), 4) AS score
-        FROM tf JOIN df USING (word) CROSS JOIN stats
-        GROUP BY tf.doc_id
-    )
-    SELECT doc_id, score FROM scored
-    ORDER BY score DESC, doc_id ASC LIMIT 20
-    """,
+    _BM25_ORACLE,
     "search: BM25 top-20 served from the STORED inverted index "
     "(sources/inverted_index.py: postings/df/stats frames on the "
     "shared CommitLog), built in TWO increments so the hash gate "
@@ -2526,14 +2317,12 @@ def _bm25_index_store(spark: SparkSession, sf_dir: str):
     headline=True,
 )
 def doc_search_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same scores as ``doc_search_bm25`` (same tokenizer, constants,
-    rounding) — but the timed plan contains NO corpus tokenize: a
-    pruned postings scan, two broadcasts, one TakeOrdered. The stats
-    frame stores integer (n, sumdl), so incremental merges are exact
-    arithmetic and avgdl = sumdl/n reproduces the from-scratch
-    average bit-for-bit."""
-    store = _bm25_index_store(spark, sf_dir)
-    return store.bm25(["merge", "window", "customer"], 20)
+    """Same scores as ``doc_search_bm25``, but the plan holds no corpus
+    tokenize: a word-pruned postings scan, one hash aggregate, one
+    TakeOrdered. The stats frame stores integer (n, sumdl), so
+    incremental merges are exact and avgdl = sumdl/n equals the
+    from-scratch average bit-for-bit."""
+    return _bm25_index_store(spark, sf_dir).bm25(_SEARCH_TERMS, 20)
 
 
 @register(
@@ -2559,8 +2348,8 @@ def doc_search_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT tf.doc_id,
                round(sum(
                    ln(1 + (n - df + 0.5) / (df + 0.5)) *
-                   tf * ({_BM25_K1} + 1) /
-                   (tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl / avgdl))
+                   tf * ({K1} + 1) /
+                   (tf + {K1} * (1 - {B} + {B} * dl / avgdl))
                ), 4) AS score
         FROM tf JOIN hits USING (doc_id)
                 JOIN df USING (word) CROSS JOIN stats
@@ -2577,49 +2366,26 @@ def doc_search_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_search_match_and_indexed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """AND-match costs ONE more aggregation over the already-pruned
-    postings (count distinct terms per doc == n_terms) — no second
-    scan, no self-join chain; the intersection set then gates the
-    same BM25 scoring plan."""
-    terms = ["merge", "window", "customer"]
+    """AND-match: the docs holding every query term (count of distinct
+    terms per doc over the pruned postings == number of terms) gate
+    the stored BM25 scores through one broadcast join. No second scan
+    of the corpus, no self-join chain."""
     store = _bm25_index_store(spark, sf_dir)
-    p = store.live_postings().where(F.col("word").isin(terms))
+    p = store.live_postings().where(F.col("word").isin(_SEARCH_TERMS))
     hits = (
         p.groupBy("doc_id")
         .agg(F.count_distinct("word").alias("nt"))
-        .where(F.col("nt") == len(terms))
+        .where(F.col("nt") == len(_SEARCH_TERMS))
         .select("doc_id")
     )
-    return (
-        store.bm25_scored(terms)
-        .join(F.broadcast(hits), "doc_id")
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(20)
+    return _top20(
+        store.bm25_scored(_SEARCH_TERMS).join(F.broadcast(hits), "doc_id")
     )
 
 
 @register(
     "doc_search_tfidf_indexed",
-    """
-    WITH w AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
-    ), n AS (
-        SELECT count(*) AS total FROM documents
-    ), df AS (
-        SELECT word, count(DISTINCT doc_id) AS df FROM w
-        WHERE word IN ('merge', 'window', 'customer') GROUP BY word
-    ), tf AS (
-        SELECT doc_id, word, count(*) AS tf FROM w
-        WHERE word IN ('merge', 'window', 'customer') GROUP BY doc_id, word
-    ), scored AS (
-        SELECT tf.doc_id,
-               round(sum(tf.tf * ln(n.total * 1.0 / df.df)), 4) AS score
-        FROM tf JOIN df USING (word) CROSS JOIN n
-        GROUP BY tf.doc_id
-    )
-    SELECT doc_id, score FROM scored
-    ORDER BY score DESC, doc_id ASC LIMIT 20
-    """,
+    _TFIDF_ORACLE,
     "search: TF-IDF top-20 served from the STORED inverted index — "
     "same pruned postings scan as the BM25 rows (tf/df/n all come "
     "from the index frames; N = stats.n, no corpus tokenize in the "
@@ -2627,33 +2393,11 @@ def doc_search_match_and_indexed(
     "re-proves the incrementally-maintained frames",
 )
 def doc_search_tfidf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """tf * ln(N/df) from postings/df/stats — the index serves any
-    term-statistic scorer, not just BM25: scoring swaps one Column
-    expression, the physical plan (pruned scan + literal stats +
-    TakeOrdered) is identical."""
-    terms = ["merge", "window", "customer"]
+    """Same scores as ``doc_search_tfidf`` from the stored frames: the
+    index serves any term-statistic scorer, and the plan (pruned
+    postings scan, literal statistics, TakeOrdered) is the BM25 row's."""
     store = _bm25_index_store(spark, sf_dir)
-    idx = store.read()
-    p = store.live_postings(idx).where(F.col("word").isin(terms))
-    # round-15: df and n enter as driver-read exact-integer literals
-    # (see InvertedIndexStore.scalar_aggregates_local) — no broadcast
-    # builds, no joins; same arithmetic
-    df_map, n, _sumdl = store.scalar_aggregates_local(terms)
-    df_col = store._per_word_df(terms, df_map)
-    return (
-        p.groupBy("doc_id")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("tf")
-                    * F.log(F.lit(n) * F.lit(1.0) / df_col)
-                ),
-                4,
-            ).alias("score")
-        )
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(20)
-    )
+    return _top20(scoring.tfidf(store.tf_rows(_SEARCH_TERMS)))
 
 
 @register(

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators import scoring
+from ..operators.scoring import B, K1
 from ..registry import register
 from ..sources.hyperion_model import (
     ACTIONS_CTE,
@@ -31,6 +33,7 @@ from ..sources.hyperion_model import (
     PROPOSALS_CTE,
     SCHEDULE_CTE,
 )
+from ..sources.inverted_index import ensure_index_store
 from ..sources.lake import (
     lake_actions,
     lake_deltas,
@@ -977,116 +980,29 @@ def hyp_regroup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------- scored memo match
-# The reference's memo `match` (functions.ts:154-169) is scored by
-# ES's DEFAULT BM25 similarity — the fuzzy variant above covers the
-# match semantics; this closes the SCORING semantics on the same
-# surface (Lucene constants k1=1.2, b=0.75; corpus = transfer actions,
-# dl = memo length in tokens).
-
-
-@register(
-    "hyp_memo_search_bm25",
-    ACTIONS_CTE + """
-    , m AS (
-        SELECT global_sequence, string_split(transfer.memo, ' ') AS ws
-        FROM actions WHERE transfer IS NOT NULL
-    ), stats AS (
-        SELECT count(*) AS n, avg(len(ws)) AS avgdl FROM m
-    ), w AS (
-        SELECT global_sequence, len(ws) AS dl, unnest(ws) AS word FROM m
-    ), tf AS (
-        SELECT global_sequence, word, dl, count(*) AS tf FROM w
-        WHERE word IN ('model', 'refund', 'fee')
-        GROUP BY global_sequence, word, dl
-    ), df AS (
-        SELECT word, count(DISTINCT global_sequence) AS df FROM w
-        WHERE word IN ('model', 'refund', 'fee') GROUP BY word
-    ), scored AS (
-        SELECT tf.global_sequence,
-               round(sum(
-                   ln(1 + (n - df + 0.5) / (df + 0.5)) *
-                   tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
-               ), 4) AS score
-        FROM tf JOIN df USING (word) CROSS JOIN stats
-        GROUP BY tf.global_sequence
-    )
-    SELECT global_sequence, score FROM scored
-    ORDER BY score DESC, global_sequence ASC LIMIT 20
-    """,
-    "P9 scored memo match — BM25 (ES default similarity, "
-    "functions.ts:154-169) over the promoted @transfer.memo field on "
-    "the stored actions lake; completes the reference's match "
-    "semantics with its SCORING semantics (k1=1.2, b=0.75)",
-)
-def hyp_memo_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relevance-ranked memo search on the Hyperion surface: the same
-    BM25 plan as ``doc_search_bm25`` pointed at the nested lake — the
-    memo tokenization and dl ride one narrow projection over the
-    transfer-pruned scan, term filter pre-exchange, df/stats broadcast,
-    TakeOrdered top-20."""
-    terms = ["model", "refund", "fee"]
-    k1, b = 1.2, 0.75
-    a = lake_actions(spark, sf_dir)
-    m = a.where(F.col("transfer").isNotNull()).select(
-        "global_sequence", F.split(F.col("transfer.memo"), " ").alias("ws")
-    )
-    stats = m.agg(
-        F.count(F.lit(1)).alias("n"), F.avg(F.size("ws")).alias("avgdl")
-    )
-    w = m.select(
-        "global_sequence",
-        F.size("ws").alias("dl"),
-        F.explode("ws").alias("word"),
-    ).where(F.col("word").isin(terms))
-    tf = w.groupBy("global_sequence", "word", "dl").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    df_t = w.groupBy("word").agg(
-        F.count_distinct("global_sequence").alias("df")
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    norm = F.col("tf") * F.lit(k1 + 1) / (
-        F.col("tf")
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-    )
-    return (
-        tf.join(F.broadcast(df_t), "word")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("global_sequence")
-        .agg(F.round(F.sum(idf * norm), 4).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("global_sequence").asc())
-        .limit(20)
-    )
-
-
-# ------------------------------------- memo search from the STORED index
-# Round-7: the reference serves ALL memo search from the index its
-# indexer maintains (ES match over @transfer.memo, functions.ts:154-169
-# — queries never re-tokenize); the from-scratch row above pins the
-# scoring semantics, these two serve the same surface from the stored
-# InvertedIndexStore, including the fork-rollback path: ES removes a
-# retracted tip's postings via deleteByQuery (state-reader.ts:469-599),
-# the store via exact tombstone retraction (retract_ids).
+# The reference's memo `match` (functions.ts:154-169) is scored by ES's
+# default BM25 similarity. These rows score the transfer actions of the
+# lake (dl = memo length in tokens), from scratch and from the stored
+# memo index. The stored rows serve the fork-rollback path too: ES
+# removes a retracted tip's postings via deleteByQuery
+# (state-reader.ts:469-599), the store via exact tombstone retraction
+# (InvertedIndexStore.retract_ids).
 
 _MEMO_TERMS = ["model", "refund", "fee"]
 _MEMO_IDX_KEY = "memoidx:v1"
-_MEMO_IDX_BUILT: set[tuple[str, str]] = set()
 # the retracted fork segment of the oracle rows: a contiguous block
 # span present at every fixture SF (sf0.001 tops out at block 201)
 _FORK_LO, _FORK_HI = 120, 160
 
 
-def _memo_bm25_oracle(extra_where: str = "") -> str:
-    """From-scratch BM25 SQL over the (optionally fork-retracted) memo
-    corpus — the oracle twin of the stored-index serving rows."""
+def _memo_bm25_oracle(where: str) -> str:
+    """From-scratch BM25 SQL over the memo corpus; ``where`` follows
+    ``transfer IS NOT NULL`` verbatim (each row's registered text is
+    pinned byte-for-byte)."""
     return ACTIONS_CTE + f"""
     , m AS (
         SELECT global_sequence, string_split(transfer.memo, ' ') AS ws
-        FROM actions WHERE transfer IS NOT NULL {extra_where}
+        FROM actions WHERE transfer IS NOT NULL{where}
     ), stats AS (
         SELECT count(*) AS n, avg(len(ws)) AS avgdl FROM m
     ), w AS (
@@ -1102,7 +1018,7 @@ def _memo_bm25_oracle(extra_where: str = "") -> str:
         SELECT tf.global_sequence,
                round(sum(
                    ln(1 + (n - df + 0.5) / (df + 0.5)) *
-                   tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
+                   tf * {K1 + 1} / (tf + {K1} * ({1 - B} + {B} * dl / avgdl))
                ), 4) AS score
         FROM tf JOIN df USING (word) CROSS JOIN stats
         GROUP BY tf.global_sequence
@@ -1121,37 +1037,59 @@ def _memo_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _memo_index_store(spark: SparkSession, sf_dir: str, name: str, build):
-    """Write-once stored memo index at ``.lake/<sf>/<name>`` — the
-    ensure_parquet freshness discipline (code-version + source-parquet
-    fingerprint in BUILD_KEY, api/dedup_sim.py:_bm25_index_store)."""
-    import json as _json
-    import os as _os
+@register(
+    "hyp_memo_search_bm25",
+    _memo_bm25_oracle(""),
+    "P9 scored memo match — BM25 (ES default similarity, "
+    "functions.ts:154-169) over the promoted @transfer.memo field on "
+    "the stored actions lake; completes the reference's match "
+    "semantics with its SCORING semantics (k1=1.2, b=0.75)",
+)
+def hyp_memo_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 top-20 over the transfer memos of the actions lake — the
+    ``doc_search_bm25`` plan pointed at the nested lake: one tokenize
+    pass over the transfer-pruned scan builds the match-sized tf rows
+    (:func:`scoring.tf_rows`), then one hash aggregate and TakeOrdered,
+    with no join."""
+    t = scoring.tf_rows(
+        _memo_corpus(spark, sf_dir),
+        _MEMO_TERMS,
+        id_col="global_sequence",
+        text_col="memo",
+    )
+    return (
+        scoring.bm25(t)
+        .orderBy(F.col("score").desc(), F.col("global_sequence").asc())
+        .limit(20)
+    )
 
-    from ..sources.inverted_index import InvertedIndexStore
-    from ..sources.lake import _source_fingerprint, lake_root
 
-    sf_name = _os.path.basename(_os.path.normpath(sf_dir))
-    path = str(lake_root() / sf_name / name)
-    store = InvertedIndexStore(spark, path)
-    fp = _source_fingerprint(sf_dir, "events.parquet")
-    build_key = _MEMO_IDX_KEY + "|" + _json.dumps(fp, sort_keys=True)
-    key_file = _os.path.join(path, "BUILD_KEY")
-    try:
-        fresh = open(key_file).read() == build_key
-    except OSError:
-        fresh = False
-    if (path, build_key) not in _MEMO_IDX_BUILT and not fresh:
-        build(store)
-        with open(key_file, "w") as fh:
-            fh.write(build_key)
-    _MEMO_IDX_BUILT.add((path, build_key))
-    return store
+def _memo_index(spark: SparkSession, sf_dir: str):
+    """The stored memo index, built in two increments (even, then odd
+    global_sequence) so the oracle rows reading it prove incremental
+    maintenance == from-scratch scoring."""
+
+    def build(store):
+        docs = _memo_corpus(spark, sf_dir)
+        parity = F.col("global_sequence") % 2
+        cols = dict(text_col="memo", id_col="global_sequence")
+        store.commit(docs.where(parity == 0), **cols)
+        store.commit_delta(docs.where(parity == 1), **cols)
+
+    return ensure_index_store(
+        spark, sf_dir, "memo_index", "events.parquet", _MEMO_IDX_KEY, build
+    )
+
+
+def _stored_memo_top20(store) -> DataFrame:
+    return store.bm25(_MEMO_TERMS, 20).withColumnRenamed(
+        "doc_id", "global_sequence"
+    )
 
 
 @register(
     "hyp_memo_search_bm25_indexed",
-    _memo_bm25_oracle(),
+    _memo_bm25_oracle(" "),
     "P9 scored memo match served from the STORED inverted index "
     "(sources/inverted_index.py) on the actions lake — the reference's "
     "actual serving shape (queries read postings the indexer "
@@ -1162,33 +1100,16 @@ def _memo_index_store(spark: SparkSession, sf_dir: str, name: str, build):
 def hyp_memo_search_bm25_indexed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Same scores as ``hyp_memo_search_bm25``; the timed plan holds
-    no memo tokenize — a word-pruned postings scan, two broadcasts,
-    one TakeOrdered."""
-
-    def build(store):
-        docs = _memo_corpus(spark, sf_dir)
-        store.commit(
-            docs.where(F.col("global_sequence") % 2 == 0),
-            text_col="memo",
-            id_col="global_sequence",
-        )
-        store.commit_delta(
-            docs.where(F.col("global_sequence") % 2 == 1),
-            text_col="memo",
-            id_col="global_sequence",
-        )
-
-    store = _memo_index_store(spark, sf_dir, "memo_index", build)
-    return store.bm25(_MEMO_TERMS, 20).select(
-        F.col("doc_id").alias("global_sequence"), "score"
-    )
+    """Same scores as ``hyp_memo_search_bm25``; the plan holds no memo
+    tokenize — a word-pruned postings scan, one hash aggregate, one
+    TakeOrdered."""
+    return _stored_memo_top20(_memo_index(spark, sf_dir))
 
 
 @register(
     "hyp_memo_bm25_post_retraction",
     _memo_bm25_oracle(
-        f"AND block_num NOT BETWEEN {_FORK_LO} AND {_FORK_HI}"
+        f" AND block_num NOT BETWEEN {_FORK_LO} AND {_FORK_HI}"
     ),
     "S11 fork rollback ON THE STORED INDEX: the forked block span's "
     "memo postings are retracted via tombstones with EXACT df/stats "
@@ -1202,10 +1123,9 @@ def hyp_memo_bm25_post_retraction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Build the memo index over the FULL corpus, retract the forked
-    segment's doc_ids, serve BM25 — scores must equal a from-scratch
-    build on the surviving corpus, which only holds because the
-    retraction subtracts the retracted docs' df/n/sumdl contributions
-    exactly (integer arithmetic) rather than leaving them stale."""
+    segment's ids, serve BM25. Scores equal a from-scratch build on the
+    surviving corpus because the retraction subtracts the retracted
+    docs' df/n/sumdl contributions exactly (integer arithmetic)."""
 
     def build(store):
         docs = _memo_corpus(spark, sf_dir)
@@ -1215,9 +1135,11 @@ def hyp_memo_bm25_post_retraction(
         ).select("global_sequence")
         store.retract_ids(forked, id_col="global_sequence")
 
-    store = _memo_index_store(spark, sf_dir, "memo_index_fork", build)
-    return store.bm25(_MEMO_TERMS, 20).select(
-        F.col("doc_id").alias("global_sequence"), "score"
+    return _stored_memo_top20(
+        ensure_index_store(
+            spark, sf_dir, "memo_index_fork", "events.parquet",
+            _MEMO_IDX_KEY, build,
+        )
     )
 
 
@@ -1259,21 +1181,7 @@ def hyp_memo_phrase_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phrase occurrence counts per matching action — n-1 equi-joins
     over word-pruned postings, no memo re-tokenization (the timed
     plan never touches the lake's text)."""
-
-    def build(store):
-        docs = _memo_corpus(spark, sf_dir)
-        store.commit(
-            docs.where(F.col("global_sequence") % 2 == 0),
-            text_col="memo",
-            id_col="global_sequence",
-        )
-        store.commit_delta(
-            docs.where(F.col("global_sequence") % 2 == 1),
-            text_col="memo",
-            id_col="global_sequence",
-        )
-
-    store = _memo_index_store(spark, sf_dir, "memo_index", build)
+    store = _memo_index(spark, sf_dir)
     return store.phrase_match(["for", "model"]).select(
         F.col("doc_id").alias("global_sequence"),
         F.col("n_occurrences").cast("int").alias("n_occurrences"),

@@ -32,13 +32,13 @@ land as new files; df/stats rewrite from (previous || batch) — no
 history re-tokenization ever. The manifest swap is the single atomic
 commit point (shared CommitLog, commitlog.py).
 
-BM25 serving reads ONLY the query terms' postings (pushed word
-filter), broadcasts the filtered df and the 1-row stats, and top-ks
-with TakeOrdered — per-query cost proportional to the matched
-postings, not the corpus. Score formula and constants are identical
-to doc_search_bm25 (Lucene k1=1.2, b=0.75), and the registry row
-builds the store in two increments, so its oracle hash proves
-incremental maintenance == from-scratch SQL scoring.
+Scoring reads ONLY the query terms' postings (pushed word filter)
+plus the df and stats frames (pyarrow, no Spark job), and hands them to
+the shared scorer (operators/scoring.py) as tf rows: cost follows the
+matched postings, not the corpus. The score formula is the one every
+from-scratch scored search uses, and the registry rows build their
+stores in increments (or retract from them), so each oracle hash
+proves incremental maintenance == from-scratch SQL scoring.
 """
 
 from __future__ import annotations
@@ -49,9 +49,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..commitlog import CommitLog, link_files
-
-_BM25_K1 = 1.2
-_BM25_B = 0.75
+from ..operators import scoring
+from ..operators.scoring import TfRows
 
 POSTINGS_FRAME = "postings"
 DF_FRAME = "df"
@@ -441,14 +440,11 @@ class InvertedIndexStore:
     def scalar_aggregates_local(
         self, terms: list[str] | None = None
     ) -> tuple[dict[str, int], int, int]:
-        """Driver-side read of the two SCALAR aggregate frames —
-        ``(df_map, n, sumdl)``. Every commit path maintains df as one
-        row per word and stats as one row, both coalesce(1) (tiny),
-        so a pyarrow read of the snapshot files is value-identical to
-        the Spark scan — but costs zero Spark jobs, removing the two
-        broadcast-build job rounds every indexed-search query paid
-        (round-15; guide §1.2 "remove passes", §5 driver work is fine
-        for metadata-sized data). ``terms`` prunes the df map."""
+        """Driver-side read of the two scalar aggregate frames —
+        ``(df_map, n, sumdl)``. Every commit path writes df as one row
+        per word and stats as one row, both coalesce(1), so a pyarrow
+        read of the snapshot files equals the Spark scan and costs no
+        Spark job. ``terms`` prunes the df map."""
         import pyarrow.parquet as pq
 
         m = self.log.read_manifest()
@@ -479,50 +475,28 @@ class InvertedIndexStore:
             st.column("sumdl")[0].as_py()
         )
 
-    @staticmethod
-    def _per_word_df(terms: list[str], df_map: dict[str, int]):
-        """CASE word WHEN t THEN df(t) ... over the pruned postings —
-        terms absent from the index have no postings rows, so their
-        placeholder value is never evaluated."""
-        col = F.when(
-            F.col("word") == terms[0], F.lit(df_map.get(terms[0], 1))
-        )
-        for t in terms[1:]:
-            col = col.when(F.col("word") == t, F.lit(df_map.get(t, 1)))
-        return col
-
-    def bm25_scored(self, terms: list[str]) -> DataFrame:
-        """Unlimited (doc_id, score) frame from the STORED index:
-        postings pruned to the query terms (pushed filter +
-        word-clustered files); df and the 1-row stats are read DRIVER-
-        side (round-15 — they are metadata-sized scalar frames, see
-        ``scalar_aggregates_local``) and enter the plan as exact
-        integer literals, so the plan is scan -> project -> one hash
-        agg -> caller's top-k: no broadcast builds, no joins —
-        per-query cost follows matched postings, never the corpus.
-        Formula and constants identical to doc_search_bm25. Callers
-        compose their own gate/top-k (bm25() below, AND-match in
-        api/dedup_sim.py)."""
+    def tf_rows(self, terms: list[str]) -> TfRows:
+        """Term statistics of ``terms`` from the stored frames: the live
+        postings pruned to the query terms (pushed word filter over
+        word-clustered files) as tf rows keyed by ``word``, with df, n
+        and sumdl read without a Spark job by
+        :meth:`scalar_aggregates_local`.
+        Nothing here tokenizes the corpus, so per-query cost follows
+        the matched postings."""
         idx = self.read()
         if idx is None:
-            raise ValueError("bm25 requires a seeded index store")
-        p = self.live_postings(idx).where(F.col("word").isin(terms))
-        df_map, n, sumdl = self.scalar_aggregates_local(terms)
-        df_col = self._per_word_df(terms, df_map)
-        idf = F.log(
-            F.lit(1.0)
-            + (F.lit(n) - df_col + F.lit(0.5)) / (df_col + F.lit(0.5))
-        )
-        avgdl = F.lit(sumdl / n)  # exact long/long -> same IEEE double
-        norm = F.col("tf") * F.lit(_BM25_K1 + 1) / (
-            F.col("tf")
-            + F.lit(_BM25_K1)
-            * (F.lit(1.0 - _BM25_B) + F.lit(_BM25_B) * F.col("dl") / avgdl)
-        )
-        return (
-            p.groupBy("doc_id")
-            .agg(F.round(F.sum(idf * norm), 4).alias("score"))
-        )
+            raise ValueError("scoring requires a seeded index store")
+        df, n, sumdl = self.scalar_aggregates_local(terms)
+        rows = self.live_postings(idx).where(F.col("word").isin(terms))
+        return TfRows(rows, "doc_id", "word", df, n, sumdl)
+
+    def bm25_scored(self, terms: list[str]) -> DataFrame:
+        """Unlimited (doc_id, score) BM25 frame from the stored index:
+        pruned scan -> one hash aggregate, with a join only to drop
+        tombstoned docs. Scores equal ``doc_search_bm25`` on the same
+        live corpus; callers add their own gate and top-k (:meth:`bm25`,
+        the AND-match row)."""
+        return scoring.bm25(self.tf_rows(terms))
 
     def bm25(self, terms: list[str], k: int = 20) -> DataFrame:
         """BM25 top-k: :meth:`bm25_scored` + TakeOrdered."""
@@ -572,3 +546,39 @@ class InvertedIndexStore:
         return cur.select(
             "doc_id", F.size("chain").alias("n_occurrences")
         ).orderBy("doc_id")
+
+
+_BUILT: set[tuple[str, str]] = set()  # (path, build key) built or fresh
+
+
+def ensure_index_store(
+    spark: SparkSession, sf_dir: str, name: str, source: str, key: str, build
+) -> InvertedIndexStore:
+    """The write-once stored index at ``<lake_root>/<sf>/<name>``.
+
+    ``build(store)`` runs only when the store's ``BUILD_KEY`` file does
+    not hold ``key`` plus the size/mtime fingerprint of ``sf_dir/source``
+    (the ensure_parquet discipline): regenerated fixture data, or two
+    sf_dirs sharing a basename, never serve a stale index. A (path,
+    key) this process already built or found fresh is not rebuilt."""
+    import json
+
+    from .lake import _source_fingerprint, lake_root
+
+    sf_name = os.path.basename(os.path.normpath(sf_dir))
+    path = str(lake_root() / sf_name / name)
+    store = InvertedIndexStore(spark, path)
+    build_key = key + "|" + json.dumps(
+        _source_fingerprint(sf_dir, source), sort_keys=True
+    )
+    key_file = os.path.join(path, "BUILD_KEY")
+    try:
+        fresh = open(key_file).read() == build_key
+    except OSError:
+        fresh = False
+    if (path, build_key) not in _BUILT and not fresh:
+        build(store)
+        with open(key_file, "w") as fh:
+            fh.write(build_key)
+    _BUILT.add((path, build_key))
+    return store

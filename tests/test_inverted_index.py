@@ -221,3 +221,19 @@ def test_retraction_io_is_o_retracted(spark, tmp_path):
         if f.endswith(".parquet")
     }
     assert inos1 == inos2  # postings bytes untouched; tombstones separate
+
+
+def test_fully_retracted_store_scores_empty(spark, tmp_path):
+    """With every document retracted (n == 0) the stored BM25 and
+    TF-IDF paths return an empty (doc_id, score) frame."""
+    from hyperion_history_api_spark.operators import scoring
+
+    docs = _docs(spark)
+    store = InvertedIndexStore(spark, str(tmp_path / "idx"))
+    store.commit(docs)
+    store.retract_ids(docs.select("doc_id"))
+    terms = ["merge", "window", "customer"]
+    assert store.tf_rows(terms).n == 0
+    for scored in (store.bm25(terms, 20), scoring.tfidf(store.tf_rows(terms))):
+        assert scored.columns == ["doc_id", "score"]
+        assert scored.collect() == []

@@ -294,6 +294,25 @@ def test_bm25_single_pass_topk(spark):
     assert "documents.parquet" not in plan
 
 
+def test_memo_bm25_single_pass_topk(spark):
+    """The memo search over the actions lake takes the same single-pass
+    plan as doc_search_bm25: the tf rows are built by one tokenize job
+    at query construction, and the scoring plan reads the checkpointed
+    rows only — no df/stats join, no lake scan."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    _q("hyp_memo_search_bm25", spark)  # warm (lake build)
+    sc.setJobGroup("memo-bm25-build-pin", "build")
+    df = _q("hyp_memo_search_bm25", spark)
+    sc.setJobGroup("", "")
+    assert len(tracker.getJobIdsForGroup("memo-bm25-build-pin")) <= 2
+    plan = _plan(df)
+    assert "TakeOrderedAndProject(limit=20" in plan
+    assert "Join" not in plan
+    assert plan.count("Exchange hashpartitioning") <= 2
+    assert "FileScan" not in plan
+
+
 def test_semdedup_no_cartesian(spark):
     """SemDeDup's pairwise leg is ONE hash exchange on the cell key
     feeding a per-cell Arrow GEMM — no pair rows materialized: never a
