@@ -28,6 +28,14 @@ from ..plans.predicates import QueryParams, apply_query, compile_predicate
 from ..registry import register, _t
 
 
+def delta_view(ev: DataFrame) -> DataFrame:
+    """The delta column mapping of the events log, shared by the
+    get_deltas route, its registry row and both stream paths: (code,
+    table) is ``event_type``, scope is ``user_id``, and payer is the
+    ``props.k`` payload field promoted to a bigint column."""
+    return ev.withColumn("payer", F.get_json_object("props", "$.k").cast("long"))
+
+
 @register(
     "get_deltas_by_scope",
     """
@@ -42,14 +50,12 @@ from ..registry import register, _t
     "get_deltas code/table/payer/scope terms (v2-history/get_deltas.ts:6-91,48-52)",
 )
 def get_deltas_by_scope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta query: (code,table) -> event_type, scope -> user_id range,
-    payer -> props.k — all compiled through the predicate compiler
-    (QueryParams -> apply_query), so the oracle row tests the compiler,
-    not per-query code. The scan-pushable predicates reach parquet; the
-    JSON payer extraction runs only on surviving rows."""
-    ev = _t(spark, sf_dir)["events"].withColumn(
-        "payer", F.get_json_object("props", "$.k").cast("long")
-    )
+    """Delta query over :func:`delta_view`, compiled through the
+    predicate compiler (QueryParams -> apply_query), so the oracle row
+    tests the compiler, not per-query code. The scan-pushable
+    predicates reach parquet; the JSON payer extraction runs only on
+    surviving rows."""
+    ev = delta_view(_t(spark, sf_dir)["events"])
     out = apply_query(
         ev,
         QueryParams(
@@ -78,14 +84,17 @@ def get_deltas_by_scope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "get_blocks headers + per-block rollups (v2-history/get_blocks.ts:6-161; A13 deserializer.ts:317-415)",
 )
-def get_blocks_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Block-range query: light headers with per-block usage rollups.
-    The range predicate prunes before the single groupBy shuffle; at
-    scale the block_num grouping key is also the lake partition key, so
-    partial aggregation is near-total map-side."""
+def get_blocks_range(
+    spark: SparkSession, sf_dir: str, *, after: int = 100, before: int = 699
+) -> DataFrame:
+    """Block-range query: light headers with per-block usage rollups
+    over the [after, before] sequence window. The range predicate
+    prunes before the single groupBy shuffle; at scale the block_num
+    grouping key is also the lake partition key, so partial
+    aggregation is near-total map-side."""
     ev = _t(spark, sf_dir)["events"]
     pred = compile_predicate(
-        ev, QueryParams(after="100", before="699"), seq_field="event_id"
+        ev, QueryParams(after=str(after), before=str(before)), seq_field="event_id"
     )
     return (
         ev.where(pred)
@@ -109,16 +118,18 @@ def get_blocks_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "get_created_accounts by creator (v2-history/get_created_accounts.ts:5-50)",
 )
-def get_created_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def get_created_accounts(
+    spark: SparkSession, sf_dir: str, *, creator: str = "CHINA", limit: int = 100
+) -> DataFrame:
     """Accounts created by one creator (nation = creator dimension).
     Broadcast the 25-row dimension; the fact side stays partition-local."""
     t = _t(spark, sf_dir)
-    creator = F.broadcast(t["nation"].where(F.col("n_name") == "CHINA"))
+    dim = F.broadcast(t["nation"].where(F.col("n_name") == creator))
     return (
         t["customer"]
-        .join(creator, F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(dim, F.col("c_nationkey") == F.col("n_nationkey"))
         .orderBy(F.col("c_custkey").desc())
-        .limit(100)
+        .limit(limit)
         .select(F.col("c_custkey").alias("account"), F.col("c_name").alias("account_name"))
     )
 
@@ -133,15 +144,18 @@ def get_created_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "get_schedule latest version as-of block (v2-history/get_schedule.ts:9-59)",
 )
-def get_schedule_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest producer-schedule version with sequence <= N: top-1 over a
-    pushed-down filter (TakeOrderedAndProject, no full sort). Routed
-    through the predicate compiler (term + before-sequence bound)."""
+def get_schedule_asof(
+    spark: SparkSession, sf_dir: str, *, before: str = "600"
+) -> DataFrame:
+    """Latest producer-schedule version as-of ``before`` (a sequence or
+    a timestamp): top-1 over a pushed-down filter
+    (TakeOrderedAndProject, no full sort). Routed through the predicate
+    compiler (term + before bound)."""
     ev = _t(spark, sf_dir)["events"]
     return (
         apply_query(
             ev,
-            QueryParams(terms={"event_type": "signup"}, before="600", limit=1),
+            QueryParams(terms={"event_type": "signup"}, before=before, limit=1),
             default_sort_field="event_id",
             seq_field="event_id",
         )
@@ -165,13 +179,15 @@ def get_schedule_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "check_transaction existence probe (v2-history/check_transaction.ts:4-27)",
 )
-def check_transaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+def check_transaction(
+    spark: SparkSession, sf_dir: str, *, trx: int = 42
+) -> DataFrame:
     """Transaction existence check: key lookup + trace count. The
     orderkey predicate pushes into BOTH scans (join-key inference), so
     at 100 TB this touches one partition per side."""
     t = _t(spark, sf_dir)
-    o = t["orders"].where(F.col("o_orderkey") == 42)
-    li = t["lineitem"].where(F.col("l_orderkey") == 42)
+    o = t["orders"].where(F.col("o_orderkey") == trx)
+    li = t["lineitem"].where(F.col("l_orderkey") == trx)
     return (
         o.join(li, F.col("l_orderkey") == F.col("o_orderkey"), "left")
         .groupBy("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -358,7 +374,9 @@ def get_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "get_voters filtered state table (v2-state/get_voters.ts:6-74)",
 )
-def get_voters(spark: SparkSession, sf_dir: str) -> DataFrame:
+def get_voters(
+    spark: SparkSession, sf_dir: str, *, segment: str = "BUILDING", limit: int = 50
+) -> DataFrame:
     """Voter listing: filter + sort by vote weight desc + page, routed
     through the predicate compiler (segment term + positive-balance
     range on 2-decimal data). TakeOrdered keeps it a top-K, never a
@@ -367,9 +385,9 @@ def get_voters(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = apply_query(
         cust,
         QueryParams(
-            terms={"c_mktsegment": "BUILDING", "c_acctbal": "0.01-9999999"},
+            terms={"c_mktsegment": segment, "c_acctbal": "0.01-9999999"},
             sorted_by="c_acctbal:desc",
-            limit=50,
+            limit=limit,
         ),
         default_sort_field="c_acctbal",
         tiebreaker="c_custkey",
@@ -389,10 +407,12 @@ def get_voters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "A15 mongo countDocuments (get_voters.ts:44, get_proposals.ts:83)",
 )
-def get_voter_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+def get_voter_count(
+    spark: SparkSession, sf_dir: str, *, segment: str = "BUILDING"
+) -> DataFrame:
     cust = _t(spark, sf_dir)["customer"]
     return (
-        cust.where((F.col("c_mktsegment") == "BUILDING") & (F.col("c_acctbal") > 0))
+        cust.where((F.col("c_mktsegment") == segment) & (F.col("c_acctbal") > 0))
         .agg(F.count("*").alias("voter_count"))
     )
 
@@ -409,14 +429,16 @@ def get_voter_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "get_links permission links per account (v2-state/get_links.ts:5-64)",
 )
-def get_links(spark: SparkSession, sf_dir: str) -> DataFrame:
+def get_links(
+    spark: SparkSession, sf_dir: str, *, account: str = "1-5"
+) -> DataFrame:
     """Permission-link listing: (account, action) pairs with earliest
-    link sequence — groupBy after a compiler-built account-range
-    filter."""
+    link sequence — groupBy after a compiler-built account filter (one
+    account or an ``a-b`` range)."""
     ev = _t(spark, sf_dir)["events"]
     pred = compile_predicate(
         ev,
-        QueryParams(terms={"user_id": "1-5"}),
+        QueryParams(terms={"user_id": account}),
         numeric_fields=frozenset({"user_id"}),
     )
     return (
@@ -440,15 +462,17 @@ def get_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "get_proposals msig listing (v2-state/get_proposals.ts:4-96)",
 )
-def get_proposals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pending-proposal listing: status filter + newest-first page with
-    a unique tiebreaker for deterministic pagination — QueryParams ->
+def get_proposals(
+    spark: SparkSession, sf_dir: str, *, status: str = "P", limit: int = 40
+) -> DataFrame:
+    """Proposal listing by status: newest-first page with a unique
+    tiebreaker for deterministic pagination — QueryParams ->
     apply_query."""
     o = _t(spark, sf_dir)["orders"]
     out = apply_query(
         o,
         QueryParams(
-            terms={"o_orderstatus": "P"}, sorted_by="o_orderdate:desc", limit=40
+            terms={"o_orderstatus": status}, sorted_by="o_orderdate:desc", limit=limit
         ),
         default_sort_field="o_orderdate",
         tiebreaker="o_orderkey",
@@ -541,10 +565,12 @@ def get_key_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "get_controlled_accounts dedup (v1-history/get_controlled_accounts.ts:4-64,60-62)",
 )
-def get_controlled_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
+def get_controlled_accounts(
+    spark: SparkSession, sf_dir: str, *, controlling: int = 7
+) -> DataFrame:
     sup = _t(spark, sf_dir)["supplier"]
     return (
-        sup.where(F.col("s_nationkey") == 7)
+        sup.where(F.col("s_nationkey") == controlling)
         .select(F.col("s_suppkey").alias("controlled"))
         .distinct()
         .orderBy("controlled")
@@ -565,13 +591,15 @@ def get_controlled_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "get_account 3-call composition (v2-state/get_account.ts:56-87)",
 )
-def get_account(spark: SparkSession, sf_dir: str) -> DataFrame:
+def get_account(
+    spark: SparkSession, sf_dir: str, *, account: int = 7
+) -> DataFrame:
     """get_account composes account row + activity rollup + last action
     — one plan instead of the reference's three serial calls; both
     scans are key-pruned."""
     t = _t(spark, sf_dir)
-    c = t["customer"].where(F.col("c_custkey") == 7)
-    o = t["orders"].where(F.col("o_custkey") == 7)
+    c = t["customer"].where(F.col("c_custkey") == account)
+    o = t["orders"].where(F.col("o_custkey") == account)
     return (
         c.join(o, F.col("o_custkey") == F.col("c_custkey"), "left")
         .groupBy("c_custkey", "c_name", "c_acctbal")

@@ -4,14 +4,19 @@ serving surface begun in :mod:`.http_server` with the v2-history tail,
 the v2-state family, the v2-stats family, the v2 misc pair, and the v1
 compatibility shims (``src/api/routes/v1-history``, ``v1-trace``).
 
-Every handler is the same THIN-translation discipline as
-http_server.py: query-string/JSON params → the oracle-checked plan
-family the registry serves (parameterized through the SAME private
-cores — ``_get_key_accounts``, ``_v1_trace_get_block``, the predicate
-compiler, ``latest_row_per_key`` — so the HTTP plan can never drift
-from the hash-gated one), plus the reference's response body shapes.
-Handler defaults equal the registry rows' constants, which is what
-``tests/test_http_server.py`` asserts per family (envelope parity).
+One plan per route: a handler that answers what a registry row
+computes calls that row function (or its ``(df, strategy)`` chooser
+core) with the request's params as keyword arguments, whose defaults
+are the row's oracle constants, and holds no plan of its own. Its only
+DataFrame steps are the page ``limit``, the ``after_key`` cursor and
+column renames; the rest is param parsing and the reference's response
+body shape. ``tests/test_http_routes.py`` asserts HTTP body == registry
+row per family. Routes with no row, or that compute more than a row in
+the same scan, keep their own plan: ``get_action_usage``,
+``get_resource_usage``, ``get_block``, ``get_abi_snapshot``,
+``v1_get_actions`` and, in :mod:`.http_server`, ``get_creator`` and
+``get_table_rows``; so do ``get_account``'s recent-actions and links
+legs and ``get_trx_count``'s plain count.
 
 Scale shape: unchanged from the registry rows — point/page lookups are
 pushed-down scans + TakeOrderedAndProject; dimension joins run through
@@ -25,9 +30,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..operators.latest_state import latest_row_per_key
-from ..plans.predicates import QueryParams, apply_query, compile_predicate
 from ..registry import _t
+from . import endpoints_ext, state, stats
+
+#: hard cap on any route's collected page — the reference's fastify
+#: schema rejects limit > 1000 (functions.ts skip/limit guards); a
+#: route that let a raw ``limit`` reach ``.limit().collect()`` would
+#: serialize an entire table onto the serving driver.
+MAX_LIMIT = 1000
+
+
+def _limit(params: dict, default: int = 100) -> int:
+    n = int(params.get("limit", default))
+    if n < 0:
+        raise ValueError(f"limit must be >= 0, got {n}")
+    return min(n, MAX_LIMIT)
 
 
 def _rows(df: DataFrame, limit: int | None = None) -> list[dict]:
@@ -43,36 +60,36 @@ def _rows(df: DataFrame, limit: int | None = None) -> list[dict]:
     ]
 
 
+def _keyset_page(
+    df: DataFrame, key_cols: list[str], params: dict
+) -> tuple[list[dict], str | None]:
+    """One composite-key page (get_table_state.ts:36-43,69-72): rows
+    keyed by ``concat(key_cols, '-')`` strictly after the ``after_key``
+    cursor, in key order, and the ``next_key`` cursor when the page is
+    full."""
+    limit = _limit(params)
+    page = df.withColumn("_key", F.concat_ws("-", *key_cols))
+    if params.get("after_key"):
+        page = page.where(F.col("_key") > params["after_key"])
+    rows = _rows(page.orderBy(F.col("_key").asc()).limit(limit))
+    next_key = rows[-1]["_key"] if rows and len(rows) == limit else None
+    for r in rows:
+        del r["_key"]
+    return rows, next_key
+
+
 # --- v2-history tail -----------------------------------------------------
 
 
 def get_blocks(api, params: dict) -> dict:
     """routes/v2-history/get_blocks (get_blocks.ts:6-161): block-range
-    headers with per-block rollups — the ``get_blocks_range`` plan
-    parameterized by the [after, before] sequence window.
-    ``model=hyperion`` serves the nested lake rollups."""
+    headers with per-block rollups — the ``get_blocks_range`` row over
+    the [after, before] sequence window. ``model=hyperion`` serves the
+    nested lake rollups."""
     if params.get("model") == "hyperion":
         return hyp_get_blocks(api, params)
-    from .http_server import _limit
-
-    after = int(params.get("after", 100))
-    before = int(params.get("before", 699))
-    ev = _t(api.spark, api.sf_dir)["events"]
-    pred = compile_predicate(
-        ev,
-        QueryParams(after=str(after), before=str(before)),
-        seq_field="event_id",
-    )
-    df = (
-        ev.where(pred)
-        .groupBy((F.col("event_id") / 100).cast("long").alias("block_num"))
-        .agg(
-            F.count("*").alias("trx_count"),
-            F.round(F.sum("value"), 4).alias("cpu_usage"),
-            F.max("event_id").alias("last_seq"),
-        )
-        .orderBy(F.col("block_num").desc())
-    )
+    window = {k: int(params[k]) for k in ("after", "before") if k in params}
+    df = endpoints_ext.get_blocks_range(api.spark, api.sf_dir, **window)
     # get_blocks.ts:153-158 response shape: the reference itself
     # hardcodes lib: 0 here (only get_transaction resolves the real
     # watermark) — mirror that, not lib_block()
@@ -143,89 +160,42 @@ def get_abi_snapshot(api, params: dict) -> dict:
 
 def get_schedule(api, params: dict) -> dict:
     """routes/v2-history/get_schedule (get_schedule.ts:9-59): latest
-    producer-schedule version as-of a sequence — the
-    ``get_schedule_asof`` plan parameterized by ``before``."""
-    before = params.get("before", "600")
-    ev = _t(api.spark, api.sf_dir)["events"]
-    df = apply_query(
-        ev,
-        QueryParams(terms={"event_type": "signup"}, before=str(before), limit=1),
-        default_sort_field="event_id",
-        seq_field="event_id",
-    ).select(
-        F.col("event_id").alias("version_seq"),
-        F.col("user_id").alias("producer_slot"),
-        F.col("ts").alias("active_since"),
-    )
-    rows = _rows(df)
+    producer-schedule version as-of ``before`` — the
+    ``get_schedule_asof`` row."""
+    bound = {"before": params["before"]} if "before" in params else {}
+    rows = _rows(endpoints_ext.get_schedule_asof(api.spark, api.sf_dir, **bound))
     return {"schedule": rows[0] if rows else None}
 
 
 def get_table_state(api, params: dict) -> dict:
     """routes/v2-history/get_table_state (get_table_state.ts:22-78):
-    latest row per (scope, primary_key) as-of ``block``, paged by the
-    composite ``after_key`` cursor — ``get_table_state_latest`` +
-    ``keyset_pagination`` in one parameterized plan. One shuffle on
-    the state key; the as-of bound is pushed to the scan.
+    latest row per (scope, primary_key) as-of ``block`` — the
+    ``get_table_state_latest`` row — paged by the composite
+    ``after_key`` cursor (the ``keyset_pagination`` step). One shuffle
+    on the state key; the as-of bound is pushed to the scan.
     ``model=hyperion`` serves the nested deltas-lake state."""
     if params.get("model") == "hyperion":
         return hyp_get_table_state(api, params)
-    from .http_server import _limit
-
     block = int(params.get("block", 800))
-    after_key = params.get("after_key", "")
-    limit = _limit(params, default=100)
-    ev = _t(api.spark, api.sf_dir)["events"]
-    latest = latest_row_per_key(
-        ev,
-        ["user_id", "event_type"],
-        "event_id",
-        as_of=F.col("event_id") <= block,
-    )
-    key = F.concat_ws("-", F.col("user_id"), F.col("event_type"))
-    page = latest.withColumn("_key", key)
-    if after_key:
-        page = page.where(F.col("_key") > after_key)
-    page = (
-        page.orderBy(F.col("_key").asc())
-        .limit(limit)
-        .select(
-            "user_id",
-            "event_type",
-            "event_id",
-            F.round("value", 4).alias("value"),
-            "_key",
-        )
-    )
-    rows = _rows(page)
-    next_key = rows[-1]["_key"] if rows and len(rows) == limit else None
-    for r in rows:
-        del r["_key"]
+    latest = state.get_table_state_latest(api.spark, api.sf_dir, block=block)
+    rows, next_key = _keyset_page(latest, ["user_id", "event_type"], params)
     return {"block": block, "rows": rows, "next_key": next_key}
 
 
 def check_transaction(api, params: dict) -> dict:
     """routes/v2-history/check_transaction (check_transaction.ts:4-27):
-    existence probe — key lookup + trace count, predicate pushed into
-    both scans (the registered ``check_transaction`` plan)."""
+    existence probe — the ``check_transaction`` row (key lookup + trace
+    count, predicate pushed into both scans)."""
     trx = int(params.get("id", 42))
-    t = _t(api.spark, api.sf_dir)
-    o = t["orders"].where(F.col("o_orderkey") == trx)
-    li = t["lineitem"].where(F.col("l_orderkey") == trx)
-    row = (
-        o.join(li, F.col("l_orderkey") == F.col("o_orderkey"), "left")
-        .groupBy("o_orderkey", "o_orderstatus", "o_totalprice")
-        .agg(F.count("l_orderkey").alias("action_count"))
-        .first()
-    )
+    row = endpoints_ext.check_transaction(api.spark, api.sf_dir, trx=trx).first()
     if row is None:
         return {"id": trx, "known": False}
     return {
         "id": trx,
         "known": True,
-        "status": row["o_orderstatus"],
+        "status": row["status"],
         "action_count": row["action_count"],
-        "total": round(row["o_totalprice"], 4),
+        "total": row["total"],
     }
 
 
@@ -242,7 +212,6 @@ def hyp_get_actions(api, params: dict) -> dict:
     single-index routing, get_transaction.ts:73-79)."""
     from ..plans.predicates import compile_code_action_filter
     from ..sources.lake import lake_actions, prune_block_range
-    from .http_server import _limit
 
     a = lake_actions(api.spark, api.sf_dir)
     if "after" in params or "before" in params:
@@ -343,7 +312,6 @@ def hyp_get_deltas(api, params: dict) -> dict:
     shared :func:`..api.nested.deltas_page` core the hash-gated
     ``hyp_get_deltas_page`` row runs; route defaults are the row's
     constants."""
-    from .http_server import _limit
     from .nested import deltas_page
 
     df = deltas_page(
@@ -364,7 +332,6 @@ def hyp_get_blocks(api, params: dict) -> dict:
     the nested actions lake over [after, before] — the shared
     :func:`..api.nested.blocks_range_rollup` core of the hash-gated
     ``hyp_get_blocks_range`` row (its constants are the defaults)."""
-    from .http_server import _limit
     from .nested import blocks_range_rollup
 
     lo = int(params.get("after", 40))
@@ -406,11 +373,9 @@ def hyp_get_table_state(api, params: dict) -> dict:
     the shared :func:`..api.nested.table_state_asof` core of the
     hash-gated ``hyp_table_state_latest`` row, plus the route's
     keyset ``after_key`` page cursor (O8)."""
-    from .http_server import _limit
     from .nested import table_state_asof
 
     block = int(params.get("block", 1500))
-    limit = _limit(params, default=100)
     latest = table_state_asof(
         api.spark,
         api.sf_dir,
@@ -418,15 +383,7 @@ def hyp_get_table_state(api, params: dict) -> dict:
         params.get("table", "accounts"),
         block,
     )
-    page = latest.withColumn(
-        "_key", F.concat_ws("-", F.col("scope"), F.col("primary_key"))
-    )
-    if params.get("after_key"):
-        page = page.where(F.col("_key") > params["after_key"])
-    rows = _rows(page.orderBy(F.col("_key").asc()).limit(limit))
-    next_key = rows[-1]["_key"] if rows and len(rows) == limit else None
-    for r in rows:
-        del r["_key"]
+    rows, next_key = _keyset_page(latest, ["scope", "primary_key"], params)
     return {
         "block": block,
         "rows": rows,
@@ -440,7 +397,6 @@ def hyp_get_created_accounts(api, params: dict) -> dict:
     newaccount actions from the nested lake (promoted @newaccount
     struct) — the shared :func:`..api.nested.created_accounts` core of
     the hash-gated ``hyp_created_accounts`` row."""
-    from .http_server import _limit
     from .nested import created_accounts
 
     creator = params.get("account", "user8")
@@ -469,55 +425,35 @@ def hyp_get_creator(api, params: dict) -> dict:
 
 def get_account(api, params: dict) -> dict:
     """routes/v2-state/get_account (get_account.ts:38-108): the FULL
-    composition the reference assembles from parallel subqueries —
-    account row + activity rollup (one key-pruned plan, the registered
-    ``get_account`` shape) plus the account's recent actions, held
-    tokens (the chooser-planned ``get_tokens`` core) and permission
-    links. Every leg is key-pruned to the one account; the reference
-    fires them as Promise.all and so does a Spark scheduler under
-    concurrent jobs — here they run serially per request, each a
-    sub-100ms point plan."""
+    composition the reference assembles from parallel subqueries — the
+    ``get_account`` row (account row + activity rollup, one key-pruned
+    plan) plus the account's recent actions, held tokens (the
+    chooser-planned ``get_tokens`` core) and permission links. Every
+    leg is key-pruned to the one account; the reference fires them as
+    Promise.all, here they run serially per request, each a sub-100ms
+    point plan."""
     account = int(params.get("account", 7))
-    t = _t(api.spark, api.sf_dir)
-    c = t["customer"].where(F.col("c_custkey") == account)
-    o = t["orders"].where(F.col("o_custkey") == account)
-    row = (
-        c.join(o, F.col("o_custkey") == F.col("c_custkey"), "left")
-        .groupBy("c_custkey", "c_name", "c_acctbal")
-        .agg(
-            F.count("o_orderkey").alias("total_trx"),
-            F.round(F.coalesce(F.sum("o_totalprice"), F.lit(0.0)), 4).alias(
-                "total_volume"
-            ),
-            F.max("o_orderkey").alias("last_trx"),
-        )
-        .first()
-    )
+    row = endpoints_ext.get_account(api.spark, api.sf_dir, account=account).first()
     if row is None:
         return {"account": account, "known": False}
     # the three side legs of the reference composition
-    from .endpoints_ext import _get_tokens
-
-    tokens_df, _ = _get_tokens(api.spark, api.sf_dir, account=account)
+    tokens_df, _ = endpoints_ext._get_tokens(api.spark, api.sf_dir, account=account)
+    ev = _t(api.spark, api.sf_dir)["events"].where(F.col("user_id") == account)
     actions = (
-        _t(api.spark, api.sf_dir)["events"]
-        .where(F.col("user_id") == account)
-        .orderBy(F.col("event_id").desc())
+        ev.orderBy(F.col("event_id").desc())
         .limit(10)
         .select("event_id", "event_type", "ts", "value")
     )
     links = (
-        _t(api.spark, api.sf_dir)["events"]
-        .where(F.col("user_id") == account)
-        .groupBy(F.col("event_type").alias("action"))
+        ev.groupBy(F.col("event_type").alias("action"))
         .agg(F.min("event_id").alias("linked_at"))
         .orderBy("action")
     )
     return {
         "account": account,
         "known": True,
-        "account_name": row["c_name"],
-        "balance": round(row["c_acctbal"], 4),
+        "account_name": row["account_name"],
+        "balance": row["balance"],
         "total_trx": row["total_trx"],
         "total_volume": row["total_volume"],
         "last_trx": row["last_trx"],
@@ -529,98 +465,45 @@ def get_account(api, params: dict) -> dict:
 
 def get_links(api, params: dict) -> dict:
     """routes/v2-state/get_links (get_links.ts:5-64): permission links
-    per account — compiler-built account filter + bounded groupBy
-    (the registered ``get_links`` plan parameterized)."""
-    account = params.get("account", "1-5")
-    ev = _t(api.spark, api.sf_dir)["events"]
-    pred = compile_predicate(
-        ev,
-        QueryParams(terms={"user_id": str(account)}),
-        numeric_fields=frozenset({"user_id"}),
-    )
-    df = (
-        ev.where(pred)
-        .groupBy(
-            F.col("user_id").alias("account"),
-            F.col("event_type").alias("action"),
-        )
-        .agg(F.min("event_id").alias("linked_at"))
-        .orderBy("account", "action")
-    )
+    per account — the ``get_links`` row."""
+    acct = {"account": params["account"]} if "account" in params else {}
+    df = endpoints_ext.get_links(api.spark, api.sf_dir, **acct)
     return {"links": _rows(df, 1000)}
 
 
 def get_proposals(api, params: dict) -> dict:
-    """routes/v2-state/get_proposals (get_proposals.ts:4-96): pending
-    msig proposals, newest first with a unique tiebreaker (the
-    registered ``get_proposals`` plan parameterized)."""
-    from .http_server import _limit
-
-    status = params.get("status", "P")
-    o = _t(api.spark, api.sf_dir)["orders"]
-    df = apply_query(
-        o,
-        QueryParams(
-            terms={"o_orderstatus": status},
-            sorted_by="o_orderdate:desc",
-            limit=_limit(params, default=40),
-        ),
-        default_sort_field="o_orderdate",
-        tiebreaker="o_orderkey",
-    ).select(
-        F.col("o_orderkey").alias("proposal_id"),
-        F.col("o_custkey").alias("proposer"),
-        F.col("o_orderdate").alias("proposed_at"),
-        F.round("o_totalprice", 4).alias("stake"),
+    """routes/v2-state/get_proposals (get_proposals.ts:4-96): proposals
+    by status, newest first with a unique tiebreaker — the
+    ``get_proposals`` row."""
+    status = {"status": params["status"]} if "status" in params else {}
+    df = endpoints_ext.get_proposals(
+        api.spark, api.sf_dir, limit=_limit(params, default=40), **status
     )
     return {"proposals": _rows(df)}
 
 
 def get_voters(api, params: dict) -> dict:
     """routes/v2-state/get_voters (get_voters.ts:6-74): weight-ranked
-    voter page + the exact total (the registered ``get_voters`` +
-    ``get_voter_count`` pair, sharing one predicate)."""
-    from .http_server import _limit
-
-    segment = params.get("producer", "BUILDING")
-    cust = _t(api.spark, api.sf_dir)["customer"]
-    qp = QueryParams(
-        terms={"c_mktsegment": segment, "c_acctbal": "0.01-9999999"},
-        sorted_by="c_acctbal:desc",
-        limit=_limit(params, default=50),
+    voter page + the exact total — the ``get_voters`` and
+    ``get_voter_count`` rows."""
+    seg = {"segment": params["producer"]} if "producer" in params else {}
+    page = endpoints_ext.get_voters(
+        api.spark, api.sf_dir, limit=_limit(params, default=50), **seg
     )
-    page = apply_query(
-        cust,
-        qp,
-        default_sort_field="c_acctbal",
-        tiebreaker="c_custkey",
-        numeric_fields=frozenset({"c_acctbal"}),
-    ).select(
-        F.col("c_custkey").alias("voter"),
-        F.round("c_acctbal", 4).alias("weight"),
-    )
-    total = cust.where(
-        (F.col("c_mktsegment") == segment) & (F.col("c_acctbal") > 0)
-    ).count()
-    return {"voter_count": total, "voters": _rows(page)}
+    total = endpoints_ext.get_voter_count(api.spark, api.sf_dir, **seg)
+    return {"voter_count": total.first()["voter_count"], "voters": _rows(page)}
 
 
 def get_voter_scopes(api, params: dict) -> dict:
     """routes/v2-state/get_voter_scopes: the distinct (account, scope)
-    pairs behind a type set — the registered ``distinct_scopes``
-    set-dedup parameterized by the scope list."""
-    types = params.get("scopes", "signup,error").split(",")
-    ev = _t(api.spark, api.sf_dir)["events"]
-    df = (
-        ev.where(F.col("event_type").isin(types))
-        .select(
-            F.col("user_id").alias("account"),
-            F.col("event_type").alias("scope"),
+    pairs behind a type set — the ``distinct_scopes`` row, renamed."""
+    types = {"types": tuple(params["scopes"].split(","))} if "scopes" in params else {}
+    df = state.distinct_scopes(api.spark, api.sf_dir, **types)
+    return {
+        "scopes": _rows(
+            df.withColumnsRenamed({"user_id": "account", "event_type": "scope"}), 1000
         )
-        .distinct()
-        .orderBy("account", "scope")
-    )
-    return {"scopes": _rows(df, 1000)}
+    }
 
 
 # --- v2-stats --------------------------------------------------------------
@@ -673,21 +556,10 @@ def get_api_usage(api, params: dict) -> dict:
 
 def get_missed_blocks(api, params: dict) -> dict:
     """routes/v2-stats/get_missed_blocks (get_missed_blocks.ts:41-53):
-    per-producer missed rollup (the registered
-    ``missed_blocks_rollup`` plan, optional producer filter)."""
-    ev = _t(api.spark, api.sf_dir)["events"].where(
-        F.col("event_type") == "error"
-    )
-    if "producer" in params:
-        ev = ev.where(F.col("user_id") == int(params["producer"]))
-    df = (
-        ev.groupBy(F.col("user_id").alias("producer"))
-        .agg(
-            F.sum(F.floor("value").cast("long")).alias("total_size"),
-            F.count("*").alias("occurrences"),
-        )
-        .orderBy("producer")
-    )
+    per-producer missed rollup — the ``missed_blocks_rollup`` row,
+    optional producer filter."""
+    producer = int(params["producer"]) if "producer" in params else None
+    df = stats.missed_blocks_rollup(api.spark, api.sf_dir, producer=producer)
     return {"stats": _rows(df, 1000)}
 
 
@@ -714,27 +586,13 @@ def get_resource_usage(api, params: dict) -> dict:
 def get_trx_count(api, params: dict) -> dict:
     """routes/v2-stats/get_trx_count (get_trx_count.ts:176-225): exact
     transaction count; ``validate_actions=true`` adds the
-    blocks-vs-actions reconciliation verdict (the registered
-    ``trx_count_reconcile`` join, reduced to its consistency bit)."""
-    t = _t(api.spark, api.sf_dir)
-    out = {"trx_count": t["orders"].count()}
+    blocks-vs-actions consistency check — the ``trx_count_reconcile``
+    row's inconsistent buckets, counted."""
+    out = {"trx_count": _t(api.spark, api.sf_dir)["orders"].count()}
     if params.get("validate_actions") == "true":
-        orders, li = t["orders"], t["lineitem"]
-        block_side = orders.groupBy(
-            F.date_trunc("day", "o_orderdate").alias("d")
-        ).agg(F.count("*").alias("orders_cnt"))
-        action_side = (
-            li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-            .groupBy(F.date_trunc("day", "o_orderdate").alias("d"))
-            .agg(F.count_distinct("l_orderkey").alias("lineitem_orders"))
-        )
         bad = (
-            block_side.alias("b")
-            .join(action_side.alias("a"), F.col("b.d") == F.col("a.d"), "left")
-            .where(
-                F.col("b.orders_cnt")
-                != F.coalesce(F.col("a.lineitem_orders"), F.lit(0))
-            )
+            stats.trx_count_reconcile(api.spark, api.sf_dir)
+            .where(~F.col("consistent"))
             .count()
         )
         out["consistent"] = bad == 0
@@ -822,39 +680,26 @@ def v1_get_actions(api, params: dict) -> dict:
 
 
 def v1_get_transaction(api, params: dict) -> dict:
-    """routes/v1-history/get_transaction: the v1 body shape over the
-    same point-lookup plan as v2 get_transaction (canonical ordinal
-    trace order — the bug-#148 regroup discipline)."""
+    """routes/v1-history/get_transaction: the v1 body shape over the v2
+    get_transaction lookup (:meth:`.http_server.HyperionAPI.transaction`,
+    traces in canonical ordinal order), capped at 1000 traces."""
     trx = int(params["id"])
-    t = _t(api.spark, api.sf_dir)
-    head = (
-        t["orders"]
-        .where(F.col("o_orderkey") == trx)
-        .select("o_orderkey", "o_orderstatus", "o_orderdate")
-        .first()
-    )
-    if head is None:
+    found = api.transaction(trx)
+    if found is None:
         return {"id": trx, "trx": None, "traces": []}
-    traces = (
-        t["lineitem"]
-        .where(F.col("l_orderkey") == trx)
-        .orderBy("l_linenumber")
-        .select("l_linenumber", "l_partkey", "l_quantity", "l_extendedprice")
-    )
+    head, traces = found
     return {
         "id": trx,
         "trx": {"receipt": {"status": head["o_orderstatus"]}},
         "block_time": str(head["o_orderdate"]),
-        "traces": _rows(traces, 1000),
+        "traces": traces[:1000],
     }
 
 
 def v1_get_key_accounts(api, params: dict) -> dict:
     """routes/v1-history/get_key_accounts: v1 body shape over the same
     chooser-planned core as the v2 route."""
-    from .endpoints_ext import _get_key_accounts
-
-    df, _ = _get_key_accounts(
+    df, _ = endpoints_ext._get_key_accounts(
         api.spark, api.sf_dir, key=params.get("public_key", "Brand#13")
     )
     return {"account_names": [r["account"] for r in df.collect()]}
@@ -863,29 +708,24 @@ def v1_get_key_accounts(api, params: dict) -> dict:
 def v1_get_controlled_accounts(api, params: dict) -> dict:
     """routes/v1-history/get_controlled_accounts
     (get_controlled_accounts.ts:4-64): accounts controlled by one
-    controller — the registered ``get_controlled_accounts`` set-dedup
-    parameterized by the controlling account."""
-    controlling = int(params.get("controlling_account", 7))
-    sup = _t(api.spark, api.sf_dir)["supplier"]
-    df = (
-        sup.where(F.col("s_nationkey") == controlling)
-        .select(F.col("s_suppkey").alias("controlled"))
-        .distinct()
-        .orderBy("controlled")
+    controller — the ``get_controlled_accounts`` row."""
+    ctl = (
+        {"controlling": int(params["controlling_account"])}
+        if "controlling_account" in params
+        else {}
     )
+    df = endpoints_ext.get_controlled_accounts(api.spark, api.sf_dir, **ctl)
     return {"controlled_accounts": [r["controlled"] for r in df.collect()]}
 
 
 def v1_trace_get_block(api, params: dict) -> dict:
     """routes/v1-trace/get_block (get_block.ts:30-90): nested block
     reconstruction — header joined to traces re-nested in canonical
-    ordinal order, through the SAME stats-planned core as the
-    registered ``v1_trace_get_block`` (``_v1_trace_get_block``)."""
-    from .endpoints_ext import _v1_trace_get_block as core
-
+    ordinal order, through the stats-planned core of the registered
+    ``v1_trace_get_block`` row (``_v1_trace_get_block``)."""
     lo = int(params.get("after", 1))
     hi = int(params.get("before", 160))
-    df, _ = core(api.spark, api.sf_dir, lo=lo, hi=hi)
+    df, _ = endpoints_ext._v1_trace_get_block(api.spark, api.sf_dir, lo=lo, hi=hi)
     return {"transactions": _rows(df, 1000)}
 
 

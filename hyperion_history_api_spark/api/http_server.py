@@ -7,11 +7,11 @@ Socket.IO frames (no websocket library exists in this environment;
 SSE is the same one-directional push shape the relay uses for
 replays).
 
-This closes the "HTTP serving layer" gap the engine previously scoped
-out: every handler here is a THIN translation layer — query-string →
+Every handler is a thin translation layer — query-string →
 :class:`~..plans.predicates.QueryParams` / stream-request structs →
-the SAME oracle-checked DataFrame plans the registry serves — plus
-the reference's own response conventions:
+the oracle-checked DataFrame plans the registry serves (one plan per
+route, see :mod:`.http_routes`) — plus the reference's own response
+conventions:
 
 - envelope metadata (``query_time_ms``, ``cached``, exact ``total``,
   ``last_indexed_block``) via :mod:`.envelope`
@@ -39,36 +39,24 @@ from __future__ import annotations
 
 import json
 import logging
+import math
 import threading
 import uuid
 from functools import partial
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qsl, urlsplit
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.predicates import QueryGuardError, QueryParams
 from ..registry import _t
 from ..streaming.filters import StreamRequest, StreamSchema, compile_request
+from . import endpoints_ext, state
 from .envelope import get_actions_with_envelope, scan_head
-from .http_routes import EXTRA_ROUTES
+from .history import _EVENT_NUMERIC
+from .http_routes import EXTRA_ROUTES, _limit, _rows
 from .serving_cache import DEFAULT_TTLS, ResponseCache, timed_query
-
-_EVENT_NUMERIC = frozenset({"event_id", "user_id", "value"})
-
-#: hard cap on any route's collected page — the reference's fastify
-#: schema rejects limit > 1000 (functions.ts skip/limit guards); a
-#: route that let a raw ``limit`` reach ``.limit().collect()`` would
-#: serialize an entire table onto the serving driver.
-MAX_LIMIT = 1000
-
-
-def _limit(params: dict, default: int = 100) -> int:
-    n = int(params.get("limit", default))
-    if n < 0:
-        raise ValueError(f"limit must be >= 0, got {n}")
-    return min(n, MAX_LIMIT)
 
 
 def _qp(params: dict, terms: dict[str, str] | None = None) -> QueryParams:
@@ -199,63 +187,75 @@ class HyperionAPI:
         )
 
     def get_transaction(self, params: dict) -> dict:
-        """routes/v2-history/get_transaction: point lookup of one trx
-        and its traces in canonical ordinal order (the bug-#148 regroup
-        discipline). Two jobs: the orders key lookup, then the trx's
-        lineitem rows, each a scan with the key in PushedFilters. The
-        traces are ordered by ``l_linenumber`` on the driver, which
-        already holds every collected row, so no Spark sort (sample,
-        shuffle, result) runs. ``model=hyperion`` serves the nested
-        lake documents with block_hint partition routing."""
+        """routes/v2-history/get_transaction: one trx and its traces in
+        canonical ordinal order (:meth:`transaction`).
+        ``model=hyperion`` serves the nested lake documents with
+        block_hint partition routing."""
         if params.get("model") == "hyperion":
             from .http_routes import hyp_get_transaction
 
             return hyp_get_transaction(self, params)
         trx = int(params["id"])
-        t = _t(self.spark, self.sf_dir)
-        o = t["orders"].where(F.col("o_orderkey") == trx)
-        head = o.select("o_orderkey", "o_orderstatus", "o_orderdate").first()
+        found = self.transaction(trx)
         # the reference resolves the REAL lib for get_transaction on
         # both its cache and ES paths (get_transaction.ts:67,102) —
         # unlike get_blocks/get_block, which hardcode lib: 0
         lib = self.lib_block()
-        if head is None:
+        if found is None:
             return {
                 "executed": False,
                 "trx_id": trx,
                 "lib": lib,
                 "actions": [],
             }
-        traces = (
-            t["lineitem"]
-            .where(F.col("l_orderkey") == trx)
-            .select("l_linenumber", "l_partkey", "l_quantity", "l_extendedprice")
-            .collect()
-        )
+        head, traces = found
         return {
             "executed": True,
             "trx_id": trx,
             "lib": lib,
             "status": head["o_orderstatus"],
             "block_time": str(head["o_orderdate"]),
-            "actions": [
-                r.asDict() for r in sorted(traces, key=lambda r: r["l_linenumber"])
-            ],
+            "actions": traces,
         }
 
+    def transaction(self, trx: int) -> tuple | None:
+        """The get_transaction point lookup shared by the v2 and v1
+        routes: ``(head, traces)`` for a known trx, else None. Two
+        jobs: the orders key lookup, then the trx's lineitem rows, each
+        a scan with the key in PushedFilters. The traces are ordered by
+        ``l_linenumber`` (the bug-#148 regroup discipline) on the
+        driver, which already holds every collected row, so no Spark
+        sort (sample, shuffle, result) runs."""
+        t = _t(self.spark, self.sf_dir)
+        head = (
+            t["orders"]
+            .where(F.col("o_orderkey") == trx)
+            .select("o_orderkey", "o_orderstatus", "o_orderdate")
+            .first()
+        )
+        if head is None:
+            return None
+        traces = (
+            t["lineitem"]
+            .where(F.col("l_orderkey") == trx)
+            .select("l_linenumber", "l_partkey", "l_quantity", "l_extendedprice")
+            .collect()
+        )
+        return head, [
+            r.asDict() for r in sorted(traces, key=lambda r: r["l_linenumber"])
+        ]
+
     def get_deltas(self, params: dict) -> dict:
-        """routes/v2-history/get_deltas: (code,table) → event_type,
-        scope → account range, payer → promoted props.k — the same
-        predicate-compiler path as the registered
-        ``get_deltas_by_scope``. ``model=hyperion`` serves the nested
-        lake documents (http_routes.hyp_get_deltas)."""
+        """routes/v2-history/get_deltas: the delta column mapping
+        (endpoints_ext.delta_view) through the same predicate-compiler
+        path as the registered ``get_deltas_by_scope``.
+        ``model=hyperion`` serves the nested lake documents
+        (http_routes.hyp_get_deltas)."""
         if params.get("model") == "hyperion":
             from .http_routes import hyp_get_deltas
 
             return hyp_get_deltas(self, params)
-        ev = _t(self.spark, self.sf_dir)["events"].withColumn(
-            "payer", F.get_json_object("props", "$.k").cast("long")
-        )
+        ev = endpoints_ext.delta_view(_t(self.spark, self.sf_dir)["events"])
         terms: dict[str, str] = {}
         if "code" in params or "table" in params:
             terms["event_type"] = params.get("table", params.get("code"))
@@ -277,28 +277,16 @@ class HyperionAPI:
 
     def get_created_accounts(self, params: dict) -> dict:
         """routes/v2-history/get_created_accounts: creator → created
-        accounts (nation = creator dimension, 25-row broadcast).
+        accounts, the ``get_created_accounts`` row.
         ``model=hyperion`` serves the nested newaccount documents."""
         if params.get("model") == "hyperion":
             from .http_routes import hyp_get_created_accounts
 
             return hyp_get_created_accounts(self, params)
-        t = _t(self.spark, self.sf_dir)
-        creator = F.broadcast(
-            t["nation"].where(F.col("n_name") == params["account"])
+        df = endpoints_ext.get_created_accounts(
+            self.spark, self.sf_dir, creator=params["account"], limit=_limit(params)
         )
-        rows = (
-            t["customer"]
-            .join(creator, F.col("c_nationkey") == F.col("n_nationkey"))
-            .orderBy(F.col("c_custkey").desc())
-            .limit(_limit(params))
-            .select(
-                F.col("c_custkey").alias("account"),
-                F.col("c_name").alias("account_name"),
-            )
-            .collect()
-        )
-        return {"accounts": [r.asDict() for r in rows]}
+        return {"accounts": _rows(df)}
 
     def get_creator(self, params: dict) -> dict:
         """routes/v2-history/get_creator: the account's first signup
@@ -329,29 +317,19 @@ class HyperionAPI:
 
     # -- v2-state ----------------------------------------------------------
     def get_top_holders(self, params: dict) -> dict:
-        """routes/v2-state/get_top_holders: balance-ranked page."""
-        cust = _t(self.spark, self.sf_dir)["customer"]
-        rows = (
-            cust.orderBy(F.col("c_acctbal").desc(), F.col("c_custkey").asc())
-            .limit(_limit(params, default=20))
-            .select(
-                F.col("c_custkey").alias("account"),
-                F.round("c_acctbal", 4).alias("amount"),
-            )
-            .collect()
+        """routes/v2-state/get_top_holders: the balance-ranked
+        ``get_top_holders`` row."""
+        df = state.get_top_holders(
+            self.spark, self.sf_dir, limit=_limit(params, default=20)
         )
-        return {"holders": [r.asDict() for r in rows]}
+        return {"holders": _rows(df)}
 
     def get_tokens(self, params: dict) -> dict:
         """routes/v2-state/get_tokens (get_tokens.ts:63-72): account →
-        held symbols — the SAME stats-planned chooser core the
-        registered ``get_tokens`` serves (endpoints_ext._get_tokens),
-        parameterized by account, so the HTTP plan can never drift
-        from the oracle-checked one."""
-        from .endpoints_ext import _get_tokens
-
+        held symbols — the stats-planned chooser core of the registered
+        ``get_tokens`` row (endpoints_ext._get_tokens)."""
         account = int(params["account"])
-        df, _ = _get_tokens(self.spark, self.sf_dir, account=account)
+        df, _ = endpoints_ext._get_tokens(self.spark, self.sf_dir, account=account)
         return {
             "account": account,
             "tokens": [r.asDict() for r in df.collect()],
@@ -360,9 +338,7 @@ class HyperionAPI:
     def get_key_accounts(self, params: dict) -> dict:
         """routes/v2-state/get_key_accounts: key → controlled
         accounts via the registered query's chooser core."""
-        from .endpoints_ext import _get_key_accounts
-
-        df, _ = _get_key_accounts(
+        df, _ = endpoints_ext._get_key_accounts(
             self.spark, self.sf_dir, key=params["public_key"]
         )
         return {"account_names": [r["account"] for r in df.collect()]}
@@ -384,21 +360,10 @@ class HyperionAPI:
         filters = params.get("filters", "{}")
         if isinstance(filters, str):
             filters = json.loads(filters)
-        limit = _limit(params)
         df = _t(self.spark, self.sf_dir)[table]
         pred = compile_mongo_query(df, filters) if filters else F.lit(True)
-        key = df.columns[0]
-        rows = (
-            df.where(pred).orderBy(key).limit(limit).collect()
-        )
-        return {
-            "table": table,
-            "rows": [
-                {k: (str(v) if hasattr(v, "isoformat") else v)
-                 for k, v in r.asDict().items()}
-                for r in rows
-            ],
-        }
+        page = df.where(pred).orderBy(df.columns[0])
+        return {"table": table, "rows": _rows(page, _limit(params))}
 
     # -- SSE stream (socketManager.ts replay path) -------------------------
     def stream_rows(self, params: dict):
@@ -436,6 +401,14 @@ class HyperionAPI:
         follow = params.get("follow") == "true"
         poll_sec = float(params.get("poll_sec", "0.5"))
         idle_timeout = float(params.get("idle_timeout", "30"))
+        # a bad value would otherwise fail in time.sleep after the 200,
+        # or (nan) never time out on an idle lake
+        if not (math.isfinite(poll_sec) and poll_sec > 0):
+            raise ValueError(f"poll_sec must be finite and > 0, got {poll_sec}")
+        if not (math.isfinite(idle_timeout) and idle_timeout >= 0):
+            raise ValueError(
+                f"idle_timeout must be finite and >= 0, got {idle_timeout}"
+            )
         mark_filtered = str(params.get("mark_filtered", "")).lower() in (
             "true",
             "1",
@@ -534,26 +507,6 @@ class HyperionAPI:
     ):
         import time as _time
 
-        from ..tables import _load_one
-
-        # the nanos-timestamp shim normally set by load_tables — a
-        # stream-only client may be this session's first reader
-        self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        if kind == "deltas":
-            # delta rows route on (code, scope, payer): payer is the
-            # promoted JSON field, scope the account dimension;
-            # json_col keeps payload-field filters reachable
-            # (checkMetaFilter resolves data.* paths the same way)
-            schema = StreamSchema(
-                account_col="payer", scope_col="user_id", json_col="props"
-            )
-        else:
-            # json_col="props" (round-11): a stock client's filter on a
-            # PAYLOAD field must resolve through the JSON fallback like
-            # the registered T1 rows do — with json_col=None it
-            # compiled to never-match on the wire while the engine
-            # supported it (checkMetaFilter data.* parity)
-            schema = StreamSchema(json_col="props")
         last = (req.start_from or 0) - 1
         deadline = _time.monotonic() + idle_timeout
         # control-event tail (fork_event / lib_update): follow-mode
@@ -566,18 +519,7 @@ class HyperionAPI:
         _, control_at = tail_control(self.sf_dir, 0)
 
         def batch(after: int):
-            # fresh load of ONLY the events table per poll: new spool
-            # files must be visible (a DataFrame's file listing is
-            # bound at creation), and a follow-mode subscriber polls
-            # twice a second — re-reading the whole 10-table catalog
-            # here was pure driver overhead
-            ev = _load_one(self.spark, f"{self.sf_dir}/events.parquet")
-            cols = ["event_id", "user_id", "event_type", "ts", "value"]
-            if kind == "deltas":
-                ev = ev.withColumn(
-                    "payer", F.get_json_object("props", "$.k").cast("long")
-                )
-                cols.append("payer")
+            ev, cols, schema = self._stream_frame(kind)
             if mark_filtered:
                 # the reference's scroll counts docs that matched the
                 # PRIMARY query (routing keys + block range) but were
@@ -628,10 +570,10 @@ class HyperionAPI:
                         "data": ev.get("data", {}),
                     }
             got_any = False
-            # idle-poll short-circuit (round-12): the fingerprint-
-            # memoized head (pure os.stat on an unchanged lake) proves
-            # an empty window — a follow-mode subscriber on an idle
-            # lake costs ZERO Spark jobs per poll
+            # idle-poll short-circuit: the fingerprint-memoized head
+            # (pure os.stat on an unchanged lake) proves an empty
+            # window — a follow-mode subscriber on an idle lake costs
+            # ZERO Spark jobs per poll
             if self.head_block() <= last:
                 if read_until is not None and last >= read_until:
                     return
@@ -659,6 +601,30 @@ class HyperionAPI:
             elif _time.monotonic() >= deadline:
                 return
             _time.sleep(poll_sec)
+
+    def _stream_frame(self, kind: str) -> tuple[DataFrame, list[str], StreamSchema]:
+        """One fresh events read for a stream poll or relay tick: the
+        frame (the delta view for ``kind="deltas"``), the columns a
+        streamed row carries, and the routing schema. Fresh because new
+        spool files must be visible (a DataFrame's file listing is
+        bound at creation); only the events table, because re-reading
+        the whole catalog twice a second is pure driver overhead."""
+        from ..tables import _load_one
+
+        # the nanos-timestamp shim normally set by load_tables — a
+        # stream-only client may be this session's first reader
+        self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        ev = _load_one(self.spark, f"{self.sf_dir}/events.parquet")
+        cols = ["event_id", "user_id", "event_type", "ts", "value"]
+        # json_col="props": a filter on a PAYLOAD field resolves through
+        # the JSON fallback (checkMetaFilter data.* parity)
+        if kind == "deltas":
+            # delta rows route on (code, scope, payer)
+            schema = StreamSchema(
+                account_col="payer", scope_col="user_id", json_col="props"
+            )
+            return endpoints_ext.delta_view(ev), [*cols, "payer"], schema
+        return ev, cols, StreamSchema(json_col="props")
 
     def lib_block(self) -> int:
         """The ingested last-irreversible watermark — the engine's
@@ -738,19 +704,18 @@ class HyperionAPI:
         ``requests`` maps reqUUID -> StreamRequest (from
         :meth:`parse_stream_request`)."""
         from ..streaming.filters import route_to_subscribers
-        from ..tables import _load_one
 
-        # Idle-tick short-circuit (round-12): the lake head is
-        # fingerprint-memoized (head_block — pure os.stat when no
-        # spool file landed), and event_id is the append cursor, so
-        # head <= after proves there is NOTHING to scan. An idle
-        # relay tick therefore runs ZERO Spark jobs — per-tick work
-        # is purely arrival-driven, at any connection count.
+        # Idle-tick short-circuit: the lake head is fingerprint-
+        # memoized (head_block — pure os.stat when no spool file
+        # landed), and event_id is the append cursor, so head <= after
+        # proves there is NOTHING to scan. An idle relay tick therefore
+        # runs ZERO Spark jobs — per-tick work is purely
+        # arrival-driven, at any connection count.
         head = self.head_block()
         if head <= after:
             return [], after
-        # Cap the scan window (round-13): a deep fork rewind (or any
-        # stale cursor) must not materialize an unbounded (after, head]
+        # Cap the scan window: a deep fork rewind (or any stale
+        # cursor) must not materialize an unbounded (after, head]
         # batch in driver memory at once. Sequence ids are dense-ish
         # append cursors, so (after, after+cap] chunks are delivered
         # in order across successive ticks until the cursor catches
@@ -758,20 +723,7 @@ class HyperionAPI:
         # bound, so a single tick can never queue more than one drop
         # threshold's worth of rows anyway.
         target = min(head, after + window_cap)
-        self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ev = _load_one(self.spark, f"{self.sf_dir}/events.parquet")
-        cols = ["event_id", "user_id", "event_type", "ts", "value"]
-        if kind == "deltas":
-            ev = ev.withColumn(
-                "payer", F.get_json_object("props", "$.k").cast("long")
-            )
-            cols.append("payer")
-            schema = StreamSchema(
-                account_col="payer", scope_col="user_id", json_col="props"
-            )
-        else:
-            # same json_col rationale as the replay path above
-            schema = StreamSchema(json_col="props")
+        ev, cols, schema = self._stream_frame(kind)
         # strip each request's start_from/read_until for LIVE routing:
         # the reference's relay matches arriving traces on routing keys
         # + field filters only (ws-router.ts); the history bounds

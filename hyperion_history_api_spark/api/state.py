@@ -32,17 +32,19 @@ from ..registry import register, _t
     "W1/A10 latest row per key as-of block (get_table_state.ts:22-78)",
     headline=True,
 )
-def get_table_state_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Table state as-of sequence 800: latest version per
+def get_table_state_latest(
+    spark: SparkSession, sf_dir: str, *, block: int = 800
+) -> DataFrame:
+    """Table state as-of sequence ``block``: latest version per
     (scope=user_id, pk=event_type). One shuffle on the key; the as-of
     filter is pushed to the scan before the window."""
     ev = _t(spark, sf_dir)["events"]
     latest = latest_row_per_key(
-        ev, ["user_id", "event_type"], "event_id", as_of=F.col("event_id") <= 800
+        ev, ["user_id", "event_type"], "event_id", as_of=F.col("event_id") <= block
     )
-    # No final orderBy (round-14): presentation-only; the harness
-    # compares order-insensitively and the sort cost a range exchange
-    # + sampling pass over the window tail.
+    # No final orderBy: row order is presentation only (the oracle
+    # compare is order-insensitive, the route pages by key), and the
+    # sort would cost a range exchange + sampling pass.
     return latest.select(
         "user_id", "event_type", "event_id", F.round("value", 4).alias("value")
     )
@@ -121,11 +123,13 @@ def account_action_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "O5 top holders sort+limit (get_top_holders.ts:36-41)",
 )
-def get_top_holders(spark: SparkSession, sf_dir: str) -> DataFrame:
+def get_top_holders(
+    spark: SparkSession, sf_dir: str, *, limit: int = 20
+) -> DataFrame:
     cust = _t(spark, sf_dir)["customer"]
     return (
         cust.orderBy(F.col("c_acctbal").desc(), F.col("c_custkey").asc())
-        .limit(20)
+        .limit(limit)
         .select(F.col("c_custkey").alias("account"), F.round("c_acctbal", 4).alias("amount"))
     )
 
@@ -263,10 +267,12 @@ def trx_regroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "§2.7 set-dedup of result lists (get_key_accounts.ts:99,129)",
 )
-def distinct_scopes(spark: SparkSession, sf_dir: str) -> DataFrame:
+def distinct_scopes(
+    spark: SparkSession, sf_dir: str, *, types: tuple[str, ...] = ("signup", "error")
+) -> DataFrame:
     ev = _t(spark, sf_dir)["events"]
     return (
-        ev.where(F.col("event_type").isin("signup", "error"))
+        ev.where(F.col("event_type").isin(*types))
         .select("user_id", "event_type")
         .distinct()
         .orderBy("user_id", "event_type")

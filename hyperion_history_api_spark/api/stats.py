@@ -327,11 +327,14 @@ def delta_seq_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "A12 missed-blocks per-producer rollup (get_missed_blocks.ts:41-53)",
 )
-def missed_blocks_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir)["events"]
+def missed_blocks_rollup(
+    spark: SparkSession, sf_dir: str, *, producer: int | None = None
+) -> DataFrame:
+    ev = _t(spark, sf_dir)["events"].where(F.col("event_type") == "error")
+    if producer is not None:
+        ev = ev.where(F.col("user_id") == producer)
     return (
-        ev.where(F.col("event_type") == "error")
-        .groupBy(F.col("user_id").alias("producer"))
+        ev.groupBy(F.col("user_id").alias("producer"))
         .agg(
             F.sum(F.floor("value").cast("long")).alias("total_size"),
             F.count("*").alias("occurrences"),

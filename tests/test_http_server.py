@@ -324,6 +324,21 @@ def test_review_fixes_stream_400_post_bools_empty_health(server, spark, tmp_path
     assert health["health"][1]["status"] == "Error"
 
 
+@pytest.mark.parametrize(
+    "bad", ["poll_sec=-1", "poll_sec=nan", "idle_timeout=nan"]
+)
+def test_stream_timing_params_rejected_before_stream(server, bad):
+    """poll_sec must be finite and > 0, idle_timeout finite and >= 0:
+    a bad value is a 400 before the event-stream header, not a
+    time.sleep failure mid-stream or (nan) a tail that never idles
+    out."""
+    base, _ = server
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        _get(base, f"/v2/stream?account=7&follow=true&{bad}")
+    assert ei.value.code == 400
+    assert "error" in json.loads(ei.value.read())
+
+
 def test_get_table_rows_mongo_filters_over_post(server, spark):
     """The dynamic-table endpoint: POSTed Mongo find-grammar filters
     compile to pushed predicates; results equal the engine plan."""

@@ -408,37 +408,19 @@ def test_ccnet_buckets_freqs_broadcast(spark):
 
 
 def test_http_route_plans_push_down(spark):
-    """The round-9 HTTP translations stay the registry's plan shapes:
-    get_blocks' range predicate reaches the scan; get_table_state's
-    as-of bound prunes before the window (one exchange)."""
-    from hyperion_history_api_spark.plans.predicates import (
-        QueryParams,
-        compile_predicate,
-    )
-    from hyperion_history_api_spark.operators.latest_state import (
-        latest_row_per_key,
-    )
-    from hyperion_history_api_spark.tables import load_tables
+    """The get_blocks and get_table_state routes run the registry rows
+    get_blocks_range and get_table_state_latest: the range predicate
+    reaches the scan; the as-of bound prunes before the window (one
+    exchange)."""
+    from hyperion_history_api_spark.api.endpoints_ext import get_blocks_range
+    from hyperion_history_api_spark.api.state import get_table_state_latest
 
-    ev = load_tables(spark, SF_DIR)["events"]
-    pred = compile_predicate(
-        ev, QueryParams(after="100", before="699"), seq_field="event_id"
-    )
-    blocks = (
-        ev.where(pred)
-        .groupBy((F.col("event_id") / 100).cast("long").alias("block_num"))
-        .agg(F.count("*").alias("trx_count"))
-    )
-    plan = _plan(blocks)
+    plan = _plan(get_blocks_range(spark, SF_DIR, after=100, before=699))
     assert "PushedFilters: [" in plan
     pushed = plan.split("PushedFilters")[1][:160]
     assert "GreaterThan" in pushed and "LessThan" in pushed
 
-    latest = latest_row_per_key(
-        ev, ["user_id", "event_type"], "event_id",
-        as_of=F.col("event_id") <= 800,
-    )
-    plan = _plan(latest.select("user_id", "event_type", "event_id"))
+    plan = _plan(get_table_state_latest(spark, SF_DIR, block=800))
     assert "LessThanOrEqual(event_id,800" in plan.split("PushedFilters")[1][:200]
     assert plan.count("Exchange") == 1  # the window key shuffle only
 
@@ -565,6 +547,31 @@ def test_live_relay_tick_job_counts(spark, tmp_path):
     assert "Exchange" not in plan
 
 
+def _cache_miss_jobs(spark, cases: dict) -> dict[str, tuple[dict, int]]:
+    """kind -> (body, Spark jobs) for one call of each route with the
+    head memo warm, every route called once before to warm the table
+    reads and the lake; ``cases`` maps kind -> (path, params, _)."""
+    from hyperion_history_api_spark.api.http_server import HyperionAPI
+    from hyperion_history_api_spark.api.serving_cache import ResponseCache
+
+    api = HyperionAPI(spark, SF_DIR, cache=ResponseCache(default_ttl=0))
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    api.log_head()
+    for path, params, _ in cases.values():
+        api.routes[path](params)
+    got = {}
+    for kind, (path, params, _) in cases.items():
+        group = f"route-jobs-{kind}"
+        sc.setJobGroup(group, group)
+        try:
+            body = api.routes[path](params)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        got[kind] = (body, len(st.getJobIdsForGroup(group)))
+    return got
+
+
 def test_history_route_cache_miss_job_counts(spark):
     """A cache miss on a history route runs the fewest Spark jobs that
     still give an exact answer, with the head memo warm: get_actions
@@ -573,11 +580,8 @@ def test_history_route_cache_miss_job_counts(spark):
     the stat-fingerprint memo), as does ``model=hyperion``
     get_actions; get_transaction runs the orders key lookup plus one
     lineitem scan, with the traces ordered on the driver."""
-    from hyperion_history_api_spark.api.http_server import HyperionAPI
-    from hyperion_history_api_spark.api.serving_cache import ResponseCache
     from hyperion_history_api_spark.tables import load_tables
 
-    api = HyperionAPI(spark, SF_DIR, cache=ResponseCache(default_ttl=0))
     trx = load_tables(spark, SF_DIR)["orders"].first()["o_orderkey"]
     cases = {
         "get_actions": ("/v2/history/get_actions", {"account": "7", "limit": "20"}, 1),
@@ -589,19 +593,31 @@ def test_history_route_cache_miss_job_counts(spark):
         ),
         "get_transaction": ("/v2/history/get_transaction", {"id": str(trx)}, 2),
     }
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    api.log_head()
-    for path, params, _ in cases.values():
-        api.routes[path](params)  # warm the table reads and the lake
-    got = {}
-    for kind, (path, params, _) in cases.items():
-        group = f"route-jobs-{kind}"
-        sc.setJobGroup(group, group)
-        try:
-            body = api.routes[path](params)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+    got = _cache_miss_jobs(spark, cases)
+    for kind, (body, _) in got.items():
         assert body.get("actions"), kind
-        got[kind] = len(st.getJobIdsForGroup(group))
-    assert got == {kind: want for kind, (_, _, want) in cases.items()}
+    assert {k: jobs for k, (_, jobs) in got.items()} == {
+        kind: want for kind, (_, _, want) in cases.items()
+    }
+
+
+def test_mix_route_cache_miss_job_counts(spark):
+    """The other routes of the serving benchmark's mix, pinned the same
+    way: get_table_state is the as-of window plus its key page (2),
+    get_top_holders one top-K (1), get_trx_count one count (2, the
+    partial and final aggregate), get_creator one top-1 (1)."""
+    cases = {
+        "get_table_state": (
+            "/v2/history/get_table_state",
+            {"block": "800", "limit": "50"},
+            2,
+        ),
+        "get_top_holders": ("/v2/state/get_top_holders", {"limit": "20"}, 1),
+        "get_trx_count": ("/v2/stats/get_trx_count", {}, 2),
+        "get_creator": ("/v2/history/get_creator", {"account": "7"}, 1),
+    }
+    got = _cache_miss_jobs(spark, cases)
+    assert got["get_table_state"][0]["rows"]
+    assert {k: jobs for k, (_, jobs) in got.items()} == {
+        kind: want for kind, (_, _, want) in cases.items()
+    }
