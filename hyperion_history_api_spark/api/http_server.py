@@ -283,8 +283,9 @@ class HyperionAPI:
             from .http_routes import hyp_get_created_accounts
 
             return hyp_get_created_accounts(self, params)
+        creator = {"creator": params["account"]} if "account" in params else {}
         df = endpoints_ext.get_created_accounts(
-            self.spark, self.sf_dir, creator=params["account"], limit=_limit(params)
+            self.spark, self.sf_dir, limit=_limit(params), **creator
         )
         return {"accounts": _rows(df)}
 

@@ -358,7 +358,9 @@ def make_ingest_sink(
                 )
 
             with ThreadPoolExecutor(max_workers=3) as pool:
-                futures = [pool.submit(f) for f in (_log, _state, _rollup)]
+                # the state MERGE is the longest leg: submitted first,
+                # its driver-side planning does not queue behind the others'
+                futures = [pool.submit(f) for f in (_state, _log, _rollup)]
                 for fut in futures:
                     fut.result()  # re-raise the first leg failure
         finally:

@@ -21,3 +21,35 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` returns how many Spark jobs ``fn`` submitted:
+    those in a job group of its own, plus new jobs in no group, which
+    is where jobs land from a thread ``fn`` starts (a Python thread
+    does not inherit its starter's job group). The status tracker is
+    fed by the asynchronous listener bus, so the bus is drained before
+    each look: otherwise a job that ended just before ``fn`` shows up
+    as new, and one that ends at its close is missed."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+
+    def count(fn) -> int:
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        bus.waitUntilEmpty()
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        bus.waitUntilEmpty()
+        return len(tracker.getJobIdsForGroup(group)) + len(
+            set(tracker.getJobIdsForGroup(None)) - ungrouped
+        )
+
+    return count

@@ -243,20 +243,20 @@ def test_more_routes_and_post_bodies(server, spark):
     assert deltas["actions"]
 
     created = _get(
-        base, "/v2/history/get_created_accounts?account=CHINA&limit=10"
+        base, "/v2/history/get_created_accounts?account=NATION_19&limit=10"
     )
     want = [
         r["c_custkey"]
         for r in t["customer"]
         .join(
-            t["nation"].where(F.col("n_name") == "CHINA"),
+            t["nation"].where(F.col("n_name") == "NATION_19"),
             F.col("c_nationkey") == F.col("n_nationkey"),
         )
         .orderBy(F.col("c_custkey").desc())
         .limit(10)
         .collect()
     ]
-    assert [a["account"] for a in created["accounts"]] == want
+    assert [a["account"] for a in created["accounts"]] == want and want
 
     holders = _get(base, "/v2/state/get_top_holders?limit=5")
     amounts = [h["amount"] for h in holders["holders"]]

@@ -274,6 +274,30 @@ def test_ingest_sink_replay_idempotent(spark, tmp_path):
     assert roll.count() == n
 
 
+def test_live_sized_batch_sink_job_count(spark, tmp_path, count_jobs):
+    """A live-sized (1k-event) micro-batch through the ingest sink runs
+    at most 8 Spark jobs. The log and rollup legs run two each (one
+    exchange) and the state leg one: a small state is one bucket, read
+    with the manifest schema and merged in the task that writes it.
+    Each leg may add one job that builds the shared batch cache when
+    it finds the cache not yet built, so 5 to 8 by thread timing."""
+    sink, paths = make_ingest_sink(spark, str(tmp_path))
+    ev = load_tables(spark, SF_DIR)["events"]
+    span = ev.agg(F.max("event_id")).first()[0] + 1
+    sink(decode_and_enrich(ev), 0)
+    live = decode_and_enrich(ev.withColumn("event_id", F.col("event_id") + span))
+    assert live.count() == 1000
+    assert count_jobs(lambda: sink(live, 1)) <= 8
+    from hyperion_history_api_spark.streaming.ingest import read_state
+
+    state = {r.user_id: r.event_id for r in read_state(spark, paths["user_state"]).collect()}
+    want = {
+        r.user_id: r.event_id
+        for r in live.groupBy("user_id").agg(F.max("event_id").alias("event_id")).collect()
+    }
+    assert state == want
+
+
 def test_read_until_inclusive(spark):
     """read_until=N includes block/seq N (reference blockRange lte,
     functions.ts:758-768) — ADVICE r1 off-by-one."""
