@@ -7,8 +7,6 @@ The ``events`` log plays the delta log; (user_id, event_type) plays
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -221,8 +219,8 @@ def abi_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_version="version_seq",
         right_payload=["valid_from"],
     )
-    # No final orderBy (round-14): presentation-only (order-insensitive
-    # harness compare); saves a range exchange + sampling pass.
+    # No final orderBy: presentation-only (order-insensitive harness
+    # compare); saves a range exchange + sampling pass.
     return out.select("event_id", "user_id", "valid_from")
 
 
@@ -314,9 +312,9 @@ def get_creator_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, event_type
     """,
     "S8/S11 time travel: table state AS OF a historical snapshot "
-    "version of the manifest-pointer state store (round-3 verdict "
-    "item 9 — the fork-shielding story end-to-end; oracle = latest "
-    "row per key restricted to the first commit's block range)",
+    "version of the manifest-pointer state store (the fork-shielding "
+    "story end-to-end; oracle = latest row per key restricted to the "
+    "first commit's block range)",
 )
 def state_time_travel_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``VERSION AS OF`` on the bespoke state store: two merge commits
@@ -328,29 +326,20 @@ def state_time_travel_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan is a pure parquet scan of the retained v1 snapshot (snapshot
     isolation: commit 2 never mutated v1's files).
     """
-    import json
-    import shutil
-
-    from ..sources.lake import _source_fingerprint, lake_root
+    from ..sources.lake import ensure_built
     from ..streaming.state_store import ParquetStateStore
 
-    sf_name = _os.path.basename(_os.path.normpath(sf_dir))
-    root = lake_root() / sf_name / "state_tt"
-    keyf = root / "_tt_key.json"
-    want = {"v": 2, "src": _source_fingerprint(sf_dir, "events.parquet")}
-    try:
-        fresh = json.loads(keyf.read_text()) == want
-    except (OSError, ValueError):
-        fresh = False
-    store = ParquetStateStore(
-        spark,
-        str(root),
-        ["user_id", "event_type"],
-        block_col="event_id",
-        keep_versions=4,
-    )
-    if not fresh:
-        shutil.rmtree(root, ignore_errors=True)
+    def open_store(path: str) -> ParquetStateStore:
+        return ParquetStateStore(
+            spark,
+            path,
+            ["user_id", "event_type"],
+            block_col="event_id",
+            keep_versions=4,
+        )
+
+    def build(path: str) -> None:
+        store = open_store(path)
         ev = _t(spark, sf_dir)["events"].select(
             "user_id", "event_type", "event_id", "value"
         )
@@ -358,7 +347,10 @@ def state_time_travel_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
         store.apply_batch(
             ev.where((F.col("event_id") > 800) & (F.col("event_id") <= 1600))
         )
-        keyf.write_text(json.dumps(want))
+
+    store = open_store(
+        ensure_built(sf_dir, "state_tt", "events.parquet", "state_tt:v2", build)
+    )
     v1 = store.read_version(1)
     return v1.select(
         "user_id",

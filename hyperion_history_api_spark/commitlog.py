@@ -1,5 +1,6 @@
 """ONE transactional commit protocol for every versioned parquet store
-(`ParquetStateStore`, `DedupIndexStore` and the serving-lake refresh):
+(`ParquetStateStore`, `DedupIndexStore`, `InvertedIndexStore` and the
+serving-lake refresh):
 one hard-link + atomic-manifest + retention-GC implementation, so
 there is one crash-safety argument to audit instead of one per store.
 
@@ -23,10 +24,15 @@ store, as with the reference's per-table indexer worker
 (src/indexer/helpers/elastic-routes.ts / mongo-routes.ts keep one
 routing/commit layer per store — the anchor for centralizing this).
 
-Store-specific POLICY stays with each store: which rows go into a
-snapshot (bucketed copy-on-write merge, append-only frame deltas,
-OPTIMIZE rewrites) is the caller's business; how a snapshot becomes
-the current version is this module's.
+Which rows go into a snapshot is store policy. The bucketed
+copy-on-write merge of the state store and the swap-in-place lake
+refresh keep theirs. The append-only frame-delta policy shared by the dedup
+index and the inverted index lives here in :class:`FrameDeltaStore`:
+the ``batch_id`` replay guard, appending deltas next to hard-linked
+history, running every write leg before the one publish, the
+``delta_commits`` / ``last_ingest_batch`` manifest carry and
+auto-compaction. How a snapshot becomes the current version is
+:class:`CommitLog`'s.
 """
 
 from __future__ import annotations
@@ -35,6 +41,11 @@ import json
 import os
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor
+from typing import TYPE_CHECKING, Callable
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 
 def snap_version(snap: str) -> int:
@@ -192,3 +203,223 @@ class CommitLog:
         os.replace(tmp, self.manifest_file())  # THE commit point
         for h in gc:  # retained-window GC after the pointer moves
             shutil.rmtree(self.snapshot_dir(h), ignore_errors=True)
+
+
+class FrameDeltaStore:
+    """Append-only frame-delta policy on a :class:`CommitLog`: a store
+    whose snapshot is one flat parquet directory per frame in
+    ``FRAMES``, grown by O(batch) delta commits and rewritten by
+    compaction (the Delta-lake append/OPTIMIZE split; the reference
+    merges small index segments the same way, lifecycleManager.ts:18-60).
+
+    Every write goes through :meth:`_publish`, so one place decides:
+
+    - a delta lands as a few new files next to the previous snapshot's
+      files, which are hard-linked forward;
+    - all frame legs and the caller's ``also`` legs (a sink's own
+      per-batch outputs) run on one thread pool, and the manifest swap
+      after all of them is the only commit point. A crash replays the
+      batch against the old version, so a sink's (outputs, index) pair
+      is always consistent;
+    - ``delta_commits`` and ``last_ingest_batch`` carry through every
+      delta, compaction and retraction publish.
+
+    foreachBatch is at-least-once: a retried batch re-runs against a
+    store that already holds it, and re-appending would duplicate its
+    rows for good. A delta with ``batch_id <= last_ingest_batch`` is
+    therefore a no-op that also skips its ``also`` legs (their outputs
+    are already durable).
+
+    Subclasses name ``FRAMES`` and keep their own row math; they shape
+    full writes in :meth:`_layout` and compaction in :meth:`_compacted`.
+    """
+
+    FRAMES: tuple[str, ...] = ()
+    KEEP_VERSIONS = 2
+    # a micro-batch delta is O(batch) rows: landing it at shuffle
+    # parallelism would add ~shuffle_partitions tiny files per frame
+    # per commit, so it is coalesced to a couple of files per frame
+    DELTA_WRITE_PARTITIONS = 2
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        *,
+        compact_every: int | None = None,
+    ) -> None:
+        self.spark = spark
+        self.path = path
+        self.log = CommitLog(path, keep_versions=self.KEEP_VERSIONS)
+        # auto-compact after every K delta commits (None = manual only)
+        self.compact_every = compact_every
+
+    def read_manifest(self) -> dict | None:
+        return self.log.read_manifest()
+
+    def _frames(self, m: dict) -> dict[str, DataFrame]:
+        base = self.log.snapshot_dir(m["snapshot"])
+        return {
+            f: self.spark.read.parquet(os.path.join(base, f))
+            for f in self.FRAMES
+        }
+
+    def frame_file_counts(self) -> dict[str, int]:
+        """Data files per frame of the current snapshot (the
+        fragmentation observable compaction keeps flat)."""
+        m = self.read_manifest()
+        if m is None:
+            return {}
+        base = self.log.snapshot_dir(m["snapshot"])
+        return {
+            f: sum(
+                1
+                for e in os.listdir(os.path.join(base, f))
+                if e.endswith(".parquet")
+            )
+            for f in self.FRAMES
+        }
+
+    @staticmethod
+    def _canon(df: DataFrame) -> DataFrame:
+        """Canonical column order for every written file: the linked
+        files and the appended delta files of one frame directory are
+        read as one parquet dataset, so they must agree."""
+        return df.select(*sorted(df.columns))
+
+    def last_ingest_batch(self) -> int | None:
+        """The foreachBatch ``batch_id`` of the last APPLIED commit, or
+        None if the store is unseeded or was committed outside a
+        streaming sink."""
+        m = self.read_manifest()
+        return None if m is None or "last_ingest_batch" not in m else int(
+            m["last_ingest_batch"]
+        )
+
+    # -- policy hooks -------------------------------------------------
+
+    def _layout(self, frame: str, df: DataFrame) -> DataFrame:
+        """The physical shape of a fully rewritten frame."""
+        return self._canon(df)
+
+    def _append_files(self, frame: str) -> int:
+        return self.DELTA_WRITE_PARTITIONS
+
+    def _compacted(self, m: dict) -> dict[str, DataFrame]:
+        """The frames an OPTIMIZE of snapshot ``m`` rewrites."""
+        raise NotImplementedError
+
+    def _delta_published(self, m: dict, appended: dict) -> None:
+        """Runs after a delta publish, before any auto-compaction."""
+
+    # -- commit -------------------------------------------------------
+
+    def _publish(
+        self,
+        m: dict | None,
+        *,
+        rewrite: dict | None = None,
+        append: dict | None = None,
+        also: tuple = (),
+        batch_id: int | None = None,
+        delta: bool = False,
+        compacted: bool = False,
+        retain_extra: int = 0,
+    ) -> int:
+        """Write one snapshot over manifest ``m`` (None: a full commit
+        that builds on nothing) and publish it; returns its
+        ``delta_commits``.
+
+        ``rewrite`` frames are written whole in their :meth:`_layout`.
+        Each ``append`` frame hard-links the previous snapshot's files
+        (when it has that frame) and adds its delta rows; a None delta
+        only carries the frame forward."""
+        snap, snap_dir = self.log.new_snapshot()
+        prev = None if m is None else self.log.snapshot_dir(m["snapshot"])
+
+        def rewrite_leg(f: str, df: DataFrame) -> None:
+            self._layout(f, df).write.mode("overwrite").parquet(
+                os.path.join(snap_dir, f)
+            )
+
+        def append_leg(f: str, df: DataFrame | None) -> None:
+            dst = os.path.join(snap_dir, f)
+            if os.path.isdir(os.path.join(prev, f)):
+                link_files(os.path.join(prev, f), dst)
+            if df is not None:
+                self._canon(df).coalesce(self._append_files(f)).write.mode(
+                    "append"
+                ).parquet(dst)
+
+        legs = [
+            lambda f=f, df=df: rewrite_leg(f, df)
+            for f, df in (rewrite or {}).items()
+        ] + [
+            lambda f=f, df=df: append_leg(f, df)
+            for f, df in (append or {}).items()
+        ] + list(also)
+        with ThreadPoolExecutor(max_workers=len(legs)) as pool:
+            for fut in [pool.submit(leg) for leg in legs]:
+                fut.result()  # first failure propagates; no publish
+        extra: dict = {}
+        commits = 0
+        if m is not None:
+            if not compacted:
+                commits = int(m.get("delta_commits", 0)) + int(delta)
+            extra["delta_commits"] = commits
+            if "last_ingest_batch" in m:
+                extra["last_ingest_batch"] = int(m["last_ingest_batch"])
+        if compacted:
+            extra["compacted"] = True
+        if batch_id is not None:
+            extra["last_ingest_batch"] = int(batch_id)
+        self.log.publish(snap, extra=extra, retain_extra=retain_extra)
+        return commits
+
+    def _commit_delta(
+        self,
+        frames: Callable[[dict], tuple[dict, dict]],
+        *,
+        batch_id: int | None,
+        also: tuple,
+    ) -> None:
+        """The delta commit: ``frames(m)`` returns the (append,
+        rewrite) frames over current manifest ``m`` and runs only past
+        the replay guard. A delta that reaches ``compact_every`` is
+        followed by a compaction that shares its retention slot, so a
+        sink invocation never halves the in-flight reader window."""
+        m = self.read_manifest()
+        if m is None:
+            raise ValueError("commit_delta requires a seeded index store")
+        if (
+            batch_id is not None
+            and "last_ingest_batch" in m
+            and int(batch_id) <= int(m["last_ingest_batch"])
+        ):
+            return  # at-least-once replay of an applied batch
+        append, rewrite = frames(m)
+        commits = self._publish(
+            m,
+            rewrite=rewrite,
+            append=append,
+            also=also,
+            batch_id=batch_id,
+            delta=True,
+        )
+        self._delta_published(m, append)
+        if self.compact_every and commits >= self.compact_every:
+            self.compact(retain_extra=1)
+
+    def compact(self, *, retain_extra: int = 0) -> None:
+        """The OPTIMIZE pass: rewrite the frames of the current
+        snapshot in their compacted layout and publish a fresh version
+        (``delta_commits`` resets). Same rows, new physical layout;
+        readers of the earlier version keep their files."""
+        m = self.read_manifest()
+        if m is not None:
+            self._publish(
+                m,
+                rewrite=self._compacted(m),
+                compacted=True,
+                retain_extra=retain_extra,
+            )

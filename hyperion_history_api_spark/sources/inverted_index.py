@@ -30,7 +30,7 @@ Delta commit cost is O(batch tokens) + O(vocabulary): postings files
 of the previous snapshot hard-link forward, only the batch's postings
 land as new files; df/stats rewrite from (previous || batch) — no
 history re-tokenization ever. The manifest swap is the single atomic
-commit point (shared CommitLog, commitlog.py).
+commit point (commitlog.FrameDeltaStore, shared with the dedup index).
 
 Scoring reads ONLY the query terms' postings (pushed word filter)
 plus the df and stats frames (pyarrow, no Spark job), and hands them to
@@ -48,7 +48,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..commitlog import CommitLog, link_files
+from ..commitlog import FrameDeltaStore
 from ..operators import scoring
 from ..operators.scoring import TfRows
 
@@ -100,49 +100,28 @@ def _tokenize(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-class InvertedIndexStore:
-    """Versioned inverted-index store (postings/df/stats frames on
-    the shared CommitLog protocol — same crash-safety contract as
-    ParquetStateStore and DedupIndexStore)."""
+class InvertedIndexStore(FrameDeltaStore):
+    """Versioned inverted-index store: postings/df/stats frames (plus
+    tombstones once something is retracted) on the shared
+    :class:`FrameDeltaStore` policy — the same replay guard, delta
+    append, publish path and compaction as DedupIndexStore."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        *,
-        keep_versions: int = 2,
-        cluster_files: int = 8,
-        delta_write_partitions: int = 2,
-        compact_every: int | None = None,
-    ) -> None:
-        self.spark = spark
-        self.path = path
-        self.log = CommitLog(path, keep_versions=keep_versions)
-        self.cluster_files = max(1, cluster_files)
-        self.delta_write_partitions = max(1, delta_write_partitions)
-        # auto-OPTIMIZE after every K delta commits (None = manual) —
-        # same fragmentation policy as DedupIndexStore: a long ingest
-        # run otherwise splits each frame ~K-ways and every query
-        # opens every file
-        self.compact_every = compact_every
+    FRAMES = _FRAMES
+    # postings files of a full build or compaction, range-clustered by
+    # word
+    CLUSTER_FILES = 8
 
     # -- read -----------------------------------------------------------
 
     def read(self) -> dict[str, DataFrame] | None:
-        m = self.log.read_manifest()
-        if m is None:
-            return None
-        base = self.log.snapshot_dir(m["snapshot"])
-        return {
-            f: self.spark.read.parquet(os.path.join(base, f))
-            for f in _FRAMES
-        }
+        m = self.read_manifest()
+        return None if m is None else self._frames(m)
 
     def tombstones(self) -> DataFrame | None:
         """(doc_id) frame of retracted documents in the current
         snapshot, or None when nothing was ever retracted (the common
         case — serving pays zero extra work then)."""
-        m = self.log.read_manifest()
+        m = self.read_manifest()
         if m is None:
             return None
         t = os.path.join(self.log.snapshot_dir(m["snapshot"]), TOMB_FRAME)
@@ -169,11 +148,19 @@ class InvertedIndexStore:
 
     # -- commit ----------------------------------------------------------
 
-    @staticmethod
-    def _canon(df: DataFrame) -> DataFrame:
-        # one column order for every file of a frame: linked v1 files
-        # and appended delta files are read as one parquet dataset
-        return df.select(*sorted(df.columns))
+    def _layout(self, frame: str, df: DataFrame) -> DataFrame:
+        """Postings range-clustered by word (query terms prune to few
+        files via footer stats); the aggregates as one file each."""
+        df = self._canon(df)
+        if frame == POSTINGS_FRAME:
+            return df.repartitionByRange(
+                self.CLUSTER_FILES, "word"
+            ).sortWithinPartitions("word", "doc_id")
+        return df.coalesce(1)
+
+    def _append_files(self, frame: str) -> int:
+        # a retraction's tombstones land as one file
+        return 1 if frame == TOMB_FRAME else self.DELTA_WRITE_PARTITIONS
 
     def _aggregates(
         self, postings: DataFrame
@@ -187,16 +174,6 @@ class InvertedIndexStore:
         )
         return df_t, stats
 
-    def last_ingest_batch(self) -> int | None:
-        """foreachBatch ``batch_id`` of the last APPLIED commit (None
-        when unseeded / committed outside a streaming sink) — the
-        at-least-once replay guard, same contract as
-        streaming/dedup_ingest.DedupIndexStore."""
-        m = self.log.read_manifest()
-        return None if m is None or "last_ingest_batch" not in m else int(
-            m["last_ingest_batch"]
-        )
-
     def commit(
         self,
         docs: DataFrame,
@@ -204,29 +181,24 @@ class InvertedIndexStore:
         text_col: str = "text",
         id_col: str = "doc_id",
         batch_id: int | None = None,
+        also: tuple = (),
     ) -> None:
-        """Full build: postings range-clustered by word (query terms
-        prune to few files via footer stats), aggregates derived.
-        ``batch_id`` (when committing from a streaming sink) lands in
-        the manifest so a replayed micro-batch is recognized."""
+        """Full build: postings plus the aggregates derived from them,
+        with the ``also`` legs on the same pool. ``batch_id`` (when
+        committing from a streaming sink) lands in the manifest so a
+        replayed micro-batch is recognized."""
         postings = _tokenize(docs, text_col, id_col)
         df_t, stats = self._aggregates(postings)
-        snap, snap_dir = self.log.new_snapshot()
-        (
-            self._canon(postings)
-            .repartitionByRange(self.cluster_files, "word")
-            .sortWithinPartitions("word", "doc_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(snap_dir, POSTINGS_FRAME))
+        self._publish(
+            None,
+            rewrite={
+                POSTINGS_FRAME: postings,
+                DF_FRAME: df_t,
+                STATS_FRAME: stats,
+            },
+            also=also,
+            batch_id=batch_id,
         )
-        self._canon(df_t).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(snap_dir, DF_FRAME)
-        )
-        self._canon(stats).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(snap_dir, STATS_FRAME)
-        )
-        extra = {} if batch_id is None else {"last_ingest_batch": int(batch_id)}
-        self.log.publish(snap, extra=extra)
 
     def commit_delta(
         self,
@@ -240,88 +212,35 @@ class InvertedIndexStore:
         """Incremental commit of NEW documents (disjoint doc_ids — the
         append-only corpus contract): postings hard-link forward +
         O(batch) new files; df/stats rewritten from (previous ||
-        batch) without touching postings history.
+        batch) without touching postings history; tombstones carried
+        forward. A replayed ``batch_id`` is a no-op: re-appending it
+        would double its postings AND its df/n/sumdl contributions,
+        so scores would silently drift."""
 
-        ``batch_id <= last_ingest_batch`` short-circuits to a no-op:
-        foreachBatch is at-least-once, and blindly re-appending a
-        replayed batch would double its postings AND double-count its
-        df/n/sumdl contributions forever (worse than the dedup store's
-        bloat — scores would silently drift). Same guard as
-        streaming/dedup_ingest.DedupIndexStore.commit_delta."""
-        cur = self.read()
-        if cur is None:
-            raise ValueError("commit_delta requires a seeded index store")
-        _m0 = self.log.read_manifest()
-        if (
-            batch_id is not None
-            and "last_ingest_batch" in _m0
-            and int(batch_id) <= int(_m0["last_ingest_batch"])
-        ):
-            return  # at-least-once replay of an applied batch
-        batch = _tokenize(docs, text_col, id_col)
-        bdf, bstats = self._aggregates(batch)
-        merged_df = (
-            cur[DF_FRAME]
-            .unionByName(bdf)
-            .groupBy("word")
-            .agg(F.sum("df").cast("long").alias("df"))
-        )
-        merged_stats = (
-            cur[STATS_FRAME]
-            .unionByName(bstats)
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("sumdl").cast("long").alias("sumdl"),
+        def frames(m: dict) -> tuple[dict, dict]:
+            cur = self._frames(m)
+            batch = _tokenize(docs, text_col, id_col)
+            bdf, bstats = self._aggregates(batch)
+            merged_df = (
+                cur[DF_FRAME]
+                .unionByName(bdf)
+                .groupBy("word")
+                .agg(F.sum("df").cast("long").alias("df"))
             )
-        )
-        m = self.log.read_manifest()
-        snap, snap_dir = self.log.new_snapshot()
-        prev = self.log.snapshot_dir(m["snapshot"])
+            merged_stats = (
+                cur[STATS_FRAME]
+                .unionByName(bstats)
+                .agg(
+                    F.sum("n").cast("long").alias("n"),
+                    F.sum("sumdl").cast("long").alias("sumdl"),
+                )
+            )
+            return (
+                {POSTINGS_FRAME: batch, TOMB_FRAME: None},
+                {DF_FRAME: merged_df, STATS_FRAME: merged_stats},
+            )
 
-        # the three frame writes plus any caller legs (``also`` — a
-        # streaming sink's own per-batch outputs) run concurrently on
-        # one thread pool, all gated behind the single manifest swap
-        # (the streaming/dedup_ingest.commit_delta pattern: each leg
-        # is a small independent job dominated by fixed scheduling
-        # cost, and the replay guard above skips the ``also`` legs
-        # together with the frames)
-        def _postings_leg() -> None:
-            dst = os.path.join(snap_dir, POSTINGS_FRAME)
-            link_files(os.path.join(prev, POSTINGS_FRAME), dst)
-            self._canon(batch).coalesce(
-                self.delta_write_partitions
-            ).write.mode("append").parquet(dst)
-
-        def _df_leg() -> None:
-            self._canon(merged_df).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(snap_dir, DF_FRAME))
-
-        def _stats_leg() -> None:
-            self._canon(merged_stats).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(snap_dir, STATS_FRAME))
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        legs = [_postings_leg, _df_leg, _stats_leg] + list(also)
-        with ThreadPoolExecutor(max_workers=len(legs)) as pool:
-            for fut in [pool.submit(leg) for leg in legs]:
-                fut.result()  # first failure propagates; no publish
-        tprev = os.path.join(prev, TOMB_FRAME)
-        if os.path.isdir(tprev):  # carry retractions forward
-            link_files(tprev, os.path.join(snap_dir, TOMB_FRAME))
-        delta_commits = int(m.get("delta_commits", 0)) + 1
-        extra = {"delta_commits": delta_commits}
-        if batch_id is not None:
-            extra["last_ingest_batch"] = int(batch_id)
-        elif "last_ingest_batch" in m:
-            extra["last_ingest_batch"] = int(m["last_ingest_batch"])
-        self.log.publish(snap, extra=extra)
-        if self.compact_every and delta_commits >= self.compact_every:
-            # paired compaction must not burn a retention slot of its
-            # own (same rationale as DedupIndexStore.commit_delta)
-            self.compact(retain_extra=1)
+        self._commit_delta(frames, batch_id=batch_id, also=also)
 
     def retract_ids(
         self, ids: DataFrame, *, id_col: str = "doc_id"
@@ -348,9 +267,10 @@ class InvertedIndexStore:
         already tombstoned are skipped so a replayed retraction cannot
         double-subtract.
         """
-        cur = self.read()
-        if cur is None:
+        m = self.read_manifest()
+        if m is None:
             raise ValueError("retract_ids requires a seeded index store")
+        cur = self._frames(m)
         new_ids = ids.select(
             F.col(id_col).cast("long").alias("doc_id")
         ).distinct()
@@ -380,60 +300,20 @@ class InvertedIndexStore:
             (F.col("n") - F.col("n_sub")).cast("long").alias("n"),
             (F.col("sumdl") - F.col("sumdl_sub")).cast("long").alias("sumdl"),
         )
-        m = self.log.read_manifest()
-        snap, snap_dir = self.log.new_snapshot()
-        prev = self.log.snapshot_dir(m["snapshot"])
-        dst = os.path.join(snap_dir, POSTINGS_FRAME)
-        link_files(os.path.join(prev, POSTINGS_FRAME), dst)
-        self._canon(merged_df).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(snap_dir, DF_FRAME)
+        self._publish(
+            m,
+            rewrite={DF_FRAME: merged_df, STATS_FRAME: merged_stats},
+            append={POSTINGS_FRAME: None, TOMB_FRAME: new_ids},
         )
-        self._canon(merged_stats).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(snap_dir, STATS_FRAME))
-        tdst = os.path.join(snap_dir, TOMB_FRAME)
-        tprev = os.path.join(prev, TOMB_FRAME)
-        if os.path.isdir(tprev):
-            link_files(tprev, tdst)
-        new_ids.coalesce(1).write.mode("append").parquet(tdst)
-        extra = {"delta_commits": int(m.get("delta_commits", 0))}
-        if "last_ingest_batch" in m:
-            # the replay guard must survive a retraction commit
-            extra["last_ingest_batch"] = int(m["last_ingest_batch"])
-        self.log.publish(snap, extra=extra)
 
-    def compact(self, *, retain_extra: int = 0) -> None:
-        """OPTIMIZE: physically drop tombstoned postings and rewrite
-        word-clustered into few files (the Lucene segment merge that
-        actually reclaims deletes). df/stats are already exact — they
-        rewrite as-is; the tombstones frame is NOT carried into the
-        new snapshot. Published through the same atomic manifest swap;
-        rows of the live view are identical before and after."""
-        cur = self.read()
-        if cur is None:
-            return
-        live = self.live_postings(cur)
-        m = self.log.read_manifest()
-        snap, snap_dir = self.log.new_snapshot()
-        (
-            self._canon(live)
-            .repartitionByRange(self.cluster_files, "word")
-            .sortWithinPartitions("word", "doc_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(snap_dir, POSTINGS_FRAME))
-        )
-        for f in (DF_FRAME, STATS_FRAME):
-            self._canon(cur[f]).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(snap_dir, f))
-        extra = {"delta_commits": 0, "compacted": True}
-        if m is not None and "last_ingest_batch" in m:
-            # the replay guard must survive an OPTIMIZE rewrite —
-            # compaction changes layout, not applied-batch history
-            # (without this, a micro-batch replayed right after an
-            # auto-compaction would re-commit and double-count)
-            extra["last_ingest_batch"] = int(m["last_ingest_batch"])
-        self.log.publish(snap, extra=extra, retain_extra=retain_extra)
+    def _compacted(self, m: dict) -> dict[str, DataFrame]:
+        """OPTIMIZE: tombstoned postings physically dropped (the Lucene
+        segment merge that actually reclaims deletes) and the
+        tombstones frame not carried; df/stats are already exact and
+        rewrite as-is, so rows of the live view are identical before
+        and after."""
+        cur = self._frames(m)
+        return {**cur, POSTINGS_FRAME: self.live_postings(cur)}
 
     # -- serve -----------------------------------------------------------
 
@@ -548,37 +428,19 @@ class InvertedIndexStore:
         ).orderBy("doc_id")
 
 
-_BUILT: set[tuple[str, str]] = set()  # (path, build key) built or fresh
-
-
 def ensure_index_store(
     spark: SparkSession, sf_dir: str, name: str, source: str, key: str, build
 ) -> InvertedIndexStore:
-    """The write-once stored index at ``<lake_root>/<sf>/<name>``.
+    """The write-once stored index at ``<lake_root>/<sf>/<name>``;
+    ``build(store)`` fills it when :func:`~.lake.ensure_built` finds it
+    missing or stale."""
+    from .lake import ensure_built
 
-    ``build(store)`` runs only when the store's ``BUILD_KEY`` file does
-    not hold ``key`` plus the size/mtime fingerprint of ``sf_dir/source``
-    (the ensure_parquet discipline): regenerated fixture data, or two
-    sf_dirs sharing a basename, never serve a stale index. A (path,
-    key) this process already built or found fresh is not rebuilt."""
-    import json
-
-    from .lake import _source_fingerprint, lake_root
-
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    path = str(lake_root() / sf_name / name)
-    store = InvertedIndexStore(spark, path)
-    build_key = key + "|" + json.dumps(
-        _source_fingerprint(sf_dir, source), sort_keys=True
+    path = ensure_built(
+        sf_dir,
+        name,
+        source,
+        key,
+        lambda p: build(InvertedIndexStore(spark, p)),
     )
-    key_file = os.path.join(path, "BUILD_KEY")
-    try:
-        fresh = open(key_file).read() == build_key
-    except OSError:
-        fresh = False
-    if (path, build_key) not in _BUILT and not fresh:
-        build(store)
-        with open(key_file, "w") as fh:
-            fh.write(build_key)
-    _BUILT.add((path, build_key))
-    return store
+    return InvertedIndexStore(spark, path)

@@ -6,9 +6,9 @@ indices — actions routed to block-range partitions
 src/indexer/helpers/elastic-routes.ts:484-486) with an index sort of
 ``global_sequence desc`` (src/indexer/definitions/index-templates.ts:29-40);
 deltas sorted ``(block_num desc, scope asc, primary_key asc)``
-(index-templates.ts:186-189). Round-2 served the ``hyp_*`` family by
-re-deriving the nested rows from ``events`` on every call — correct,
-but every interactive query re-paid the enrichment projection.
+(index-templates.ts:186-189). Re-deriving the nested rows from
+``events`` on every call would make every interactive query re-pay
+the enrichment projection.
 
 This module writes each nested table ONCE per scale-factor directory
 and points queries at the stored parquet:
@@ -30,9 +30,6 @@ parquet changes. Publication is atomic: build into a temp dir, then a
 single ``os.rename`` — a reader either sees the complete old table or
 the complete new one (the same pointer-swap idea as
 ``streaming/state_store``'s manifest commit).
-
-Set ``SPARK_GRAFT_NO_LAKE=1`` to bypass storage and compute the
-enrichment on the fly (debugging aid).
 """
 
 from __future__ import annotations
@@ -100,6 +97,38 @@ def _source_fingerprint(sf_dir: str, source_file: str = "events.parquet") -> dic
     return {"file": source_file, "size": st.st_size, "mtime_ns": st.st_mtime_ns}
 
 
+_BUILT: set[tuple[str, str]] = set()  # (path, build key) built or fresh
+
+
+def ensure_built(sf_dir: str, name: str, source: str, key: str, build) -> str:
+    """The path of the write-once store ``<lake_root>/<sf>/<name>``.
+
+    ``build(path)`` runs only when the store's ``BUILD_KEY`` file does
+    not hold ``key`` plus the size/mtime fingerprint of
+    ``sf_dir/source``, so regenerated fixture data, or two sf_dirs
+    sharing a basename, never serve a stale store. A stale directory
+    is cleared first: the build starts from an empty store, whose
+    version 1 is the build's first commit. A (path, key) this process
+    already built or found fresh is not checked again."""
+    sf_name = os.path.basename(os.path.normpath(sf_dir))
+    path = str(lake_root() / sf_name / name)
+    build_key = key + "|" + json.dumps(
+        _source_fingerprint(sf_dir, source), sort_keys=True
+    )
+    key_file = os.path.join(path, "BUILD_KEY")
+    if (path, build_key) not in _BUILT:
+        try:
+            fresh = Path(key_file).read_text() == build_key
+        except OSError:
+            fresh = False
+        if not fresh:
+            shutil.rmtree(path, ignore_errors=True)
+            build(path)
+            Path(key_file).write_text(build_key)
+        _BUILT.add((path, build_key))
+    return path
+
+
 def _manifest_path(dest: Path) -> Path:
     return dest / "_lake_manifest.json"
 
@@ -134,11 +163,8 @@ def ensure_parquet(
     different ``extra_key`` — e.g. new quantizer parameters). The build
     lands in a temp dir and is published by a single ``os.rename``, so
     concurrent readers see either the complete old table or the
-    complete new one. With SPARK_GRAFT_NO_LAKE=1 the build runs inline
-    with no storage.
+    complete new one.
     """
-    if os.environ.get("SPARK_GRAFT_NO_LAKE"):
-        return build_fn()
     sf_name = os.path.basename(os.path.normpath(sf_dir))
     dest = lake_root() / sf_name / name
     fingerprint = _source_fingerprint(sf_dir, source_file)
@@ -187,11 +213,11 @@ def ensure_parquet(
 
 def lake_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The stored nested table for (sf_dir, name), building it on first
-    use. Returns the on-the-fly enrichment when SPARK_GRAFT_NO_LAKE=1."""
+    use."""
 
     def build() -> DataFrame:
         df = _BUILDERS[name](spark, sf_dir)
-        if name in _PARTITIONED and not os.environ.get("SPARK_GRAFT_NO_LAKE"):
+        if name in _PARTITIONED:
             df = df.withColumn(
                 "block_part",
                 (F.col("block_num") / F.lit(BLOCK_PART_SIZE)).cast("bigint"),

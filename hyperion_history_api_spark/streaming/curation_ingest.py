@@ -1,5 +1,5 @@
-"""Streaming END-TO-END corpus curation (round-4 verdict item 6 /
-round-6 item 6): the full pretraining-data build — quality filter →
+"""Streaming END-TO-END corpus curation: the full pretraining-data
+build — quality filter →
 language filter → benchmark decontamination → incremental near-dup
 dedup against a persisted index → transitive-cluster keeper selection
 → deterministic split rollup — running as ONE ``foreachBatch``
@@ -40,12 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import stopword_ratio, token_count
-from ..operators.dedup import (
-    build_dedup_index,
-    incremental_pairs_and_delta,
-    minhash_lsh_pairs,
-)
-from .dedup_ingest import DedupIndexStore
+from .dedup_ingest import DedupIndexStore, pair_and_commit
 
 _STOPWORDS = ["the", "a", "of", "and", "to"]
 
@@ -114,9 +109,9 @@ def make_curation_sink(
         spark,
         os.path.join(out_dir, "dedup_index"),
         compact_every=compact_every,
-        # round-7 (verdict item 6): the probe DAG re-references the
-        # stored frames ~8x per wave; the version-checked cache keeps
-        # them persisted across waves instead of re-scanning parquet
+        # the probe DAG re-references the stored frames ~8x per wave;
+        # the version-checked cache keeps them persisted across waves
+        # instead of re-scanning parquet
         cache_frames=True,
     )
     paths = {
@@ -125,14 +120,13 @@ def make_curation_sink(
         "index": store.path,
     }
     # the benchmark id set is tiny and STATIC: collect it once and
-    # exclude via an isin() predicate folded into the batch scan —
-    # the previous per-wave broadcast anti-join cost one broadcast
-    # build job round every micro-batch for the same constant set
-    # (round-8: part of the per-wave fixed-overhead budget).
-    # Guardrails (round-9 ADVICE): NOT IN under SQL three-valued logic
-    # silently drops null ids, so the predicate is made null-safe; and
-    # an eval set too large to embed as plan literals (it would bloat
-    # every batch plan) falls back to the broadcast anti-join path.
+    # exclude via an isin() predicate folded into the batch scan — a
+    # per-wave broadcast anti-join would cost one broadcast build job
+    # every micro-batch for the same constant set.
+    # Guardrails: NOT IN under SQL three-valued logic silently drops
+    # null ids, so the predicate is made null-safe; and an eval set
+    # too large to embed as plan literals (it would bloat every batch
+    # plan) falls back to the broadcast anti-join path.
     # Both paths share ONE semantic — null-id batch docs are KEPT: a
     # left_anti join uses plain (non-null-safe) equality, so a null id
     # never matches any eval row, even a null one; the isin predicate
@@ -160,7 +154,7 @@ def make_curation_sink(
         )
     # the benchmark set is STATIC: shingle it once and keep the grams
     # persisted across waves instead of re-deriving + re-broadcasting
-    # them per micro-batch (part of the round-6 item-6 fixed overhead)
+    # them per micro-batch
     from ..operators.decontam import _grams
 
     eval_grams = (
@@ -177,8 +171,7 @@ def make_curation_sink(
         # it re-pays a fingerprint shuffle the stored index's registry
         # does anyway in the probe right after — and the per-doc
         # verdicts are identical either way (exact copies share every
-        # n-gram), so kept-set equality is untouched (round-8
-        # per-wave fixed-overhead cut, STREAM_CURATION_BENCH_r08)
+        # n-gram), so kept-set equality is untouched
         clean = (
             clean_corpus(
                 _not_eval_filter(kept),
@@ -193,63 +186,25 @@ def make_curation_sink(
             .persist()
         )
         try:
-            index = store.read()
-            if index is None:
-                pairs = minhash_lsh_pairs(
-                    clean, text_col, id_col, threshold=threshold
-                )
-                pairs.write.mode("overwrite").parquet(
-                    os.path.join(paths["pairs"], f"ingest_batch={batch_id}")
-                )
-                clean.write.mode("overwrite").parquet(
-                    os.path.join(paths["clean"], f"ingest_batch={batch_id}")
-                )
-                store.commit(
-                    build_dedup_index(clean, text_col, id_col),
-                    batch_id=batch_id,
-                )
-            else:
-                pairs, delta = incremental_pairs_and_delta(
-                    index,
-                    clean,
-                    text_col,
-                    id_col,
-                    threshold=threshold,
-                    # a foreachBatch sink sees micro-batches by
-                    # construction (backfill goes through the one-shot
-                    # batch build): skip the probe-side count gate and
-                    # fold the split materialization into the shingle
-                    # checkpoint job (round-8 per-wave cut)
-                    assume_small_batch=assume_small_batch,
-                )
-                # all six write legs (pairs, clean, 4 index frames)
-                # run concurrently on the commit's thread pool, behind
-                # ONE manifest swap — the serial-job ladder was the
-                # per-wave fixed overhead (round-6 verdict item 6)
-                store.commit_delta(
-                    delta,
-                    batch_id=batch_id,
-                    also=(
-                        lambda: pairs.write.mode("overwrite").parquet(
-                            os.path.join(
-                                paths["pairs"], f"ingest_batch={batch_id}"
-                            )
-                        ),
-                        lambda: clean.write.mode("overwrite").parquet(
-                            os.path.join(
-                                paths["clean"], f"ingest_batch={batch_id}"
-                            )
-                        ),
-                    ),
-                )
+            pair_and_commit(
+                store,
+                clean,
+                batch_id,
+                text_col,
+                id_col,
+                threshold=threshold,
+                assume_small_batch=assume_small_batch,
+                pairs_path=paths["pairs"],
+                outputs=((clean, paths["clean"]),),
+            )
         finally:
             clean.unpersist()
 
     def close() -> None:
-        """Teardown (round-7 ADVICE): the grams persist() and the
-        store's cache_frames persist() otherwise pin executor memory
-        for the rest of the session once the query ends — one leaked
-        sink per query adds up on a long-lived serving session."""
+        """Teardown: the grams persist() and the store's cache_frames
+        persist() otherwise pin executor memory for the rest of the
+        session once the query ends — one leaked sink per query adds
+        up on a long-lived serving session."""
         eval_grams.unpersist()
         store._drop_cache()
 

@@ -15,10 +15,9 @@ runs: documents arrive as micro-batches; each batch
    discipline as streaming/ingest.make_ingest_sink),
 3. extends the index (append-only union of the four frames) and
    commits the new version through an atomic manifest ``os.replace``
-   (the streaming/state_store protocol — a crash between pairs-write
-   and index-commit replays the batch against the OLD index and
-   overwrites its own pairs dir, so the published (pairs, index)
-   pair is always consistent).
+   (commitlog.FrameDeltaStore — a crash before the swap replays the
+   batch against the OLD index and overwrites its own pairs dir, so
+   the published (pairs, index) pair is always consistent).
 
 The union of per-batch pair outputs over any ingest order equals the
 one-shot full-corpus ``minhash_lsh_pairs`` (replay-order
@@ -33,7 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..commitlog import CommitLog, link_files
+from ..commitlog import FrameDeltaStore
 from ..operators.dedup import (
     DedupIndex,
     build_dedup_index,
@@ -54,49 +53,31 @@ _CLUSTER_KEY = {
 }
 
 
-class DedupIndexStore:
-    """Manifest-pointer persistence for a :class:`DedupIndex`: each
-    commit writes into a fresh ``v<NNNNNNNN>-<uuid>/`` directory and
-    atomically swaps ONE pointer file, so readers and the next batch's
-    extend see all four frames from the same version — never bands of
-    one version against a registry of another. Superseded versions are
-    retained for ``keep_versions`` commits (in-flight reader
-    protection), then GC'd.
+class DedupIndexStore(FrameDeltaStore):
+    """Manifest-pointer persistence for a :class:`DedupIndex`: readers
+    and the next batch's extend see all four frames from the same
+    version, never bands of one version against a registry of another.
 
-    Two commit granularities (the Delta-lake append/OPTIMIZE split):
-
-    - :meth:`commit_delta` persists only the batch's ADDITIONS —
-      previous data files are hard-linked forward (inode sharing, the
-      state_store trick) and the delta lands as a few new files.
-      Per-commit IO is O(batch), which is what makes a streaming index
-      affordable; the cost is fragmentation — after N commits each
-      frame is ~N-way split and every probe opens every file.
-    - :meth:`compact` is the ``OPTIMIZE``: rewrite each frame
-      range-clustered by its probe key (bands by ``band_val``, members
-      by rep, registry by fp) into few large files, published through
-      the SAME atomic manifest swap — readers of the pre-compaction
-      version keep their (linked) files, and rows are bit-identical
-      (pinned by tests/test_streaming_dedup.py).
-
-    Reference anchor: the ES segment-merge / index-lifecycle behavior
-    this mirrors (src/indexer/modules/lifecycleManager.ts:18-60 —
-    Hyperion actively merges segments and rolls indices rather than
-    letting write-granularity segments accumulate).
+    :meth:`commit_delta` appends only the batch's additions (history
+    hard-linked forward, O(batch) IO); :meth:`compact` rewrites each
+    frame range-clustered by its probe key (bands by ``band_val``,
+    members by rep, registry by fp) into few large files with
+    bit-identical rows (pinned by tests/test_streaming_dedup.py). The
+    shared policy of both is :class:`FrameDeltaStore`'s.
     """
+
+    FRAMES = _FRAMES
+    COMPACT_TARGET_FILES = 4
 
     def __init__(
         self,
         spark: SparkSession,
         path: str,
         *,
-        keep_versions: int = 2,
         compact_every: int | None = None,
-        compact_target_files: int = 4,
-        delta_write_partitions: int = 2,
         cache_frames: bool = False,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         # version-checked read-through cache: the probe DAG references
         # the stored frames ~8 times per micro-batch, and without a
         # persist each reference is a separate parquet scan (listing +
@@ -113,21 +94,6 @@ class DedupIndexStore:
         # to (version+1, cached ∪ delta) unions, and teardown must
         # unpersist the base frames those unions are built over
         self._cache_base: DedupIndex | None = None
-        # commit protocol (versioning, pointer swap, retention GC) is
-        # the shared CommitLog; this class keeps only index POLICY
-        # (which frames, delta layout, compaction clustering)
-        self.log = CommitLog(path, keep_versions=keep_versions)
-        # auto-compact after every K delta commits (None = manual only)
-        self.compact_every = compact_every
-        self.compact_target_files = max(1, compact_target_files)
-        # a micro-batch delta is O(batch) rows — landing it at shuffle
-        # parallelism would add ~shuffle_partitions tiny files per
-        # frame per commit; coalescing to a couple of files per frame
-        # cuts the fragmentation RATE ~16x before compaction even runs
-        self.delta_write_partitions = max(1, delta_write_partitions)
-
-    def read_manifest(self) -> dict | None:
-        return self.log.read_manifest()
 
     def read(self) -> DedupIndex | None:
         m = self.read_manifest()
@@ -139,13 +105,7 @@ class DedupIndexStore:
             if cached_v == version:
                 return cached
             self._drop_cache()
-        base = os.path.join(self.path, m["snapshot"])
-        idx = DedupIndex(
-            **{
-                f: self.spark.read.parquet(os.path.join(base, f))
-                for f in _FRAMES
-            }
-        )
+        idx = DedupIndex(**self._frames(m))
         if self.cache_frames:
             idx = DedupIndex(
                 **{f: getattr(idx, f).persist() for f in _FRAMES}
@@ -164,36 +124,31 @@ class DedupIndexStore:
         self._cache_base = None
         self._frame_cache = None
 
-    # -- commit protocol ----------------------------------------------
+    # -- commit -------------------------------------------------------
 
-    @staticmethod
-    def _canon(df: DataFrame) -> DataFrame:
-        """Canonical column order for every written file: files of one
-        frame directory must agree (linked v1 files + appended delta
-        files are read as one parquet dataset)."""
-        return df.select(*sorted(df.columns))
-
-    def last_ingest_batch(self) -> int | None:
-        """The foreachBatch ``batch_id`` of the last APPLIED index
-        commit, or None if the store is unseeded / was committed
-        outside a streaming sink."""
-        m = self.read_manifest()
-        return None if m is None or "last_ingest_batch" not in m else int(
-            m["last_ingest_batch"]
+    def commit(
+        self,
+        index: DedupIndex,
+        *,
+        batch_id: int | None = None,
+        also: tuple = (),
+    ) -> None:
+        """Full-index commit (seed / rebuild): writes all four frames,
+        with the ``also`` legs on the same pool. ``batch_id`` (when
+        committing from a streaming sink) is recorded so a replayed
+        micro-batch is recognized."""
+        self._publish(
+            None,
+            rewrite={f: getattr(index, f) for f in _FRAMES},
+            also=also,
+            batch_id=batch_id,
         )
 
-    def commit(self, index: DedupIndex, *, batch_id: int | None = None) -> None:
-        """Full-index commit (seed / rebuild): writes all four frames.
-        ``batch_id`` (when committing from a streaming sink) is
-        recorded in the manifest so a replayed micro-batch can be
-        recognized and skipped — see :meth:`commit_delta`."""
-        snap, snap_dir = self.log.new_snapshot()
-        for f in _FRAMES:
-            self._canon(getattr(index, f)).write.mode("overwrite").parquet(
-                os.path.join(snap_dir, f)
-            )
-        extra = {} if batch_id is None else {"last_ingest_batch": int(batch_id)}
-        self.log.publish(snap, extra=extra)
+    def _advancing(self, m: dict) -> bool:
+        return (
+            self._frame_cache is not None
+            and self._frame_cache[0] == int(m["version"])
+        )
 
     def commit_delta(
         self,
@@ -202,97 +157,37 @@ class DedupIndexStore:
         batch_id: int | None = None,
         also: tuple = (),
     ) -> None:
-        """Append-only commit: hard-link every data file of the
-        current snapshot forward, then land only the delta rows as new
-        files. IO is O(batch); the manifest swap stays the single
-        atomic commit point (a crash mid-write leaves an orphan dir
-        and an intact pointer).
+        """Append-only commit of the batch's index additions; ``also``
+        legs (the sink's pairs and clean rows) ride the same pool. An
+        applied ``batch_id`` is a no-op: the pair/keeper OUTPUT would
+        stay correct (partition overwrite + id_a<id_b), but the index
+        would keep duplicate signature/registry rows forever."""
 
-        foreachBatch is at-least-once: a sink retried for batch N
-        re-runs against the index that ALREADY contains N's rows, and
-        blindly re-appending would bloat the index with duplicate
-        signature/registry rows forever (the pair/keeper OUTPUT stays
-        correct — partition overwrite + id_a<id_b — but the index does
-        not). ``batch_id <= last_ingest_batch`` therefore short-circuits
-        to a no-op: the pairs dir was already overwritten idempotently
-        by the caller, and the index already holds this batch. A crash
-        BETWEEN pairs-write and index-commit replays with
-        ``batch_id > last_ingest_batch`` and commits normally.
+        def frames(m: dict) -> tuple[dict, dict]:
+            d = {f: getattr(delta, f) for f in _FRAMES}
+            if self._advancing(m):
+                # the cache will advance to (cached ∪ delta) after the
+                # publish; checkpoint each delta frame LAZILY so its own
+                # write leg (its only in-commit action) materializes
+                # O(batch) blocks — next wave's probe then reads flat
+                # block-backed unions instead of re-expanding the delta's
+                # lineage (delta.members anti-joins the CURRENT cache, so
+                # an un-truncated chain would nest one full index plan
+                # per wave)
+                d = {f: df.localCheckpoint(eager=False) for f, df in d.items()}
+            return d, {}
 
-        ``also``: extra write callables (the sink's own per-batch
-        parquet outputs — pairs, clean rows) executed CONCURRENTLY
-        with the four frame writes, all gated behind the single
-        manifest swap. Spark job submission is thread-safe and every
-        leg here is a small independent write job whose wall-clock is
-        dominated by fixed scheduling cost, so running the ~6 legs on
-        threads collapses the sink's serial-job ladder into roughly
-        one job's latency (round-6 verdict item 6: the per-wave
-        constant, not the data volume, capped streaming throughput).
-        Crash semantics are unchanged — the manifest ``os.replace``
-        after ALL legs finish remains the only commit point, and the
-        replay guard skips the ``also`` legs together with the frames
-        (an applied batch's outputs are already durable)."""
-        m = self.read_manifest()
-        if m is None:
-            raise ValueError("commit_delta requires a seeded index store")
-        if (
-            batch_id is not None
-            and "last_ingest_batch" in m
-            and int(batch_id) <= int(m["last_ingest_batch"])
-        ):
-            return  # at-least-once replay of an applied batch
-        snap, snap_dir = self.log.new_snapshot()
-        prev = os.path.join(self.path, m["snapshot"])
-        delta_commits = int(m.get("delta_commits", 0)) + 1
-        extra = {"delta_commits": delta_commits}
-        if batch_id is not None:
-            extra["last_ingest_batch"] = int(batch_id)
-        elif "last_ingest_batch" in m:
-            extra["last_ingest_batch"] = int(m["last_ingest_batch"])
-        from concurrent.futures import ThreadPoolExecutor
+        self._commit_delta(frames, batch_id=batch_id, also=also)
 
-        advancing = (
-            self.cache_frames
-            and self._frame_cache is not None
-            and self._frame_cache[0] == int(m["version"])
-        )
-        if advancing:
-            # the cache will advance to (cached ∪ delta) after the
-            # publish; checkpoint each delta frame LAZILY so its own
-            # write leg below (its only in-commit action) materializes
-            # O(batch) blocks — next wave's probe then reads flat
-            # block-backed unions instead of re-expanding the delta's
-            # lineage (delta.members anti-joins the CURRENT cache, so
-            # an un-truncated chain would nest one full index plan
-            # per wave)
-            delta = DedupIndex(
-                **{
-                    f: getattr(delta, f).localCheckpoint(eager=False)
-                    for f in _FRAMES
-                }
-            )
-
-        def _write_frame(f: str) -> None:
-            dst = os.path.join(snap_dir, f)
-            link_files(os.path.join(prev, f), dst)
-            self._canon(getattr(delta, f)).coalesce(
-                self.delta_write_partitions
-            ).write.mode("append").parquet(dst)
-
-        legs = [lambda f=f: _write_frame(f) for f in _FRAMES] + list(also)
-        with ThreadPoolExecutor(max_workers=len(legs)) as pool:
-            futures = [pool.submit(leg) for leg in legs]
-            for fut in futures:
-                fut.result()  # first failure propagates; no publish
-        self.log.publish(snap, extra=extra)
-        if advancing:
+    def _delta_published(self, m: dict, appended: dict) -> None:
+        if self._advancing(m):
             # advance the cache IN PLACE instead of invalidating: the
             # published snapshot is by construction (linked history) ∪
             # (delta rows), and both sides already live in this
             # session — the base frames persisted, the delta frames
-            # checkpoint-backed by the write legs above. Re-listing +
-            # re-decoding the whole index from parquet every wave was
-            # the steady-state read cost (round-8); the union chain
+            # checkpoint-backed by the write legs. Re-listing and
+            # re-decoding the whole index from parquet every wave
+            # would be the steady-state read cost; the union chain
             # stays O(waves-since-compaction) flat block-backed legs
             # because compaction resets to a fresh parquet read.
             # unionByName matches columns by name, so the written
@@ -302,76 +197,74 @@ class DedupIndexStore:
                 int(m["version"]) + 1,
                 DedupIndex(
                     **{
-                        f: getattr(cached, f).unionByName(
-                            getattr(delta, f)
-                        )
+                        f: getattr(cached, f).unionByName(appended[f])
                         for f in _FRAMES
                     }
                 ),
             )
-        if self.compact_every and delta_commits >= self.compact_every:
-            # the paired compaction must not burn a retention slot of
-            # its own (two publishes in one sink invocation would halve
-            # the documented in-flight reader window)
-            self.compact(retain_extra=1)
 
-    def compact(self, *, retain_extra: int = 0) -> None:
-        """The OPTIMIZE pass: rewrite each frame range-clustered by
-        its probe key into ``compact_target_files`` files and publish
-        as a fresh version (``delta_commits`` resets). Equality is
-        structural — same rows, new physical layout."""
+    def _compacted(self, m: dict) -> dict[str, DataFrame]:
+        """Each frame range-clustered by its probe key into
+        ``COMPACT_TARGET_FILES`` files."""
         index = self.read()
-        if index is None:
-            return
-        m = self.read_manifest()
-        snap, snap_dir = self.log.new_snapshot()
-
-        def _rewrite(f: str) -> None:
+        out = {}
+        for f in _FRAMES:
             df = getattr(index, f)
             key = _CLUSTER_KEY[f]
             if key is None or key not in df.columns:
                 # hashes: cluster on the caller-named id column (the
                 # only non-__h column of the frame)
                 key = next(c for c in df.columns if c != "__h")
-            (
-                self._canon(df)
-                .repartitionByRange(self.compact_target_files, F.col(key))
-                .sortWithinPartitions(key)
-                .write.mode("overwrite")
-                .parquet(os.path.join(snap_dir, f))
+            out[f] = df.repartitionByRange(
+                self.COMPACT_TARGET_FILES, F.col(key)
+            ).sortWithinPartitions(key)
+        return out
+
+
+def pair_and_commit(
+    store: DedupIndexStore,
+    batch: DataFrame,
+    batch_id: int,
+    text_col: str,
+    id_col: str,
+    *,
+    threshold: float,
+    assume_small_batch: bool,
+    pairs_path: str,
+    outputs: tuple = (),
+) -> None:
+    """One sink step: ``batch``'s near-dup pairs against the stored
+    index (against itself when seeding it) and the index commit. The
+    pairs and each ``(frame, path)`` of ``outputs`` are written to
+    ``<path>/ingest_batch=<id>`` on the commit's thread pool, behind
+    its one manifest swap, and a replayed batch skips them with the
+    index."""
+    index = store.read()
+    if index is None:
+        pairs = minhash_lsh_pairs(batch, text_col, id_col, threshold=threshold)
+        commit = store.commit
+        index = build_dedup_index(batch, text_col, id_col)
+    else:
+        pairs, index = incremental_pairs_and_delta(
+            index,
+            batch,
+            text_col,
+            id_col,
+            threshold=threshold,
+            assume_small_batch=assume_small_batch,
+        )
+        commit = store.commit_delta
+    part = f"ingest_batch={batch_id}"
+    commit(
+        index,
+        batch_id=batch_id,
+        also=tuple(
+            lambda df=df, path=path: df.write.mode("overwrite").parquet(
+                os.path.join(path, part)
             )
-
-        # the four rewrites are independent write jobs gated behind
-        # the one publish — run them on threads like commit_delta's
-        # legs (the serial ladder made the auto-compaction wave the
-        # slowest wave of the steady window, round-8)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(_FRAMES)) as pool:
-            for fut in [pool.submit(_rewrite, f) for f in _FRAMES]:
-                fut.result()  # first failure propagates; no publish
-        extra = {"delta_commits": 0, "compacted": True}
-        if m is not None and "last_ingest_batch" in m:
-            # the replay guard must survive an OPTIMIZE rewrite —
-            # compaction changes layout, not applied-batch history
-            extra["last_ingest_batch"] = int(m["last_ingest_batch"])
-        self.log.publish(snap, extra=extra, retain_extra=retain_extra)
-
-    def frame_file_counts(self) -> dict[str, int]:
-        """Data files per frame of the current snapshot (the
-        fragmentation observable the compaction bench tracks)."""
-        m = self.read_manifest()
-        if m is None:
-            return {}
-        base = os.path.join(self.path, m["snapshot"])
-        return {
-            f: sum(
-                1
-                for e in os.listdir(os.path.join(base, f))
-                if e.endswith(".parquet")
-            )
-            for f in _FRAMES
-        }
+            for df, path in ((pairs, pairs_path), *outputs)
+        ),
+    )
 
 
 def make_dedup_sink(
@@ -392,11 +285,11 @@ def make_dedup_sink(
 
     ``assume_small_batch`` (default True) asserts every micro-batch
     fits the probe's 64 MB broadcast gate, skipping the per-wave gate
-    count (worth ~17% of steady wave latency,
-    STREAM_CURATION_BENCH_r08). Pass False for feeds that may replay
-    BULK-sized spool files (maxFilesPerTrigger caps files, not rows)
-    — those batches then pay the counted gate and fall back to a
-    shuffle join instead of a giant broadcast."""
+    count (worth ~17% of steady wave latency). Pass False for feeds
+    that may replay
+    BULK-sized spool files (maxFilesPerTrigger caps files, not
+    rows) — those batches then pay the counted gate and fall back to
+    a shuffle join instead of a giant broadcast."""
     store = DedupIndexStore(
         spark,
         os.path.join(out_dir, "dedup_index"),
@@ -408,45 +301,16 @@ def make_dedup_sink(
     def sink(batch: DataFrame, batch_id: int) -> None:
         batch = batch.select(id_col, text_col).persist()
         try:
-            index = store.read()
-            if index is None:
-                # seed: the first batch pairs against itself and
-                # becomes the initial index
-                pairs = minhash_lsh_pairs(
-                    batch, text_col, id_col, threshold=threshold
-                )
-                pairs.write.mode("overwrite").parquet(
-                    os.path.join(pairs_path, f"ingest_batch={batch_id}")
-                )
-                store.commit(
-                    build_dedup_index(batch, text_col, id_col),
-                    batch_id=batch_id,
-                )
-            else:
-                pairs, delta = incremental_pairs_and_delta(
-                    index,
-                    batch,
-                    text_col,
-                    id_col,
-                    threshold=threshold,
-                    # foreachBatch micro-batches: skip the probe-side
-                    # count gate, fold the split materialization into
-                    # the shingle checkpoint job (round-8)
-                    assume_small_batch=assume_small_batch,
-                )
-                store.commit_delta(
-                    delta,
-                    batch_id=batch_id,
-                    # the pairs write rides the commit's thread pool,
-                    # gated behind the same manifest swap
-                    also=(
-                        lambda: pairs.write.mode("overwrite").parquet(
-                            os.path.join(
-                                pairs_path, f"ingest_batch={batch_id}"
-                            )
-                        ),
-                    ),
-                )
+            pair_and_commit(
+                store,
+                batch,
+                batch_id,
+                text_col,
+                id_col,
+                threshold=threshold,
+                assume_small_batch=assume_small_batch,
+                pairs_path=pairs_path,
+            )
         finally:
             batch.unpersist()
 

@@ -61,28 +61,22 @@ def make_index_sink(
     def sink(batch: DataFrame, batch_id: int) -> None:
         batch = batch.select(id_col, text_col).persist()
         try:
-
-            def corpus_leg() -> None:
-                batch.write.mode("overwrite").parquet(
-                    os.path.join(corpus_path, f"ingest_batch={batch_id}")
-                )
-
-            if store.read() is None:
-                corpus_leg()
-                store.commit(
-                    batch,
-                    text_col=text_col,
-                    id_col=id_col,
-                    batch_id=batch_id,
-                )
-            else:
-                store.commit_delta(
-                    batch,
-                    text_col=text_col,
-                    id_col=id_col,
-                    batch_id=batch_id,
-                    also=(corpus_leg,),
-                )
+            commit = (
+                store.commit
+                if store.read_manifest() is None
+                else store.commit_delta
+            )
+            commit(
+                batch,
+                text_col=text_col,
+                id_col=id_col,
+                batch_id=batch_id,
+                also=(
+                    lambda: batch.write.mode("overwrite").parquet(
+                        os.path.join(corpus_path, f"ingest_batch={batch_id}")
+                    ),
+                ),
+            )
         finally:
             batch.unpersist()
 

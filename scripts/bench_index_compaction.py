@@ -1,8 +1,8 @@
-"""Probe-latency-flatness bench for the streaming dedup index
-(VERDICT r4 item 1): run >= 20 delta commits against a
-``DedupIndexStore`` twice — once append-only (no compaction) and once
-with auto-compaction every K commits — timing each wave's
-``incremental_pairs`` probe and tracking per-frame file counts.
+"""Probe-latency-flatness bench for the streaming dedup index: run
+>= 20 delta commits against a ``DedupIndexStore`` twice — once
+append-only (no compaction) and once with auto-compaction every K
+commits — timing each wave's ``incremental_pairs`` probe and
+tracking per-frame file counts.
 
 What 100-TB behavior this measures: every ``commit_delta`` adds a few
 small parquet files per frame; a probe opens every file of every
@@ -13,6 +13,8 @@ reference gets from lifecycleManager.ts:18-60).
 Writes one JSON artifact (default ``COMPACTION_BENCH_r05.json``):
 per-wave probe seconds and file counts for both runs, plus
 first-half/second-half medians so flatness is a number, not a chart.
+Compaction writes ``DedupIndexStore.COMPACT_TARGET_FILES`` files per
+frame; the artifact records that value.
 
 Usage: python scripts/bench_index_compaction.py [sf_dir] [out_json]
        [waves] [compact_every]
@@ -78,10 +80,7 @@ def main() -> None:
     def run(ce: int | None) -> tuple[dict, object, str]:
         tmp = tempfile.mkdtemp(prefix="compbench-")
         store = DedupIndexStore(
-            spark,
-            os.path.join(tmp, "idx"),
-            compact_every=ce,
-            compact_target_files=int(cpus) // 4 or 1,
+            spark, os.path.join(tmp, "idx"), compact_every=ce
         )
         # wave w = docs with doc_id % waves == w; wave 0 seeds
         store.commit(
@@ -155,6 +154,7 @@ def main() -> None:
         "sf_dir": sf_dir,
         "waves": waves,
         "compact_every": compact_every,
+        "compact_target_files": DedupIndexStore.COMPACT_TARGET_FILES,
         "uncompacted": uncompacted,
         "compacted": compacted,
         # latency growth second-half/first-half median (data growth +

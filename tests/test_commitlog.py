@@ -1,9 +1,9 @@
 """Direct unit coverage of the SHARED commit protocol
 (hyperion_history_api_spark/commitlog.py) — the single audit surface
-the three stores (ParquetStateStore, DedupIndexStore, lake refresh)
-now delegate to. Store-level behavior (bucketed CoW, delta+compact,
-crash-safety through Spark writes) stays pinned in the store suites;
-this file pins the protocol invariants themselves."""
+the stores (ParquetStateStore, DedupIndexStore, InvertedIndexStore,
+lake refresh) delegate to. Store-level behavior (bucketed CoW, the
+frame math, crash-safety through Spark writes) stays pinned in the
+store suites; this file pins the protocol invariants themselves."""
 
 from __future__ import annotations
 
@@ -14,6 +14,7 @@ import pytest
 
 from hyperion_history_api_spark.commitlog import (
     CommitLog,
+    FrameDeltaStore,
     link_files,
     link_tree,
     replace_dir,
@@ -136,8 +137,12 @@ def test_replace_dir_swaps_and_cleans(tmp_path):
 
 
 def test_stores_share_the_protocol(tmp_path, spark):
-    """The unification claim itself: both versioned stores run on the
-    same CommitLog class and produce interoperable manifests."""
+    """The unification claim itself: the versioned stores run on the
+    same CommitLog class and produce interoperable manifests, and both
+    frame-delta stores run on the one FrameDeltaStore policy."""
+    from hyperion_history_api_spark.sources.inverted_index import (
+        InvertedIndexStore,
+    )
     from hyperion_history_api_spark.streaming.dedup_ingest import (
         DedupIndexStore,
     )
@@ -147,9 +152,108 @@ def test_stores_share_the_protocol(tmp_path, spark):
 
     st = ParquetStateStore(spark, str(tmp_path / "st"), keys=["k"])
     ix = DedupIndexStore(spark, str(tmp_path / "ix"))
-    assert type(st.log) is CommitLog and type(ix.log) is CommitLog
+    inv = InvertedIndexStore(spark, str(tmp_path / "inv"))
+    assert all(type(s.log) is CommitLog for s in (st, ix, inv))
+    assert isinstance(ix, FrameDeltaStore) and isinstance(inv, FrameDeltaStore)
+    for cls in (DedupIndexStore, InvertedIndexStore):
+        for name in ("_publish", "_commit_delta", "compact", "last_ingest_batch"):
+            assert getattr(cls, name) is getattr(FrameDeltaStore, name)
     df = spark.createDataFrame([(1, 10)], "k int, block_num int")
     st.apply_batch(df)
     m = st.read_manifest()
     assert {"version", "snapshot", "history"} <= set(m)
     assert json.load(open(st.log.manifest_file())) == m
+    inv.commit(spark.createDataFrame([(1, "a b a")], "doc_id long, text string"))
+    assert json.load(open(inv.log.manifest_file())) == inv.read_manifest()
+
+
+def _dedup_case(spark, path):
+    from hyperion_history_api_spark.operators.dedup import (
+        build_dedup_index,
+        dedup_index_delta,
+    )
+    from hyperion_history_api_spark.streaming.dedup_ingest import (
+        DedupIndexStore,
+    )
+
+    store = DedupIndexStore(spark, path, compact_every=2)
+
+    def seed(docs, batch_id):
+        store.commit(
+            build_dedup_index(docs, "text", "doc_id"), batch_id=batch_id
+        )
+
+    def delta(docs, batch_id, also):
+        store.commit_delta(
+            dedup_index_delta(store.read(), docs, "text", "doc_id"),
+            batch_id=batch_id,
+            also=also,
+        )
+
+    return store, seed, delta, store.FRAMES
+
+
+def _index_case(spark, path):
+    from hyperion_history_api_spark.sources.inverted_index import (
+        POSTINGS_FRAME,
+        InvertedIndexStore,
+    )
+
+    store = InvertedIndexStore(spark, path, compact_every=2)
+
+    def seed(docs, batch_id):
+        store.commit(docs, batch_id=batch_id)
+
+    def delta(docs, batch_id, also):
+        store.commit_delta(docs, batch_id=batch_id, also=also)
+
+    # df/stats are aggregates rewritten each commit; postings append
+    return store, seed, delta, (POSTINGS_FRAME,)
+
+
+def _data_inodes(snap_dir: str, frames) -> set[int]:
+    return {
+        os.stat(os.path.join(snap_dir, f, e)).st_ino
+        for f in frames
+        for e in os.listdir(os.path.join(snap_dir, f))
+        if e.endswith(".parquet")
+    }
+
+
+@pytest.mark.parametrize("case", [_dedup_case, _index_case])
+def test_frame_delta_store_contract(tmp_path, spark, sf_dir, case):
+    """Both frame-delta stores keep one contract: a replayed batch_id
+    is a no-op that skips the caller's ``also`` legs too; a delta links
+    every appended-frame file of the earlier version forward by inode;
+    the delta that triggers auto-compaction keeps the version before it
+    in the retained window, and the replay guard survives."""
+    from hyperion_history_api_spark.tables import load_tables
+
+    docs = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
+    wave = [docs.where(docs.doc_id % 3 == i) for i in range(3)]
+    store, seed, delta, appended = case(spark, str(tmp_path / "s"))
+    calls = []
+    also = (lambda: calls.append(1),)
+
+    seed(wave[0], 0)
+    v1 = store.log.current_snapshot_dir()
+    v1_inodes = _data_inodes(v1, appended)
+    assert v1_inodes
+
+    delta(wave[1], 1, also)
+    assert calls == [1]
+    m = store.read_manifest()
+    assert m["version"] == 2 and m["last_ingest_batch"] == 1
+    assert v1_inodes <= _data_inodes(store.log.current_snapshot_dir(), appended)
+
+    delta(wave[1], 1, also)  # at-least-once replay of batch 1
+    delta(wave[1], 0, also)  # and of the seed batch
+    assert calls == [1]
+    assert store.read_manifest() == m
+
+    delta(wave[2], 2, also)  # the 2nd delta: auto-compaction follows
+    assert calls == [1, 1]
+    m = store.read_manifest()
+    assert m["compacted"] and m["delta_commits"] == 0
+    assert m["last_ingest_batch"] == 2 == store.last_ingest_batch()
+    assert store.log.versions() == [2, 3, 4]

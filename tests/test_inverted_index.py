@@ -83,7 +83,7 @@ def test_delta_requires_seed_and_history_is_linked(spark, tmp_path):
     # delta IO is O(batch), history bytes are never rewritten
     assert set(v1_files.values()) <= v2_inos
     new_files = len(v2_inos) - len(v1_files)
-    assert 1 <= new_files <= store.delta_write_partitions
+    assert 1 <= new_files <= InvertedIndexStore.DELTA_WRITE_PARTITIONS
 
 
 def test_serving_plan_prunes_postings_by_term(spark, tmp_path):

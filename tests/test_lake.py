@@ -62,15 +62,6 @@ def test_manifest_invalidates_on_version_change(spark):
     assert json.loads(manifest.read_text())["version"] == lake.LAKE_VERSION
 
 
-def test_no_lake_env_bypasses_storage(spark):
-    os.environ["SPARK_GRAFT_NO_LAKE"] = "1"
-    try:
-        df = lake.lake_actions(spark, SF_DIR)
-        assert "block_part" not in df.columns
-    finally:
-        del os.environ["SPARK_GRAFT_NO_LAKE"]
-
-
 def test_stored_sort_is_index_sort(spark):
     """Within each stored file, actions are sorted global_sequence desc
     (index-templates.ts:29-40) — verified per input file via

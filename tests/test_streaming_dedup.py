@@ -138,7 +138,7 @@ def test_delta_commit_equals_full_extend_and_links_history(spark, tmp_path):
     seed = docs.where(F.col("doc_id") % 3 == 0)
     b1 = docs.where(F.col("doc_id") % 3 == 1)
     b2 = docs.where(F.col("doc_id") % 3 == 2)
-    store = DedupIndexStore(spark, str(tmp_path / "idx"), keep_versions=2)
+    store = DedupIndexStore(spark, str(tmp_path / "idx"))
     store.commit(build_dedup_index(seed, "text", "doc_id"))
     files_v1 = store.frame_file_counts()
     inode_v1 = {
@@ -170,7 +170,9 @@ def test_delta_commit_equals_full_extend_and_links_history(spark, tmp_path):
     assert inode_v1 <= inode_v3
 
 
-def test_compaction_preserves_pairs_and_reduces_files(spark, tmp_path):
+def test_compaction_preserves_pairs_and_reduces_files(
+    spark, tmp_path, monkeypatch
+):
     """The OPTIMIZE pass: after many delta commits, compact() rewrites
     each frame clustered by its probe key — probe results (the pairs a
     next batch would emit) are IDENTICAL before/after, row sets are
@@ -182,9 +184,8 @@ def test_compaction_preserves_pairs_and_reduces_files(spark, tmp_path):
     )
 
     docs = _docs(spark)
-    store = DedupIndexStore(
-        spark, str(tmp_path / "idx"), compact_target_files=2
-    )
+    monkeypatch.setattr(DedupIndexStore, "COMPACT_TARGET_FILES", 2)
+    store = DedupIndexStore(spark, str(tmp_path / "idx"))
     store.commit(
         build_dedup_index(
             docs.where(F.col("doc_id") % 6 == 0), "text", "doc_id"
@@ -226,16 +227,15 @@ def test_compaction_preserves_pairs_and_reduces_files(spark, tmp_path):
     assert store.read().members.count() == docs.count()
 
 
-def test_auto_compaction_every_k_delta_commits(spark, tmp_path):
+def test_auto_compaction_every_k_delta_commits(spark, tmp_path, monkeypatch):
     from hyperion_history_api_spark.operators.dedup import (
         build_dedup_index,
         dedup_index_delta,
     )
 
     docs = _docs(spark)
-    store = DedupIndexStore(
-        spark, str(tmp_path / "idx"), compact_every=2, compact_target_files=2
-    )
+    monkeypatch.setattr(DedupIndexStore, "COMPACT_TARGET_FILES", 2)
+    store = DedupIndexStore(spark, str(tmp_path / "idx"), compact_every=2)
     store.commit(
         build_dedup_index(
             docs.where(F.col("doc_id") % 4 == 0), "text", "doc_id"
