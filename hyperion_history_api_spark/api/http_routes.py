@@ -1,8 +1,12 @@
-"""The remaining REST routes — the reference autoloads every route
-directory (``src/api/routes.ts:18-25``); this module completes the
-serving surface begun in :mod:`.http_server` with the v2-history tail,
-the v2-state family, the v2-stats family, the v2 misc pair, and the v1
+"""The REST route table — the reference autoloads every route
+directory (``src/api/routes.ts:18-25``); here every route is one
+``fn(api, params)`` function and :data:`ROUTES` maps each served path
+to it: v2 health, v2-history, v2-state, v2-stats, v2 misc, and the v1
 compatibility shims (``src/api/routes/v1-history``, ``v1-trace``).
+:data:`NESTED_ROUTES` holds the ``model=hyperion`` twins of the routes
+that also serve the nested lake documents;
+:meth:`.http_server.HyperionAPI.serve` is the one place that picks
+between the two.
 
 One plan per route: a handler that answers what a registry row
 computes calls that row function (or its ``(df, strategy)`` chooser
@@ -12,11 +16,12 @@ DataFrame steps are the page ``limit``, the ``after_key`` cursor and
 column renames; the rest is param parsing and the reference's response
 body shape. ``tests/test_http_routes.py`` asserts HTTP body == registry
 row per family. Routes with no row, or that compute more than a row in
-the same scan, keep their own plan: ``get_action_usage``,
-``get_resource_usage``, ``get_block``, ``get_abi_snapshot``,
-``v1_get_actions`` and, in :mod:`.http_server`, ``get_creator`` and
-``get_table_rows``; so do ``get_account``'s recent-actions and links
-legs and ``get_trx_count``'s plain count.
+the same scan, keep their own plan: the get_transaction lookup
+(:func:`transaction`), ``get_creator``, ``get_table_rows``,
+``get_action_usage``, ``get_resource_usage``, ``get_block``,
+``get_abi_snapshot``, ``v1_get_actions``, ``hyp_get_actions`` and
+``hyp_get_transaction``; so do ``get_account``'s recent-actions and
+links legs and ``get_trx_count``'s plain count.
 
 Scale shape: unchanged from the registry rows — point/page lookups are
 pushed-down scans + TakeOrderedAndProject; dimension joins run through
@@ -27,11 +32,32 @@ the stats-planned chooser; every ``.collect()`` is behind a clamped
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..plans.mongo_query import compile_mongo_query
+from ..plans.predicates import (
+    MAX_SKIP,
+    QueryGuardError,
+    QueryParams,
+    compile_code_action_filter,
+)
 from ..registry import _t
+from ..sources.lake import lake_actions, prune_block_range
+from ..tables import TABLE_NAMES
 from . import endpoints_ext, state, stats
+from .envelope import get_actions_with_envelope
+from .history import _EVENT_NUMERIC
+from .misc_endpoints import EXPLORER_METADATA, get_filters_df
+from .nested import (
+    blocks_range_rollup,
+    created_accounts,
+    creator_of,
+    deltas_page,
+    table_state_asof,
+)
 
 #: hard cap on any route's collected page — the reference's fastify
 #: schema rejects limit > 1000 (functions.ts skip/limit guards); a
@@ -78,16 +104,206 @@ def _keyset_page(
     return rows, next_key
 
 
-# --- v2-history tail -----------------------------------------------------
+def _qp(params: dict, terms: dict[str, str] | None = None) -> QueryParams:
+    """Query-string dict → QueryParams (the fastify schema's shared
+    history params, functions.ts:183-250: account/after/before/sort/
+    skip/limit plus free ``field=value`` terms). ``terms`` lets a
+    route pre-map its own field names (get_deltas) while sharing the
+    paging/window parsing — one place to add a future guard."""
+    if terms is None:
+        terms = {}
+        if "account" in params:
+            terms["user_id"] = params["account"]
+        if "filter" in params:  # contract[:action] filter → event_type
+            terms["event_type"] = params["filter"].split(":", 1)[0]
+        for k, v in params.items():
+            if k.startswith("term."):  # explicit field term passthrough
+                terms[k[5:]] = v
+    return QueryParams(
+        terms=terms,
+        after=params.get("after"),
+        before=params.get("before"),
+        sort=params.get("sort", "desc"),
+        skip=int(params.get("skip", 0)),
+        limit=int(params.get("limit", 100)),
+    )
+
+
+def transaction(api, trx: int) -> tuple | None:
+    """The get_transaction point lookup shared by the v2 and v1
+    routes: ``(head, traces)`` for a known trx, else None. Two
+    jobs: the orders key lookup, then the trx's lineitem rows, each
+    a scan with the key in PushedFilters. The traces are ordered by
+    ``l_linenumber`` (the bug-#148 regroup discipline) on the
+    driver, which already holds every collected row, so no Spark
+    sort (sample, shuffle, result) runs."""
+    t = _t(api.spark, api.sf_dir)
+    head = (
+        t["orders"]
+        .where(F.col("o_orderkey") == trx)
+        .select("o_orderkey", "o_orderstatus", "o_orderdate")
+        .first()
+    )
+    if head is None:
+        return None
+    traces = (
+        t["lineitem"]
+        .where(F.col("l_orderkey") == trx)
+        .select("l_linenumber", "l_partkey", "l_quantity", "l_extendedprice")
+        .collect()
+    )
+    return head, [
+        r.asDict() for r in sorted(traces, key=lambda r: r["l_linenumber"])
+    ]
+
+
+# --- v2 --------------------------------------------------------------------
+
+
+def health(api, params: dict) -> dict:
+    """routes/v2/health: the session and the lake head. An EMPTY lake
+    is a degraded-but-alive service, not a crash: a load-balancer
+    probe must get a response precisely when the service is newly up
+    (health.ts reports per-service status the same way)."""
+    block, block_time = api.log_head()
+    lake = (
+        {
+            "service": "Lake",
+            "status": "OK",
+            "service_data": {
+                "last_indexed_block": block,
+                "last_indexed_block_time": str(block_time),
+            },
+        }
+        if block is not None
+        else {"service": "Lake", "status": "Error", "service_data": {}}
+    )
+    return {
+        "version": "spark",
+        "health": [
+            {"service": "SparkSession", "status": "OK"},
+            lake,
+        ],
+    }
+
+
+# --- v2-history -------------------------------------------------------------
+
+
+def get_actions(api, params: dict) -> dict:
+    """routes/v2-history/get_actions (get_actions.ts:88-131): the
+    predicate-compiled page inside the reference envelope."""
+    qp = _qp(params)
+    ev = _t(api.spark, api.sf_dir)["events"]
+    return get_actions_with_envelope(
+        api.spark,
+        ev,
+        qp,
+        seq_field="event_id",
+        simple=params.get("simple") == "true",
+        # reference: lib stays 0 unless the request opts in
+        # (query.checkLib -> get_info().last_irreversible_block_num,
+        # get_actions.ts:71-80); our chain-info analog is the
+        # ingest-maintained watermark
+        lib=api.lib_block()
+        if str(params.get("checkLib", "")).lower() in ("true", "1")
+        else None,
+        head=api.log_head(),
+        default_sort_field="event_id",
+        tiebreaker="event_id",
+        numeric_fields=_EVENT_NUMERIC,
+    )
+
+
+def get_transaction(api, params: dict) -> dict:
+    """routes/v2-history/get_transaction: one trx and its traces in
+    canonical ordinal order (:func:`transaction`)."""
+    trx = int(params["id"])
+    found = transaction(api, trx)
+    # the reference resolves the REAL lib for get_transaction on
+    # both its cache and ES paths (get_transaction.ts:67,102) —
+    # unlike get_blocks/get_block, which hardcode lib: 0
+    lib = api.lib_block()
+    if found is None:
+        return {
+            "executed": False,
+            "trx_id": trx,
+            "lib": lib,
+            "actions": [],
+        }
+    head, traces = found
+    return {
+        "executed": True,
+        "trx_id": trx,
+        "lib": lib,
+        "status": head["o_orderstatus"],
+        "block_time": str(head["o_orderdate"]),
+        "actions": traces,
+    }
+
+
+def get_deltas(api, params: dict) -> dict:
+    """routes/v2-history/get_deltas: the delta column mapping
+    (endpoints_ext.delta_view) through the same predicate-compiler
+    path as the registered ``get_deltas_by_scope``."""
+    ev = endpoints_ext.delta_view(_t(api.spark, api.sf_dir)["events"])
+    terms: dict[str, str] = {}
+    if "code" in params or "table" in params:
+        terms["event_type"] = params.get("table", params.get("code"))
+    if "scope" in params:
+        terms["user_id"] = params["scope"]
+    if "payer" in params:
+        terms["payer"] = params["payer"]
+    qp = _qp(params, terms=terms)
+    return get_actions_with_envelope(
+        api.spark,
+        ev,
+        qp,
+        seq_field="event_id",
+        head=api.log_head(),
+        default_sort_field="event_id",
+        tiebreaker="event_id",
+        numeric_fields=frozenset({"event_id", "user_id", "payer"}),
+    )
+
+
+def get_created_accounts(api, params: dict) -> dict:
+    """routes/v2-history/get_created_accounts: creator → created
+    accounts, the ``get_created_accounts`` row."""
+    creator = {"creator": params["account"]} if "account" in params else {}
+    df = endpoints_ext.get_created_accounts(
+        api.spark, api.sf_dir, limit=_limit(params), **creator
+    )
+    return {"accounts": _rows(df)}
+
+
+def get_creator(api, params: dict) -> dict:
+    """routes/v2-history/get_creator: the account's first signup
+    event is its creation record (newaccount semantics)."""
+    account = int(params["account"])
+    ev = _t(api.spark, api.sf_dir)["events"]
+    row = (
+        ev.where(
+            (F.col("event_type") == "signup")
+            & (F.col("user_id") == account)
+        )
+        .orderBy("event_id")
+        .limit(1)
+        .first()
+    )
+    if row is None:
+        return {"account": account, "creator": None}
+    return {
+        "account": account,
+        "creation_seq": row["event_id"],
+        "timestamp": str(row["ts"]),
+    }
 
 
 def get_blocks(api, params: dict) -> dict:
     """routes/v2-history/get_blocks (get_blocks.ts:6-161): block-range
     headers with per-block rollups — the ``get_blocks_range`` row over
-    the [after, before] sequence window. ``model=hyperion`` serves the
-    nested lake rollups."""
-    if params.get("model") == "hyperion":
-        return hyp_get_blocks(api, params)
+    the [after, before] sequence window."""
     window = {k: int(params[k]) for k in ("after", "before") if k in params}
     df = endpoints_ext.get_blocks_range(api.spark, api.sf_dir, **window)
     # get_blocks.ts:153-158 response shape: the reference itself
@@ -100,10 +316,7 @@ def get_block(api, params: dict) -> dict:
     """routes/v2-history/get_block: ONE block's header rollup plus its
     transactions — the single-block specialization of get_blocks (the
     block_num = event_id // 100 mapping the registry uses), both scans
-    pruned to the block's 100-sequence slice. ``model=hyperion``
-    serves the nested lake header."""
-    if params.get("model") == "hyperion":
-        return hyp_get_block_route(api, params)
+    pruned to the block's 100-sequence slice."""
     num = int(params.get("block_num", 3))
     lo, hi = num * 100, num * 100 + 99
     ev = _t(api.spark, api.sf_dir)["events"].where(
@@ -172,10 +385,7 @@ def get_table_state(api, params: dict) -> dict:
     latest row per (scope, primary_key) as-of ``block`` — the
     ``get_table_state_latest`` row — paged by the composite
     ``after_key`` cursor (the ``keyset_pagination`` step). One shuffle
-    on the state key; the as-of bound is pushed to the scan.
-    ``model=hyperion`` serves the nested deltas-lake state."""
-    if params.get("model") == "hyperion":
-        return hyp_get_table_state(api, params)
+    on the state key; the as-of bound is pushed to the scan."""
     block = int(params.get("block", 800))
     latest = state.get_table_state_latest(api.spark, api.sf_dir, block=block)
     rows, next_key = _keyset_page(latest, ["user_id", "event_type"], params)
@@ -199,6 +409,9 @@ def check_transaction(api, params: dict) -> dict:
     }
 
 
+# --- model=hyperion twins: the nested lake documents ------------------------
+
+
 def hyp_get_actions(api, params: dict) -> dict:
     """``model=hyperion`` on routes/v2-history/get_actions: serve the
     REAL nested action documents from the partitioned lake — the
@@ -209,10 +422,15 @@ def hyp_get_actions(api, params: dict) -> dict:
     (hyp_actions_account_disjunction); ``filter=code:action`` =>
     the OR-of-conjunctions compiler; after/before => block bounds that
     PRUNE LAKE PARTITIONS (prune_block_range — the block_hint
-    single-index routing, get_transaction.ts:73-79)."""
-    from ..plans.predicates import compile_code_action_filter
-    from ..sources.lake import lake_actions, prune_block_range
-
+    single-index routing, get_transaction.ts:73-79). The paging guards
+    match the flat route's (apply_query, functions.ts:246-250): skip in
+    [0, MAX_SKIP] and a sort of asc or desc, checked before any scan."""
+    skip = int(params.get("skip", 0))
+    if not 0 <= skip <= MAX_SKIP:
+        raise QueryGuardError(f"skip {skip} outside [0, {MAX_SKIP}]")
+    sort = params.get("sort", "desc")
+    if sort not in ("asc", "desc"):
+        raise QueryGuardError(f"invalid sort dir {sort!r}")
     a = lake_actions(api.spark, api.sf_dir)
     if "after" in params or "before" in params:
         a = prune_block_range(
@@ -234,10 +452,9 @@ def hyp_get_actions(api, params: dict) -> dict:
         )
     matched = a.where(pred)
     limit = _limit(params)
-    skip = int(params.get("skip", 0))
     order = (
         F.col("global_sequence").asc()
-        if params.get("sort") == "asc"
+        if sort == "asc"
         else F.col("global_sequence").desc()
     )
     # the exact total rides the page's top-K scan (see apply_query);
@@ -264,7 +481,6 @@ def hyp_get_actions(api, params: dict) -> dict:
             "value": matched.count() if total is None else total.get["total"],
             "relation": "eq",
         },
-        "model": "hyperion",
     }
 
 
@@ -273,8 +489,6 @@ def hyp_get_transaction(api, params: dict) -> dict:
     canonical ordinal order from the nested lake, key-pruned by
     trx_id (+ optional block_num_hint partition routing — the
     reference's single-index hint, get_transaction.ts:73-79)."""
-    from ..sources.lake import lake_actions, prune_block_range
-
     trx_id = params["id"]
     a = lake_actions(api.spark, api.sf_dir)
     if "block_hint" in params:
@@ -312,8 +526,6 @@ def hyp_get_deltas(api, params: dict) -> dict:
     shared :func:`..api.nested.deltas_page` core the hash-gated
     ``hyp_get_deltas_page`` row runs; route defaults are the row's
     constants."""
-    from .nested import deltas_page
-
     df = deltas_page(
         api.spark,
         api.sf_dir,
@@ -324,7 +536,7 @@ def hyp_get_deltas(api, params: dict) -> dict:
         block_hi=int(params["before"]) if "before" in params else 180,
         limit=_limit(params, default=100),
     )
-    return {"deltas": _rows(df), "model": "hyperion"}
+    return {"deltas": _rows(df)}
 
 
 def hyp_get_blocks(api, params: dict) -> dict:
@@ -332,8 +544,6 @@ def hyp_get_blocks(api, params: dict) -> dict:
     the nested actions lake over [after, before] — the shared
     :func:`..api.nested.blocks_range_rollup` core of the hash-gated
     ``hyp_get_blocks_range`` row (its constants are the defaults)."""
-    from .nested import blocks_range_rollup
-
     lo = int(params.get("after", 40))
     hi = int(params.get("before", 60))
     df = blocks_range_rollup(api.spark, api.sf_dir, lo, hi).orderBy(
@@ -343,7 +553,6 @@ def hyp_get_blocks(api, params: dict) -> dict:
         "cached": False,
         "lib": 0,  # get_blocks.ts:155 hardcodes lib: 0
         "blocks": _rows(df, _limit(params)),
-        "model": "hyperion",
     }
 
 
@@ -351,8 +560,6 @@ def hyp_get_block_route(api, params: dict) -> dict:
     """``model=hyperion`` on get_block: one block's nested header
     rollup — the hash-gated ``hyp_get_block`` row parameterized by
     block_num (same :func:`..api.nested.blocks_range_rollup` core)."""
-    from .nested import blocks_range_rollup
-
     num = int(params.get("block_num", 42))
     rows = _rows(
         blocks_range_rollup(api.spark, api.sf_dir, num, num).withColumn(
@@ -363,8 +570,8 @@ def hyp_get_block_route(api, params: dict) -> dict:
         )
     )
     if not rows:
-        return {"block_num": num, "present": False, "model": "hyperion"}
-    return rows[0] | {"present": True, "model": "hyperion"}
+        return {"block_num": num, "present": False}
+    return rows[0] | {"present": True}
 
 
 def hyp_get_table_state(api, params: dict) -> dict:
@@ -373,8 +580,6 @@ def hyp_get_table_state(api, params: dict) -> dict:
     the shared :func:`..api.nested.table_state_asof` core of the
     hash-gated ``hyp_table_state_latest`` row, plus the route's
     keyset ``after_key`` page cursor (O8)."""
-    from .nested import table_state_asof
-
     block = int(params.get("block", 1500))
     latest = table_state_asof(
         api.spark,
@@ -384,12 +589,7 @@ def hyp_get_table_state(api, params: dict) -> dict:
         block,
     )
     rows, next_key = _keyset_page(latest, ["scope", "primary_key"], params)
-    return {
-        "block": block,
-        "rows": rows,
-        "next_key": next_key,
-        "model": "hyperion",
-    }
+    return {"block": block, "rows": rows, "next_key": next_key}
 
 
 def hyp_get_created_accounts(api, params: dict) -> dict:
@@ -397,13 +597,11 @@ def hyp_get_created_accounts(api, params: dict) -> dict:
     newaccount actions from the nested lake (promoted @newaccount
     struct) — the shared :func:`..api.nested.created_accounts` core of
     the hash-gated ``hyp_created_accounts`` row."""
-    from .nested import created_accounts
-
     creator = params.get("account", "user8")
     df = created_accounts(
         api.spark, api.sf_dir, creator, limit=_limit(params, default=100)
     )
-    return {"accounts": _rows(df), "model": "hyperion"}
+    return {"accounts": _rows(df)}
 
 
 def hyp_get_creator(api, params: dict) -> dict:
@@ -411,16 +609,64 @@ def hyp_get_creator(api, params: dict) -> dict:
     created account on the nested lake — the shared
     :func:`..api.nested.creator_of` core of the hash-gated
     ``hyp_get_creator`` row."""
-    from .nested import creator_of
-
     account = params.get("account", "user5")
     rows = _rows(creator_of(api.spark, api.sf_dir, account))
     if not rows:
-        return {"account": account, "creator": None, "model": "hyperion"}
-    return rows[0] | {"model": "hyperion"}
+        return {"account": account, "creator": None}
+    return rows[0]
 
 
-# --- v2-state remainder ---------------------------------------------------
+# --- v2-state ---------------------------------------------------------------
+
+
+def get_top_holders(api, params: dict) -> dict:
+    """routes/v2-state/get_top_holders: the balance-ranked
+    ``get_top_holders`` row."""
+    df = state.get_top_holders(
+        api.spark, api.sf_dir, limit=_limit(params, default=20)
+    )
+    return {"holders": _rows(df)}
+
+
+def get_tokens(api, params: dict) -> dict:
+    """routes/v2-state/get_tokens (get_tokens.ts:63-72): account →
+    held symbols — the stats-planned chooser core of the registered
+    ``get_tokens`` row (endpoints_ext._get_tokens)."""
+    account = int(params["account"])
+    df, _ = endpoints_ext._get_tokens(api.spark, api.sf_dir, account=account)
+    return {
+        "account": account,
+        "tokens": [r.asDict() for r in df.collect()],
+    }
+
+
+def get_key_accounts(api, params: dict) -> dict:
+    """routes/v2-state/get_key_accounts: key → controlled
+    accounts via the registered query's chooser core."""
+    df, _ = endpoints_ext._get_key_accounts(
+        api.spark, api.sf_dir, key=params["public_key"]
+    )
+    return {"account_names": [r["account"] for r in df.collect()]}
+
+
+def get_table_rows(api, params: dict) -> dict:
+    """routes/v2-state/get_table_rows: the dynamic-table endpoint
+    with the Mongo find-grammar ``filters`` param
+    (get_table_rows.ts:76-129) — POST a JSON object like
+    ``{"table": "orders", "filters": {"o_totalprice":
+    {"$gt": 50000}}, "limit": 20}``; every clause compiles to one
+    Column predicate that lands in the scan's PushedFilters
+    (plans/mongo_query.py)."""
+    table = params.get("table", "orders")
+    if table not in TABLE_NAMES:
+        raise ValueError(f"unknown table {table!r}")
+    filters = params.get("filters", "{}")
+    if isinstance(filters, str):
+        filters = json.loads(filters)
+    df = _t(api.spark, api.sf_dir)[table]
+    pred = compile_mongo_query(df, filters) if filters else F.lit(True)
+    page = df.where(pred).orderBy(df.columns[0])
+    return {"table": table, "rows": _rows(page, _limit(params))}
 
 
 def get_account(api, params: dict) -> dict:
@@ -607,8 +853,6 @@ def get_filters(api, params: dict) -> dict:
     """routes/v2/get_filters: the operator's parsed ingest filter
     config (get_filters.ts filterToObj — the registered
     ``get_filters`` transform)."""
-    from .misc_endpoints import get_filters_df
-
     df = get_filters_df(api.spark).orderBy(
         "kind", "contract", "action_or_table"
     )
@@ -618,8 +862,6 @@ def get_filters(api, params: dict) -> dict:
 def explorer_metadata(api, params: dict) -> dict:
     """routes/v2/explorer_metadata: provider/chain config reflection
     (explorer_metadata.ts) — a constant, no Spark job."""
-    from .misc_endpoints import EXPLORER_METADATA
-
     return dict(EXPLORER_METADATA)
 
 
@@ -681,10 +923,10 @@ def v1_get_actions(api, params: dict) -> dict:
 
 def v1_get_transaction(api, params: dict) -> dict:
     """routes/v1-history/get_transaction: the v1 body shape over the v2
-    get_transaction lookup (:meth:`.http_server.HyperionAPI.transaction`,
-    traces in canonical ordinal order), capped at 1000 traces."""
+    get_transaction lookup (:func:`transaction`, traces in canonical
+    ordinal order), capped at 1000 traces."""
     trx = int(params["id"])
-    found = api.transaction(trx)
+    found = transaction(api, trx)
     if found is None:
         return {"id": trx, "trx": None, "traces": []}
     head, traces = found
@@ -729,8 +971,18 @@ def v1_trace_get_block(api, params: dict) -> dict:
     return {"transactions": _rows(df, 1000)}
 
 
-#: route path -> handler(api, params). Merged into HyperionAPI.routes.
-EXTRA_ROUTES = {
+#: route path -> handler(api, params): the whole REST surface.
+ROUTES = {
+    "/v2/health": health,
+    "/v2/history/get_actions": get_actions,
+    "/v2/history/get_deltas": get_deltas,
+    "/v2/history/get_transaction": get_transaction,
+    "/v2/history/get_created_accounts": get_created_accounts,
+    "/v2/history/get_creator": get_creator,
+    "/v2/state/get_tokens": get_tokens,
+    "/v2/state/get_key_accounts": get_key_accounts,
+    "/v2/state/get_top_holders": get_top_holders,
+    "/v2/state/get_table_rows": get_table_rows,
     "/v2/history/get_blocks": get_blocks,
     "/v2/history/get_block": get_block,
     "/v2/history/get_abi_snapshot": get_abi_snapshot,
@@ -754,4 +1006,17 @@ EXTRA_ROUTES = {
     "/v1/history/get_key_accounts": v1_get_key_accounts,
     "/v1/history/get_controlled_accounts": v1_get_controlled_accounts,
     "/v1/trace_api/get_block": v1_trace_get_block,
+}
+
+#: route path -> the ``model=hyperion`` twin(api, params) serving the
+#: nested lake documents instead of the flat mapping.
+NESTED_ROUTES = {
+    "/v2/history/get_actions": hyp_get_actions,
+    "/v2/history/get_transaction": hyp_get_transaction,
+    "/v2/history/get_deltas": hyp_get_deltas,
+    "/v2/history/get_blocks": hyp_get_blocks,
+    "/v2/history/get_block": hyp_get_block_route,
+    "/v2/history/get_table_state": hyp_get_table_state,
+    "/v2/history/get_created_accounts": hyp_get_created_accounts,
+    "/v2/history/get_creator": hyp_get_creator,
 }

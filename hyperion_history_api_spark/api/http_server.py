@@ -7,11 +7,13 @@ Socket.IO frames (no websocket library exists in this environment;
 SSE is the same one-directional push shape the relay uses for
 replays).
 
-Every handler is a thin translation layer — query-string →
-:class:`~..plans.predicates.QueryParams` / stream-request structs →
-the oracle-checked DataFrame plans the registry serves (one plan per
-route, see :mod:`.http_routes`) — plus the reference's own response
-conventions:
+Routing lives in :mod:`.http_routes`: every REST path is one
+``fn(api, params)`` row of its route table, and each request runs
+through :meth:`HyperionAPI.serve`, the one place that picks the
+``model=hyperion`` twin. Handlers are thin translation layers —
+query-string → :class:`~..plans.predicates.QueryParams` /
+stream-request structs → the oracle-checked DataFrame plans the
+registry serves — plus the reference's own response conventions:
 
 - envelope metadata (``query_time_ms``, ``cached``, exact ``total``,
   ``last_indexed_block``) via :mod:`.envelope`
@@ -49,43 +51,19 @@ from urllib.parse import parse_qsl, urlsplit
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.predicates import QueryGuardError, QueryParams
-from ..registry import _t
+from ..plans.predicates import QueryGuardError
 from ..streaming.filters import StreamRequest, StreamSchema, compile_request
-from . import endpoints_ext, state
-from .envelope import get_actions_with_envelope, scan_head
-from .history import _EVENT_NUMERIC
-from .http_routes import EXTRA_ROUTES, _limit, _rows
+from . import endpoints_ext
+from .envelope import scan_head
+from .http_routes import NESTED_ROUTES, ROUTES
 from .serving_cache import DEFAULT_TTLS, ResponseCache, timed_query
 
 
-def _qp(params: dict, terms: dict[str, str] | None = None) -> QueryParams:
-    """Query-string dict → QueryParams (the fastify schema's shared
-    history params, functions.ts:183-250: account/after/before/sort/
-    skip/limit plus free ``field=value`` terms). ``terms`` lets a
-    route pre-map its own field names (get_deltas) while sharing the
-    paging/window parsing — one place to add a future guard."""
-    if terms is None:
-        terms = {}
-        if "account" in params:
-            terms["user_id"] = params["account"]
-        if "filter" in params:  # contract[:action] filter → event_type
-            terms["event_type"] = params["filter"].split(":", 1)[0]
-        for k, v in params.items():
-            if k.startswith("term."):  # explicit field term passthrough
-                terms[k[5:]] = v
-    return QueryParams(
-        terms=terms,
-        after=params.get("after"),
-        before=params.get("before"),
-        sort=params.get("sort", "desc"),
-        skip=int(params.get("skip", 0)),
-        limit=int(params.get("limit", 100)),
-    )
-
-
 class HyperionAPI:
-    """Route handlers over one shared SparkSession + lake dir."""
+    """Serving state over one shared SparkSession + lake dir: the
+    response cache, usage counters and log-head memo the route handlers
+    share, the model switch every route runs through, and the stream
+    paths."""
 
     def __init__(
         self,
@@ -108,263 +86,22 @@ class HyperionAPI:
         # hit is stat-only — no Spark job per page, stream request or
         # relay tick
         self._head_cache: tuple | None = None
-        # The full REST surface: the handlers here plus the
-        # :mod:`.http_routes` extension families (v2-history tail,
-        # v2-state, v2-stats, v2 misc, v1 shims) — the reference
-        # autoloads every route dir the same way (routes.ts:18-25)
-        self.routes: dict = {
-            "/v2/health": self.health,
-            "/v2/history/get_actions": self.get_actions,
-            "/v2/history/get_deltas": self.get_deltas,
-            "/v2/history/get_transaction": self.get_transaction,
-            "/v2/history/get_created_accounts": self.get_created_accounts,
-            "/v2/history/get_creator": self.get_creator,
-            "/v2/state/get_tokens": self.get_tokens,
-            "/v2/state/get_key_accounts": self.get_key_accounts,
-            "/v2/state/get_top_holders": self.get_top_holders,
-            "/v2/state/get_table_rows": self.get_table_rows,
-        } | {path: partial(fn, self) for path, fn in EXTRA_ROUTES.items()}
+        # path -> handler(params): every path of the route table, each
+        # through the one model switch
+        self.routes: dict = {path: partial(self.serve, path) for path in ROUTES}
 
     def count_request(self, route: str) -> None:
         with self._usage_lock:
             self.usage[route] = self.usage.get(route, 0) + 1
 
-    # -- v2 (routes/v2/health) -----------------------------------------
-    def health(self, params: dict) -> dict:
-        block, block_time = self.log_head()
-        # an EMPTY lake is a degraded-but-alive service, not a crash:
-        # a load-balancer probe must get a response precisely when the
-        # service is newly up (health.ts reports per-service status
-        # the same way)
-        lake = (
-            {
-                "service": "Lake",
-                "status": "OK",
-                "service_data": {
-                    "last_indexed_block": block,
-                    "last_indexed_block_time": str(block_time),
-                },
-            }
-            if block is not None
-            else {"service": "Lake", "status": "Error", "service_data": {}}
-        )
-        return {
-            "version": "spark",
-            "health": [
-                {"service": "SparkSession", "status": "OK"},
-                lake,
-            ],
-        }
-
-    # -- v2-history ------------------------------------------------------
-    def get_actions(self, params: dict) -> dict:
-        """routes/v2-history/get_actions (get_actions.ts:88-131).
-        ``model=hyperion`` serves the nested lake documents instead of
-        the flat testdata mapping (http_routes.hyp_get_actions)."""
-        if params.get("model") == "hyperion":
-            from .http_routes import hyp_get_actions
-
-            return hyp_get_actions(self, params)
-        qp = _qp(params)
-        ev = _t(self.spark, self.sf_dir)["events"]
-        return get_actions_with_envelope(
-            self.spark,
-            ev,
-            qp,
-            seq_field="event_id",
-            simple=params.get("simple") == "true",
-            # reference: lib stays 0 unless the request opts in
-            # (query.checkLib -> get_info().last_irreversible_block_num,
-            # get_actions.ts:71-80); our chain-info analog is the
-            # ingest-maintained watermark
-            lib=self.lib_block()
-            if str(params.get("checkLib", "")).lower() in ("true", "1")
-            else None,
-            head=self.log_head(),
-            default_sort_field="event_id",
-            tiebreaker="event_id",
-            numeric_fields=_EVENT_NUMERIC,
-        )
-
-    def get_transaction(self, params: dict) -> dict:
-        """routes/v2-history/get_transaction: one trx and its traces in
-        canonical ordinal order (:meth:`transaction`).
-        ``model=hyperion`` serves the nested lake documents with
-        block_hint partition routing."""
-        if params.get("model") == "hyperion":
-            from .http_routes import hyp_get_transaction
-
-            return hyp_get_transaction(self, params)
-        trx = int(params["id"])
-        found = self.transaction(trx)
-        # the reference resolves the REAL lib for get_transaction on
-        # both its cache and ES paths (get_transaction.ts:67,102) —
-        # unlike get_blocks/get_block, which hardcode lib: 0
-        lib = self.lib_block()
-        if found is None:
-            return {
-                "executed": False,
-                "trx_id": trx,
-                "lib": lib,
-                "actions": [],
-            }
-        head, traces = found
-        return {
-            "executed": True,
-            "trx_id": trx,
-            "lib": lib,
-            "status": head["o_orderstatus"],
-            "block_time": str(head["o_orderdate"]),
-            "actions": traces,
-        }
-
-    def transaction(self, trx: int) -> tuple | None:
-        """The get_transaction point lookup shared by the v2 and v1
-        routes: ``(head, traces)`` for a known trx, else None. Two
-        jobs: the orders key lookup, then the trx's lineitem rows, each
-        a scan with the key in PushedFilters. The traces are ordered by
-        ``l_linenumber`` (the bug-#148 regroup discipline) on the
-        driver, which already holds every collected row, so no Spark
-        sort (sample, shuffle, result) runs."""
-        t = _t(self.spark, self.sf_dir)
-        head = (
-            t["orders"]
-            .where(F.col("o_orderkey") == trx)
-            .select("o_orderkey", "o_orderstatus", "o_orderdate")
-            .first()
-        )
-        if head is None:
-            return None
-        traces = (
-            t["lineitem"]
-            .where(F.col("l_orderkey") == trx)
-            .select("l_linenumber", "l_partkey", "l_quantity", "l_extendedprice")
-            .collect()
-        )
-        return head, [
-            r.asDict() for r in sorted(traces, key=lambda r: r["l_linenumber"])
-        ]
-
-    def get_deltas(self, params: dict) -> dict:
-        """routes/v2-history/get_deltas: the delta column mapping
-        (endpoints_ext.delta_view) through the same predicate-compiler
-        path as the registered ``get_deltas_by_scope``.
-        ``model=hyperion`` serves the nested lake documents
-        (http_routes.hyp_get_deltas)."""
-        if params.get("model") == "hyperion":
-            from .http_routes import hyp_get_deltas
-
-            return hyp_get_deltas(self, params)
-        ev = endpoints_ext.delta_view(_t(self.spark, self.sf_dir)["events"])
-        terms: dict[str, str] = {}
-        if "code" in params or "table" in params:
-            terms["event_type"] = params.get("table", params.get("code"))
-        if "scope" in params:
-            terms["user_id"] = params["scope"]
-        if "payer" in params:
-            terms["payer"] = params["payer"]
-        qp = _qp(params, terms=terms)
-        return get_actions_with_envelope(
-            self.spark,
-            ev,
-            qp,
-            seq_field="event_id",
-            head=self.log_head(),
-            default_sort_field="event_id",
-            tiebreaker="event_id",
-            numeric_fields=frozenset({"event_id", "user_id", "payer"}),
-        )
-
-    def get_created_accounts(self, params: dict) -> dict:
-        """routes/v2-history/get_created_accounts: creator → created
-        accounts, the ``get_created_accounts`` row.
-        ``model=hyperion`` serves the nested newaccount documents."""
-        if params.get("model") == "hyperion":
-            from .http_routes import hyp_get_created_accounts
-
-            return hyp_get_created_accounts(self, params)
-        creator = {"creator": params["account"]} if "account" in params else {}
-        df = endpoints_ext.get_created_accounts(
-            self.spark, self.sf_dir, limit=_limit(params), **creator
-        )
-        return {"accounts": _rows(df)}
-
-    def get_creator(self, params: dict) -> dict:
-        """routes/v2-history/get_creator: the account's first signup
-        event is its creation record (newaccount semantics).
-        ``model=hyperion`` serves the nested newaccount top-1."""
-        if params.get("model") == "hyperion":
-            from .http_routes import hyp_get_creator
-
-            return hyp_get_creator(self, params)
-        account = int(params["account"])
-        ev = _t(self.spark, self.sf_dir)["events"]
-        row = (
-            ev.where(
-                (F.col("event_type") == "signup")
-                & (F.col("user_id") == account)
-            )
-            .orderBy("event_id")
-            .limit(1)
-            .first()
-        )
-        if row is None:
-            return {"account": account, "creator": None}
-        return {
-            "account": account,
-            "creation_seq": row["event_id"],
-            "timestamp": str(row["ts"]),
-        }
-
-    # -- v2-state ----------------------------------------------------------
-    def get_top_holders(self, params: dict) -> dict:
-        """routes/v2-state/get_top_holders: the balance-ranked
-        ``get_top_holders`` row."""
-        df = state.get_top_holders(
-            self.spark, self.sf_dir, limit=_limit(params, default=20)
-        )
-        return {"holders": _rows(df)}
-
-    def get_tokens(self, params: dict) -> dict:
-        """routes/v2-state/get_tokens (get_tokens.ts:63-72): account →
-        held symbols — the stats-planned chooser core of the registered
-        ``get_tokens`` row (endpoints_ext._get_tokens)."""
-        account = int(params["account"])
-        df, _ = endpoints_ext._get_tokens(self.spark, self.sf_dir, account=account)
-        return {
-            "account": account,
-            "tokens": [r.asDict() for r in df.collect()],
-        }
-
-    def get_key_accounts(self, params: dict) -> dict:
-        """routes/v2-state/get_key_accounts: key → controlled
-        accounts via the registered query's chooser core."""
-        df, _ = endpoints_ext._get_key_accounts(
-            self.spark, self.sf_dir, key=params["public_key"]
-        )
-        return {"account_names": [r["account"] for r in df.collect()]}
-
-    def get_table_rows(self, params: dict) -> dict:
-        """routes/v2-state/get_table_rows: the dynamic-table endpoint
-        with the Mongo find-grammar ``filters`` param
-        (get_table_rows.ts:76-129) — POST a JSON object like
-        ``{"table": "orders", "filters": {"o_totalprice":
-        {"$gt": 50000}}, "limit": 20}``; every clause compiles to one
-        Column predicate that lands in the scan's PushedFilters
-        (plans/mongo_query.py)."""
-        from ..plans.mongo_query import compile_mongo_query
-        from ..tables import TABLE_NAMES
-
-        table = params.get("table", "orders")
-        if table not in TABLE_NAMES:
-            raise ValueError(f"unknown table {table!r}")
-        filters = params.get("filters", "{}")
-        if isinstance(filters, str):
-            filters = json.loads(filters)
-        df = _t(self.spark, self.sf_dir)[table]
-        pred = compile_mongo_query(df, filters) if filters else F.lit(True)
-        page = df.where(pred).orderBy(df.columns[0])
-        return {"table": table, "rows": _rows(page, _limit(params))}
+    def serve(self, path: str, params: dict) -> dict:
+        """Run the handler of ``path``: its nested twin when the request
+        asks for ``model=hyperion`` and the path has one (the body then
+        says so), else the flat handler."""
+        nested = NESTED_ROUTES.get(path) if params.get("model") == "hyperion" else None
+        if nested is None:
+            return ROUTES[path](self, params)
+        return nested(self, params) | {"model": "hyperion"}
 
     # -- SSE stream (socketManager.ts replay path) -------------------------
     def stream_rows(self, params: dict):

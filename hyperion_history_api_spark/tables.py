@@ -60,13 +60,6 @@ def normalize_events(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
-#: (abspath) -> (fingerprint, ns-cols). Footer reads are driver-side
-#: syscall+parse work paid on EVERY query construction (10 tables per
-#: load_tables call); the stat-only fingerprint makes a hit exactly as
-#: fresh as re-reading the footer (round-14 constant-cost cut).
-_NS_COLS_CACHE: dict[str, tuple] = {}
-
-
 def _ns_timestamp_cols(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS) — Spark reads them as
     long (``spark.sql.legacy.parquet.nanosAsLong``); we restore
@@ -77,21 +70,6 @@ def _ns_timestamp_cols(path: str) -> list[str]:
     or a DIRECTORY of parquet files (a growing spool/lake — e.g. the
     HTTP layer's live tail or the SHIP reader's spool); for a
     directory the schema comes from its first data file."""
-    import os
-
-    key = os.path.abspath(path)
-    fp = _path_fingerprint(path)
-    hit = _NS_COLS_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    cols = _ns_timestamp_cols_uncached(path)
-    if len(_NS_COLS_CACHE) >= _READ_CACHE_MAX:
-        _NS_COLS_CACHE.clear()
-    _NS_COLS_CACHE[key] = (fp, cols)
-    return cols
-
-
-def _ns_timestamp_cols_uncached(path: str) -> list[str]:
     import os
 
     if os.path.isdir(path):
@@ -140,36 +118,44 @@ def _path_fingerprint(path: str) -> tuple:
     return (st.st_size, st.st_mtime_ns)
 
 
-#: (appId, abspath) -> (fingerprint, DataFrame). An analyzed
+#: (appId, abspath) -> (fingerprint, DataFrame, ns-cols). An analyzed
 #: DataFrame is immutable (its file listing binds at creation), so a
 #: hit returns exactly what a fresh read would produce as long as the
-#: fingerprint matches; a changed file/dir re-reads. This exists for
-#: DRIVER overhead, not data: every registry row used to pay ~60 ms
-#: of JVM round-trips per table re-analyzed per call (14 reads =
-#: ~0.9 s on the dedup_incremental row). At cluster scale the catalog
-#: (metastore) plays this role; the cache is bounded and per-session.
+#: fingerprint matches; a changed file/dir re-reads, footer included.
+#: This exists for DRIVER overhead, not data: every registry row used
+#: to pay ~60 ms of JVM round-trips per table re-analyzed per call
+#: (14 reads = ~0.9 s on the dedup_incremental row), plus a footer
+#: read per table per query construction. At cluster scale the
+#: catalog (metastore) plays this role; the cache is bounded and
+#: per-session.
 _READ_CACHE: dict[tuple, tuple] = {}
 _READ_CACHE_MAX = 256
 
 
-def cached_read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def _read_memo(spark: SparkSession, path: str) -> tuple:
+    """``(fingerprint, DataFrame, ns-cols)`` for ``path``, one
+    fingerprint per call and one read + footer scan per change."""
     import os
 
     key = (spark.sparkContext.applicationId, os.path.abspath(path))
     fp = _path_fingerprint(path)
     hit = _READ_CACHE.get(key)
     if hit is not None and hit[0] == fp:
-        return hit[1]
-    df = spark.read.parquet(path)
+        return hit
+    entry = (fp, spark.read.parquet(path), _ns_timestamp_cols(path))
     if len(_READ_CACHE) >= _READ_CACHE_MAX:
         _READ_CACHE.clear()
-    _READ_CACHE[key] = (fp, df)
-    return df
+    _READ_CACHE[key] = entry
+    return entry
+
+
+def cached_read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    return _read_memo(spark, path)[1]
 
 
 def _load_one(spark: SparkSession, path: str) -> DataFrame:
-    df = cached_read_parquet(spark, path)
-    for c in _ns_timestamp_cols(path):
+    _, df, ns_cols = _read_memo(spark, path)
+    for c in ns_cols:
         # integer div keeps full ns precision (double div would round)
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df

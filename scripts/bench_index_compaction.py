@@ -88,6 +88,15 @@ def main() -> None:
                 docs.where(F.col("doc_id") % waves == 0), "text", "doc_id"
             )
         )
+        # one untimed probe first, so wave 1's time carries no session
+        # or plan warm-up and the growth ratios measure the store only
+        incremental_pairs(
+            store.read(),
+            docs.where(F.col("doc_id") % waves == 1),
+            "text",
+            "doc_id",
+            threshold=0.5,
+        ).count()
         probe_secs, file_counts = [], []
         for w in range(1, waves):
             batch = docs.where(F.col("doc_id") % waves == w)

@@ -1,8 +1,8 @@
-"""HTTP body == registry row, per route family (api/http_routes.py and
-the row-backed handlers of api/http_server.py). A route that answers
-what a registry row computes runs that row function, so each such
-route is asserted over a real socket against the oracle-checked row
-at the handler's default params — the reference autoloads all of
+"""HTTP body == registry row, per route family of the route table
+(api/http_routes.py). A route that answers what a registry row
+computes runs that row function, so each such route is asserted over
+a real socket against the oracle-checked row at the handler's default
+params — the reference autoloads all of
 src/api/routes (routes.ts:18-25). Routes with no row of their own
 (get_block, get_abi_snapshot, get_action_usage, get_resource_usage,
 v1 get_actions; get_creator and get_table_rows in test_http_server.py)
@@ -17,6 +17,7 @@ import urllib.request
 import pytest
 from pyspark.sql import functions as F
 
+from hyperion_history_api_spark.api import http_routes
 from hyperion_history_api_spark.api.http_server import (
     HyperionAPI,
     serve_background,
@@ -53,13 +54,49 @@ def _registry_rows(spark, name: str) -> list[dict]:
     ]
 
 
-def test_route_table_is_complete(server):
-    """Every reference route family in scope is served (33 routes =
-    10 round-8 + 23 this round; v1-chain proxy stays out of scope)."""
+def test_route_table_is_complete(server, monkeypatch):
+    """Every reference route family in scope is served (33 routes;
+    the v1-chain proxy stays out of scope). Every nested twin belongs
+    to a served path, and ``api.routes[path]`` runs the twin for
+    ``model=hyperion`` (stamping the body) and the flat handler
+    otherwise; a path without a twin ignores ``model``."""
     _, api = server
     assert len(api.routes) == 33
+    assert set(api.routes) == set(http_routes.ROUTES)
+    assert set(http_routes.NESTED_ROUTES) <= set(http_routes.ROUTES)
     for fam in ("/v2/history/", "/v2/state/", "/v2/stats/", "/v1/"):
         assert any(p.startswith(fam) for p in api.routes)
+
+    calls = []
+
+    def recorder(kind, path):
+        def handler(handler_api, params):
+            assert handler_api is api
+            calls.append((kind, path))
+            return {"kind": kind}
+
+        return handler
+
+    for path in http_routes.ROUTES:
+        monkeypatch.setitem(http_routes.ROUTES, path, recorder("flat", path))
+    for path in http_routes.NESTED_ROUTES:
+        monkeypatch.setitem(
+            http_routes.NESTED_ROUTES, path, recorder("nested", path)
+        )
+    assert len(http_routes.NESTED_ROUTES) == 8
+    for path in http_routes.NESTED_ROUTES:
+        calls.clear()
+        assert api.routes[path]({"model": "hyperion"}) == {
+            "kind": "nested",
+            "model": "hyperion",
+        }
+        assert api.routes[path]({}) == {"kind": "flat"}
+        assert api.routes[path]({"model": "flat"}) == {"kind": "flat"}
+        assert calls == [("nested", path), ("flat", path), ("flat", path)]
+    for path in set(http_routes.ROUTES) - set(http_routes.NESTED_ROUTES):
+        calls.clear()
+        assert api.routes[path]({"model": "hyperion"}) == {"kind": "flat"}
+        assert calls == [("flat", path)]
 
 
 # --- v2-history tail -------------------------------------------------------

@@ -320,7 +320,7 @@ def test_review_fixes_stream_400_post_bools_empty_health(server, spark, tmp_path
     ev.limit(0).write.parquet(str(lake / "events.parquet"))
     from hyperion_history_api_spark.api.http_server import HyperionAPI as H
     api2 = H(spark, str(lake))
-    health = api2.health({})
+    health = api2.routes["/v2/health"]({})
     assert health["health"][1]["status"] == "Error"
 
 
@@ -408,6 +408,20 @@ def test_negative_start_from_is_head_relative(server, spark):
     )
     ids2 = [r["event_id"] for r in rows2]
     assert ids2 and min(ids2) >= head - 5 and max(ids2) == head - 2
+
+
+def test_negative_start_from_on_empty_history_ends(spark, tmp_path):
+    """A head-relative window on a lake with no events yet resolves
+    against head 0, streams nothing and ends cleanly (the replay
+    finds no rows; it neither fails on the missing head nor waits)."""
+    lake = tmp_path / "empty"
+    lake.mkdir()
+    ev = load_tables(spark, SF_DIR)["events"]
+    ev.limit(0).write.parquet(str(lake / "events.parquet"))
+    api = HyperionAPI(spark, str(lake), cache=ResponseCache(default_ttl=0))
+    assert api.head_block() == 0
+    assert list(api.stream_rows({"start_from": "-1000"})) == []
+    assert list(api.stream_rows({"start_from": "-1000", "read_until": "-1"})) == []
 
 
 def test_head_block_memoized_on_lake_fingerprint(
@@ -550,3 +564,17 @@ def test_hyperion_model_page_total_is_exact(server, spark, account, skip, limit)
     assert [a["global_sequence"] for a in body["actions"]] == ids[skip : skip + limit]
     if account == "user7":
         assert len(ids) > skip + limit
+
+
+@pytest.mark.parametrize(
+    "model", ["account=7", "model=hyperion&account=user7"], ids=["flat", "hyperion"]
+)
+@pytest.mark.parametrize("bad", ["skip=10001", "skip=-1", "sort=sideways"])
+def test_get_actions_paging_guards_on_both_models(server, model, bad):
+    """Both get_actions models answer 400 for a skip past MAX_SKIP, a
+    negative skip and a sort other than asc|desc: the nested model must
+    not scan an account's whole match set to serve a deep page."""
+    base, _ = server
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        _get(base, f"/v2/history/get_actions?{model}&{bad}&limit=5")
+    assert ei.value.code == 400

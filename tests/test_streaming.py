@@ -1,6 +1,8 @@
 """Streaming-half tests (SURVEY §2.9/§2.1): subscription routing,
-updateByBlock merge guards, end-to-end Structured Streaming ingest,
-stateful missed-block detection, and history->live switchover."""
+updateByBlock merge guards, end-to-end Structured Streaming ingest and
+stateful missed-block detection. The history->live switchover is
+tested on the path that serves it, in test_http_server.py and
+test_ws_stream.py."""
 
 from __future__ import annotations
 
@@ -33,11 +35,6 @@ from hyperion_history_api_spark.streaming.state_store import (
     fork_retract,
     merge_update_by_block,
     prune_retention,
-)
-from hyperion_history_api_spark.streaming.switchover import (
-    attach_live,
-    replay_history,
-    resolve_start_from,
 )
 from hyperion_history_api_spark.tables import load_tables
 
@@ -304,9 +301,6 @@ def test_read_until_inclusive(spark):
     df = _sample(spark)
     req = StreamRequest(read_until=3)
     assert _ids(df.where(compile_request(df, req, StreamSchema()))) == [1, 2, 3]
-    replay = replay_history(df, "event_id", start_from=1, read_until=3, batch=10)
-    got = [r.event_id for page in replay.pages for r in page]
-    assert got == [1, 2, 3]
 
 
 def test_promoted_field_gated_on_action_name(spark):
@@ -392,32 +386,6 @@ def test_detect_missed_stateful(spark, tmp_path):
     q.awaitTermination()
     rows = {r.producer: (r.missed, r.up_to) for r in spark.sql("select * from missed_t").collect()}
     assert rows == {"alice": (2, 5)}  # slots 3,4 missed; bob contiguous
-
-
-# -------------------------------------------------------------- switchover
-
-
-def test_replay_then_live_exactly_once(spark):
-    ev = load_tables(spark, SF_DIR)["events"]
-    head = ev.agg(F.max("event_id")).first()[0]
-    start = resolve_start_from(ev, "event_id", -300)
-    assert start == head - 300
-
-    replay = replay_history(ev, "event_id", start_from=-300, batch=100)
-    replayed: list[int] = []
-    for i, page in enumerate(replay.pages):
-        ids = [r.event_id for r in page]
-        assert ids == sorted(ids)
-        replayed.extend(ids)
-        if i == 1:  # "live attach" happens after two acked pages
-            break
-    last = replay.last_transmitted[0]
-    assert last == replayed[-1]
-
-    live = attach_live(ev, "event_id", last)  # batch stand-in for the stream
-    live_ids = [r.event_id for r in live.select("event_id").collect()]
-    assert min(live_ids) == last + 1
-    assert sorted(replayed + live_ids) == list(range(start, head + 1))
 
 
 def test_dedup_stream_across_microbatches(spark, tmp_path):
@@ -705,18 +673,6 @@ def test_detect_missed_tws_guard_when_protobuf_missing(spark):
     )
     with pytest.raises(ImportError, match="protobuf.*detect_missed_stateful"):
         detect_missed_tws(stream)
-
-
-def test_resolve_start_from_empty_history(spark):
-    """T3 relative start_from against an empty table resolves to 0
-    (straight to live) instead of TypeError on int(None)."""
-    from hyperion_history_api_spark.streaming.switchover import (
-        resolve_start_from,
-    )
-
-    empty = spark.createDataFrame([], "event_id long")
-    assert resolve_start_from(empty, "event_id", -1000) == 0
-    assert resolve_start_from(empty, "event_id", 7) == 7
 
 
 def test_compile_request_missing_routing_column_never_matches(spark):
