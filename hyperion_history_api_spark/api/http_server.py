@@ -1,11 +1,15 @@
 """In-process HTTP serving layer — the fastify REST surface
 (``src/api/routes.ts:18-25``, handlers under ``src/api/routes/``) and
-the Socket.IO relay's bounded-replay path
+the stream subscriptions of the Socket.IO manager
 (``src/api/socketManager.ts:409-495``) served over stdlib
 ``http.server``, with Server-Sent Events standing in for the
-Socket.IO frames (no websocket library exists in this environment;
-SSE is the same one-directional push shape the relay uses for
-replays).
+Socket.IO frames (SSE is the same one-directional push shape the
+relay uses).
+
+:class:`LiveRelay` is the one live path: ``HyperionAPI.relay`` tails
+the lake and the control journal once per tick and routes each
+arrival to every attached connection — SSE and WS ``follow=true``
+streams and Socket.IO subscriptions alike.
 
 Routing lives in :mod:`.http_routes`: every REST path is one
 ``fn(api, params)`` row of its route table, and each request runs
@@ -39,11 +43,15 @@ transaction/trace pair, ``part`` the token registry.
 
 from __future__ import annotations
 
+import itertools
 import json
 import logging
 import math
 import threading
+import time
 import uuid
+from collections import deque
+from dataclasses import replace
 from functools import partial
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qsl, urlsplit
@@ -52,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.predicates import QueryGuardError
+from ..streaming.control_log import tail_control
 from ..streaming.filters import StreamRequest, StreamSchema, compile_request
 from . import endpoints_ext
 from .envelope import scan_head
@@ -89,6 +98,9 @@ class HyperionAPI:
         # path -> handler(params): every path of the route table, each
         # through the one model switch
         self.routes: dict = {path: partial(self.serve, path) for path in ROUTES}
+        # the one live tail every SSE, WS and Socket.IO follower drains;
+        # its poller runs only while a connection is attached
+        self.relay = LiveRelay(self, poll_sec=0.5)
 
     def count_request(self, route: str) -> None:
         with self._usage_lock:
@@ -103,7 +115,7 @@ class HyperionAPI:
             return ROUTES[path](self, params)
         return nested(self, params) | {"model": "hyperion"}
 
-    # -- SSE stream (socketManager.ts replay path) -------------------------
+    # -- stream subscriptions (socketManager.ts replay + relay) --------------
     def stream_rows(self, params: dict):
         """Replay (then optionally live-tail) a stream subscription:
         compile the request to ONE boolean column (the vectorized
@@ -117,32 +129,19 @@ class HyperionAPI:
         two subscription kinds the reference's socketManager serves.
 
         ``read_until`` bounds the window exactly like the reference's
-        past-range requests; ``follow=true`` is the replay→live
-        switchover on the serving surface (socketManager.ts: history
-        replay, then the relay pushes arrivals): after draining the
-        current head the handler re-lists the lake every ``poll_sec``
-        and pushes rows past the last served sequence — the same
-        predicate, a fresh pruned scan per poll (the scan reads only
-        ``event_id > last`` row groups, so a poll on an idle lake is
-        metadata-cheap). The tail ends at ``read_until`` or after
-        ``idle_timeout`` seconds without arrivals."""
+        past-range requests. ``follow=true`` is the replay→live
+        switchover (socketManager.ts: history replay, then the relay
+        pushes arrivals), run through :attr:`relay` exactly as a
+        Socket.IO subscription runs: see :meth:`_follow`."""
         # parse/validate EAGERLY — this function must raise for bad
         # params BEFORE the handler commits a 200 + event-stream
         # header (a generator would defer the int()/float() failures
-        # into mid-stream); read_until=0 is the reference's
-        # "no end" convention (filters.py:compile_request skips the
-        # bound the same way)
+        # into mid-stream)
         req, kind = self.parse_stream_request(params)
         if (req.start_from or 0) < 0 or (req.read_until or 0) < 0:
             req = self.resolve_relative_bounds(req, self.head_block())
-        read_until = req.read_until if req.read_until else None
-        follow = params.get("follow") == "true"
-        poll_sec = float(params.get("poll_sec", "0.5"))
         idle_timeout = float(params.get("idle_timeout", "30"))
-        # a bad value would otherwise fail in time.sleep after the 200,
-        # or (nan) never time out on an idle lake
-        if not (math.isfinite(poll_sec) and poll_sec > 0):
-            raise ValueError(f"poll_sec must be finite and > 0, got {poll_sec}")
+        # nan would never time out on an idle lake
         if not (math.isfinite(idle_timeout) and idle_timeout >= 0):
             raise ValueError(
                 f"idle_timeout must be finite and >= 0, got {idle_timeout}"
@@ -151,15 +150,9 @@ class HyperionAPI:
             "true",
             "1",
         )
-        return self._stream_iter(
-            req,
-            read_until,
-            follow,
-            poll_sec,
-            idle_timeout,
-            kind=kind,
-            mark_filtered=mark_filtered,
-        )
+        if params.get("follow") == "true":
+            return self._follow(req, kind, idle_timeout, mark_filtered)
+        return self._replay(req, kind, mark_filtered)
 
     @staticmethod
     def parse_stream_request(params: dict):
@@ -232,113 +225,85 @@ class HyperionAPI:
             raise ValueError(f"stream must be actions|deltas, not {kind!r}")
         return req, kind
 
-    def _stream_iter(
-        self,
-        req,
-        read_until,
-        follow,
-        poll_sec,
-        idle_timeout,
-        *,
-        kind="actions",
-        mark_filtered=False,
-    ):
-        import time as _time
+    def _replay(self, req, kind: str, mark_filtered: bool, upto: int | None = None):
+        """The bounded history scan of ``req``, through ``upto`` when
+        given; read_until=0 is the reference's "no end" convention
+        (compile_request skips the bound the same way)."""
+        after = (req.start_from or 0) - 1
+        # the fingerprint-memoized head (pure os.stat on an unchanged
+        # lake) proves an empty window without a Spark job
+        if self.head_block() <= after:
+            return
+        ev, cols, schema = self._stream_frame(kind)
+        window = F.col("event_id") > after
+        if upto is not None:
+            window &= F.col("event_id") <= upto
+        if mark_filtered:
+            # the reference's scroll counts docs that matched the
+            # PRIMARY query (routing keys + block range) but were
+            # dropped by the on-demand field filters
+            # (functions.ts:226-247 filterCount) — so scan on the
+            # routing predicate and FLAG filter failures instead
+            # of hiding them; the consumer reports `filtered` and
+            # still advances lastTransmittedBlock over them
+            routing = compile_request(ev, replace(req, filters=()), schema)
+            full = compile_request(ev, req, schema)
+            plan = ev.where(routing & window).withColumn("_filtered", ~full)
+            cols = [*cols, "_filtered"]
+        else:
+            plan = ev.where(compile_request(ev, req, schema) & window)
+        # toLocalIterator: one partition in flight — the driver never
+        # holds the whole replay (same scroll discipline as O7)
+        for row in plan.orderBy("event_id").select(*cols).toLocalIterator():
+            d = row.asDict()
+            d["ts"] = str(d["ts"])
+            yield d
 
-        last = (req.start_from or 0) - 1
-        deadline = _time.monotonic() + idle_timeout
-        # control-event tail (fork_event / lib_update): follow-mode
-        # subscribers get the indexer's control broadcasts interleaved
-        # with rows, exactly the reference's io.emit forwarding
-        # (ws-router.ts:72-83). Start at the journal's current end —
-        # history replays don't re-announce old forks.
-        from ..streaming.control_log import tail_control
-
-        _, control_at = tail_control(self.sf_dir, 0)
-
-        def batch(after: int):
-            ev, cols, schema = self._stream_frame(kind)
-            if mark_filtered:
-                # the reference's scroll counts docs that matched the
-                # PRIMARY query (routing keys + block range) but were
-                # dropped by the on-demand field filters
-                # (functions.ts:226-247 filterCount) — so scan on the
-                # routing predicate and FLAG filter failures instead
-                # of hiding them; the consumer reports `filtered` and
-                # still advances lastTransmittedBlock over them
-                from dataclasses import replace as _replace
-
-                routing = compile_request(
-                    ev, _replace(req, filters=()), schema
-                )
-                full = compile_request(ev, req, schema)
-                return (
-                    ev.where(routing & (F.col("event_id") > after))
-                    .withColumn("_filtered", ~full)
-                    .orderBy("event_id")
-                    .select(*cols, "_filtered")
-                )
-            return (
-                ev.where(
-                    compile_request(ev, req, schema)
-                    & (F.col("event_id") > after)
-                )
-                .orderBy("event_id")
-                .select(*cols)
+    def _follow(self, req, kind: str, idle_timeout: float, mark_filtered: bool):
+        """``follow=true``: the steps a Socket.IO subscription runs —
+        register on :attr:`relay` at the attach head, replay history
+        up to that head, then forward what the relay queues: the
+        indexer's control events (fork_event / lib_update, the
+        reference's io.emit forwarding, ws-router.ts:72-83) as
+        ``{"_control", "data"}`` and matching arrivals as rows. A fork
+        rewinds the relay below the fork point, so corrected rows are
+        re-delivered after the notice. Ends on a row at or past
+        ``read_until`` (rows past it are dropped) or after
+        ``idle_timeout`` seconds with no row and no control event."""
+        relay = self.relay
+        conn = relay.attach()
+        try:
+            head = relay.register(
+                conn,
+                f"follow-{conn}",
+                "delta" if kind == "deltas" else "action",
+                req,
+                self.head_block(),
             )
-
-        while True:
-            if follow:
-                # control events FIRST: a fork must reach the client
-                # before the corrected rows from the post-fork rescan
-                events, control_at = tail_control(self.sf_dir, control_at)
-                if events:
-                    # control traffic is stream activity: an indexer
-                    # mid-fork must not be idle-timed-out before its
-                    # corrected rows land
-                    deadline = _time.monotonic() + idle_timeout
-                for ev in events:
-                    if ev.get("event") == "fork_event":
-                        fork = int(ev["data"].get("starting_block", 0))
-                        # rewind: replacement rows land BELOW the
-                        # cursor and must be re-delivered
-                        last = min(last, fork - 1)
-                    yield {
-                        "_control": ev.get("event"),
-                        "data": ev.get("data", {}),
-                    }
-            got_any = False
-            # idle-poll short-circuit: the fingerprint-memoized head
-            # (pure os.stat on an unchanged lake) proves an empty
-            # window — a follow-mode subscriber on an idle lake costs
-            # ZERO Spark jobs per poll
-            if self.head_block() <= last:
-                if read_until is not None and last >= read_until:
-                    return
-                if not follow:
-                    return
-                if _time.monotonic() >= deadline:
-                    return
-                _time.sleep(poll_sec)
-                continue
-            # toLocalIterator: one partition in flight — the driver
-            # never holds the whole replay (same scroll discipline
-            # as O7)
-            for row in batch(last).toLocalIterator():
-                d = row.asDict()
-                d["ts"] = str(d["ts"])
-                last = d["event_id"]
-                got_any = True
-                yield d
-            if read_until is not None and last >= read_until:
+            yield from self._replay(req, kind, mark_filtered, upto=head)
+            read_until = req.read_until or None
+            if read_until is not None and read_until <= head:
                 return
-            if not follow:
-                return
-            if got_any:
-                deadline = _time.monotonic() + idle_timeout
-            elif _time.monotonic() >= deadline:
-                return
-            _time.sleep(poll_sec)
+            start_from = req.start_from or 0
+            deadline = time.monotonic() + idle_timeout
+            while time.monotonic() < deadline:
+                for entry, d, _ in relay.drain(conn):
+                    if entry == "control":
+                        yield {"_control": d.get("event"), "data": d.get("data", {})}
+                    elif entry == "status" or d["event_id"] < start_from:
+                        # catch-up progress has no SSE/WS frame, and
+                        # live routing ignores start_from
+                        continue
+                    elif read_until is not None and d["event_id"] > read_until:
+                        return
+                    else:
+                        yield d
+                        if d["event_id"] == read_until:
+                            return
+                    deadline = time.monotonic() + idle_timeout
+                time.sleep(relay.poll_sec / 2)
+        finally:
+            relay.unregister_conn(conn)
 
     def _stream_frame(self, kind: str) -> tuple[DataFrame, list[str], StreamSchema]:
         """One fresh events read for a stream poll or relay tick: the
@@ -383,14 +348,12 @@ class HyperionAPI:
         0`` compiles to ``block_num >= head + start_from``; same for
         ``read_until``) — a ``start_from: -1000`` replay means "the
         last 1000 blocks", never "all of history from block 1"."""
-        from dataclasses import replace as _replace
-
         changes: dict = {}
         if req.start_from is not None and req.start_from < 0:
             changes["start_from"] = head + req.start_from
         if req.read_until is not None and req.read_until < 0:
             changes["read_until"] = head + req.read_until
-        return _replace(req, **changes) if changes else req
+        return replace(req, **changes) if changes else req
 
     # -- live-phase helpers (socketManager.ts relay analogs) ----------------
     def log_head(self) -> tuple:
@@ -466,10 +429,8 @@ class HyperionAPI:
         # the reference's relay matches arriving traces on routing keys
         # + field filters only (ws-router.ts); the history bounds
         # belong to the replay phase
-        from dataclasses import replace as _replace
-
         live_reqs = {
-            u: _replace(r, start_from=None, read_until=None)
+            u: replace(r, start_from=None, read_until=None)
             for u, r in requests.items()
         }
         # ONE routed scan, no orderBy: the exchange a Spark sort plans
@@ -499,6 +460,264 @@ class HyperionAPI:
             out.append((d, targets))
         out.sort(key=lambda dt: int(dt[0]["event_id"]))
         return out, cursor
+
+
+class LiveRelay:
+    """The API's one live tail — the reference's relay shape
+    (socketManager.ts attaches every socket's requests to shared maps
+    and a single indexer relay pushes each trace once, :409-495). SSE
+    and WS followers and Socket.IO subscriptions all attach here: one
+    control-journal tail and one routed scan per kind per tick serve
+    every connection regardless of count (the route_to_subscribers
+    pass is already vectorized over requests).
+
+    Sessions attach (a fresh connection id), register (conn_id,
+    reqUUID, kind, req, attach-head) and drain their queue from their
+    own thread — the relay thread never touches a socket (ws.send is
+    not locked). A queue past ``max_queue`` marks the connection
+    overflowed; its next drain raises and the session drops the slow
+    consumer instead of buffering unboundedly. The poller runs only
+    while a connection is attached: a tick that finds none ends it,
+    and the next attach or register starts a new one.
+
+    Attach races mirror the reference: a subscription registered while
+    a tick is mid-route can miss rows scanned in that tick (at most
+    one poll interval), exactly as a socket attaching mid-trace-fanout
+    misses the in-flight trace; :meth:`register` returns the head a
+    replay must reach to close that gap."""
+
+    def __init__(
+        self,
+        api,
+        poll_sec: float,
+        max_queue: int = 50_000,
+        window_cap: int = 50_000,
+    ) -> None:
+        self.api = api
+        self.poll_sec = poll_sec
+        self.max_queue = max_queue
+        self.window_cap = window_cap
+        self._lock = threading.Lock()
+        self._ids = itertools.count(1)
+        self._subs: dict[str, dict] = {}  # reqUUID -> conn/kind/req/head
+        self._queues: dict[int, deque] = {}
+        self._overflow: set[int] = set()
+        self._cursor: dict[str, int] = {}
+        self._stop = threading.Event()
+        self._thread: threading.Thread | None = None
+        self.last_error: Exception | None = None
+        # control-journal byte offset, moved to the journal's end when
+        # the first connection attaches (_open)
+        self._control_offset = 0
+
+    def close(self) -> None:
+        self._stop.set()
+
+    def attach(self, conn_id: int | None = None) -> int:
+        """Give a connection (a fresh id unless one is passed) its
+        queue at ACCEPT time and return the id: the reference
+        io.emit()s fork_event / lib_update to every connected socket
+        (ws-router.ts appendIdAndEmit), including history-only or
+        not-yet-subscribed clients — so control broadcasts must not
+        depend on a live registration existing."""
+        with self._lock:
+            if conn_id is None:
+                conn_id = next(self._ids)
+            self._open(conn_id)
+        return conn_id
+
+    def register(
+        self, conn_id: int, req_uuid: str, kind: str, req, head: int
+    ) -> int:
+        """Route ``kind`` arrivals past ``head`` that match ``req`` to
+        ``conn_id``'s queue. Returns the subscription's live head:
+        ``head``, or the kind's cursor when a tick already scanned
+        past it — a replay through that head meets the live phase
+        with no gap."""
+        with self._lock:
+            self._open(conn_id)
+            head = max(head, self._cursor.setdefault(kind, head))
+            self._subs[req_uuid] = {
+                "conn": conn_id,
+                "kind": kind,
+                "req": req,
+                "head": head,
+            }
+        return head
+
+    def _open(self, conn_id: int) -> None:
+        """(lock held) Give ``conn_id`` a queue and make sure a poller
+        runs. The first connection moves the control tail to the
+        journal's end: clients only see forks/LIB advances from NOW on
+        (the reference's io.emit reaches connected sockets only)."""
+        if not self._queues:
+            _, self._control_offset = tail_control(self.api.sf_dir, 0)
+        self._queues.setdefault(conn_id, deque())
+        self._ensure_poller()
+
+    def _ensure_poller(self) -> None:
+        """(lock held) (re)start the poller if it is not running — a
+        crashed tick must not silently strand every live subscription
+        server-wide."""
+        if self._thread is None or not self._thread.is_alive():
+            self._thread = threading.Thread(target=self._run, daemon=True)
+            self._thread.start()
+
+    def unregister(self, req_uuid: str) -> None:
+        with self._lock:
+            self._subs.pop(req_uuid, None)
+            self._drop_idle_cursors()
+
+    def unregister_conn(self, conn_id: int) -> None:
+        with self._lock:
+            self._subs = {
+                u: s for u, s in self._subs.items() if s["conn"] != conn_id
+            }
+            self._queues.pop(conn_id, None)
+            self._overflow.discard(conn_id)
+            self._drop_idle_cursors()
+
+    def _drop_idle_cursors(self) -> None:
+        """(lock held) Forget the kind cursor once its last subscriber
+        leaves: the cursor otherwise never advances while the kind is
+        idle (_tick skips subscriber-less kinds), so the NEXT register
+        — whose setdefault would lose to the stale value — would make
+        the first tick scan and collect the entire idle gap
+        (stale_cursor, head] in driver memory. With no subscriber
+        there is nothing to deliver, so the correct resume point is
+        the new subscription's own attach head."""
+        live_kinds = {s["kind"] for s in self._subs.values()}
+        for kind in list(self._cursor):
+            if kind not in live_kinds:
+                del self._cursor[kind]
+
+    def drain(self, conn_id: int) -> list[tuple[str, dict, list[str]]]:
+        """All queued (kind, row, reqUUIDs) for a connection; raises
+        on overflow so the session drops the slow consumer."""
+        if conn_id in self._overflow:
+            raise ConnectionError("live queue overflow (slow consumer)")
+        q = self._queues.get(conn_id)
+        out: list = []
+        while q:
+            try:
+                out.append(q.popleft())
+            except IndexError:
+                break
+        return out
+
+    def _run(self) -> None:
+        while not self._stop.wait(self.poll_sec):
+            with self._lock:
+                if not self._queues:
+                    # nobody attached: the next _open starts a new poller
+                    self._thread = None
+                    return
+            try:
+                self._tick()
+            except Exception as e:  # noqa: BLE001 — a bad tick must
+                # never kill the server-wide poller; record and retry
+                # next tick (register() also restarts a dead thread)
+                self.last_error = e
+
+    def _broadcast_control(self) -> None:
+        """Fan new fork_event / lib_update journal lines to EVERY
+        connection queue (the reference broadcasts both to all stream
+        clients: ws-router.ts:72-83, socketManager.ts:237-239). A fork
+        also REWINDS the kind cursors and attach heads below the fork
+        point, so the winning chain's replacement rows — whose
+        sequence numbers are at or below what we already served — are
+        re-scanned and re-delivered after the notice."""
+        events, self._control_offset = tail_control(
+            self.api.sf_dir, self._control_offset
+        )
+        if not events:
+            return
+        with self._lock:
+            for ev in events:
+                if ev.get("event") == "fork_event":
+                    fork = int(ev["data"].get("starting_block", 0))
+                    for kind in list(self._cursor):
+                        self._cursor[kind] = min(
+                            self._cursor[kind], fork - 1
+                        )
+                    for s in self._subs.values():
+                        s["head"] = min(s["head"], fork - 1)
+                for cid, q in self._queues.items():
+                    if len(q) >= self.max_queue:
+                        self._overflow.add(cid)
+                    else:
+                        q.append(("control", ev, []))
+
+    def _tick(self) -> None:
+        # control first: the fork notice must be queued ahead of the
+        # corrected rows the rewound scan below will produce
+        self._broadcast_control()
+        with self._lock:
+            snapshot = {u: dict(s) for u, s in self._subs.items()}
+            cursors = dict(self._cursor)
+        if not snapshot:
+            return
+        by_kind: dict[str, dict] = {}
+        for u, s in snapshot.items():
+            by_kind.setdefault(s["kind"], {})[u] = s["req"]
+        for kind, reqs in by_kind.items():
+            stream_kind = "deltas" if kind == "delta" else "actions"
+            try:
+                rows, cur = self.api.live_tagged_rows(
+                    reqs,
+                    cursors.get(kind, 0),
+                    stream_kind,
+                    window_cap=self.window_cap,
+                )
+            except Exception as e:  # lake mid-swap: retry next tick
+                self.last_error = e
+                continue
+            with self._lock:
+                for d, targets in rows:
+                    seq = int(d.get("event_id", 0))
+                    per_conn: dict[int, list[str]] = {}
+                    for u in targets:
+                        s = self._subs.get(u)
+                        if s is not None and seq > s["head"]:
+                            per_conn.setdefault(s["conn"], []).append(u)
+                    for cid, uuids in per_conn.items():
+                        q = self._queues.get(cid)
+                        if q is None:
+                            continue
+                        if len(q) >= self.max_queue:
+                            self._overflow.add(cid)
+                        else:
+                            q.append((kind, d, uuids))
+                self._cursor[kind] = max(
+                    cur, self._cursor.get(kind, 0)
+                )
+                # Catch-up progress signal: when the
+                # window cap chunked this tick (cursor still behind
+                # the head after a deep rewind / stale cursor), tell
+                # every subscribed client how far the relay has
+                # transmitted — the lastTransmittedBlock analog of
+                # the reference's chunked history fill
+                # (socketManager.ts:584-615) — so a client can
+                # distinguish multi-tick backlog from live tail.
+                try:
+                    head = self.api.head_block()
+                except Exception:
+                    head = cur
+                if self._cursor[kind] < head:
+                    status = {
+                        "kind": kind,
+                        "lastTransmittedBlock": self._cursor[kind],
+                        "headBlock": head,
+                    }
+                    kind_conns = {
+                        s["conn"]
+                        for s in snapshot.values()
+                        if s["kind"] == kind
+                    }
+                    for cid in kind_conns:
+                        q = self._queues.get(cid)
+                        if q is not None and len(q) < self.max_queue:
+                            q.append(("status", status, []))
 
 
 def make_server(
@@ -566,19 +785,24 @@ def make_server(
                 self.send_header("Content-Type", "text/event-stream")
                 self.send_header("Cache-Control", "no-cache")
                 self.end_headers()
-                for d in rows:
-                    if "_control" in d:
-                        # indexer control broadcast (fork_event /
-                        # lib_update) as a NAMED SSE event, so stock
-                        # EventSource listeners bind by event name
-                        frame = (
-                            f"event: {d['_control']}\n"
-                            f"data: {json.dumps(d['data'], default=str)}\n\n"
-                        )
-                    else:
-                        frame = f"data: {json.dumps(d, default=str)}\n\n"
-                    self.wfile.write(frame.encode())
-                self.wfile.write(b"event: end\ndata: {}\n\n")
+                try:
+                    for d in rows:
+                        if "_control" in d:
+                            # indexer control broadcast (fork_event /
+                            # lib_update) as a NAMED SSE event, so stock
+                            # EventSource listeners bind by event name
+                            frame = (
+                                f"event: {d['_control']}\n"
+                                f"data: {json.dumps(d['data'], default=str)}\n\n"
+                            )
+                        else:
+                            frame = f"data: {json.dumps(d, default=str)}\n\n"
+                        self.wfile.write(frame.encode())
+                    self.wfile.write(b"event: end\ndata: {}\n\n")
+                except ConnectionError:
+                    pass  # the client left, or overflowed its relay queue
+                finally:
+                    rows.close()  # a follower leaves the relay now
                 return
             handler = api.routes.get(url.path)
             if handler is None:

@@ -45,8 +45,12 @@ class ResponseCache:
     ``ttls`` mirrors the reference's route->TTL map; routes absent from
     it use ``default_ttl``. ``clock`` is injectable for tests. A TTL of
     0 (or negative) disables caching for that route — the reference
-    does the same by omitting the route from its map.
+    does the same by omitting the route from its map. The store holds
+    at most ``MAX_ENTRIES`` responses (Redis evicts under maxmemory
+    the same way).
     """
+
+    MAX_ENTRIES = 4096
 
     ttls: dict[str, float] = field(default_factory=dict)
     default_ttl: float = 30.0
@@ -80,7 +84,17 @@ class ResponseCache:
         ttl = self.ttl_for(route)
         if ttl <= 0:
             return
-        self._store[cache_key(route, params)] = (self.clock() + ttl, payload)
+        now = self.clock()
+        if len(self._store) >= self.MAX_ENTRIES:
+            # expiry is otherwise lazy, so a key never read again (any
+            # client can vary `account`) would stay forever; a copy,
+            # because handler threads write the store concurrently
+            for key, (expires, _) in self._store.copy().items():
+                if now >= expires:
+                    self._store.pop(key, None)
+            if len(self._store) >= self.MAX_ENTRIES:
+                self._store.clear()  # tables._READ_CACHE's policy
+        self._store[cache_key(route, params)] = (now + ttl, payload)
 
 
 def timed_query(

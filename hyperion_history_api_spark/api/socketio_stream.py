@@ -26,41 +26,37 @@ Wire contract reproduced (websocket transport, ``EIO=4``):
   the 120 s forceful-disconnect timeout (functions.ts:258-305) —
   and finishes with ``message {type:"history_end", reqUUID,
   mode:"history", message:{lastBlock}}`` (:611-616).
-- Live phase (round-11): every request (unless ``ignore_live``)
-  ATTACHES to the SERVER-wide :class:`LiveRelay` before its ack
-  (socketManager.ts:413-419 shared maps + the indexer relay), and
-  rows arriving past the attach-time head are pushed as ``message
-  {type:"<kind>_trace", mode:"live", targets:[reqUUIDs...],
+- Live phase: every request (unless ``ignore_live``) registers on
+  the API's one :class:`~.http_server.LiveRelay` (``api.relay``)
+  before its ack (socketManager.ts:413-419 shared maps + the indexer
+  relay), and rows arriving past the attach-time head are pushed as
+  ``message {type:"<kind>_trace", mode:"live", targets:[reqUUIDs...],
   message}`` — one emit per row naming every matching subscription,
   exactly the fan-out of routeActionTraceToClients/
-  routeDeltaToClients (:409-495). ONE routed scan per tick serves
-  every connection (not per-connection polling); no ack on live
-  messages, matching the reference.
-- Multiplexing (round-11): one connection holds N concurrent
-  subscriptions (the reqUUID-keyed maps of socketManager.ts:267-300);
-  concurrent history replays interleave at batch granularity
-  (round-robin, one in-flight ack at a time), and
-  ``cancel_stream_request {reqUUID}`` detaches ONE subscription —
-  mid-replay cancels included — leaving the rest streaming.
+  routeDeltaToClients (:409-495). The same relay serves the SSE and
+  WS ``follow=true`` streams: one routed scan per kind per tick
+  serves every connection; no ack on live messages, matching the
+  reference.
+- Multiplexing: one connection holds N concurrent subscriptions (the
+  reqUUID-keyed maps of socketManager.ts:267-300); concurrent history
+  replays interleave at batch granularity (round-robin, one
+  in-flight ack per subscription), and ``cancel_stream_request
+  {reqUUID}`` detaches ONE subscription — mid-replay cancels
+  included — leaving the rest streaming.
 
-Rows come from :meth:`..api.http_server.HyperionAPI.stream_rows`
-(history, ``mark_filtered`` form) and
-:meth:`~.http_server.HyperionAPI.live_tagged_rows` (live — the
-vectorized route_to_subscribers fan-out: ONE codegen'd pass over new
-rows regardless of subscription count), so this layer adds framing
-only. Scale shape matches ``ws_stream.py``: one session thread per
-connection, one bounded batch in memory, backpressure by blocking on
-the client ack.
+History rows come from :meth:`~.http_server.HyperionAPI.stream_rows`
+(the bounded replay, ``mark_filtered`` form) and live rows from the
+relay, so this layer adds framing only. Scale shape matches
+``ws_stream.py``: one session thread per connection, one bounded
+batch in memory, backpressure by blocking on the client ack.
 """
 
 from __future__ import annotations
 
 import json
 import socket
-import threading
 import time
 import uuid
-from collections import deque
 
 from ..sources.ship_ws import OP_TEXT, WebSocketConnection
 from .ws_stream import (
@@ -70,243 +66,6 @@ from .ws_stream import (
     normalize_params,
 )
 
-
-class LiveRelay:
-    """ONE live poller per server — the reference's relay shape
-    (socketManager.ts attaches every socket's requests to shared maps
-    and a single indexer relay pushes each trace once, :409-495).
-    Per-connection polling would run 2 Spark jobs per tick per
-    connection; here one routed scan per kind per tick serves every
-    connection's live subscriptions regardless of count (the
-    route_to_subscribers pass is already vectorized over requests).
-
-    Sessions register (conn_id, reqUUID, kind, req, attach-head) and
-    drain their queue from their own thread — the relay thread never
-    touches a socket (ws.send is not locked). A queue past
-    ``max_queue`` marks the connection overflowed; its next drain
-    raises and the session drops the slow consumer instead of
-    buffering unboundedly.
-
-    Attach races mirror the reference: a subscription registered while
-    a tick is mid-route can miss rows scanned in that tick (at most
-    one poll interval), exactly as a socket attaching mid-trace-fanout
-    misses the in-flight trace."""
-
-    def __init__(
-        self,
-        api,
-        poll_sec: float,
-        max_queue: int = 50_000,
-        window_cap: int = 50_000,
-    ) -> None:
-        self.api = api
-        self.poll_sec = poll_sec
-        self.max_queue = max_queue
-        self.window_cap = window_cap
-        self._lock = threading.Lock()
-        self._subs: dict[str, dict] = {}  # reqUUID -> conn/kind/req/head
-        self._queues: dict[int, deque] = {}
-        self._overflow: set[int] = set()
-        self._cursor: dict[str, int] = {}
-        self._stop = threading.Event()
-        self._thread: threading.Thread | None = None
-        self.last_error: Exception | None = None
-        # control-journal tail cursor: start at the journal's current
-        # end — clients only see forks/LIB advances from NOW on (the
-        # reference's io.emit reaches connected sockets only)
-        from ..streaming.control_log import tail_control
-
-        _, self._control_offset = tail_control(api.sf_dir, 0)
-
-    def close(self) -> None:
-        self._stop.set()
-
-    def attach(self, conn_id: int) -> None:
-        """Give a connection its queue at ACCEPT time (round-13): the
-        reference io.emit()s fork_event / lib_update to every connected
-        socket (ws-router.ts appendIdAndEmit), including history-only
-        or not-yet-subscribed clients — so control broadcasts must not
-        depend on a live registration existing. Also (re)starts the
-        poller: with zero subscriptions a tick is just the cheap
-        journal tail + early return (no Spark jobs)."""
-        with self._lock:
-            self._queues.setdefault(conn_id, deque())
-            self._ensure_poller()
-
-    def register(
-        self, conn_id: int, req_uuid: str, kind: str, req, head: int
-    ) -> None:
-        with self._lock:
-            self._queues.setdefault(conn_id, deque())
-            self._subs[req_uuid] = {
-                "conn": conn_id,
-                "kind": kind,
-                "req": req,
-                "head": head,
-            }
-            self._cursor.setdefault(kind, head)
-            self._ensure_poller()
-
-    def _ensure_poller(self) -> None:
-        """(lock held) (re)start the poller if it never started OR
-        died — a crashed tick must not silently strand every live
-        subscription server-wide."""
-        if self._thread is None or not self._thread.is_alive():
-            self._thread = threading.Thread(target=self._run, daemon=True)
-            self._thread.start()
-
-    def unregister(self, req_uuid: str) -> None:
-        with self._lock:
-            self._subs.pop(req_uuid, None)
-            self._drop_idle_cursors()
-
-    def unregister_conn(self, conn_id: int) -> None:
-        with self._lock:
-            self._subs = {
-                u: s for u, s in self._subs.items() if s["conn"] != conn_id
-            }
-            self._queues.pop(conn_id, None)
-            self._overflow.discard(conn_id)
-            self._drop_idle_cursors()
-
-    def _drop_idle_cursors(self) -> None:
-        """(lock held) Forget the kind cursor once its last subscriber
-        leaves: the cursor otherwise never advances while the kind is
-        idle (_tick skips subscriber-less kinds), so the NEXT register
-        — whose setdefault would lose to the stale value — would make
-        the first tick scan and collect the entire idle gap
-        (stale_cursor, head] in driver memory. With no subscriber
-        there is nothing to deliver, so the correct resume point is
-        the new subscription's own attach head."""
-        live_kinds = {s["kind"] for s in self._subs.values()}
-        for kind in list(self._cursor):
-            if kind not in live_kinds:
-                del self._cursor[kind]
-
-    def drain(self, conn_id: int) -> list[tuple[str, dict, list[str]]]:
-        """All queued (kind, row, reqUUIDs) for a connection; raises
-        on overflow so the session drops the slow consumer."""
-        if conn_id in self._overflow:
-            raise ConnectionError("live queue overflow (slow consumer)")
-        q = self._queues.get(conn_id)
-        out: list = []
-        while q:
-            try:
-                out.append(q.popleft())
-            except IndexError:
-                break
-        return out
-
-    def _run(self) -> None:
-        while not self._stop.wait(self.poll_sec):
-            try:
-                self._tick()
-            except Exception as e:  # noqa: BLE001 — a bad tick must
-                # never kill the server-wide poller; record and retry
-                # next tick (register() also restarts a dead thread)
-                self.last_error = e
-
-    def _broadcast_control(self) -> None:
-        """Fan new fork_event / lib_update journal lines to EVERY
-        connection queue (the reference broadcasts both to all stream
-        clients: ws-router.ts:72-83, socketManager.ts:237-239). A fork
-        also REWINDS the kind cursors and attach heads below the fork
-        point, so the winning chain's replacement rows — whose
-        sequence numbers are at or below what we already served — are
-        re-scanned and re-delivered after the notice."""
-        from ..streaming.control_log import tail_control
-
-        events, self._control_offset = tail_control(
-            self.api.sf_dir, self._control_offset
-        )
-        if not events:
-            return
-        with self._lock:
-            for ev in events:
-                if ev.get("event") == "fork_event":
-                    fork = int(ev["data"].get("starting_block", 0))
-                    for kind in list(self._cursor):
-                        self._cursor[kind] = min(
-                            self._cursor[kind], fork - 1
-                        )
-                    for s in self._subs.values():
-                        s["head"] = min(s["head"], fork - 1)
-                for cid, q in self._queues.items():
-                    if len(q) >= self.max_queue:
-                        self._overflow.add(cid)
-                    else:
-                        q.append(("control", ev, []))
-
-    def _tick(self) -> None:
-        # control first: the fork notice must be queued ahead of the
-        # corrected rows the rewound scan below will produce
-        self._broadcast_control()
-        with self._lock:
-            snapshot = {u: dict(s) for u, s in self._subs.items()}
-            cursors = dict(self._cursor)
-        if not snapshot:
-            return
-        by_kind: dict[str, dict] = {}
-        for u, s in snapshot.items():
-            by_kind.setdefault(s["kind"], {})[u] = s["req"]
-        for kind, reqs in by_kind.items():
-            stream_kind = "deltas" if kind == "delta" else "actions"
-            try:
-                rows, cur = self.api.live_tagged_rows(
-                    reqs,
-                    cursors.get(kind, 0),
-                    stream_kind,
-                    window_cap=self.window_cap,
-                )
-            except Exception as e:  # lake mid-swap: retry next tick
-                self.last_error = e
-                continue
-            with self._lock:
-                for d, targets in rows:
-                    seq = int(d.get("event_id", 0))
-                    per_conn: dict[int, list[str]] = {}
-                    for u in targets:
-                        s = self._subs.get(u)
-                        if s is not None and seq > s["head"]:
-                            per_conn.setdefault(s["conn"], []).append(u)
-                    for cid, uuids in per_conn.items():
-                        q = self._queues.get(cid)
-                        if q is None:
-                            continue
-                        if len(q) >= self.max_queue:
-                            self._overflow.add(cid)
-                        else:
-                            q.append((kind, d, uuids))
-                self._cursor[kind] = max(
-                    cur, self._cursor.get(kind, 0)
-                )
-                # Catch-up progress signal (round-14): when the
-                # window cap chunked this tick (cursor still behind
-                # the head after a deep rewind / stale cursor), tell
-                # every subscribed client how far the relay has
-                # transmitted — the lastTransmittedBlock analog of
-                # the reference's chunked history fill
-                # (socketManager.ts:584-615) — so a client can
-                # distinguish multi-tick backlog from live tail.
-                try:
-                    head = self.api.head_block()
-                except Exception:
-                    head = cur
-                if self._cursor[kind] < head:
-                    status = {
-                        "kind": kind,
-                        "lastTransmittedBlock": self._cursor[kind],
-                        "headBlock": head,
-                    }
-                    kind_conns = {
-                        s["conn"]
-                        for s in snapshot.values()
-                        if s["kind"] == kind
-                    }
-                    for cid in kind_conns:
-                        q = self._queues.get(cid)
-                        if q is not None and len(q) < self.max_queue:
-                            q.append(("status", status, []))
 
 #: engine.io packet types
 EIO_OPEN, EIO_CLOSE, EIO_PING, EIO_PONG, EIO_MESSAGE = "0", "1", "2", "3", "4"
@@ -350,7 +109,6 @@ class SocketIOStreamServer(CappedWsServer):
         chain: str = "spark",
         max_connections: int = 64,
         handshake_timeout: float = HANDSHAKE_TIMEOUT,
-        live_poll_sec: float = 0.5,
     ) -> None:
         self.api = api
         self.ack_timeout = ack_timeout
@@ -365,13 +123,8 @@ class SocketIOStreamServer(CappedWsServer):
         import hashlib
 
         self.chain_id = hashlib.sha256(chain.encode()).hexdigest()
-        self.live_poll_sec = live_poll_sec
-        self.relay = LiveRelay(api, live_poll_sec)
+        self.relay = api.relay
         super().__init__(host, port, max_connections, handshake_timeout)
-
-    def close(self) -> None:
-        self.relay.close()
-        super().close()
 
     def _reject_frames(self) -> list[str]:
         # the Engine.IO OPEN handshake MUST precede any Socket.IO
@@ -398,12 +151,8 @@ class SocketIOStreamServer(CappedWsServer):
         ]
 
     # -- per-connection session --------------------------------------------
-    def _session(self, ws: WebSocketConnection, conn_id: int) -> None:
+    def _session(self, ws: WebSocketConnection, _accept_n: int) -> None:
         sid = uuid.uuid4().hex
-        # queue control broadcasts (fork_event / lib_update) from the
-        # moment the socket connects — NOT from first live register
-        # (reference: io.emit reaches every connected socket)
-        self.relay.attach(conn_id)
         ws.send(
             EIO_OPEN
             + json.dumps(
@@ -476,7 +225,7 @@ class SocketIOStreamServer(CappedWsServer):
         # client events that arrive out of turn — drained by the main
         # loop, so a cancel or a NEW stream request mid-replay is
         # served instead of dropped. Batch acks never block the
-        # session (round-12): they resolve asynchronously through the
+        # session: they resolve asynchronously through the
         # main recv loop into the per-subscription ack state.
         pending: list[tuple[int | None, list]] = []
 
@@ -502,11 +251,11 @@ class SocketIOStreamServer(CappedWsServer):
 
         # -- per-connection subscription state (reqUUID-keyed, the
         # socketManager.ts:267-300 maps); live routing itself lives in
-        # the SERVER-wide relay (one routed scan per tick for every
+        # the API's relay (one routed scan per tick for every
         # connection) — the session only registers/drains -------------
         my_live: set[str] = set()  # this session's live reqUUIDs
         replays: list[dict] = []  # round-robin history pumps
-        # per-subscription in-flight acks (round-12): the reference's
+        # per-subscription in-flight acks: the reference's
         # per-scroll emitWithAck promises are independent, so one slow
         # acker must not stall the OTHER subscription's batches on the
         # same socket. Acks resolve asynchronously through the main
@@ -644,8 +393,7 @@ class SocketIOStreamServer(CappedWsServer):
             """One history batch from the first replay with NO
             in-flight ack, then rotate — concurrent replays interleave
             at batch granularity with one outstanding ack PER
-            SUBSCRIPTION (round-12; previously a single shared
-            in-flight ack let a slow acker on A delay B's batches),
+            SUBSCRIPTION (a slow acker on A never delays B's batches),
             matching the reference's independent per-scroll
             emitWithAck promises."""
             resolve_acks()
@@ -760,6 +508,11 @@ class SocketIOStreamServer(CappedWsServer):
                 )
 
         # -- main loop: drain events, pump replays, drain the relay -----
+        # queue control broadcasts (fork_event / lib_update) from the
+        # socket.io connect — NOT from first live register (reference:
+        # io.emit reaches every connected socket). The relay hands out
+        # the id: SSE and WS followers share it too.
+        conn_id = self.relay.attach()
         try:
             while True:
                 if pending:
@@ -773,7 +526,7 @@ class SocketIOStreamServer(CappedWsServer):
                 if replays:
                     wait = 0.02
                 else:
-                    wait = min(self.ping_interval, self.live_poll_sec / 2)
+                    wait = min(self.ping_interval, self.relay.poll_sec / 2)
                 ws.sock.settimeout(wait)
                 try:
                     etype, body = recv_packet()

@@ -19,10 +19,12 @@ Protocol (one connection = one subscription):
    after ``ack_timeout`` (the reference's 120 s
    ``forceful disconnection``, functions.ts:292-301);
 3. after the head drains, ``follow=true`` switches to the live tail —
-   the SAME pruned re-scan poll as the SSE route, pushed over the
-   same connection under the same credit rule (replay → live
-   switchover, exactly-once per sequence because both phases advance
-   one cursor);
+   the connection registers on the API's one
+   :class:`~.http_server.LiveRelay` at the attach head (the same
+   relay the SSE route and the Socket.IO sessions drain), and
+   arrivals are pushed over the same connection under the same
+   credit rule (replay → live switchover, exactly-once per sequence:
+   the replay ends at the head the relay routes past);
 4. ``{"type":"end"}`` closes the window (read_until reached or idle
    timeout), then the RFC close handshake.
 
@@ -99,9 +101,12 @@ class CappedWsServer:
     def close(self) -> None:
         self._stop.set()
         try:
-            self.sock.close()
+            # shutdown wakes the accept() blocked in _accept_loop;
+            # close alone leaves that thread parked forever
+            self.sock.shutdown(socket.SHUT_RDWR)
         except OSError:
             pass
+        self.sock.close()
 
     def _accept_loop(self) -> None:
         n = 0
@@ -202,7 +207,10 @@ class WsStreamServer(CappedWsServer):
         batch_size = int(params.pop("batch_size", 50))
         window = max(1, int(params.pop("window", 4)))
         rows = self.api.stream_rows(params)
-        self._pump(ws, rows, batch_size, window, conn_id)
+        try:
+            self._pump(ws, rows, batch_size, window, conn_id)
+        finally:
+            rows.close()  # a dropped follower leaves the relay now
 
     def _await_ack(self, ws: WebSocketConnection) -> int:
         """Block (bounded) for one ack frame; returns the acked seq."""

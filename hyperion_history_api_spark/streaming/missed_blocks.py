@@ -109,111 +109,6 @@ def detect_missed_stateful(slots: DataFrame) -> DataFrame:
     )
 
 
-MISSED_TWS_SCHEMA = (
-    "producer string, missed bigint, up_to bigint, missed_total bigint"
-)
-
-
-class _MissedProcessor:
-    """State-v2 (``transformWithStateInPandas``) twin of
-    :func:`detect_missed_stateful` — same per-batch gap semantics,
-    plus a capability the v1 API cannot express cleanly: a SECOND
-    typed state variable carrying the producer's lifetime missed
-    total, emitted alongside each batch's delta. v1's single untyped
-    state tuple would force packing both counters into one row and
-    versioning it by hand; state-v2 keeps independent named variables
-    (RocksDB column families) with independent schemas/TTLs.
-
-    Defined lazily as a plain class and upgraded to a
-    ``StatefulProcessor`` subclass at call time so importing this
-    module never requires the streaming-state machinery.
-    """
-
-    def init(self, handle) -> None:
-        self._last = handle.getValueState("last_seen", "last_seen bigint")
-        self._total = handle.getValueState(
-            "missed_total", "missed_total bigint"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        (producer,) = key
-        slots: list[int] = []
-        for pdf in rows:
-            slots.extend(int(s) for s in pdf["slot"])
-        if not slots:
-            return
-        last = self._last.get()[0] if self._last.exists() else None
-        slots.sort()
-        missed = 0
-        prev = last
-        for s in slots:
-            if prev is not None and s > prev + 1:
-                missed += s - prev - 1
-            prev = max(s, prev) if prev is not None else s
-        self._last.update((int(prev),))
-        total = (
-            self._total.get()[0] if self._total.exists() else 0
-        ) + missed
-        self._total.update((int(total),))
-        if missed:
-            yield pd.DataFrame(
-                {
-                    "producer": [producer],
-                    "missed": [missed],
-                    "up_to": [int(prev)],
-                    "missed_total": [int(total)],
-                }
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def detect_missed_tws(slots: DataFrame) -> DataFrame:
-    """Spark-4 state-v2 form of the missed-slot detector:
-    ``transformWithStateInPandas`` with two named ValueState
-    variables (``last_seen``, ``missed_total``). Semantics per batch
-    are identical to :func:`detect_missed_stateful` (pinned by
-    tests/test_streaming.py), with a cumulative ``missed_total``
-    column the reference's master also tracks across its lifetime
-    (master.ts:1325-1340 accumulates per-producer misses).
-
-    Requires the RocksDB state store provider (bundled with Spark 4):
-    ``spark.sql.streaming.stateStore.providerClass =
-    ...RocksDBStateStoreProvider`` — which is also the 100-TB answer:
-    state lives off-heap and spills to disk, so producer-count
-    cardinality never pressures executor heaps.
-
-    ENV-LIMITED in this container (the PIL/av pattern,
-    sources/multimodal.py): state-v2's Python worker protocol speaks
-    protobuf to the JVM state server, and ``google.protobuf`` is not
-    installed here — the guard below fails fast with a pointer to the
-    v1 detector instead of a mid-query worker crash. The processor
-    logic itself is real and the equality test runs wherever protobuf
-    exists (tests/test_streaming.py skips on ImportError).
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas needs the `protobuf` package "
-            "(state-v2 Python<->state-server protocol), which is not in "
-            "this container; use detect_missed_stateful (same per-batch "
-            "semantics, v1 state API)"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    proc = type(
-        "_MissedProcessorTWS", (_MissedProcessor, StatefulProcessor), {}
-    )()
-    return slots.groupBy("producer").transformWithStateInPandas(
-        proc,
-        outputStructType=MISSED_TWS_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 from ..udf_compat import pickle_by_value as _pbv  # noqa: E402
 
 _pbv(__name__)

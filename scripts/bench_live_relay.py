@@ -1,17 +1,18 @@
-"""LiveRelay fan-out bench (round-12 verdict item 3).
+"""LiveRelay fan-out bench.
 
-The round-11 scale claim: ONE routed scan per kind per tick serves
-every connection's live subscriptions (api/socketio_stream.py
-LiveRelay), so per-tick cost is flat in connection count. This bench
-measures it directly: N in {1, 8, 32, 64} connections, each holding a
-mixed action/delta live subscription with its own filter, against a
-mutable sf0.1 events lake.
+The scale claim: ONE routed scan per kind per tick serves every
+connection's live subscriptions (api/http_server.py LiveRelay, the
+one relay SSE, WS and Socket.IO followers share), so per-tick cost is
+flat in connection count. This bench measures it directly: N in {1,
+8, 32, 64} connections, each holding a mixed action/delta live
+subscription with its own filter, against a mutable sf0.1 events
+lake.
 
 Per N it reports, over T relay ticks driven manually (no wall-clock
 poll wait — we time the tick body itself):
 
 - idle_tick_sec / idle_tick_jobs: tick on an unchanged lake
-  (round-12: ZERO Spark jobs — the fingerprint-memoized head proves
+  (ZERO Spark jobs — the fingerprint-memoized head proves
   the window empty)
 - arrival_tick_sec / arrival_tick_jobs: tick right after a spool file
   lands (expected: exactly ONE routed-scan job per kind present,
@@ -74,9 +75,8 @@ def main() -> None:
         .getOrCreate()
     )
     sc = spark.sparkContext
-    from hyperion_history_api_spark.api.http_server import HyperionAPI
+    from hyperion_history_api_spark.api.http_server import HyperionAPI, LiveRelay
     from hyperion_history_api_spark.api.serving_cache import ResponseCache
-    from hyperion_history_api_spark.api.socketio_stream import LiveRelay
     from hyperion_history_api_spark.tables import load_tables
 
     results: dict = {

@@ -8,8 +8,10 @@ api/http_routes.py), the SSE stream, the acked WebSocket stream
 (api/ws_stream.py — the Socket.IO replay contract on plain RFC 6455),
 AND the Socket.IO-compatible endpoint a stock Hyperion stream client
 connects to (api/socketio_stream.py, EIO=4 websocket transport) from
-one long-lived SparkSession; Ctrl-C stops. A fleet deployment runs N
-of these per shared session pool behind any HTTP load balancer.
+one long-lived SparkSession; Ctrl-C stops. Live subscribers on all
+three stream surfaces share the API's one relay (``api.relay``). A
+fleet deployment runs N of these per shared session pool behind any
+HTTP load balancer.
 """
 
 from __future__ import annotations

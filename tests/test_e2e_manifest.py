@@ -634,7 +634,7 @@ def test_socketio_live_phase_contract_over_manifest(spark, tmp_path):
     hi = N_TRANSFERS + N_CUSTOM
 
     api = HyperionAPI(spark, str(lake), cache=ResponseCache(default_ttl=0))
-    srv = SocketIOStreamServer(api, ack_timeout=30.0, live_poll_sec=0.2)
+    srv = SocketIOStreamServer(api, ack_timeout=30.0)
     try:
         c = SocketIOClient("127.0.0.1", srv.port)
         # subscribe account 2 with a value filter; history = manifest

@@ -225,6 +225,227 @@ def test_sse_live_tail_follow_mode(spark, tmp_path):
         srv.shutdown()
 
 
+def _sse_rows(url: str) -> list[dict]:
+    """Every row frame of one SSE response, up to its end event."""
+    rows, event = [], None
+    with urllib.request.urlopen(url, timeout=120) as r:
+        for raw in r:
+            line = raw.decode().rstrip("\n")
+            if line.startswith("event: "):
+                event = line[7:]
+            elif line.startswith("data: "):
+                if event == "end":
+                    return rows
+                if event is None:
+                    rows.append(json.loads(line[6:]))
+                event = None
+    raise AssertionError("stream closed before its end event")
+
+
+def test_sse_and_ws_followers_share_the_api_relay(spark, tmp_path):
+    """Two SSE and one WS follow=true subscriptions on one API all
+    register on ``api.relay`` (the relay a Socket.IO server on that
+    API drains too) and each receives its matching arrivals exactly
+    once. With the poller stopped and ticks driven by hand, an arrival
+    tick runs ONE routed-scan job for the three followers, not one
+    scan per subscriber."""
+    import shutil
+    import threading
+    import time as _time
+
+    from hyperion_history_api_spark.api.socketio_stream import (
+        SocketIOStreamServer,
+    )
+    from hyperion_history_api_spark.api.ws_stream import WsStreamServer
+    from hyperion_history_api_spark.sources.ship_ws import (
+        OP_TEXT,
+        WebSocketClient,
+    )
+
+    lake = tmp_path / "lake"
+    evdir = lake / "events.parquet"
+    evdir.mkdir(parents=True)
+    shutil.copy(f"{SF_DIR}/events.parquet", evdir / "part-000.parquet")
+    for t in (
+        "region nation customer supplier part orders lineitem "
+        "documents embeddings"
+    ).split():
+        shutil.copy(f"{SF_DIR}/{t}.parquet", lake / f"{t}.parquet")
+    head = load_tables(spark, str(lake))["events"].agg(
+        F.max("event_id")
+    ).first()[0]
+
+    api = HyperionAPI(spark, str(lake), cache=ResponseCache(default_ttl=0))
+    relay = api.relay
+    srv, _ = serve_background(api)
+    wss = WsStreamServer(api, ack_timeout=30.0)
+    sio = SocketIOStreamServer(api)
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+
+    def land(first: int) -> None:
+        spark.createDataFrame(
+            [
+                (first, 7, "click", 1.5),
+                (first + 1, 8, "view", 2.5),
+                (first + 2, 7, "view", 3.5),
+                (first + 3, 7, "click", 4.5),
+            ],
+            "event_id long, user_id long, event_type string, value double",
+        ).withColumn(
+            "ts", F.timestamp_micros(F.lit(1_700_000_000_000_000))
+        ).coalesce(1).write.mode("append").parquet(str(evdir))
+
+    def ws_rows(request: dict) -> list[dict]:
+        ws = WebSocketClient("127.0.0.1", wss.port)
+        ws.send(json.dumps(request), OP_TEXT)
+        rows = []
+        while True:
+            frame = json.loads(ws.recv()[1])
+            if frame["type"] == "end":
+                ws.close()
+                return rows
+            rows.extend(frame["rows"])
+            ws.send(json.dumps({"type": "ack", "seq": frame["seq"]}), OP_TEXT)
+
+    def follow(first: int) -> tuple[dict, list[threading.Thread]]:
+        """Open the three followers for arrivals from ``first`` on and
+        wait until all three are registered on the relay."""
+        got: dict = {}
+        start = f"start_from={first}&follow=true&idle_timeout=60"
+        jobs = {
+            "sse7": lambda: _sse_rows(
+                f"{base}/v2/stream?account=7&read_until={first + 3}&{start}"
+            ),
+            "sse8": lambda: _sse_rows(
+                f"{base}/v2/stream?account=8&read_until={first + 1}&{start}"
+            ),
+            "ws7": lambda: ws_rows(
+                {
+                    "account": 7,
+                    "filters": [
+                        {"field": "value", "operator": "gte", "value": 3}
+                    ],
+                    "start_from": first,
+                    "read_until": first + 3,
+                    "follow": "true",
+                    "idle_timeout": 60,
+                    "batch_size": 1,
+                    "window": 8,
+                }
+            ),
+        }
+        threads = [
+            threading.Thread(
+                target=lambda k=k, fn=fn: got.__setitem__(k, fn()),
+                daemon=True,
+            )
+            for k, fn in jobs.items()
+        ]
+        for t in threads:
+            t.start()
+        deadline = _time.monotonic() + 60
+        while len(relay._subs) < 3 and _time.monotonic() < deadline:
+            _time.sleep(0.05)
+        assert len({s["conn"] for s in relay._subs.values()}) == 3
+        return got, threads
+
+    def delivered(got: dict, threads: list, first: int) -> None:
+        for t in threads:
+            t.join(timeout=60)
+        ids = {k: [d["event_id"] for d in rows] for k, rows in got.items()}
+        assert ids == {
+            "sse7": [first, first + 2, first + 3],
+            "sse8": [first + 1],
+            "ws7": [first + 2, first + 3],
+        }
+        deadline = _time.monotonic() + 10
+        while relay._subs and _time.monotonic() < deadline:
+            _time.sleep(0.05)
+        assert relay._subs == {}  # every follower left the relay
+
+    try:
+        assert sio.relay is relay
+        got, threads = follow(head + 1)
+        land(head + 1)
+        delivered(got, threads, head + 1)
+
+        # the same delivery with the poller stopped: one hand-driven
+        # tick routes the arrival file to all three followers
+        relay.close()
+        deadline = _time.monotonic() + 10
+        while relay._thread is not None and relay._thread.is_alive():
+            assert _time.monotonic() < deadline
+            _time.sleep(0.05)
+        got, threads = follow(head + 5)
+        land(head + 5)
+        api.head_block()  # the head memo sees the new file outside the tick
+        sc = spark.sparkContext
+        sc.setJobGroup("relay-shared-arrival", "relay tick")
+        try:
+            relay._tick()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        routed = [
+            jid
+            for jid in st.getJobIdsForGroup("relay-shared-arrival")
+            if any(
+                "collect at" in st.getStageInfo(s).name
+                for s in st.getJobInfo(jid).stageIds
+                if st.getStageInfo(s) is not None
+            )
+        ]
+        assert len(routed) == 1
+        delivered(got, threads, head + 5)
+    finally:
+        sio.close()
+        wss.close()
+        srv.shutdown()
+
+
+def test_relay_ids_and_poller_lifetime_under_contention(tmp_path):
+    """Connections attaching and leaving from more threads than cores:
+    every attach gets a fresh id and finds a running poller, and the
+    poller ends once the last connection has left."""
+    import sys
+    import threading
+    import time as _time
+    from types import SimpleNamespace
+
+    from hyperion_history_api_spark.api.http_server import LiveRelay
+
+    relay = LiveRelay(SimpleNamespace(sf_dir=str(tmp_path)), poll_sec=0.001)
+    ids, stranded = [], []
+
+    def churn():
+        for _ in range(200):
+            cid = relay.attach()
+            ids.append(cid)
+            _time.sleep(0.0005)
+            poller = relay._thread
+            if poller is None or not poller.is_alive():
+                stranded.append(cid)
+            relay.unregister_conn(cid)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=churn) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert len(ids) == len(set(ids)) == 16 * 200
+    assert stranded == []
+    deadline = _time.monotonic() + 5
+    while relay._thread is not None and _time.monotonic() < deadline:
+        _time.sleep(0.01)
+    assert relay._thread is None  # a tick found no connection
+
+
 def test_more_routes_and_post_bodies(server, spark):
     """get_deltas through the predicate compiler, created-accounts /
     creator / top-holders pages, and POSTed JSON bodies reaching the
@@ -324,13 +545,10 @@ def test_review_fixes_stream_400_post_bools_empty_health(server, spark, tmp_path
     assert health["health"][1]["status"] == "Error"
 
 
-@pytest.mark.parametrize(
-    "bad", ["poll_sec=-1", "poll_sec=nan", "idle_timeout=nan"]
-)
+@pytest.mark.parametrize("bad", ["idle_timeout=nan"])
 def test_stream_timing_params_rejected_before_stream(server, bad):
-    """poll_sec must be finite and > 0, idle_timeout finite and >= 0:
-    a bad value is a 400 before the event-stream header, not a
-    time.sleep failure mid-stream or (nan) a tail that never idles
+    """idle_timeout must be finite and >= 0: a bad value is a 400
+    before the event-stream header, not (nan) a tail that never idles
     out."""
     base, _ = server
     with pytest.raises(urllib.error.HTTPError) as ei:

@@ -448,7 +448,7 @@ def test_live_relay_tick_job_counts(spark, tmp_path):
 
     from hyperion_history_api_spark.api.http_server import HyperionAPI
     from hyperion_history_api_spark.api.serving_cache import ResponseCache
-    from hyperion_history_api_spark.api.socketio_stream import LiveRelay
+    from hyperion_history_api_spark.api.http_server import LiveRelay
     from hyperion_history_api_spark.tables import load_tables
 
     lake = tmp_path / "lake"

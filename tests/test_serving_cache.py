@@ -115,3 +115,35 @@ def test_envelope_integration(spark, sf_dir):
     assert r2["actions"] == r1["actions"]
     head = ev.agg(F.max("event_id")).first()[0]
     assert r1["last_indexed_block"] == head
+
+
+def test_store_stays_bounded_under_distinct_keys():
+    """Keys that are never read again must not grow the store past
+    MAX_ENTRIES: a put on a full store drops the expired entries, and
+    clears the store when none have expired. Hits and misses behave
+    as before."""
+
+    class SmallCache(ResponseCache):
+        MAX_ENTRIES = 8
+
+    clock = FakeClock()
+    cache = SmallCache(ttls={"/r": 5.0}, clock=clock)
+    for i in range(30):
+        clock.t = float(i)  # each entry outlives the next 4 puts
+        cache.put("/r", {"account": i}, {"i": i})
+        assert len(cache._store) <= 8
+    # expired entries went first: the live ones are all still there
+    assert len(cache._store) >= 5
+    live = timed_query(cache, "/r", {"account": 29}, lambda: {"i": -1})
+    assert live["cached"] is True and live["i"] == 29
+    gone = timed_query(cache, "/r", {"account": 0}, lambda: {"i": -1})
+    assert gone["cached"] is False and gone["i"] == -1
+    assert (cache.hits, cache.misses) == (1, 1)
+
+    # nothing expires: a full store is cleared, never grown
+    cache = SmallCache(ttls={"/r": 1e9}, clock=FakeClock())
+    for i in range(20):
+        cache.put("/r", {"account": i}, {"i": i})
+        assert len(cache._store) <= 8
+    assert timed_query(cache, "/r", {"account": 19}, dict)["cached"] is True
+    assert ResponseCache.MAX_ENTRIES >= 1000  # far above one api-serve run

@@ -294,7 +294,7 @@ def test_live_phase_after_history_end(spark, tmp_path):
     head = ev.agg(F.max("event_id")).first()[0]
 
     api = HyperionAPI(spark, str(lake), cache=ResponseCache(default_ttl=0))
-    srv = SocketIOStreamServer(api, ack_timeout=30.0, live_poll_sec=0.2)
+    srv = SocketIOStreamServer(api, ack_timeout=30.0)
     try:
         c = SocketIOClient("127.0.0.1", srv.port)
         # sub A: account 7, history bound DEFAULTS to the head
@@ -496,7 +496,7 @@ def test_live_phase_mixed_kinds_one_socket(spark, tmp_path):
     head = ev.agg(F.max("event_id")).first()[0]
 
     api = HyperionAPI(spark, str(lake), cache=ResponseCache(default_ttl=0))
-    srv = SocketIOStreamServer(api, ack_timeout=30.0, live_poll_sec=0.2)
+    srv = SocketIOStreamServer(api, ack_timeout=30.0)
     try:
         c = SocketIOClient("127.0.0.1", srv.port)
         ra = c.emit_with_ack(
@@ -586,7 +586,7 @@ def test_live_relay_shared_across_connections(spark, tmp_path):
     head = ev.agg(F.max("event_id")).first()[0]
 
     api = HyperionAPI(spark, str(lake), cache=ResponseCache(default_ttl=0))
-    srv = SocketIOStreamServer(api, ack_timeout=30.0, live_poll_sec=0.2)
+    srv = SocketIOStreamServer(api, ack_timeout=30.0)
     try:
         c1 = SocketIOClient("127.0.0.1", srv.port)
         c2 = SocketIOClient("127.0.0.1", srv.port)
@@ -637,7 +637,7 @@ def test_fork_event_reaches_live_client_before_corrected_rows(
     ev = load_tables(spark, str(lake))["events"]
     head = int(ev.agg(F.max("event_id")).first()[0])
     api = HyperionAPI(spark, str(lake), cache=ResponseCache(default_ttl=0))
-    srv = SocketIOStreamServer(api, ack_timeout=30.0, live_poll_sec=0.2)
+    srv = SocketIOStreamServer(api, ack_timeout=30.0)
     try:
         c = SocketIOClient("127.0.0.1", srv.port)
         ra = c.emit_with_ack("action_stream_request", {"account": 7})
@@ -754,7 +754,7 @@ def test_control_broadcast_reaches_presubscription_client(
 
     lake, _ = _mutable_lake(tmp_path)
     api = HyperionAPI(spark, str(lake), cache=ResponseCache(default_ttl=0))
-    srv = SocketIOStreamServer(api, ack_timeout=30.0, live_poll_sec=0.2)
+    srv = SocketIOStreamServer(api, ack_timeout=30.0)
     try:
         c = SocketIOClient("127.0.0.1", srv.port)
         # no stream request at all — just a connected socket
@@ -788,7 +788,7 @@ def test_relay_drops_stale_kind_cursor_on_last_unregister(spark):
     otherwise the next register's setdefault would lose to the stale
     value and the first tick would scan (and collect) the whole idle
     gap (stale_cursor, head] at once (r12 ADVICE, medium)."""
-    from hyperion_history_api_spark.api.socketio_stream import LiveRelay
+    from hyperion_history_api_spark.api.http_server import LiveRelay
 
     api = HyperionAPI(spark, SF_DIR, cache=ResponseCache(default_ttl=0))
     relay = LiveRelay(api, poll_sec=3600)  # ticks irrelevant here
@@ -842,7 +842,7 @@ def test_live_relay_survives_tick_crash_and_restarts(spark):
     import threading as _threading
     import time as _time
 
-    from hyperion_history_api_spark.api.socketio_stream import LiveRelay
+    from hyperion_history_api_spark.api.http_server import LiveRelay
 
     api = HyperionAPI(spark, SF_DIR, cache=ResponseCache(default_ttl=0))
     relay = LiveRelay(api, poll_sec=0.05)
@@ -956,7 +956,7 @@ def test_relay_catchup_progress_across_capped_ticks(spark, tmp_path):
     relay is live-tailing (cursor == head)."""
     import shutil as _shutil
 
-    from hyperion_history_api_spark.api.socketio_stream import LiveRelay
+    from hyperion_history_api_spark.api.http_server import LiveRelay
 
     lake = tmp_path / "catchuplake"
     lake.mkdir()

@@ -578,103 +578,6 @@ def test_enrich_with_blocks_stream_stream_join(spark, tmp_path):
     assert len(want) == 8  # every action found its block
 
 
-def test_detect_missed_tws_matches_v1_and_accumulates(spark, tmp_path):
-    """State-v2 twin (transformWithStateInPandas, RocksDB provider):
-    batch-for-batch equal to detect_missed_stateful on the same
-    waves, with the lifetime missed_total the second state variable
-    carries across micro-batches. Skips where the state-v2 Python
-    protocol's protobuf dependency is absent (this container); the
-    guard test below always runs."""
-    pytest.importorskip("google.protobuf")
-    from hyperion_history_api_spark.streaming.missed_blocks import (
-        detect_missed_tws,
-    )
-
-    src = str(tmp_path / "slots_tws")
-    ckpt = str(tmp_path / "ckpt_tws")
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        # wave 1: alice 1,2,5 (miss 3,4); bob contiguous
-        spark.createDataFrame(
-            [("alice", s) for s in [1, 2, 5]]
-            + [("bob", s) for s in [1, 2, 3]],
-            "producer string, slot long",
-        ).coalesce(1).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "producer string, slot long"
-        ).parquet(src)
-        out = detect_missed_tws(stream)
-
-        def drain():
-            q = (
-                out.writeStream.format("memory")
-                .queryName("missed_tws")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        drain()
-        rows = {
-            r.producer: (r.missed, r.up_to, r.missed_total)
-            for r in spark.sql("select * from missed_tws").collect()
-        }
-        assert rows == {"alice": (2, 5, 2)}
-
-        # wave 2: alice misses 2 more (6,7 skipped to 8); bob misses 1
-        spark.createDataFrame(
-            [("alice", 8), ("bob", 5)], "producer string, slot long"
-        ).coalesce(1).write.mode("append").parquet(src)
-        drain()
-        rows2 = {
-            (r.producer, r.missed, r.up_to, r.missed_total)
-            for r in spark.sql("select * from missed_tws").collect()
-        }
-        assert rows2 == {
-            ("alice", 2, 5, 2),   # wave 1
-            ("alice", 2, 8, 4),   # wave 2 delta + lifetime total
-            ("bob", 1, 5, 1),
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-
-
-def test_detect_missed_tws_guard_when_protobuf_missing(spark):
-    """Where protobuf is unavailable, the state-v2 detector fails
-    FAST at plan time with a pointer to the v1 twin — not a
-    mid-query Python-worker crash."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        pytest.skip("protobuf present; guard branch not reachable")
-    except ImportError:
-        pass
-    from hyperion_history_api_spark.streaming.missed_blocks import (
-        detect_missed_tws,
-    )
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .selectExpr("CAST(value AS STRING) AS producer", "value AS slot")
-    )
-    with pytest.raises(ImportError, match="protobuf.*detect_missed_stateful"):
-        detect_missed_tws(stream)
-
-
 def test_compile_request_missing_routing_column_never_matches(spark):
     """A subscription that names an action (or scope) the schema has
     no column for must match NOTHING — dropping the predicate
