@@ -267,7 +267,9 @@ class HyperionAPI:
         reference's io.emit forwarding, ws-router.ts:72-83) as
         ``{"_control", "data"}`` and matching arrivals as rows. A fork
         rewinds the relay below the fork point, so corrected rows are
-        re-delivered after the notice. Ends on a row at or past
+        re-delivered after the notice. A drain that comes back empty
+        yields ``{"_idle": True}``, on which a consumer flushes what it
+        batched and sends nothing. Ends on a row at or past
         ``read_until`` (rows past it are dropped) or after
         ``idle_timeout`` seconds with no row and no control event."""
         relay = self.relay
@@ -287,7 +289,11 @@ class HyperionAPI:
             start_from = req.start_from or 0
             deadline = time.monotonic() + idle_timeout
             while time.monotonic() < deadline:
-                for entry, d, _ in relay.drain(conn):
+                entries = relay.drain(conn)
+                if not entries:
+                    yield {"_idle": True}
+                    time.sleep(relay.poll_sec / 2)
+                for entry, d, _ in entries:
                     if entry == "control":
                         yield {"_control": d.get("event"), "data": d.get("data", {})}
                     elif entry == "status" or d["event_id"] < start_from:
@@ -301,7 +307,6 @@ class HyperionAPI:
                         if d["event_id"] == read_until:
                             return
                     deadline = time.monotonic() + idle_timeout
-                time.sleep(relay.poll_sec / 2)
         finally:
             relay.unregister_conn(conn)
 
@@ -391,17 +396,18 @@ class HyperionAPI:
         after: int,
         kind: str = "actions",
         window_cap: int = 50_000,
-    ) -> tuple[list, int]:
+    ) -> tuple[list, int, int]:
         """One poll of the live relay: rows past ``after`` tagged with
         the reqUUIDs they match (the vectorized ws-router fan-out,
         streaming/filters.py:route_to_subscribers — ONE codegen'd
         pass over the new rows regardless of subscription count).
 
-        Returns ``(rows, new_cursor)`` where rows are
+        Returns ``(rows, new_cursor, head)`` where rows are
         ``(row_dict, [req_uuids])`` in sequence order — non-matching
         rows are scanned (they advance the cursor; the next poll must
-        not re-read them) but not returned — and ``new_cursor`` is
-        the highest sequence scanned (``after`` when idle).
+        not re-read them) but not returned —, ``new_cursor`` is the
+        highest sequence scanned (``after`` when idle) and ``head`` is
+        the one head read that bounded the scan.
         ``requests`` maps reqUUID -> StreamRequest (from
         :meth:`parse_stream_request`)."""
         from ..streaming.filters import route_to_subscribers
@@ -414,7 +420,7 @@ class HyperionAPI:
         # arrival-driven, at any connection count.
         head = self.head_block()
         if head <= after:
-            return [], after
+            return [], after, head
         # Cap the scan window: a deep fork rewind (or any stale
         # cursor) must not materialize an unbounded (after, head]
         # batch in driver memory at once. Sequence ids are dense-ish
@@ -459,7 +465,7 @@ class HyperionAPI:
             cursor = max(cursor, int(d["event_id"]))
             out.append((d, targets))
         out.sort(key=lambda dt: int(dt[0]["event_id"]))
-        return out, cursor
+        return out, cursor, head
 
 
 class LiveRelay:
@@ -663,7 +669,7 @@ class LiveRelay:
         for kind, reqs in by_kind.items():
             stream_kind = "deltas" if kind == "delta" else "actions"
             try:
-                rows, cur = self.api.live_tagged_rows(
+                rows, cur, head = self.api.live_tagged_rows(
                     reqs,
                     cursors.get(kind, 0),
                     stream_kind,
@@ -698,11 +704,9 @@ class LiveRelay:
                 # transmitted — the lastTransmittedBlock analog of
                 # the reference's chunked history fill
                 # (socketManager.ts:584-615) — so a client can
-                # distinguish multi-tick backlog from live tail.
-                try:
-                    head = self.api.head_block()
-                except Exception:
-                    head = cur
+                # distinguish multi-tick backlog from live tail. The
+                # head is the one the scan read: a file landing after
+                # that read is the next tick's arrival, not a backlog.
                 if self._cursor[kind] < head:
                     status = {
                         "kind": kind,
@@ -787,6 +791,8 @@ def make_server(
                 self.end_headers()
                 try:
                     for d in rows:
+                        if "_idle" in d:
+                            continue
                         if "_control" in d:
                             # indexer control broadcast (fork_event /
                             # lib_update) as a NAMED SSE event, so stock

@@ -322,11 +322,12 @@ def state_time_travel_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
     query reads snapshot VERSION 1 back through ``read_version`` —
     exactly the state the store served between the commits, which the
     oracle reproduces as the as-of-800 window. The store is built once
-    per (sf_dir, source fingerprint) under the lake root and the timed
-    plan is a pure parquet scan of the retained v1 snapshot (snapshot
-    isolation: commit 2 never mutated v1's files).
+    per (sf_dir, source fingerprint) inside a snapshot of the lake store
+    ``state_tt``, so its version 1 is that build's first commit, and the
+    timed plan is a pure parquet scan of the retained v1 snapshot
+    (snapshot isolation: commit 2 never mutated v1's files).
     """
-    from ..sources.lake import ensure_built
+    from ..sources.lake import ensure_snapshot
     from ..streaming.state_store import ParquetStateStore
 
     def open_store(path: str) -> ParquetStateStore:
@@ -349,7 +350,7 @@ def state_time_travel_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     store = open_store(
-        ensure_built(sf_dir, "state_tt", "events.parquet", "state_tt:v2", build)
+        ensure_snapshot(sf_dir, "state_tt", "events.parquet", "state_tt:v2", build)
     )
     v1 = store.read_version(1)
     return v1.select(

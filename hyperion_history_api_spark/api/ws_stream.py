@@ -251,6 +251,12 @@ class WsStreamServer(CappedWsServer):
             batch.clear()
 
         for row in rows:
+            if "_idle" in row:
+                # the follow stream found nothing new: a live row must
+                # not wait in a partial batch for batch_size more
+                if batch:
+                    send_batch()
+                continue
             if "_control" in row:
                 # indexer control broadcast (fork_event / lib_update):
                 # flush queued rows first so the fork notice precedes

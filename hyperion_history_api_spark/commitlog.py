@@ -1,6 +1,6 @@
 """ONE transactional commit protocol for every versioned parquet store
-(`ParquetStateStore`, `DedupIndexStore`, `InvertedIndexStore` and the
-serving-lake refresh):
+(`ParquetStateStore`, `DedupIndexStore`, `InvertedIndexStore` and every
+write-once lake store of ``sources/lake``, its refresh included):
 one hard-link + atomic-manifest + retention-GC implementation, so
 there is one crash-safety argument to audit instead of one per store.
 
@@ -14,20 +14,22 @@ The protocol — the heart of Delta/Iceberg commits on plain parquet:
    ``os.replace`` (atomic on POSIX), so a reader resolving the
    manifest sees the old version or the new one, never a mix;
 3. superseded snapshots are retained for ``keep_versions`` commits (a
-   lagging reader keeps its files), then GC'd — unlinking removes one
-   NAME per file; inodes shared with newer snapshots live on.
+   Spark plan that listed a version's files still finds them), then
+   GC'd — unlinking removes one NAME per file; inodes shared with
+   newer snapshots live on.
 
 Crash-consistency: a writer dying before the ``os.replace`` leaves an
-orphan snapshot dir (collected by a later GC pass) and an intact old
-pointer; dying after it is a completed commit. Single-writer per
-store, as with the reference's per-table indexer worker
-(src/indexer/helpers/elastic-routes.ts / mongo-routes.ts keep one
-routing/commit layer per store — the anchor for centralizing this).
+orphan snapshot dir and an intact old pointer; dying after it is a
+completed commit. Single-writer per store, as with the reference's
+per-table indexer worker (src/indexer/helpers/elastic-routes.ts /
+mongo-routes.ts keep one routing/commit layer per store — the anchor
+for centralizing this).
 
-Which rows go into a snapshot is store policy. The bucketed
-copy-on-write merge of the state store and the swap-in-place lake
-refresh keep theirs. The append-only frame-delta policy shared by the dedup
-index and the inverted index lives here in :class:`FrameDeltaStore`:
+Which rows go into a snapshot is store policy: the state store's
+bucketed copy-on-write merge, the lake's full build and block-part
+increment (``sources/lake``, ``sources/lake_refresh``), and the
+append-only frame-delta policy shared by the dedup index and the
+inverted index, which lives here in :class:`FrameDeltaStore`:
 the ``batch_id`` replay guard, appending deltas next to hard-linked
 history, running every write leg before the one publish, the
 ``delta_commits`` / ``last_ingest_batch`` manifest carry and
@@ -90,12 +92,14 @@ def link_tree(src, dst) -> None:
 
 
 def replace_dir(tmp, dest) -> None:
-    """Atomically-enough swap ``dest`` to the fully-built ``tmp``
-    directory: rename the old dir aside, rename ``tmp`` in, then
-    remove the old — a reader holding open files keeps them (POSIX
-    unlink semantics); a new reader sees the complete old or the
-    complete new directory. Used by the swap-in-place stores (the
-    serving-lake refresh) where the path itself is the pointer."""
+    """Swap ``dest`` to the fully-built ``tmp`` directory: rename the
+    old dir aside, rename ``tmp`` in, then remove the old. A new reader
+    sees the complete old or the complete new directory, but a Spark
+    scan planned on the old one fails: it lists paths when it plans and
+    opens them when a task runs. Only for directories a streaming sink
+    writes by path — ``streaming/decode_ingest``'s blacklist swap and
+    ``streaming/ingest.compact_log``; stores publish through
+    :class:`CommitLog`."""
     from pathlib import Path
 
     tmp, dest = Path(tmp), Path(dest)
@@ -174,6 +178,19 @@ class CommitLog:
         snap = f"v{version:08d}-{uuid.uuid4().hex[:8]}"
         os.makedirs(self.path, exist_ok=True)
         return snap, self.snapshot_dir(snap)
+
+    def commit(self, write: Callable[[str], None], *, extra: dict | None = None) -> str:
+        """Allocate the next snapshot, ``write(snap_dir)`` into it and
+        publish it; returns the snapshot dir. A failed write removes
+        its dir and publishes nothing."""
+        snap, snap_dir = self.new_snapshot()
+        try:
+            write(snap_dir)
+        except BaseException:
+            shutil.rmtree(snap_dir, ignore_errors=True)
+            raise
+        self.publish(snap, extra=extra)
+        return snap_dir
 
     def publish(
         self,

@@ -431,12 +431,13 @@ class InvertedIndexStore(FrameDeltaStore):
 def ensure_index_store(
     spark: SparkSession, sf_dir: str, name: str, source: str, key: str, build
 ) -> InvertedIndexStore:
-    """The write-once stored index at ``<lake_root>/<sf>/<name>``;
-    ``build(store)`` fills it when :func:`~.lake.ensure_built` finds it
-    missing or stale."""
-    from .lake import ensure_built
+    """The write-once stored index ``name`` under the lake root: the
+    current snapshot of :func:`~.lake.ensure_snapshot` holds an
+    :class:`InvertedIndexStore` with its own commit log, which
+    ``build(store)`` fills when the snapshot is missing or stale."""
+    from .lake import ensure_snapshot
 
-    path = ensure_built(
+    path = ensure_snapshot(
         sf_dir,
         name,
         source,

@@ -22,27 +22,32 @@ and points queries at the stored parquet:
   single un-partitioned state tables, exactly as the reference keeps
   them in single upsert indices (index-templates.ts:277-372).
 
-At 100 TB this materialization IS the ingest pipeline's output
-(``streaming/ingest.backfill_write`` writes the same layout); here the
-lake doubles as a cache keyed by (LAKE_VERSION, source fingerprint) so
-tests/bench/driver runs rebuild only when the model or the source
-parquet changes. Publication is atomic: build into a temp dir, then a
-single ``os.rename`` — a reader either sees the complete old table or
-the complete new one (the same pointer-swap idea as
-``streaming/state_store``'s manifest commit).
+Every write-once store under the lake root is one
+:class:`~..commitlog.CommitLog` at ``<lake_root>/<sf>/<name>/``: these
+tables, the ANN and curation artifacts of :func:`ensure_parquet`, the
+stored inverted indexes and the time-travel state store. The manifest
+carries the store's freshness key (``LAKE_VERSION``, the caller's key
+and the source fingerprint); :func:`ensure_snapshot` builds a stale or
+missing store into a fresh snapshot dir, publishes it as the next
+version and returns the current snapshot dir. A DataFrame planned on
+version N keeps its files through version N+1's publish, and
+``lake_refresh`` publishes its increments the same way. The lake is
+derived from the source parquet; the streaming sink's log
+(``streaming/ingest``) is a separate store that ``lake_refresh`` folds
+in.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
+import threading
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..commitlog import CommitLog
 from . import hyperion_model as hm
 
 # Bump when any builder in hyperion_model changes its derivation —
@@ -92,57 +97,75 @@ def lake_root() -> Path:
     return Path(os.environ.get("SPARK_GRAFT_LAKE_DIR", str(_REPO_ROOT / ".lake")))
 
 
-def _source_fingerprint(sf_dir: str, source_file: str = "events.parquet") -> dict:
-    st = os.stat(os.path.join(sf_dir, source_file))
-    return {"file": source_file, "size": st.st_size, "mtime_ns": st.st_mtime_ns}
+def _source_fingerprint(path: str) -> list:
+    """What a store is built from: a file's size and mtime, or the
+    name and size of every data file of a directory (a growable spool)
+    — not the directory's own stat, which bookkeeping writes bump."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return [st.st_size, st.st_mtime_ns]
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                full = os.path.join(root, f)
+                out.append([os.path.relpath(full, path), os.path.getsize(full)])
+    return sorted(out)
 
 
-_BUILT: set[tuple[str, str]] = set()  # (path, build key) built or fresh
+_LOCKS: dict[str, threading.RLock] = {}
 
 
-def ensure_built(sf_dir: str, name: str, source: str, key: str, build) -> str:
-    """The path of the write-once store ``<lake_root>/<sf>/<name>``.
+def store_lock(path: str) -> threading.RLock:
+    """The lock around one store's check-and-build and increments:
+    concurrent callers in this process wait for one build, then read
+    the version it published. Across processes the last publish wins;
+    readers stay safe either way."""
+    return _LOCKS.setdefault(path, threading.RLock())
 
-    ``build(path)`` runs only when the store's ``BUILD_KEY`` file does
-    not hold ``key`` plus the size/mtime fingerprint of
-    ``sf_dir/source``, so regenerated fixture data, or two sf_dirs
-    sharing a basename, never serve a stale store. A stale directory
-    is cleared first: the build starts from an empty store, whose
-    version 1 is the build's first commit. A (path, key) this process
-    already built or found fresh is not checked again."""
+
+def store_log(sf_dir: str, name: str) -> CommitLog:
     sf_name = os.path.basename(os.path.normpath(sf_dir))
-    path = str(lake_root() / sf_name / name)
-    build_key = key + "|" + json.dumps(
-        _source_fingerprint(sf_dir, source), sort_keys=True
-    )
-    key_file = os.path.join(path, "BUILD_KEY")
-    if (path, build_key) not in _BUILT:
-        try:
-            fresh = Path(key_file).read_text() == build_key
-        except OSError:
-            fresh = False
-        if not fresh:
-            shutil.rmtree(path, ignore_errors=True)
-            build(path)
-            Path(key_file).write_text(build_key)
-        _BUILT.add((path, build_key))
-    return path
+    return CommitLog(str(lake_root() / sf_name / name))
 
 
-def _manifest_path(dest: Path) -> Path:
-    return dest / "_lake_manifest.json"
+def ensure_snapshot(sf_dir: str, name: str, source: str, key: str, build) -> str:
+    """The current snapshot dir of the write-once store ``name``.
+
+    ``build(snap_dir)`` writes the next version only when the manifest's
+    freshness key is not (``LAKE_VERSION``, ``key``, ``source`` and the
+    fingerprint of ``sf_dir/source``): a model bump, a new caller key
+    (e.g. quantizer parameters) or changed source data. A plan on the
+    previous version keeps its files for the retention window."""
+    log = store_log(sf_dir, name)
+    with store_lock(log.path):
+        # fingerprinted under the lock: a caller that waited out a build
+        # must not rebuild from a fingerprint taken before it
+        want = json.dumps(
+            [LAKE_VERSION, key, source, _source_fingerprint(os.path.join(sf_dir, source))]
+        )
+        m = log.read_manifest()
+        if m is not None and m.get("key") == want:
+            return log.snapshot_dir(m["snapshot"])
+        return log.commit(build, extra={"key": want})
 
 
-def _is_fresh(dest: Path, fingerprint: dict, extra_key: str = "") -> bool:
-    try:
-        m = json.loads(_manifest_path(dest).read_text())
-    except (OSError, ValueError):
-        return False
-    return (
-        m.get("version") == LAKE_VERSION
-        and m.get("source") == fingerprint
-        and m.get("extra", "") == extra_key
-    )
+def write_sorted(
+    df: DataFrame, path: str, partition_col: str | None, sort_cols: list[Column]
+) -> None:
+    """Append ``df`` under ``path`` in its stored shape: partitioned
+    frames lead the sort with the partition column, so the partitioned
+    write's required ordering is already met and the writer inserts no
+    sort of its own (which would destroy the index sort per directory)."""
+    if partition_col is None:
+        (df.sortWithinPartitions(*sort_cols) if sort_cols else df).write.mode(
+            "append"
+        ).parquet(path)
+        return
+    df.repartition(partition_col).sortWithinPartitions(
+        F.col(partition_col), *sort_cols
+    ).write.mode("append").partitionBy(partition_col).parquet(path)
 
 
 def ensure_parquet(
@@ -156,59 +179,17 @@ def ensure_parquet(
     sort_cols: list[Column] | None = None,
     extra_key: str = "",
 ) -> DataFrame:
-    """Generic write-once materializer with atomic publication.
-
-    ``build_fn() -> DataFrame`` runs only when the stored copy is
-    missing or stale (model version bump, source parquet change, or a
-    different ``extra_key`` — e.g. new quantizer parameters). The build
-    lands in a temp dir and is published by a single ``os.rename``, so
-    concurrent readers see either the complete old table or the
-    complete new one.
-    """
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    dest = lake_root() / sf_name / name
-    fingerprint = _source_fingerprint(sf_dir, source_file)
-    if not _is_fresh(dest, fingerprint, extra_key):
-        dest.parent.mkdir(parents=True, exist_ok=True)
-        df = build_fn()
-        tmp = dest.parent / f".{name}.tmp.{uuid.uuid4().hex[:8]}"
-        if partition_col is not None:
-            # the partition col leads the sort so the partitioned
-            # write's required ordering (partition cols first) is
-            # already satisfied and the writer does NOT insert its own
-            # sort, which would destroy the index sort per directory.
-            writer = df.repartition(partition_col).sortWithinPartitions(
-                F.col(partition_col), *(sort_cols or [])
-            )
-            writer.write.mode("overwrite").partitionBy(partition_col).parquet(
-                str(tmp)
-            )
-        else:
-            writer = (
-                df.sortWithinPartitions(*sort_cols) if sort_cols else df
-            )
-            writer.write.mode("overwrite").parquet(str(tmp))
-        _manifest_path(tmp).write_text(
-            json.dumps(
-                {
-                    "version": LAKE_VERSION,
-                    "source": fingerprint,
-                    "extra": extra_key,
-                }
-            )
-        )
-        if dest.exists():
-            shutil.rmtree(dest, ignore_errors=True)
-        try:
-            os.rename(tmp, dest)
-        except OSError:
-            # a concurrent builder published first — keep theirs
-            shutil.rmtree(tmp, ignore_errors=True)
-    # fingerprint-keyed: a republished lake dir (new manifest mtime)
-    # misses and re-reads; an unchanged one skips the JVM re-analysis
+    """The stored frame ``build_fn()``, read from the current snapshot
+    of store ``name``; :func:`ensure_snapshot` decides when
+    ``build_fn`` runs (``extra_key`` is the caller's key)."""
     from ..tables import cached_read_parquet
 
-    return cached_read_parquet(spark, str(dest))
+    def build(snap_dir: str) -> None:
+        write_sorted(build_fn(), snap_dir, partition_col, sort_cols or [])
+
+    return cached_read_parquet(
+        spark, ensure_snapshot(sf_dir, name, source_file, extra_key, build)
+    )
 
 
 def lake_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -17,15 +17,16 @@ partition subset):
    ``events`` override) — one narrow codegen pass over the batch.
 2. Diff the touched ``block_part`` set (one tiny distinct over the
    batch — an ingest batch spans O(1) parts, not O(history)).
-3. Build the next snapshot in a temp dir: every UNTOUCHED partition
+3. Build the next snapshot dir: every UNTOUCHED partition
    directory is carried over by hard links (metadata-only, no data
    copy, no read); each TOUCHED partition is rewritten as
    merge(existing rows of that partition, new rows) with the natural
    key deduplicated (replay idempotence — the at-least-once source can
    re-deliver a batch) and the reference index sort restored
    (index-templates.ts:29-40).
-4. Publish with the same atomic ``os.rename`` as the full build —
-   a reader sees the complete old snapshot or the complete new one.
+4. Publish it as the store's next ``CommitLog`` version, carrying the
+   freshness key and an ``increments`` count — the same publish as the
+   full build, so a plan on the previous version keeps its files.
 
 Cost per batch: O(new rows + rows in touched partitions), independent
 of table history size. That is the property that lets the lake track a
@@ -34,25 +35,21 @@ live chain continuously.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..commitlog import link_tree as _link_tree
-from ..commitlog import replace_dir
+from ..commitlog import link_tree
 from . import hyperion_model as hm
 from .stats import invalidate_stats
 from .lake import (
     BLOCK_PART_SIZE,
-    LAKE_VERSION,
-    _manifest_path,
     _sort_cols,
-    lake_root,
     lake_table,
+    store_lock,
+    store_log,
+    write_sorted,
 )
 
 # natural key per partitioned table: merge dedupes on it so a replayed
@@ -66,6 +63,45 @@ _INCR_BUILDERS = {
 }
 
 
+def _publish_increment(
+    spark: SparkSession, sf_dir: str, name: str, keep, rewrite, **journal
+) -> DataFrame:
+    """The one incremental publish of partitioned table ``name``: the
+    current snapshot's ``block_part`` dirs whose part ``keep`` accepts
+    are hard-linked into a new snapshot, ``rewrite(current)``'s rows
+    are written beside them in the index sort, and the next version is
+    published with the same freshness key, one more increment and
+    ``journal``. A failed write publishes nothing."""
+    if name not in _INCR_BUILDERS:
+        raise ValueError(f"not an incrementally-maintained table: {name}")
+    log = store_log(sf_dir, name)
+    with store_lock(log.path):
+        current = lake_table(spark, sf_dir, name)  # builds on first use
+        m = log.read_manifest()
+        cur_dir = log.snapshot_dir(m["snapshot"])
+
+        def write(snap_dir: str) -> None:
+            for entry in os.scandir(cur_dir):
+                part = entry.name.partition("block_part=")[2]
+                if part and keep(int(part)):
+                    link_tree(entry.path, os.path.join(snap_dir, entry.name))
+            write_sorted(rewrite(current), snap_dir, "block_part", _sort_cols(name))
+
+        snap_dir = log.commit(
+            write,
+            extra={
+                "key": m["key"],
+                "increments": m.get("increments", 0) + 1,
+                **journal,
+            },
+        )
+    # an increment changes row counts and NDVs: drop this lake's cached
+    # planner statistics (sources/stats.py) so the next chooser-planned
+    # query re-analyzes instead of deciding on stale cardinalities
+    invalidate_stats(sf_dir)
+    return spark.read.parquet(snap_dir)
+
+
 def refresh_partitioned(
     spark: SparkSession, sf_dir: str, name: str, new_events: DataFrame
 ) -> DataFrame:
@@ -76,60 +112,21 @@ def refresh_partitioned(
     """
     if name not in _INCR_BUILDERS:
         raise ValueError(f"not an incrementally-maintained table: {name}")
-    # ensure a committed base snapshot exists (builds on first use)
-    lake_table(spark, sf_dir, name)
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    dest = lake_root() / sf_name / name
-
     new_rows = _INCR_BUILDERS[name](spark, sf_dir, events=new_events).withColumn(
         "block_part", (F.col("block_num") / F.lit(BLOCK_PART_SIZE)).cast("bigint")
     )
-    changed = [r[0] for r in new_rows.select("block_part").distinct().collect()]
+    changed = {r[0] for r in new_rows.select("block_part").distinct().collect()}
     if not changed:
-        return spark.read.parquet(str(dest))
-
-    key = _NATURAL_KEY[name]
-    existing = spark.read.parquet(str(dest))
-    merged = (
-        existing.where(F.col("block_part").isin(changed))
+        return lake_table(spark, sf_dir, name)
+    return _publish_increment(
+        spark,
+        sf_dir,
+        name,
+        lambda part: part not in changed,
+        lambda current: current.where(F.col("block_part").isin(list(changed)))
         .unionByName(new_rows)
-        .dropDuplicates([key])
+        .dropDuplicates([_NATURAL_KEY[name]]),
     )
-
-    tmp = dest.parent / f".{name}.refresh.{uuid.uuid4().hex[:8]}"
-    try:
-        # rewrite ONLY the touched partitions, index sort restored
-        (
-            merged.repartition("block_part")
-            .sortWithinPartitions(F.col("block_part"), *_sort_cols(name))
-            .write.mode("append")
-            .partitionBy("block_part")
-            .parquet(str(tmp))
-        )
-        changed_dirs = {f"block_part={int(p)}" for p in changed}
-        for entry in dest.iterdir():
-            if not entry.is_dir() or entry.name in changed_dirs:
-                continue
-            _link_tree(entry, tmp / entry.name)
-        # carry the manifest forward: same freshness identity (version +
-        # source fingerprint), plus an increment journal the freshness
-        # check ignores
-        try:
-            manifest = json.loads(_manifest_path(dest).read_text())
-        except (OSError, ValueError):
-            manifest = {"version": LAKE_VERSION, "source": None, "extra": ""}
-        manifest["increments"] = int(manifest.get("increments", 0)) + 1
-        _manifest_path(tmp).write_text(json.dumps(manifest))
-        replace_dir(tmp, dest)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    # a committed increment changes row counts and NDVs: drop this
-    # lake's cached planner statistics (sources/stats.py) so the next
-    # chooser-planned query re-analyzes instead of deciding on stale
-    # cardinalities — the refresh hook the stats module documents.
-    invalidate_stats(sf_dir)
-    return spark.read.parquet(str(dest))
 
 
 def refresh_all(
@@ -153,51 +150,18 @@ def retract_blocks_above(
     A fork can only invalidate the chain TIP, so only partitions at or
     above ``fork_block``'s part are rewritten (usually exactly one);
     the rest of history hard-links into the next snapshot unchanged.
-    Same atomic publish as the refresh path.
     """
-    if name not in _INCR_BUILDERS:
-        raise ValueError(f"not an incrementally-maintained table: {name}")
-    lake_table(spark, sf_dir, name)
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    dest = lake_root() / sf_name / name
     fork_part = fork_block // BLOCK_PART_SIZE
-
-    existing = spark.read.parquet(str(dest))
-    survivors = existing.where(
-        (F.col("block_part") == fork_part) & (F.col("block_num") <= fork_block)
+    return _publish_increment(
+        spark,
+        sf_dir,
+        name,
+        lambda part: part < fork_part,
+        lambda current: current.where(
+            (F.col("block_part") == fork_part) & (F.col("block_num") <= fork_block)
+        ),
+        retracted_above=int(fork_block),
     )
-
-    tmp = dest.parent / f".{name}.refresh.{uuid.uuid4().hex[:8]}"
-    try:
-        (
-            survivors.repartition("block_part")
-            .sortWithinPartitions(F.col("block_part"), *_sort_cols(name))
-            .write.mode("append")
-            .partitionBy("block_part")
-            .parquet(str(tmp))
-        )
-        for entry in dest.iterdir():
-            if not entry.is_dir():
-                continue
-            try:
-                part = int(entry.name.split("=", 1)[1])
-            except (IndexError, ValueError):
-                continue
-            if part < fork_part:
-                _link_tree(entry, tmp / entry.name)
-        try:
-            manifest = json.loads(_manifest_path(dest).read_text())
-        except (OSError, ValueError):
-            manifest = {"version": LAKE_VERSION, "source": None, "extra": ""}
-        manifest["increments"] = int(manifest.get("increments", 0)) + 1
-        manifest["retracted_above"] = int(fork_block)
-        _manifest_path(tmp).write_text(json.dumps(manifest))
-        replace_dir(tmp, dest)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    invalidate_stats(sf_dir)  # retraction shrinks counts/NDVs too
-    return spark.read.parquet(str(dest))
 
 
 _EVENT_COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]

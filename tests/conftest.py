@@ -53,3 +53,20 @@ def count_jobs(spark):
         )
 
     return count
+
+
+@pytest.fixture
+def growable_sf(tmp_path, sf_dir) -> str:
+    """A copy of the smoke scale factor whose ``events.parquet`` is a
+    DIRECTORY seeded with the fixture file, so a test grows the source
+    by landing spool files in it (the live-tail arrival shape)."""
+    import shutil
+
+    sf = tmp_path / "growable"
+    (sf / "events.parquet").mkdir(parents=True)
+    shutil.copy(f"{sf_dir}/events.parquet", sf / "events.parquet" / "part-000.parquet")
+    for t in (
+        "region nation customer supplier part orders lineitem documents embeddings"
+    ).split():
+        shutil.copy(f"{sf_dir}/{t}.parquet", sf / f"{t}.parquet")
+    return str(sf)

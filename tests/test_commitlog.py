@@ -136,10 +136,13 @@ def test_replace_dir_swaps_and_cleans(tmp_path):
     assert not [e for e in os.listdir(tmp_path) if ".old." in e]
 
 
-def test_stores_share_the_protocol(tmp_path, spark):
+def test_stores_share_the_protocol(tmp_path, spark, sf_dir, monkeypatch):
     """The unification claim itself: the versioned stores run on the
-    same CommitLog class and produce interoperable manifests, and both
-    frame-delta stores run on the one FrameDeltaStore policy."""
+    same CommitLog class and produce interoperable manifests, both
+    frame-delta stores run on the one FrameDeltaStore policy, and every
+    write-once lake store (a lake table, an ``ensure_parquet`` artifact,
+    ``state_tt``, an ``ensure_index_store`` index) resolves through a
+    CommitLog manifest whose current snapshot holds its data."""
     from hyperion_history_api_spark.sources.inverted_index import (
         InvertedIndexStore,
     )
@@ -165,6 +168,27 @@ def test_stores_share_the_protocol(tmp_path, spark):
     assert json.load(open(st.log.manifest_file())) == m
     inv.commit(spark.createDataFrame([(1, "a b a")], "doc_id long, text string"))
     assert json.load(open(inv.log.manifest_file())) == inv.read_manifest()
+
+    from hyperion_history_api_spark.api.dedup_sim import _bm25_index_store
+    from hyperion_history_api_spark.api.skew_q import _zorder_actions
+    from hyperion_history_api_spark.api.state import state_time_travel_v1
+    from hyperion_history_api_spark.sources import lake
+
+    monkeypatch.setenv("SPARK_GRAFT_LAKE_DIR", str(tmp_path / "lake"))
+    lake.lake_actions(spark, sf_dir)
+    _zorder_actions(spark, sf_dir)
+    state_time_travel_v1(spark, sf_dir)
+    index = _bm25_index_store(spark, sf_dir)
+    names = ("actions", "actions_zorder", "state_tt", "bm25_index")
+    for name in names:
+        log = lake.store_log(sf_dir, name)
+        assert "key" in log.read_manifest()
+        snap = log.current_snapshot_dir()
+        assert [f for _, _, fs in os.walk(snap) for f in fs if f.endswith(".parquet")]
+    assert index.path == lake.store_log(sf_dir, "bm25_index").current_snapshot_dir()
+    stores = list((tmp_path / "lake" / os.path.basename(sf_dir)).iterdir())
+    assert {d.name for d in stores} == set(names)
+    assert all((d / CommitLog.MANIFEST).is_file() for d in stores)
 
 
 def _dedup_case(spark, path):

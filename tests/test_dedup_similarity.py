@@ -5,6 +5,7 @@ force, embedding batch shape, stub gating)."""
 from __future__ import annotations
 
 import hashlib
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +19,7 @@ from hyperion_history_api_spark.operators.dedup import (
 )
 from hyperion_history_api_spark.operators.similarity import (
     brute_force_topk,
+    cosine,
     lsh_topk,
 )
 from hyperion_history_api_spark.sources.multimodal import (
@@ -209,3 +211,84 @@ def test_pq_adc_exact_with_perfect_codebook(spark):
         for r in pq_topk(corpus, probes, 5, codebook=cb, rerank=20).collect()
     }
     assert gt == ap
+
+
+def _emb(spark, rows):
+    return spark.createDataFrame(rows, "vec_id long, e array<double>")
+
+
+def test_zero_vector_never_ranks_in_topk(spark):
+    """A zero embedding used to score NaN cosine, and Spark sorts NaN
+    above every real double — so the zero vector outranked every true
+    neighbor in every top-k. It must now sort LAST (-inf)."""
+    corpus = _emb(
+        spark,
+        [
+            (0, [1.0, 0.0]),
+            (1, [0.9, 0.1]),
+            (2, [0.0, 0.0]),  # the zero vector
+            (3, [-1.0, 0.0]),
+        ],
+    )
+    probes = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "probe_id long, pe array<double>"
+    )
+    got = brute_force_topk(corpus, probes, 2).collect()
+    ids = [r["vec_id"] for r in sorted(got, key=lambda r: -r["cosine"])]
+    assert 2 not in ids and ids[0] == 1
+    assert all(not math.isnan(r["cosine"]) for r in got)
+    # the column-expression path (ivf/lsh/pq tiers) uses cosine():
+    scored = corpus.select(
+        "vec_id", cosine(F.col("e"), F.array(F.lit(1.0), F.lit(0.0))).alias("c")
+    ).collect()
+    byid = {r["vec_id"]: r["c"] for r in scored}
+    assert byid[2] == float("-inf") and not math.isnan(byid[2])
+
+
+def test_jaccard_probe_pairs_symmetric(spark):
+    """probe_pred anchored probes to the a-side of an id_a < id_b
+    join, silently dropping every pair whose probe id is LARGER —
+    only down-set predicates (id < 40) dodged it."""
+    rows = [
+        (10, "alpha beta gamma delta epsilon"),
+        (50, "alpha beta gamma delta epsilon"),  # probe, larger id
+        (60, "unrelated words entirely different here"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = {
+        (r["id_a"], r["id_b"])
+        for r in ngram_jaccard_pairs(
+            docs,
+            "text",
+            "doc_id",
+            threshold=0.5,
+            probe_pred=F.col("doc_id") >= 40,
+        ).collect()
+    }
+    assert (10, 50) in pairs  # probe has the larger id
+    # probe-probe pairs emitted once, not twice
+    counted = (
+        ngram_jaccard_pairs(
+            docs,
+            "text",
+            "doc_id",
+            threshold=0.0,
+            probe_pred=F.col("doc_id") >= 40,
+        )
+        .groupBy("id_a", "id_b")
+        .count()
+        .where(F.col("count") > 1)
+        .count()
+    )
+    assert counted == 0
+
+
+def test_simhash_rejects_unguaranteed_hamming(spark):
+    """4x16-bit pigeonhole banding guarantees recall only for k <= 3;
+    k=6 used to be the silent default while pairs at distance 4-6
+    spread over all chunks vanished from the output."""
+    docs = spark.createDataFrame(
+        [(1, "a b c"), (2, "a b d")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="max_hamming <= 3"):
+        simhash_pairs(docs, "text", "doc_id", max_hamming=6)

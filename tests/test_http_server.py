@@ -225,6 +225,112 @@ def test_sse_live_tail_follow_mode(spark, tmp_path):
         srv.shutdown()
 
 
+def _sse_follow(base: str, params: dict, got) -> None:
+    """An SSE follower: put each row frame on ``got`` as it arrives."""
+    from urllib.parse import urlencode
+
+    with urllib.request.urlopen(f"{base}/v2/stream?{urlencode(params)}", timeout=120) as r:
+        for raw in r:
+            line = raw.decode()
+            if line.startswith("data: ") and line.strip() != "data: {}":
+                got.put(json.loads(line[6:]))
+
+
+def _ws_follow(port: int, params: dict, got) -> None:
+    """A WS follower: put each row of each batch on ``got`` (acking)."""
+    from hyperion_history_api_spark.sources.ship_ws import OP_TEXT, WebSocketClient
+
+    ws = WebSocketClient("127.0.0.1", port)
+    ws.send(json.dumps(params), OP_TEXT)
+    while (msg := ws.recv()) is not None:
+        frame = json.loads(msg[1])
+        if frame["type"] != "batch":
+            return
+        for d in frame["rows"]:
+            got.put(d)
+        ws.send(json.dumps({"type": "ack", "seq": frame["seq"]}), OP_TEXT)
+
+
+def _sio_follow(port: int, params: dict, got) -> None:
+    """A Socket.IO live-only subscriber: put each live trace on ``got``."""
+    from hyperion_history_api_spark.api.socketio_stream import SocketIOClient
+
+    c = SocketIOClient("127.0.0.1", port)
+    c.emit_with_ack("action_stream_request", {"account": params["account"]})
+    while True:
+        m = c.next_message()
+        if m.get("mode") == "live":
+            got.put(m["message"])
+
+
+@pytest.mark.parametrize("surface", ["sse", "ws", "socketio"])
+def test_live_row_reaches_follower_within_two_ticks(spark, growable_sf, surface):
+    """One matching row lands and the follower receives it within two
+    relay ticks plus the arrival tick's own time, far below
+    ``idle_timeout`` — on every surface. A lone WS row is flushed when
+    a relay drain comes back empty instead of waiting in a partial
+    batch for ``batch_size`` rows."""
+    import queue
+    import threading
+    import time
+
+    from hyperion_history_api_spark.api.socketio_stream import SocketIOStreamServer
+    from hyperion_history_api_spark.api.ws_stream import WsStreamServer
+
+    head = load_tables(spark, growable_sf)["events"].agg(F.max("event_id")).first()[0]
+    row = spark.createDataFrame(
+        [(head + 1, 7, "click", 1.5)],
+        "event_id long, user_id long, event_type string, value double",
+    ).withColumn("ts", F.timestamp_micros(F.lit(1_700_000_000_000_000)))
+
+    api = HyperionAPI(spark, growable_sf, cache=ResponseCache(default_ttl=0))
+    relay = api.relay
+    ticks: list[float] = []
+    tick = relay._tick
+
+    def timed_tick() -> None:
+        t0 = time.monotonic()
+        try:
+            tick()
+        finally:
+            ticks.append(time.monotonic() - t0)
+
+    relay._tick = timed_tick
+    idle_timeout = 30.0
+    params = {
+        "account": 7,
+        "start_from": head + 1,
+        "follow": "true",
+        "idle_timeout": idle_timeout,
+    }
+    got = queue.Queue()
+    if surface == "sse":
+        srv, _ = serve_background(api)
+        close = srv.shutdown
+        args = (f"http://127.0.0.1:{srv.server_address[1]}", params, got)
+    else:
+        srv = (WsStreamServer if surface == "ws" else SocketIOStreamServer)(api)
+        close = srv.close
+        args = (srv.port, params, got)
+    target = {"sse": _sse_follow, "ws": _ws_follow, "socketio": _sio_follow}[surface]
+    try:
+        threading.Thread(target=target, args=args, daemon=True).start()
+        deadline = time.monotonic() + 60
+        while not relay._subs:
+            assert time.monotonic() < deadline, "follower never registered"
+            time.sleep(0.05)
+        row.coalesce(1).write.mode("append").parquet(f"{growable_sf}/events.parquet")
+        landed = time.monotonic()
+        d = got.get(timeout=idle_timeout)
+        latency = time.monotonic() - landed
+        assert d["event_id"] == head + 1
+        bound = 2 * relay.poll_sec + max(ticks)
+        assert latency <= bound < idle_timeout / 4, (latency, ticks)
+    finally:
+        relay.close()
+        close()
+
+
 def _sse_rows(url: str) -> list[dict]:
     """Every row frame of one SSE response, up to its end event."""
     rows, event = [], None

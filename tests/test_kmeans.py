@@ -4,6 +4,7 @@ oracle queries rely on."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hyperion_history_api_spark.operators.similarity import (
@@ -12,6 +13,7 @@ from hyperion_history_api_spark.operators.similarity import (
     kmeans_assign,
     kmeans_train,
     kmeans_warm_retrain,
+    pq_train,
 )
 from hyperion_history_api_spark.tables import load_tables
 
@@ -188,3 +190,29 @@ def test_parallel_init_spreads_better_than_first_k(spark):
     par = kmeans_warm_retrain(c, kmeans_parallel_init(c, k), iters=2)
     naive = kmeans_warm_retrain(c, kmeans_train(c, k=k, iters=0), iters=2)
     assert inertia(par) <= inertia(naive)
+
+
+def _emb(spark, rows):
+    return spark.createDataFrame(rows, "vec_id long, e array<double>")
+
+
+def test_kmeans_sparse_ids_still_trains_k_cells(spark):
+    """ids sparse in [0, k): the pushed-range init finds < k seeds and
+    used to proceed with an under-sized codebook (2 giant cells
+    instead of k) — it must fall back to the first k by id."""
+    rows = [(0, [0.0, 0.0]), (1, [10.0, 0.0])] + [
+        (1000 + i, [50.0 * (i + 1), 30.0 * (i % 7)]) for i in range(20)
+    ]
+    emb = _emb(spark, rows)
+    cents = kmeans_train(emb, k=6, iters=1)
+    # all six seed vectors are distinct corpus points, so every cell
+    # keeps at least its own seed: the old min(k, 2) guard yielded 2
+    assert len(cents) == 6
+
+
+def test_pq_rejects_indivisible_dim(spark):
+    """dim % m != 0 used to silently drop trailing dims at encode and
+    crash the ADC UDF at query time — it must fail at train time."""
+    emb = _emb(spark, [(i, [float(j) for j in range(20)]) for i in range(80)])
+    with pytest.raises(ValueError, match="dim % m"):
+        pq_train(emb, m=16, k=4, iters=1, sample=64)

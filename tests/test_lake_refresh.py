@@ -13,8 +13,8 @@ Reference behavior mirrored: per-partition index routing
 
 from __future__ import annotations
 
-import json
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -39,31 +39,34 @@ def _batch(spark, n: int, offset: int):
     return ev.limit(n).withColumn("event_id", F.col("event_id") + F.lit(offset))
 
 
-def _part_dirs(dest):
-    return sorted(p.name for p in dest.iterdir() if p.name.startswith("block_part="))
+def _current(name: str = "actions") -> Path:
+    """The current snapshot dir of the stored table ``name``."""
+    return Path(lake.store_log(SF_DIR, name).current_snapshot_dir())
 
 
-def _inodes(dest, part: str) -> dict[str, int]:
-    d = dest / part
-    return {f.name: f.stat().st_ino for f in d.iterdir()}
+def _part_dirs():
+    return sorted(p.name for p in _current().iterdir() if p.name.startswith("block_part="))
+
+
+def _inodes(part: str) -> dict[str, int]:
+    return {f.name: f.stat().st_ino for f in (_current() / part).iterdir()}
 
 
 def test_refresh_appends_new_partition_and_links_old(spark, iso_lake):
     base = lake.lake_actions(spark, SF_DIR)
     base_n = base.count()
-    dest = iso_lake / "sf0.001" / "actions"
-    before = _part_dirs(dest)
-    before_inodes = {p: _inodes(dest, p) for p in before}
+    before = _part_dirs()
+    before_inodes = {p: _inodes(p) for p in before}
 
     refreshed = lake_refresh.refresh_partitioned(
         spark, SF_DIR, "actions", _batch(spark, 40, FAR_OFFSET)
     )
     assert refreshed.count() == base_n + 40
-    after = _part_dirs(dest)
+    after = _part_dirs()
     assert set(after) > set(before)  # a new partition dir appeared
     # untouched partitions are the SAME files (hard links), not copies
     for p in before:
-        assert _inodes(dest, p) == before_inodes[p]
+        assert _inodes(p) == before_inodes[p]
     # the stored table remains fresh: lake_table serves it, no rebuild
     assert lake.lake_actions(spark, SF_DIR).count() == base_n + 40
 
@@ -93,8 +96,7 @@ def test_refresh_restores_index_sort_in_rewritten_partition(spark, iso_lake):
     lake_refresh.refresh_partitioned(
         spark, SF_DIR, "actions", _batch(spark, 20, 1000)
     )
-    dest = iso_lake / "sf0.001" / "actions" / "block_part=0"
-    files = [f for f in dest.iterdir() if f.name.endswith(".parquet")]
+    files = [f for f in (_current() / "block_part=0").iterdir() if f.name.endswith(".parquet")]
     assert files
     for f in files:
         gs = pq.read_table(f, columns=["global_sequence"])["global_sequence"]
@@ -104,15 +106,18 @@ def test_refresh_restores_index_sort_in_rewritten_partition(spark, iso_lake):
 
 def test_refresh_updates_manifest_journal(spark, iso_lake):
     lake.lake_actions(spark, SF_DIR)
-    dest = iso_lake / "sf0.001" / "actions"
+    log = lake.store_log(SF_DIR, "actions")
+    base = log.read_manifest()
     lake_refresh.refresh_partitioned(
         spark, SF_DIR, "actions", _batch(spark, 10, FAR_OFFSET)
     )
-    m = json.loads((dest / "_lake_manifest.json").read_text())
-    assert m["version"] == lake.LAKE_VERSION
+    m = log.read_manifest()
+    assert m["version"] == base["version"] + 1
     assert m["increments"] == 1
-    # freshness identity preserved -> next lake_table call does NOT rebuild
-    assert lake._is_fresh(dest, lake._source_fingerprint(SF_DIR))
+    # freshness key carried -> next lake_table call does NOT rebuild
+    assert m["key"] == base["key"]
+    lake.lake_actions(spark, SF_DIR)
+    assert log.read_manifest() == m
 
 
 def test_refresh_all_covers_deltas(spark, iso_lake):
@@ -176,8 +181,9 @@ def test_failed_refresh_leaves_snapshot_intact(spark, iso_lake):
     published snapshot untouched (the temp build is discarded; the
     rename never happens)."""
     base_n = lake.lake_actions(spark, SF_DIR).count()
-    dest = iso_lake / "sf0.001" / "actions"
-    before = {p: _inodes(dest, p) for p in _part_dirs(dest)}
+    log = lake.store_log(SF_DIR, "actions")
+    m = log.read_manifest()
+    before = {p: _inodes(p) for p in _part_dirs()}
 
     poison = _batch(spark, 10, FAR_OFFSET).withColumn(
         "event_id",
@@ -186,10 +192,11 @@ def test_failed_refresh_leaves_snapshot_intact(spark, iso_lake):
     with pytest.raises(Exception):
         lake_refresh.refresh_partitioned(spark, SF_DIR, "actions", poison)
 
-    assert {p: _inodes(dest, p) for p in _part_dirs(dest)} == before
+    assert log.read_manifest() == m
+    assert {p: _inodes(p) for p in _part_dirs()} == before
     assert lake.lake_actions(spark, SF_DIR).count() == base_n
-    # no orphan temp dirs left behind
-    assert not [p for p in dest.parent.iterdir() if ".refresh." in p.name]
+    # no orphan snapshot dir left behind
+    assert [p for p in os.listdir(log.path) if p.startswith("v")] == [m["snapshot"]]
 
 
 def test_fork_retraction_trims_tip_partition_links_history(spark, iso_lake):
@@ -199,8 +206,7 @@ def test_fork_retraction_trims_tip_partition_links_history(spark, iso_lake):
     lake_refresh.refresh_partitioned(
         spark, SF_DIR, "actions", _batch(spark, 40, FAR_OFFSET)
     )
-    dest = iso_lake / "sf0.001" / "actions"
-    part0_before = _inodes(dest, "block_part=0")
+    part0_before = _inodes("block_part=0")
     new_blocks = sorted(
         r[0]
         for r in lake.lake_actions(spark, SF_DIR)
@@ -219,7 +225,7 @@ def test_fork_retraction_trims_tip_partition_links_history(spark, iso_lake):
     out = lake_refresh.retract_blocks_above(spark, SF_DIR, "actions", fork)
     assert out.agg(F.max("block_num")).first()[0] <= fork
     assert out.where(F.col("block_part") == 5).count() == kept_in_tip
-    assert _inodes(dest, "block_part=0") == part0_before  # history untouched
+    assert _inodes("block_part=0") == part0_before  # history untouched
 
 
 def test_fork_retraction_drops_partitions_beyond_fork(spark, iso_lake):
@@ -234,8 +240,7 @@ def test_fork_retraction_drops_partitions_beyond_fork(spark, iso_lake):
         out.where(F.col("block_num") <= 150).count()
     )
     assert out.agg(F.max("block_num")).first()[0] <= 150
-    dest = iso_lake / "sf0.001" / "actions"
-    assert "block_part=5" not in _part_dirs(dest)
+    assert "block_part=5" not in _part_dirs()
     assert out.count() < base_n
 
 

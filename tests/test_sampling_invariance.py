@@ -14,6 +14,7 @@ from hyperion_history_api_spark.operators.sampling import (
     hash_sample,
     hash_split,
     stratified_sample,
+    temperature_mix,
 )
 from hyperion_history_api_spark.tables import load_tables
 
@@ -151,3 +152,23 @@ def test_token_budget_cap_greedy_prefix_semantics(spark):
         ("exact", 5),
         ("tight", 2), ("tight", 3), ("tight", 4),
     ]
+
+
+def test_temperature_mix_zero_mass_group_excluded(spark):
+    """A source whose every doc weighs 0 made the keep-rate NaN, and
+    least(1.0, NaN) = 1.0 kept the degenerate group in FULL; its
+    m^(1/T) share is 0, so it must contribute nothing."""
+    rows = [("good", i, 100) for i in range(40)] + [
+        ("empty", 100 + i, 0) for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "source string, doc_id long, n long")
+    kept = temperature_mix(
+        df,
+        group_col="source",
+        id_col="doc_id",
+        weight_col="n",
+        temperature=2.0,
+        fraction=0.5,
+    ).collect()
+    assert kept, "non-degenerate source should sample"
+    assert all(r["source"] == "good" for r in kept)

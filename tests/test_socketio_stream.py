@@ -824,15 +824,42 @@ def test_live_tagged_rows_window_cap(spark, tmp_path):
     head = api.head_block()
     assert head > 20
     req, _ = api.parse_stream_request({})
-    rows1, cur1 = api.live_tagged_rows({"u": req}, 0, window_cap=10)
+    rows1, cur1, _ = api.live_tagged_rows({"u": req}, 0, window_cap=10)
     assert cur1 == 10
     assert all(r[0]["event_id"] <= 10 for r in rows1)
-    rows2, cur2 = api.live_tagged_rows({"u": req}, cur1, window_cap=10)
+    rows2, cur2, _ = api.live_tagged_rows({"u": req}, cur1, window_cap=10)
     assert cur2 == 20
     assert all(10 < r[0]["event_id"] <= 20 for r in rows2)
     # a cap beyond the head clamps to the head
-    _, cur3 = api.live_tagged_rows({"u": req}, head - 1, window_cap=10**9)
+    _, cur3, _ = api.live_tagged_rows({"u": req}, head - 1, window_cap=10**9)
     assert cur3 == head
+
+
+def test_relay_status_uses_the_head_the_scan_read(spark, monkeypatch):
+    """A tick compares its cursor with the one head its scan read: a
+    head that moves on after the scan (a spool file landing mid-tick)
+    queues no catch-up ``status`` on an uncapped tick, while a
+    window-capped tick still queues one."""
+    import itertools
+
+    from hyperion_history_api_spark.api.http_server import LiveRelay
+
+    api = HyperionAPI(spark, SF_DIR, cache=ResponseCache(default_ttl=0))
+    head = api.head_block()
+    reads = itertools.count(1)
+    # every read sees a newer head than the one before it
+    monkeypatch.setattr(api, "head_block", lambda: head + next(reads))
+    req, _ = api.parse_stream_request({"account": "7"})
+
+    def tick_statuses(window_cap: int) -> list:
+        relay = LiveRelay(api, poll_sec=0.5, window_cap=window_cap)
+        relay.close()  # ticks driven manually; register()'s thread exits
+        relay.register(1, "r", "action", req, head - 20)
+        relay._tick()
+        return [e for e in relay.drain(1) if e[0] == "status"]
+
+    assert tick_statuses(10**6) == []
+    assert len(tick_statuses(5)) == 1
 
 
 def test_live_relay_survives_tick_crash_and_restarts(spark):

@@ -94,11 +94,9 @@ def test_zorder_actions_scan_pushdown_and_file_pruning(spark):
     parquet scan as PushedFilters, and the footer stats prune a
     majority of files for the account dimension — the thing the
     single-dim index sort cannot do."""
-    import os
-
     from hyperion_history_api_spark.api.skew_q import _zorder_actions
     from hyperion_history_api_spark.registry import all_specs
-    from hyperion_history_api_spark.sources.lake import lake_root
+    from hyperion_history_api_spark.sources.lake import store_log
 
     df = all_specs()["hyp_actions_zorder_scan"].spark_fn(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -106,7 +104,6 @@ def test_zorder_actions_scan_pushdown_and_file_pruning(spark):
     assert "user_id" in pushed and "block_num" in pushed
 
     _zorder_actions(spark, SF_DIR)  # ensure stored
-    sf_name = os.path.basename(os.path.normpath(SF_DIR))
-    path = str(lake_root() / sf_name / "actions_zorder")
+    path = store_log(SF_DIR, "actions_zorder").current_snapshot_dir()
     assert file_prune_fraction(path, "user_id", 7, 7) >= 0.5
     assert file_prune_fraction(path, "block_num", 40, 80) >= 0.5
