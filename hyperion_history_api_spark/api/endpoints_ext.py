@@ -16,11 +16,16 @@ by the cost-gated chooser fed from catalog stats (round-8; the only
 remaining literal ``broadcast()`` is the 25-row nation dimension,
 whose size is a schema constant, and the one-row point lookups where
 any planner agrees); the only shuffles are the group-bys on the
-natural aggregation keys.
+natural aggregation keys. ``get_tokens`` joins nothing in Spark: the
+account's collected order keys prune each of its scans.
 """
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -296,55 +301,114 @@ def v1_trace_get_block(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- v2-state -----------------------------------------------------------
 
+def _in_keys(col: str, keys):
+    """``col IN (keys)`` for integer keys, parsed in one call (a
+    ``Column.isin`` list costs one py4j literal per key); the scan
+    pushes it down as ``In``."""
+    return F.expr(f"{col} IN ({', '.join(str(int(k)) for k in keys)})")
+
+
+def _round4(x: float | None) -> float | None:
+    """Spark's ``round(x, 4)`` on a double, on the driver: HALF_UP on
+    the shortest decimal form. Doubles from 2**52 up are integral."""
+    if x is None or not math.isfinite(x) or abs(x) >= 2**52:
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
 
 def _get_tokens(
     spark: SparkSession, sf_dir: str, account: int = 1, **chooser_kwargs
 ):
-    """Core of ``get_tokens`` with the trace-side semi-join planned by
-    the cost-gated chooser from CATALOG stats (round-7 verdict item 8:
-    no static ``broadcast()`` hint). Returns ``(df, strategy)``.
+    """Core of ``get_tokens``: a keyed chain in which a key prunes
+    every scan and no exchange runs. Returns ``(df, strategy)``.
 
-    Catalog estimates, zero planner jobs after the one-time analyze:
-    the dim is orders filtered by an ACCOUNT equality, whose size a
-    catalog bounds as rows(orders)/ndv(o_custkey) — the mean bucket —
-    times an 8x skew headroom (we keep NDV + row count, not
-    histograms; the headroom errs toward NOT broadcasting, the safe
-    direction). The fact term is rows(lineitem) verbatim."""
-    from ..operators.skew import choose_join_strategy
-    from ..sources.stats import column_ndv, table_rows
+    1. The account's order keys are collected on the driver (the
+       orders scan pushes ``o_custkey``), capped at one past the
+       chooser's ``broadcast_rows``.
+    2. They reach the lineitem scan as an ``In`` pushed filter; the
+       surviving ``(l_partkey, l_quantity)`` rows are collected.
+    3. Their part keys prune the part scan the same way, which
+       resolves ``p_brand``.
+    4. The join, aggregate, rounding and sort run on the driver over
+       the account's few rows. ``df`` is a local frame (strategy
+       ``keyed``), so collecting it runs no job.
+
+    An account with more orders than ``broadcast_rows`` is not
+    driver-sized: its semi-join goes to :func:`choose_join_strategy`
+    with the true key count, and Spark aggregates."""
+    from ..operators.skew import BROADCAST_ROWS, choose_join_strategy
+    from ..sources.stats import table_rows
 
     t = _t(spark, sf_dir)
-    o = t["orders"].where(F.col("o_custkey") == account).select(
-        F.col("o_orderkey").alias("l_orderkey")
+    orders = t["orders"].where(
+        (F.col("o_custkey") == account) & F.col("o_orderkey").isNotNull()
     )
-    if "dim_rows" not in chooser_kwargs:
-        orders_rows = table_rows(t["orders"], cache_key=f"{sf_dir}#orders")
-        cust_ndv = column_ndv(
-            t["orders"], "o_custkey", cache_key=f"{sf_dir}#orders"
+    cap = chooser_kwargs.get("broadcast_rows", BROADCAST_ROWS)
+    keys = [r[0] for r in orders.select("o_orderkey").limit(cap + 1).collect()]
+    if len(keys) > cap:
+        if "dim_rows" not in chooser_kwargs:
+            chooser_kwargs["dim_rows"] = orders.count()
+        if "fact_rows" not in chooser_kwargs:
+            chooser_kwargs["fact_rows"] = table_rows(
+                t["lineitem"], cache_key=f"{sf_dir}#lineitem"
+            )
+        fact, strategy = choose_join_strategy(
+            t["lineitem"],
+            orders.select(F.col("o_orderkey").alias("l_orderkey")),
+            "l_orderkey",
+            salt_id_col="l_orderkey",
+            how="left_semi",
+            **chooser_kwargs,
         )
-        chooser_kwargs["dim_rows"] = max(1, orders_rows // max(cust_ndv, 1)) * 8
-    if "fact_rows" not in chooser_kwargs:
-        chooser_kwargs["fact_rows"] = table_rows(
-            t["lineitem"], cache_key=f"{sf_dir}#lineitem"
+        out = (
+            fact.join(t["part"], F.col("p_partkey") == F.col("l_partkey"))
+            .groupBy(F.col("p_brand").alias("symbol"))
+            .agg(
+                F.round(F.sum("l_quantity"), 4).alias("amount"),
+                F.count("*").alias("holdings"),
+            )
+            .orderBy("symbol")
         )
-    fact, strategy = choose_join_strategy(
-        t["lineitem"],
-        o,
-        "l_orderkey",
-        salt_id_col="l_orderkey",
-        how="left_semi",
-        **chooser_kwargs,
+        return out, strategy
+
+    lines = (
+        t["lineitem"]
+        .where(_in_keys("l_orderkey", keys))
+        .select("l_partkey", "l_quantity")
+        .collect()
+        if keys
+        else []
     )
-    out = (
-        fact.join(t["part"], F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy(F.col("p_brand").alias("symbol"))
-        .agg(
-            F.round(F.sum("l_quantity"), 4).alias("amount"),
-            F.count("*").alias("holdings"),
-        )
-        .orderBy("symbol")
+    part_keys = {pk for pk, _ in lines if pk is not None}
+    brands: dict[int, list] = {}
+    if part_keys:
+        for pk, brand in (
+            t["part"]
+            .where(_in_keys("p_partkey", part_keys))
+            .select("p_partkey", "p_brand")
+            .collect()
+        ):
+            brands.setdefault(pk, []).append(brand)
+    # sum() skips NULL quantities and stays NULL over none; count(*)
+    # counts every joined row
+    held: dict = {}
+    for pk, qty in lines:
+        for brand in brands.get(pk, ()):
+            amount, n = held.get(brand, (None, 0))
+            if qty is not None:
+                amount = qty if amount is None else amount + qty
+            held[brand] = (amount, n + 1)
+    # ORDER BY symbol: NULLs first, as Spark sorts ascending
+    ranked = sorted(held.items(), key=lambda kv: (kv[0] is not None, kv[0]))
+    table = pa.table(
+        {
+            "symbol": pa.array([b for b, _ in ranked], pa.string()),
+            "amount": pa.array([_round4(a) for _, (a, _) in ranked], pa.float64()),
+            "holdings": pa.array([n for _, (_, n) in ranked], pa.int64()),
+        }
     )
-    return out, strategy
+    schema = "symbol string, amount double, holdings bigint"
+    return spark.createDataFrame(table, schema), "keyed"
 
 
 @register(
@@ -363,10 +427,10 @@ def _get_tokens(
     "get_tokens per-account token list (v2-state/get_tokens.ts:8-94)",
 )
 def get_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokens held by one account: the account predicate prunes orders
-    first, the surviving sliver semi-joins into lineitem under the
-    stats-planned chooser, and part resolves symbol metadata
-    (precision recovery, get_tokens.ts:63-72)."""
+    """Tokens held by one account: the account's order keys prune the
+    lineitem scan, their part keys prune the part scan, and part
+    resolves symbol metadata (precision recovery,
+    get_tokens.ts:63-72)."""
     return _get_tokens(spark, sf_dir)[0]
 
 

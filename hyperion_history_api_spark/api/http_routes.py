@@ -630,8 +630,8 @@ def get_top_holders(api, params: dict) -> dict:
 
 def get_tokens(api, params: dict) -> dict:
     """routes/v2-state/get_tokens (get_tokens.ts:63-72): account →
-    held symbols — the stats-planned chooser core of the registered
-    ``get_tokens`` row (endpoints_ext._get_tokens)."""
+    held symbols — the keyed core of the registered ``get_tokens``
+    row (endpoints_ext._get_tokens)."""
     account = int(params["account"])
     df, _ = endpoints_ext._get_tokens(api.spark, api.sf_dir, account=account)
     return {
@@ -673,11 +673,11 @@ def get_account(api, params: dict) -> dict:
     """routes/v2-state/get_account (get_account.ts:38-108): the FULL
     composition the reference assembles from parallel subqueries — the
     ``get_account`` row (account row + activity rollup, one key-pruned
-    plan) plus the account's recent actions, held tokens (the
-    chooser-planned ``get_tokens`` core) and permission links. Every
-    leg is key-pruned to the one account; the reference fires them as
-    Promise.all, here they run serially per request, each a sub-100ms
-    point plan."""
+    plan) plus the account's recent actions, held tokens (the keyed
+    ``get_tokens`` core) and permission links. Every leg is key-pruned
+    to the one account; the reference fires them as Promise.all, here
+    they run serially per request. The links leg has one row per
+    action type, so the driver sorts it."""
     account = int(params.get("account", 7))
     row = endpoints_ext.get_account(api.spark, api.sf_dir, account=account).first()
     if row is None:
@@ -690,10 +690,14 @@ def get_account(api, params: dict) -> dict:
         .limit(10)
         .select("event_id", "event_type", "ts", "value")
     )
-    links = (
-        ev.groupBy(F.col("event_type").alias("action"))
-        .agg(F.min("event_id").alias("linked_at"))
-        .orderBy("action")
+    links = sorted(
+        (
+            r.asDict()
+            for r in ev.groupBy(F.col("event_type").alias("action"))
+            .agg(F.min("event_id").alias("linked_at"))
+            .collect()
+        ),
+        key=lambda r: (r["action"] is not None, r["action"]),
     )
     return {
         "account": account,
@@ -705,7 +709,7 @@ def get_account(api, params: dict) -> dict:
         "last_trx": row["last_trx"],
         "tokens": _rows(tokens_df, 100),
         "actions": _rows(actions),
-        "links": _rows(links, 100),
+        "links": links[:100],
     }
 
 

@@ -19,11 +19,11 @@ The protocol — the heart of Delta/Iceberg commits on plain parquet:
    newer snapshots live on.
 
 Crash-consistency: a writer dying before the ``os.replace`` leaves an
-orphan snapshot dir and an intact old pointer; dying after it is a
-completed commit. Single-writer per store, as with the reference's
-per-table indexer worker (src/indexer/helpers/elastic-routes.ts /
-mongo-routes.ts keep one routing/commit layer per store — the anchor
-for centralizing this).
+orphan snapshot dir (collected by a later publish) and an intact old
+pointer; dying after it is a completed commit. Single-writer per
+store, as with the reference's per-table indexer worker
+(src/indexer/helpers/elastic-routes.ts / mongo-routes.ts keep one
+routing/commit layer per store — the anchor for centralizing this).
 
 Which rows go into a snapshot is store policy: the state store's
 bucketed copy-on-write merge, the lake's full build and block-part
@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import uuid
 from concurrent.futures import ThreadPoolExecutor
@@ -48,6 +49,9 @@ from typing import TYPE_CHECKING, Callable
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
+
+
+_SNAP_NAME = re.compile(r"v\d+-[0-9a-f]+")
 
 
 def snap_version(snap: str) -> int:
@@ -170,11 +174,24 @@ class CommitLog:
 
     # -- commit -------------------------------------------------------
 
+    def _snapshot_names(self) -> list[str]:
+        """Every snapshot dir on disk, published or not."""
+        try:
+            entries = os.listdir(self.path)
+        except FileNotFoundError:
+            return []
+        return [e for e in entries if _SNAP_NAME.fullmatch(e)]
+
     def new_snapshot(self) -> tuple[str, str]:
         """Allocate the next snapshot name and its (created) parent
-        store dir; the snapshot dir itself is the caller's to write."""
+        store dir; the snapshot dir itself is the caller's to write.
+        The version is past every snapshot dir on disk, so a dir left
+        by a build that never published is not handed out again."""
         m = self.read_manifest()
-        version = (m["version"] + 1) if m else 1
+        version = 1 + max(
+            [m["version"] if m else 0]
+            + [snap_version(e) for e in self._snapshot_names()]
+        )
         snap = f"v{version:08d}-{uuid.uuid4().hex[:8]}"
         os.makedirs(self.path, exist_ok=True)
         return snap, self.snapshot_dir(snap)
@@ -199,27 +216,32 @@ class CommitLog:
         extra: dict | None = None,
         retain_extra: int = 0,
     ) -> None:
-        """Atomically move the pointer to ``snap`` and GC versions
-        that fell out of the retained window. ``extra`` entries are
-        stored in the manifest (store policy state: bucket modulus,
-        delta counters, ...). ``retain_extra`` widens the window for
-        THIS publish only — used when a store makes two publishes in
-        one logical step (delta + auto-compaction) so the pair
-        consumes a single retention slot."""
+        """Atomically move the pointer to ``snap`` (whose name carries
+        its version) and GC versions that fell out of the retained
+        window. ``extra`` entries are stored in the manifest (store
+        policy state: bucket modulus, delta counters, ...).
+        ``retain_extra`` widens the window for THIS publish only — used
+        when a store makes two publishes in one logical step (delta +
+        auto-compaction) so the pair consumes a single retention slot.
+
+        GC removes every snapshot dir older than the oldest retained
+        version that the manifest does not name: superseded versions
+        and dirs of builds that died before their publish. A newer
+        unpublished dir may be a build in flight and is left alone."""
         m = self.read_manifest()
-        version = (m["version"] + 1) if m else 1
         history = (m.get("history", []) + [m["snapshot"]]) if m else []
         window = self.keep_versions - 1 + max(0, retain_extra)
         keep = history[-window:] if window > 0 else []
-        gc = [h for h in history if h not in keep]
-        manifest = {"version": version, "snapshot": snap, "history": keep}
+        manifest = {"version": snap_version(snap), "snapshot": snap, "history": keep}
         manifest.update(extra or {})
         tmp = self.manifest_file() + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
         os.replace(tmp, self.manifest_file())  # THE commit point
-        for h in gc:  # retained-window GC after the pointer moves
-            shutil.rmtree(self.snapshot_dir(h), ignore_errors=True)
+        oldest = min(snap_version(h) for h in keep + [snap])
+        for name in self._snapshot_names():  # GC after the pointer moves
+            if snap_version(name) < oldest:
+                shutil.rmtree(self.snapshot_dir(name), ignore_errors=True)
 
 
 class FrameDeltaStore:

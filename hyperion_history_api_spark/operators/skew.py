@@ -149,13 +149,17 @@ def salted_join(
     return f.join(d, [on, "__salt"], how).drop("__salt")
 
 
+#: the largest dimension :func:`choose_join_strategy` will broadcast
+BROADCAST_ROWS = 100_000
+
+
 def choose_join_strategy(
     fact: DataFrame,
     dim: DataFrame,
     on: str,
     *,
     salt_id_col: str,
-    broadcast_rows: int = 100_000,
+    broadcast_rows: int = BROADCAST_ROWS,
     skew_share: float = 0.2,
     sample_fraction: float = 0.05,
     salts: int = 8,

@@ -78,19 +78,20 @@ _BUILDERS = {
 _PARTITIONED = {"actions", "deltas"}
 
 
+_SORT_KEYS = {
+    "actions": [("global_sequence", "desc")],
+    "deltas": [("block_num", "desc"), ("scope", "asc"), ("primary_key", "asc")],
+    "permissions": [("owner", "asc"), ("event_id", "desc")],
+    "links": [("account", "asc"), ("event_id", "desc")],
+    "proposals": [("proposer", "asc"), ("event_id", "desc")],
+    "schedule": [("version", "desc")],
+}
+
+
 def _sort_cols(name: str) -> list[Column]:
-    return {
-        "actions": [F.col("global_sequence").desc()],
-        "deltas": [
-            F.col("block_num").desc(),
-            F.col("scope").asc(),
-            F.col("primary_key").asc(),
-        ],
-        "permissions": [F.col("owner").asc(), F.col("event_id").desc()],
-        "links": [F.col("account").asc(), F.col("event_id").desc()],
-        "proposals": [F.col("proposer").asc(), F.col("event_id").desc()],
-        "schedule": [F.col("version").desc()],
-    }[name]
+    """The stored sort of table ``name``. Each Column is a py4j call,
+    so only a build asks for them, and only for its own table."""
+    return [getattr(F.col(c), order)() for c, order in _SORT_KEYS[name]]
 
 
 def lake_root() -> Path:
@@ -175,8 +176,6 @@ def ensure_parquet(
     build_fn,
     *,
     source_file: str = "events.parquet",
-    partition_col: str | None = None,
-    sort_cols: list[Column] | None = None,
     extra_key: str = "",
 ) -> DataFrame:
     """The stored frame ``build_fn()``, read from the current snapshot
@@ -185,7 +184,7 @@ def ensure_parquet(
     from ..tables import cached_read_parquet
 
     def build(snap_dir: str) -> None:
-        write_sorted(build_fn(), snap_dir, partition_col, sort_cols or [])
+        write_sorted(build_fn(), snap_dir, None, [])
 
     return cached_read_parquet(
         spark, ensure_snapshot(sf_dir, name, source_file, extra_key, build)
@@ -195,23 +194,21 @@ def ensure_parquet(
 def lake_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The stored nested table for (sf_dir, name), building it on first
     use."""
+    from ..tables import cached_read_parquet
 
-    def build() -> DataFrame:
+    def build(snap_dir: str) -> None:
         df = _BUILDERS[name](spark, sf_dir)
+        partition_col = None
         if name in _PARTITIONED:
+            partition_col = "block_part"
             df = df.withColumn(
-                "block_part",
+                partition_col,
                 (F.col("block_num") / F.lit(BLOCK_PART_SIZE)).cast("bigint"),
             )
-        return df
+        write_sorted(df, snap_dir, partition_col, _sort_cols(name))
 
-    return ensure_parquet(
-        spark,
-        sf_dir,
-        name,
-        build,
-        partition_col="block_part" if name in _PARTITIONED else None,
-        sort_cols=_sort_cols(name),
+    return cached_read_parquet(
+        spark, ensure_snapshot(sf_dir, name, "events.parquet", "", build)
     )
 
 

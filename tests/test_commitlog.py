@@ -74,6 +74,25 @@ def test_retain_extra_postpones_gc_one_publish(tmp_path):
     assert alive == {s3, s4}
 
 
+def test_unpublished_snapshot_is_skipped_then_collected(tmp_path):
+    """A snapshot dir allocated but never published (a build killed
+    before its publish) does not lend its version to the next
+    snapshot, and publishes past the retained window remove it."""
+    log = CommitLog(str(tmp_path / "s"), keep_versions=2)
+    orphan = _mk_snap(log, "killed build")
+    snaps = []
+    for i in range(3):
+        s = _mk_snap(log, f"v{i+2}")
+        assert snap_version(s) == i + 2  # past the orphan's version 1
+        snaps.append(s)
+        log.publish(s)
+        assert log.read_manifest()["version"] == i + 2
+    alive = {e for e in os.listdir(log.path) if e.startswith("v")}
+    assert alive == set(snaps[1:])
+    assert orphan not in alive
+    assert log.versions() == [3, 4]
+
+
 def test_extra_manifest_fields_round_trip(tmp_path):
     log = CommitLog(str(tmp_path / "s"))
     log.publish(_mk_snap(log, "x"), extra={"num_buckets": 7, "k": "v"})

@@ -11,9 +11,13 @@ are checked against hand-built plans or invariants instead."""
 from __future__ import annotations
 
 import json
+import os
+import shutil
 import urllib.error
 import urllib.request
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,8 +27,10 @@ from hyperion_history_api_spark.api.http_server import (
     serve_background,
 )
 from hyperion_history_api_spark.api.serving_cache import ResponseCache
-from hyperion_history_api_spark.registry import queries
+from hyperion_history_api_spark.registry import all_specs, queries
 from hyperion_history_api_spark.tables import load_tables
+
+from .oracle_check import duck_connection
 
 SF_DIR = "/root/testdata/sf0.001"
 Q = queries()
@@ -238,6 +244,43 @@ def test_get_account_matches_registry(server, spark):
         .collect()
     )
     assert [tok["symbol"] for tok in body["tokens"]] == want_syms
+
+
+def test_get_tokens_matches_registry_and_oracle(server, spark, tmp_path):
+    """The get_tokens body equals the registry row for its account, and
+    the row's DuckDB oracle text run for the body's account: one with
+    orders, a known customer whose orders are gone, and an unknown id."""
+    oracle = all_specs()["get_tokens"].oracle
+    assert "WHERE o.o_custkey = 1\n" in oracle
+
+    def oracle_rows(sf_dir: str, account: int) -> list[dict]:
+        sql = oracle.replace("o.o_custkey = 1\n", f"o.o_custkey = {account}\n")
+        cur = duck_connection(sf_dir).execute(sql)
+        names = [d[0] for d in cur.description]
+        return [dict(zip(names, row)) for row in cur.fetchall()]
+
+    base, _ = server
+    body = _get(base, "/v2/state/get_tokens?account=1")
+    assert body["tokens"]
+    assert body["tokens"] == _registry_rows(spark, "get_tokens")
+    assert body["tokens"] == oracle_rows(SF_DIR, 1)
+
+    # a copy of the tables in which customer 2 has no orders
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for name in os.listdir(SF_DIR):
+        shutil.copyfile(os.path.join(SF_DIR, name), sf / name)
+    orders = pq.read_table(sf / "orders.parquet")
+    pq.write_table(orders.filter(pc.field("o_custkey") != 2), sf / "orders.parquet")
+    api = HyperionAPI(spark, str(sf), cache=ResponseCache(default_ttl=0))
+    customers = load_tables(spark, str(sf))["customer"]
+    assert customers.where(F.col("c_custkey") == 2).count() == 1
+    unknown = 10**9
+    assert customers.where(F.col("c_custkey") == unknown).count() == 0
+    for account in (1, 2, unknown):
+        got = api.routes["/v2/state/get_tokens"]({"account": str(account)})
+        assert got["tokens"] == oracle_rows(str(sf), account), account
+        assert bool(got["tokens"]) == (account == 1), account
 
 
 def test_get_top_holders_matches_registry(server, spark):

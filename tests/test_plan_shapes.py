@@ -605,7 +605,11 @@ def test_mix_route_cache_miss_job_counts(spark):
     """The other routes of the serving benchmark's mix, pinned the same
     way: get_table_state is the as-of window plus its key page (2),
     get_top_holders one top-K (1), get_trx_count one count (2, the
-    partial and final aggregate), get_creator one top-1 (1)."""
+    partial and final aggregate), get_creator one top-1 (1), get_tokens
+    its keyed chain (3: the orders, lineitem and part scans). Beside
+    them get_account, whose serial legs are the account row's join and
+    rollup (3), the get_tokens core (3), the recent-actions top-K (1)
+    and the links rollup (2)."""
     cases = {
         "get_table_state": (
             "/v2/history/get_table_state",
@@ -615,9 +619,72 @@ def test_mix_route_cache_miss_job_counts(spark):
         "get_top_holders": ("/v2/state/get_top_holders", {"limit": "20"}, 1),
         "get_trx_count": ("/v2/stats/get_trx_count", {}, 2),
         "get_creator": ("/v2/history/get_creator", {"account": "7"}, 1),
+        "get_tokens": ("/v2/state/get_tokens", {"account": "7"}, 3),
+        "get_account": ("/v2/state/get_account", {"account": "7"}, 9),
     }
     got = _cache_miss_jobs(spark, cases)
     assert got["get_table_state"][0]["rows"]
+    assert got["get_tokens"][0]["tokens"]
+    assert got["get_account"][0]["tokens"] == got["get_tokens"][0]["tokens"]
     assert {k: jobs for k, (_, jobs) in got.items()} == {
         kind: want for kind, (_, _, want) in cases.items()
     }
+
+
+def _executed_plans(spark, fn) -> list[str]:
+    """The physical plan of every SQL query ``fn`` runs, from the SQL
+    status store (fed by the listener bus, so the bus is drained
+    before each look)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions() -> dict[int, str]:
+        bus.waitUntilEmpty()
+        it = store.executionsList().iterator()
+        out = {}
+        while it.hasNext():
+            e = it.next()
+            out[e.executionId()] = e.physicalPlanDescription()
+        return out
+
+    before = executions()
+    fn()
+    return [plan for i, plan in executions().items() if i not in before]
+
+
+def test_get_tokens_is_a_keyed_chain(spark):
+    """A get_tokens cache miss runs three scan queries, each one parquet
+    scan with a key in its PushedFilters, and no Exchange: the account
+    prunes orders, the collected order keys reach the lineitem scan as
+    ``In`` and the surviving part keys reach the part scan the same
+    way. Past ``broadcast_rows`` order keys the core falls back to the
+    join chooser, with the same rows."""
+    from hyperion_history_api_spark.api.endpoints_ext import _get_tokens
+    from hyperion_history_api_spark.api.http_server import HyperionAPI
+    from hyperion_history_api_spark.api.serving_cache import ResponseCache
+
+    api = HyperionAPI(spark, SF_DIR, cache=ResponseCache(default_ttl=0))
+    route = api.routes["/v2/state/get_tokens"]
+    route({"account": "7"})  # warm the table reads
+    plans = _executed_plans(spark, lambda: route({"account": "7"}))
+    assert not [p for p in plans if "Exchange" in p]
+    scans = [p for p in plans if "Scan parquet" in p]
+    # the fourth query collects the local result frame: no scan, no job
+    assert len(scans) == 3 and len(plans) == 4
+    assert all(p.count("Location: ") == 1 for p in scans)  # one file scan each
+    scans = {
+        table: next(p for p in scans if f"{table}.parquet" in p)
+        for table in ("orders", "lineitem", "part")
+    }
+    assert "EqualTo(o_custkey,7)" in scans["orders"]
+    assert "PushedFilters: [In(l_orderkey, [" in scans["lineitem"]
+    assert "PushedFilters: [In(p_partkey, [" in scans["part"]
+
+    df, strategy = _get_tokens(spark, SF_DIR, account=7)
+    assert strategy == "keyed"
+    assert "LocalTableScan" in _plan(df)
+    joined, joined_strategy = _get_tokens(spark, SF_DIR, account=7, broadcast_rows=2)
+    assert joined_strategy != "keyed"
+    assert [r.asDict() for r in joined.collect()] == [
+        r.asDict() for r in df.collect()
+    ]
